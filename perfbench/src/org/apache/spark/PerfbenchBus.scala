@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Waits until every event posted so far has reached the listeners, so
+  * per-iteration listener totals are complete when they are read. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
