@@ -2271,16 +2271,15 @@ object SourceQueries {
     * actionable): plan → execute → re-plan. The staged chain fires
     * three triggers at once (8 full-keyspace mod-sliced files → small
     * files AND overlap depth 8; a 25% key-mod DELETE → dead_bp ≈
-    * 2500); ONE `optimizeBinPack(nFiles=4)` rewrite — the realistic
-    * compaction `optimizeCompact`'s single output file is not at
-    * 100 TB — bins the live rows by key range (deterministic linear
-    * binning, no sampling), folds the DV away, and records disjoint
-    * zones; the RE-PLAN then returns ZERO jobs: files at threshold,
-    * no tombstones, overlap depth 1 — every trigger the plan raised,
-    * one verb settled. Counts closed-form: the oracle recomputes the
-    * before-plan job list, the dead ratio, the after state (n−n/4
-    * rows in 4 files), and the quarter-probe planning exactly 1 file
-    * off the rewritten zones. */
+    * 2500); ONE `optimizeBinPack(nFiles=4)` rewrite bins the live
+    * rows by key range (deterministic linear binning, no sampling;
+    * `optimizeCompact` is the same layout at one file), folds the DV
+    * away, and records disjoint zones; the RE-PLAN then returns ZERO
+    * jobs: files at threshold, no tombstones, overlap depth 1 — every
+    * trigger the plan raised, one verb settled. Counts closed-form:
+    * the oracle recomputes the before-plan job list, the dead ratio,
+    * the after state (n−n/4 rows in 4 files), and the quarter-probe
+    * planning exactly 1 file off the rewritten zones. */
   def maintenanceCycleOp(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.KvSource
     val out = java.nio.file.Files.createTempDirectory("graft-kv-cycle").toString

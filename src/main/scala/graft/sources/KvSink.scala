@@ -236,6 +236,13 @@ object KvSource {
     def livePos: Seq[Int] = schemaCols.indices.filterNot(droppedPos)
     /** The user-facing column list: live positions' logical names. */
     def exposedCols: Seq[String] = livePos.map(schemaCols)
+    /** What this state records about each of `fs`. */
+    def partsOf(fs: Seq[String]): Seq[PartMeta] = {
+      val cols = colStats.groupBy(_._1._2)
+      fs.map(f => PartMeta(f, stats.get(f), valStats.get(f),
+        cols.getOrElse(f, Map.empty).map { case ((i, _), z) => i -> z },
+        rowCounts.get(f)))
+    }
   }
 
   /** One manifest version's declarations (NEW state only for a delta,
@@ -1025,45 +1032,35 @@ object KvSource {
       }
     }
 
-  /** Publish a new manifest version via compare-and-swap, merging
-    * `newFiles` into the latest committed state. Returns the version
-    * that made this commit's rows visible. Loser of a concurrent race
-    * RE-READS and RETRIES — never overwrites. A `batchId` already
-    * recorded in the chain makes the commit an idempotent no-op
-    * (replayed micro-batch): the duplicate task files are deleted.
-    */
-  /** Spec/back-compat entry: a bare batch id lives in the legacy
-    * empty-app namespace (single-writer semantics, as r13 shipped). */
+  /** Spec/back-compat entry: bare file names (no recorded zones) and a
+    * bare batch id in the legacy empty-app namespace (single-writer
+    * semantics, as r13 shipped). */
   private[graft] def commitVersion(path: String, newFiles: Seq[String],
                                      batchId: Option[Long]): Long =
-    commitVersionKeyed(path, newFiles, batchId.map(b => s":$b"))
+    commitVersionKeyed(path, newFiles.map(PartMeta(_)), batchId.map(b => s":$b"))
 
-  private[graft] def commitVersionKeyed(path: String, newFiles: Seq[String],
+  /** Publish a new manifest version via compare-and-swap, merging
+    * `parts` — each added file with what it holds — into the latest
+    * committed state. Returns the version that made this commit's rows
+    * visible. Loser of a concurrent race RE-READS and RETRIES — never
+    * overwrites. A replay key already recorded in the chain makes the
+    * commit an idempotent no-op (replayed micro-batch): the duplicate
+    * task files are deleted. */
+  private[graft] def commitVersionKeyed(path: String, parts: Seq[PartMeta],
                                           replayKey: Option[String],
                                           removeFiles: Seq[String] = Seq.empty,
                                           dvFiles: Seq[String] = Seq.empty,
                                           expectedPrior: Option[Long] = None,
                                           cdfDel: Seq[String] = Seq.empty,
                                           cdfIns: Seq[String] = Seq.empty,
-                                          stats: Map[String, (Long, Long)] = Map.empty,
                                           protocol: Option[(Int, Int)] = None,
                                           op: Option[String] = None,
                                           addedAt: Map[String, Long] = Map.empty,
                                           occ: OccPolicy = OccPolicy.Fail,
-                                          valStats: Map[String, (Array[Byte], Array[Byte])] = Map.empty,
                                           schemaCols: Option[Seq[String]] = None,
-                                          rowCounts: Map[String, Long] = Map.empty,
-                                          colStats: Map[(Int, String), (Array[Byte], Array[Byte])] = Map.empty,
                                           colMap: Map[Int, String] = Map.empty,
                                           colDrops: Seq[Int] = Seq.empty): Long = {
-    def vstatsLine(f: String, b: (Array[Byte], Array[Byte])): String = {
-      val enc = java.util.Base64.getEncoder
-      s"#vstats:$f:${enc.encodeToString(b._1)}:${enc.encodeToString(b._2)}"
-    }
-    def cstatsLine(k: (Int, String), b: (Array[Byte], Array[Byte])): String = {
-      val enc = java.util.Base64.getEncoder
-      s"#cstats:${k._1}:${k._2}:${enc.encodeToString(b._1)}:${enc.encodeToString(b._2)}"
-    }
+    val newFiles = parts.map(_.name)
     new java.io.File(path).mkdirs()
     migrateLog(path)
     var pin = expectedPrior
@@ -1142,12 +1139,7 @@ object KvSource {
           // only); #dv: stays the version's OWN delete — the change
           // classifier the streaming source / change feed read
           val dvPrior = prior.dvFiles.filterNot(removeFiles.toSet)
-          val statsAll = prior.stats -- removeFiles ++ stats
-          val vstatsAll = prior.valStats -- removeFiles ++ valStats
-          val rowsAll = prior.rowCounts -- removeFiles ++ rowCounts
-          val rmSet = removeFiles.toSet
-          val cstatsAll = prior.colStats
-            .filterNot { case ((_, f), _) => rmSet(f) } ++ colStats
+          val kept = prior.files.filterNot(removeFiles.toSet)
           val cmapAll = prior.colMap ++ colMap
           val dropsAll = prior.droppedPos ++ colDrops
           // the checkpoint re-lists an above-default protocol so folds
@@ -1160,8 +1152,7 @@ object KvSource {
           // manifests; defaults (file 0 / dv MAX) are omitted — the
           // lookup fallback reproduces them (legacy = mask everything)
           val addedAll: Seq[(String, Long)] =
-            (prior.files.filterNot(removeFiles.toSet)
-              .map(f => f -> addedAt.getOrElse(f,
+            (kept.map(f => f -> addedAt.getOrElse(f,
                 prior.fileVer.getOrElse(f, 0L))) ++
               newFiles.map(f => f -> addedAt.getOrElse(f, v)) ++
               dvPrior.map(d => d -> addedAt.getOrElse(d,
@@ -1186,15 +1177,8 @@ object KvSource {
               dvFiles.distinct.map(f => s"#dv:$f") ++
               cdfDel.distinct.map(f => s"#cdf_del:$f") ++
               cdfIns.distinct.map(f => s"#cdf_ins:$f") ++
-              statsAll.toSeq.sortBy(_._1)
-                .map { case (f, (lo, hi)) => s"#stats:$f:$lo:$hi" } ++
-              vstatsAll.toSeq.sortBy(_._1)
-                .map { case (f, b) => vstatsLine(f, b) } ++
-              cstatsAll.toSeq.sortBy(_._1)
-                .map { case (k, b) => cstatsLine(k, b) } ++
-              rowsAll.toSeq.sortBy(_._1)
-                .map { case (f, n) => s"#rows:$f:$n" })
-          val state = prior.files.filterNot(removeFiles.toSet) ++ newFiles
+              partMetaLines(parts ++ prior.partsOf(kept)))
+          val state = kept ++ newFiles
           (header ++ state.distinct).mkString("\n")
         } else {
           (op.toSeq.map(o => s"#op:$o") ++
@@ -1210,14 +1194,7 @@ object KvSource {
             dvFiles.distinct.map(f => s"#dv:$f") ++
             cdfDel.distinct.map(f => s"#cdf_del:$f") ++
             cdfIns.distinct.map(f => s"#cdf_ins:$f") ++
-            stats.toSeq.sortBy(_._1)
-              .map { case (f, (lo, hi)) => s"#stats:$f:$lo:$hi" } ++
-            valStats.toSeq.sortBy(_._1)
-              .map { case (f, b) => vstatsLine(f, b) } ++
-            colStats.toSeq.sortBy(_._1)
-              .map { case (k, b) => cstatsLine(k, b) } ++
-            rowCounts.toSeq.sortBy(_._1)
-              .map { case (f, n) => s"#rows:$f:$n" } ++
+            partMetaLines(parts) ++
             newFiles.distinct).mkString("\n")
         }
       if (publishCas(path, v, body)) return v
@@ -1227,57 +1204,120 @@ object KvSource {
       s"KvSource: commit CAS did not converge after 1000 attempts at $path")
   }
 
+  /** One pinned version of the table — what every DML and maintenance
+    * verb reads, diffs and publishes against: the folded state (lazy:
+    * DELETE never needs it), a scan of its rows with DV masks applied,
+    * the part writer, and the commit pinned to it. Scan and diff see
+    * ONE version, so a commit landing in between can never put rows in
+    * a rewrite that the remove list doesn't cover (double count); the
+    * publish then rebases or conflicts under the verb's [[OccPolicy]].
+    * Never captured by a task closure: it holds the SparkSession. */
+  private[graft] final class Snapshot(spark: org.apache.spark.sql.SparkSession,
+                                      path: String, val version: Long) {
+    lazy val st: LogState = stateAt(path, version)
+    /** Shared by every file the verb writes; speculative or retried
+      * task attempts still race to one name per partition. */
+    val salt: String = java.util.UUID.randomUUID().toString.take(8)
+
+    /** The pinned rows under the exposed schema — every live file, or
+      * only `files` (the touched-file read of a pruned rewrite; empty
+      * means no files). */
+    def scan(files: Option[Seq[String]] = None): org.apache.spark.sql.DataFrame = {
+      val r = spark.read.format(classOf[KvSource].getName)
+        .option("path", path).option("versionAsOf", version.toString)
+      files.foreach(fs => r.option("onlyDataFiles", fs.mkString(",")))
+      r.load()
+    }
+
+    /** [[scan]] [[normalized]] to the physical width: what a rewrite
+      * writes. */
+    def rows(files: Option[Seq[String]] = None): org.apache.spark.sql.DataFrame =
+      normalized(scan(files), st)
+
+    /** Write a [[normalized]] frame as `<prefix>-<salt>-<pid>.dat`
+      * parts, one per non-empty partition. */
+    def write(df: org.apache.spark.sql.DataFrame, prefix: String): Seq[PartMeta] =
+      writeKvParts(path, salt, df, prefix)
+
+    /** Distinct keys in written parts, read raw (no DV mask) — a
+      * merge's matched-key count off its deletes-sized pre-image
+      * sidecar, never a third table scan. */
+    def distinctKeys(parts: Seq[PartMeta]): Long =
+      if (parts.isEmpty) 0L
+      else spark.read.format(classOf[KvSource].getName).option("path", path)
+        .option("cdfFiles", parts.map(_.name).mkString(",")).load()
+        .select("key").distinct().count()
+
+    /** Publish `parts` in one version pinned to this snapshot. */
+    def publish(parts: Seq[PartMeta], op: String, occ: OccPolicy,
+                removeFiles: Seq[String] = Seq.empty,
+                dvFiles: Seq[String] = Seq.empty,
+                cdfDel: Seq[PartMeta] = Seq.empty,
+                cdfIns: Seq[PartMeta] = Seq.empty): Long =
+      commitVersionKeyed(path, parts, None, removeFiles = removeFiles,
+        dvFiles = dvFiles, expectedPrior = Some(version),
+        cdfDel = cdfDel.map(_.name), cdfIns = cdfIns.map(_.name),
+        op = Some(op), occ = occ)
+  }
+
+  /** Pin `version` (default: the latest) of the table at `path`. */
+  private[graft] def pinSnapshot(spark: org.apache.spark.sql.SparkSession,
+                                   path: String,
+                                   version: Option[Long] = None): Snapshot = {
+    migrateLog(path)
+    new Snapshot(spark, path, version.orElse(latestVersion(path)).getOrElse(
+      throw new IllegalArgumentException(s"KvSource: no table at $path")))
+  }
+
+  /** What a rewrite layout wrote: the parts replacing the live data
+    * files in `replaces`, the CDF sidecars of a LOGICAL rewrite (MERGE
+    * and UPDATE declare pre-images and new rows; OPTIMIZE declares
+    * none, so the change feed reads it as no change), and the count the
+    * verb reports. */
+  private[graft] case class Rewrite(parts: Seq[PartMeta], replaces: Seq[String],
+                                    count: Long,
+                                    cdfDel: Seq[PartMeta] = Seq.empty,
+                                    cdfIns: Seq[PartMeta] = Seq.empty)
+
+  /** The rewrite primitive under every copy-on-write verb (OPTIMIZE in
+    * its three layouts, MERGE, UPDATE): pin the latest version (or
+    * `pinned`) and fold its state, hand the [[Snapshot]] to `layout` —
+    * which reads it whole or only its touched files, normalized to the
+    * physical width, and writes the replacement parts — then publish
+    * ONE version that adds the parts and removes the replaced files,
+    * so readers see the old files or the new parts, never both. A
+    * rewrite that replaced EVERY live file removes the DV files too:
+    * the scan applied their masks and nothing they could mask remains.
+    * When files survive, the DVs stay: binding on the older survivors,
+    * inert on the newer parts (version scoping). `layout` returning
+    * None publishes nothing. Returns (the layout's count, the version
+    * published — the pinned one when nothing was). */
+  private[graft] def rewriteSnapshot(spark: org.apache.spark.sql.SparkSession,
+                                       path: String, op: String, occ: OccPolicy,
+                                       pinned: Option[Long] = None)(
+      layout: Snapshot => Option[Rewrite]): (Long, Long) = {
+    val snap = pinSnapshot(spark, path, pinned)
+    layout(snap).fold((0L, snap.version)) { rw =>
+      val folded =
+        if (snap.st.files.forall(rw.replaces.toSet)) snap.st.dvFiles else Seq.empty
+      (rw.count, snap.publish(rw.parts, op, occ,
+        removeFiles = rw.replaces ++ folded, cdfDel = rw.cdfDel, cdfIns = rw.cdfIns))
+    }
+  }
+
   /** OPTIMIZE (atomic small-file compaction — a lakehouse maintenance
     * verb alongside checkpointing, [[vacuum]], [[deleteWhere]], and
-    * [[restore]]): rewrite the CURRENT committed LIVE row set (DVs
-    * applied by the scan) into one file and publish a SINGLE version
-    * that adds it and removes every input data file AND every folded
-    * DV key file. Readers at any moment see either the old files or
-    * the one new file — never both (no transient double-count) and
-    * never neither; historical versions still reference the old files
-    * (vacuum reclaims them past the retention age, after which
-    * pre-compaction time travel fails with the retention error, by
-    * design). The rewrite itself is one executor task streaming the
-    * merged rows (local-mode note: like the binary staging in
-    * [[graft.multimodal.Multimodal]], executor and driver share a
-    * filesystem here; on a cluster the rewrite is the same one-task
-    * job against DFS). Speculative/retried rewrite attempts salt
-    * their temp with the task attempt id and race to one atomic
-    * rename — a torn temp can never be published. Returns
-    * (files before, version published). */
+    * [[restore]]): [[optimizeBinPack]] into ONE file, under the plain
+    * `OPTIMIZE` history label. The live row set (DVs applied) becomes
+    * one file published in a single version that removes every input
+    * data file AND every folded DV key file; historical versions still
+    * reference the old files (vacuum reclaims them past the retention
+    * age, after which pre-compaction time travel fails with the
+    * retention error, by design). Returns (files before, version
+    * published). */
   private[graft] def optimizeCompact(spark: org.apache.spark.sql.SparkSession,
-                                       path: String): (Long, Long) = {
-    migrateLog(path)
-    // pin ONE version for both the file list and the row scan: a
-    // commit landing between the two would otherwise put rows in the
-    // compacted file that the remove list doesn't cover (double count)
-    val v0 = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"KvSource: nothing to compact at $path"))
-    val st = committedState(path, Some(v0))
-    require(st.files.nonEmpty, s"KvSource: nothing to compact at $path")
-
-    // the rewrite carries EVERY column of the snapshot's schema (r17 —
-    // the evolved-table guard is gone: old narrow rows null-fill into
-    // the wide line format, so maintenance survives ALTER)
-    val salt = java.util.UUID.randomUUID().toString.take(8)
-    val live = spark.read.format(classOf[KvSource].getName).option("path", path)
-      .option("versionAsOf", v0.toString).load()
-    val parts = writeKvParts(path, salt,
-      normalized(live.repartition(1), st), "part-compact")
-    // pin the publish to the scanned snapshot: under version-scoped
-    // DVs a DELETE landing between the pin and the publish would be
-    // silently UNDONE (the compacted file is newer than the DV, so the
-    // mask never applies to it) — that still conflicts; a concurrent
-    // pure APPEND rebases (the new file is untouched by the rewrite)
-    val v = commitVersionKeyed(path, parts.map(_.name), None,
-      removeFiles = st.files ++ st.dvFiles, op = Some("OPTIMIZE"),
-      stats = parts.map(_.keyStats).toMap,
-      valStats = valStatsOf(parts),
-      rowCounts = rowCountsOf(parts),
-      colStats = colStatsOf(parts),
-      expectedPrior = Some(v0), occ = OccPolicy.AppendOk)
-    (st.files.size.toLong, v)
-  }
+                                       path: String): (Long, Long) =
+    optimizeInto(spark, path, "OPTIMIZE", "binpack", 1)(binByKey(1))
 
   /** AUTO-MAINTENANCE PLANNER (r15 verdict item 7): scan a chain's
     * METADATA and emit the maintenance job list — which verb to run,
@@ -1364,36 +1404,28 @@ object KvSource {
   }
 
   /** OPTIMIZE ZORDER BY (key, val) — the clustered rewrite (the Delta
-    * `OPTIMIZE ... ZORDER BY` verb, r15 verdict item 5): rewrite the
-    * live row set into `nFiles` files ordered by the MORTON
-    * INTERLEAVE of both dimensions, so BOTH zone maps tighten at once
-    * — a key-range probe and a val probe each prune to the few files
-    * whose interleaved cell range intersects, instead of one
-    * dimension's sort destroying the other's locality.
+    * `OPTIMIZE ... ZORDER BY` verb): rewrite the live row set into
+    * `nFiles` files ordered by the MORTON INTERLEAVE of both
+    * dimensions, so BOTH zone maps tighten at once — a key-range probe
+    * and a val probe each prune to the few files whose interleaved
+    * cell range intersects, instead of one dimension's sort destroying
+    * the other's locality.
     *
     * Mechanics: each dimension maps to a 16-bit cell by linear
     * scaling over its observed [min,max] (key directly; val via its
     * first-8-bytes-as-unsigned-long, the UTF8-byte-order-preserving
     * projection); cells interleave to a 32-bit Morton code whose top
     * log2(nFiles) bits are the target file — a DETERMINISTIC
-    * partitioner (no sampling, same input → same layout), one
-    * shuffle, each task streaming its rows and recording both zones.
-    * Two passes over the table (dim bounds, then the clustered
-    * write) — the same cost profile as any OPTIMIZE rewrite; Delta
-    * pays the analog with sampled range boundaries. The publish is
-    * one atomic version removing every input data/DV file (DV masks
-    * fold away like compaction), pinned to the scanned snapshot with
-    * the AppendOk rebase policy. Returns (files before, version). */
+    * partitioner (no sampling, same input → same layout). Two passes
+    * over the table (dim bounds, then the clustered write) — the same
+    * cost profile as any OPTIMIZE rewrite; Delta pays the analog with
+    * sampled range boundaries. Evolved columns ride along; the cluster
+    * DIMENSIONS stay (key, val), like Delta ZORDER BY over a subset of
+    * columns. Returns (files before, version). */
   private[graft] def optimizeZorder(spark: org.apache.spark.sql.SparkSession,
                                       path: String, nFiles: Int): (Long, Long) = {
-    migrateLog(path)
     require(nFiles >= 2 && (nFiles & (nFiles - 1)) == 0,
       s"KvSource: ZORDER nFiles must be a power of two >= 2, got $nFiles")
-    val v0 = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"KvSource: nothing to cluster at $path"))
-    val st = committedState(path, Some(v0))
-    require(st.files.nonEmpty, s"KvSource: nothing to cluster at $path")
-
     // val dimension: first 8 UTF8 bytes as a big-endian unsigned long,
     // sign-flipped so SIGNED comparisons reproduce unsigned byte order
     // (read straight off the UTF8String — no per-row byte[] copy)
@@ -1406,26 +1438,6 @@ object KvSource {
       }
       x ^ Long.MinValue
     }
-    // the rewrite carries EVERY column of the snapshot's schema (r17:
-    // the evolved-table guard is gone); the cluster DIMENSIONS stay
-    // (key, val) — evolved columns ride along, like Delta ZORDER BY
-    // over a subset of columns
-    val nColsT = st.schemaCols.size
-    val live = normalized(
-      spark.read.format(classOf[KvSource].getName)
-        .option("path", path).option("versionAsOf", v0.toString).load(),
-      st)
-    // pass 1: dimension bounds (one distributed fold, 4 longs back)
-    val (kMin, kMax, vMin, vMax) = live.queryExecution.toRdd.aggregate(
-      (Long.MaxValue, Long.MinValue, Long.MaxValue, Long.MinValue))(
-      { case ((a, b, c, d), r) =>
-          val k = r.getLong(0)
-          val p = vprefix(r.getUTF8String(1))
-          (math.min(a, k), math.max(b, k), math.min(c, p), math.max(d, p)) },
-      { case ((a, b, c, d), (e, f, g, h)) =>
-          (math.min(a, e), math.max(b, f), math.min(c, g), math.max(d, h)) })
-    val kSpan = math.max(1e-300, kMax.toDouble - kMin.toDouble)
-    val vSpan = math.max(1e-300, vMax.toDouble - vMin.toDouble)
     def cell(x: Long, mn: Double, span: Double): Int =
       math.min(65535, math.max(0, ((x.toDouble - mn) / span * 65536d).toInt))
     def morton(a: Int, b: Int): Int = {
@@ -1439,104 +1451,93 @@ object KvSource {
       out
     }
     val shift = 32 - Integer.numberOfTrailingZeros(nFiles)
-    val kMinD = kMin.toDouble
-    val vMinD = vMin.toDouble
-    // pass 2: deterministic Morton-prefix partitioner + clustered
-    // write. Rows copy once before the shuffle (UnsafeRow iterators
-    // reuse their buffer — any shuffle representation materializes
-    // here); post-shuffle they stream zero-alloc through the writer.
-    val partitioned = live.queryExecution.toRdd
-      .map { r =>
+    optimizeInto(spark, path, "OPTIMIZE (ZORDER)", "zorder", nFiles) { rows =>
+      // pass 1: dimension bounds (one distributed fold, 4 longs back)
+      val (kMin, kMax, vMin, vMax) = rows.aggregate(
+        (Long.MaxValue, Long.MinValue, Long.MaxValue, Long.MinValue))(
+        { case ((a, b, c, d), r) =>
+            val k = r.getLong(0)
+            val p = vprefix(r.getUTF8String(1))
+            (math.min(a, k), math.max(b, k), math.min(c, p), math.max(d, p)) },
+        { case ((a, b, c, d), (e, f, g, h)) =>
+            (math.min(a, e), math.max(b, f), math.min(c, g), math.max(d, h)) })
+      val kSpan = math.max(1e-300, kMax.toDouble - kMin.toDouble)
+      val vSpan = math.max(1e-300, vMax.toDouble - vMin.toDouble)
+      val kMinD = kMin.toDouble
+      val vMinD = vMin.toDouble
+      rows.map { r =>
         (morton(cell(r.getLong(0), kMinD, kSpan),
-          cell(vprefix(r.getUTF8String(1)), vMinD, vSpan)) >>> shift,
-          r.copy())
+          cell(vprefix(r.getUTF8String(1)), vMinD, vSpan)) >>> shift, r.copy())
       }
-      .partitionBy(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = nFiles
-        override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-      })
-    val salt = java.util.UUID.randomUUID().toString.take(8)
-    val parts: Seq[PartMeta] = partitioned
-      .mapPartitionsWithIndex { (pid, rows) =>
-        writePartRows(path, s"part-zorder-$salt-$pid.dat", rows.map(_._2), nColsT)
-      }.collect().toSeq
-    val v = commitVersionKeyed(path, parts.map(_.name), None,
-      removeFiles = st.files ++ st.dvFiles,
-      stats = parts.map(_.keyStats).toMap,
-      valStats = valStatsOf(parts),
-      rowCounts = rowCountsOf(parts),
-      colStats = colStatsOf(parts),
-      op = Some("OPTIMIZE (ZORDER)"),
-      expectedPrior = Some(v0), occ = OccPolicy.AppendOk)
-    (st.files.size.toLong, v)
+    }
   }
 
-  /** OPTIMIZE with BIN-PACKING (the realistic compaction shape —
-    * `optimizeCompact`'s single output file is wrong at 100 TB): the
-    * live row set rewrites into `nFiles` files binned by KEY RANGE
-    * (deterministic linear key-cell binning, no sampling — bucket is
-    * monotone in key, so output zones are DISJOINT by construction
-    * and every later key probe plans at most the few files whose
-    * range intersects). DV masks fold away like compaction; one
-    * atomic version; AppendOk rebase. The sorted-bins layout makes
-    * this compaction AND key-clustering in one pass — after it the
-    * maintenance planner's overlap trigger reads depth 1. */
+  /** OPTIMIZE with BIN-PACKING: the live row set rewrites into `nFiles`
+    * files binned by KEY RANGE (deterministic linear key-cell binning,
+    * no sampling — bucket is monotone in key, so output zones are
+    * DISJOINT by construction and every later key probe plans at most
+    * the few files whose range intersects). DV masks fold away like
+    * compaction; one atomic version; AppendOk rebase. The sorted-bins
+    * layout makes this compaction AND key-clustering in one pass —
+    * after it the maintenance planner's overlap trigger reads depth 1.
+    * [[optimizeCompact]] is this layout at one file. */
   private[graft] def optimizeBinPack(spark: org.apache.spark.sql.SparkSession,
                                        path: String, nFiles: Int): (Long, Long) = {
-    migrateLog(path)
     require(nFiles >= 1, s"KvSource: BINPACK nFiles must be >= 1, got $nFiles")
-    val v0 = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"KvSource: nothing to compact at $path"))
-    val st = committedState(path, Some(v0))
-    require(st.files.nonEmpty, s"KvSource: nothing to compact at $path")
-    // rewrite carries every column (r17 — evolved guard gone); the
-    // bin DIMENSION stays the key
-    val nColsT = st.schemaCols.size
-    val live = normalized(
-      spark.read.format(classOf[KvSource].getName)
-        .option("path", path).option("versionAsOf", v0.toString).load(),
-      st)
-    val (kMin, kMax) = live.queryExecution.toRdd
-      .aggregate((Long.MaxValue, Long.MinValue))(
-      { case ((a, b), r) =>
-          val k = r.getLong(0); (math.min(a, k), math.max(b, k)) },
-      { case ((a, b), (c, d)) => (math.min(a, c), math.max(b, d)) })
-    val span = math.max(1e-300, kMax.toDouble - kMin.toDouble)
-    val kMinD = kMin.toDouble
-    val n = nFiles
-    val partitioned = live.queryExecution.toRdd
-      .map { r =>
-        val k = r.getLong(0)
-        (math.min(n - 1,
-          math.max(0, ((k.toDouble - kMinD) / span * n).toInt)), r.copy())
-      }
-      .partitionBy(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = n
-        override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-      })
-    val salt = java.util.UUID.randomUUID().toString.take(8)
-    val parts: Seq[PartMeta] = partitioned
-      .mapPartitionsWithIndex { (pid, rows) =>
-        writePartRows(path, s"part-binpack-$salt-$pid.dat", rows.map(_._2), nColsT)
-      }.collect().toSeq
-    val v = commitVersionKeyed(path, parts.map(_.name), None,
-      removeFiles = st.files ++ st.dvFiles,
-      stats = parts.map(_.keyStats).toMap,
-      valStats = valStatsOf(parts),
-      rowCounts = rowCountsOf(parts),
-      colStats = colStatsOf(parts),
-      op = Some("OPTIMIZE (BINPACK)"),
-      expectedPrior = Some(v0), occ = OccPolicy.AppendOk)
-    (st.files.size.toLong, v)
+    optimizeInto(spark, path, "OPTIMIZE (BINPACK)", "binpack", nFiles)(binByKey(nFiles))
   }
 
+  /** Key-range bins for [[optimizeBinPack]]: a bounds pass, then each
+    * row to its linear key cell. One bin needs no bounds, so
+    * compaction runs no extra job. */
+  private def binByKey(n: Int)(
+      rows: org.apache.spark.rdd.RDD[InternalRow]): org.apache.spark.rdd.RDD[(Int, InternalRow)] =
+    if (n == 1) rows.map(r => (0, r.copy()))
+    else {
+      val (kMin, kMax) = rows.aggregate((Long.MaxValue, Long.MinValue))(
+        { case ((a, b), r) =>
+            val k = r.getLong(0); (math.min(a, k), math.max(b, k)) },
+        { case ((a, b), (c, d)) => (math.min(a, c), math.max(b, d)) })
+      val span = math.max(1e-300, kMax.toDouble - kMin.toDouble)
+      val kMinD = kMin.toDouble
+      rows.map { r =>
+        val k = r.getLong(0)
+        (math.min(n - 1, math.max(0, ((k.toDouble - kMinD) / span * n).toInt)), r.copy())
+      }
+    }
+
+  /** The OPTIMIZE layouts' shared body, run through [[rewriteSnapshot]]:
+    * `bin` tags every normalized live row with its output file index
+    * in [0, nFiles); one shuffle routes each bin to one task, which
+    * streams it into one part recording its zones. Every live data file
+    * and DV file is replaced. Rows copy once before the shuffle
+    * (UnsafeRow iterators reuse their buffer); post-shuffle they stream
+    * zero-alloc through the writer. The publish rebases over concurrent
+    * pure appends (AppendOk): the new files are untouched by the
+    * rewrite, and version-scoped DVs can never mask them. */
+  private def optimizeInto(spark: org.apache.spark.sql.SparkSession, path: String,
+                             op: String, prefix: String, nFiles: Int)(
+      bin: org.apache.spark.rdd.RDD[InternalRow] => org.apache.spark.rdd.RDD[(Int, InternalRow)]
+  ): (Long, Long) =
+    rewriteSnapshot(spark, path, op, OccPolicy.AppendOk) { snap =>
+      require(snap.st.files.nonEmpty, s"KvSource: nothing to optimize at $path")
+      val nCols = snap.st.schemaCols.size
+      val salt = snap.salt
+      val parts = bin(snap.rows().queryExecution.toRdd)
+        .partitionBy(new org.apache.spark.Partitioner {
+          override def numPartitions: Int = nFiles
+          override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+        })
+        .mapPartitionsWithIndex { (pid, rows) =>
+          writePartRows(path, s"part-$prefix-$salt-$pid.dat", rows.map(_._2), nCols)
+        }.collect().toSeq
+      Some(Rewrite(parts, snap.st.files, snap.st.files.size.toLong))
+    }
+
   /** Driver-mergeable (min, max) accumulator over longs — the OCC
-    * rebase window of [[deleteWhere]] must be correct at ANY task
-    * count (r16 advice: the earlier sum-of-extremes LongAccumulators
-    * encoded a single task's extremes and silently depended on the
-    * plan keeping repartition(1)). Min/max folds are idempotent, so
-    * speculative or retried task attempts can never widen the window
-    * incorrectly — unlike a sum, which made the dependency fragile. */
+    * rebase window of a DV write must be correct at ANY task count.
+    * Min/max folds are idempotent, so speculative or retried task
+    * attempts can never widen the window incorrectly. */
   private[graft] class MinMaxAccumulator
       extends org.apache.spark.util.AccumulatorV2[Long, (Long, Long)] {
     private var lo = Long.MaxValue
@@ -1559,30 +1560,19 @@ object KvSource {
     override def value: (Long, Long) = (lo, hi)
   }
 
-  /** DELETE WHERE on the commit log — MERGE-ON-READ (the Delta/Iceberg
-    * deletion-vector shape, key-scoped): the doomed keys are computed
-    * DISTRIBUTED against a pinned snapshot (existing DVs applied, so a
-    * twice-deleted key is never re-listed), written to one `dv-*.dat`
-    * key file, and published as a `#dv:` header in a single version —
-    * no base file is rewritten, which is what makes DELETE cheap at
-    * 100 TB. Every subsequent scan applies the accumulated DV key set
-    * in its partition readers; OPTIMIZE folds the DVs into a clean
-    * rewrite; older snapshots time-travel to the pre-delete state.
-    * Returns (keys deleted, version published; version = pinned
-    * snapshot and 0 keys if the predicate matched nothing). */
-  private[graft] def deleteWhere(spark: org.apache.spark.sql.SparkSession,
-                                   path: String, predicate: String): (Long, Long) = {
-    migrateLog(path)
-    val v0 = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"KvSource: nothing to delete at $path"))
-    val name = s"dv-${java.util.UUID.randomUUID().toString.take(8)}.dat"
+  /** Write `keys` (one distinct `key` column) as the DV key file
+    * `name` in one task, deleting it again when empty. Count and
+    * [min,max] come back through accumulators: a true min/max fold is
+    * idempotent, so the OCC rebase window is correct at any task count
+    * and under speculative or retried attempts. Returns (keys, min,
+    * max). */
+  private def writeDv(spark: org.apache.spark.sql.SparkSession, path: String,
+                        name: String,
+                        keys: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
     val acc = spark.sparkContext.longAccumulator("kv_dv_keys")
     val domAcc = new MinMaxAccumulator
     spark.sparkContext.register(domAcc, "kv_dv_domain")
-    spark.read.format(classOf[KvSource].getName).option("path", path)
-      .option("versionAsOf", v0.toString).load()
-      .where(predicate).select("key").distinct()
-      .repartition(1)
+    keys.repartition(1)
       .foreachPartition { rows: java.util.Iterator[org.apache.spark.sql.Row] =>
         writeLinesAtomically(path, name,
           new java.util.Iterator[String] {
@@ -1596,39 +1586,53 @@ object KvSource {
           })
         ()
       }
-    if (acc.value == 0L) {
-      new java.io.File(path, name).delete() // empty DV: publish nothing
-      (0L, v0)
-    } else {
-      // pin to the snapshot the keys were computed against: a row
-      // appended in between would be masked BY KEY without ever
-      // matching the predicate (the DV is newer than the new file).
-      // The OCC policy rebases over appends whose zones provably miss
-      // the DV key domain (tracked by a true min/max accumulator —
-      // correct at any task count); anything else conflicts, Delta's
-      // DELETE rule
-      val (lo, hi) = domAcc.value
-      val v = commitVersionKeyed(path, Seq.empty, None, dvFiles = Seq(name),
-        op = Some("DELETE"), expectedPrior = Some(v0),
-        occ = OccPolicy.KeyDisjoint(lo, hi))
-      (acc.value, v)
-    }
+    if (acc.value == 0L) new java.io.File(path, name).delete()
+    val (lo, hi) = domAcc.value
+    (acc.value, lo, hi)
+  }
+
+  /** DELETE WHERE on the commit log — MERGE-ON-READ (the Delta/Iceberg
+    * deletion-vector shape, key-scoped): the doomed keys are computed
+    * DISTRIBUTED against a pinned snapshot (existing DVs applied, so a
+    * twice-deleted key is never re-listed), written to one `dv-*.dat`
+    * key file, and published as a `#dv:` header in a single version —
+    * no base file is rewritten, which is what makes DELETE cheap at
+    * 100 TB. Every subsequent scan applies the accumulated DV key set
+    * in its partition readers; OPTIMIZE folds the DVs into a clean
+    * rewrite; older snapshots time-travel to the pre-delete state.
+    * The publish is pinned to the snapshot the keys were computed
+    * against: a row appended in between would be masked BY KEY without
+    * ever matching the predicate (the DV is newer than the new file),
+    * so only appends whose zones provably miss the DV key domain
+    * rebase; anything else conflicts, Delta's DELETE rule. Returns
+    * (keys deleted, version published; version = pinned snapshot and
+    * 0 keys if the predicate matched nothing). */
+  private[graft] def deleteWhere(spark: org.apache.spark.sql.SparkSession,
+                                   path: String, predicate: String): (Long, Long) = {
+    val snap = pinSnapshot(spark, path)
+    val name = s"dv-${snap.salt}.dat"
+    val (n, lo, hi) = writeDv(spark, path, name,
+      snap.scan().where(predicate).select("key").distinct())
+    if (n == 0L) (0L, snap.version)
+    else (n, snap.publish(Seq.empty, "DELETE", OccPolicy.KeyDisjoint(lo, hi),
+      dvFiles = Seq(name)))
   }
 
   /** RESTORE (the Delta rollback verb): publish a NEW version whose
     * state equals the snapshot at `toVersion` — files the target lacks
     * are `#remove:`d, files it had that the current state dropped (an
-    * OPTIMIZE since) are re-added, DV sets are diffed the same way.
-    * Nothing is deleted from disk, so time travel keeps working in
-    * BOTH directions: pre-restore versions stay readable until vacuum
-    * ages them out, and the restore itself is one more auditable
-    * version on the chain. Returns the published version. ANY commit
-    * landing between the diff and the publish — append, delete, or
-    * rewrite — surfaces as the concurrent-commit error (the publish
-    * is pinned to the diffed snapshot via `expectedPrior`): RESTORE
-    * under live writers is a coordination decision, not a silent
-    * merge (Delta's rule; r15 review fix — a concurrent APPEND used
-    * to merge silently into the "restored" state). */
+    * OPTIMIZE since) are re-added WITH the target's record of them
+    * (zones and row counts, so scans and merges keep pruning them and
+    * the planner keeps counting their dead rows), DV sets are diffed
+    * the same way. Nothing is deleted from disk, so time travel keeps
+    * working in BOTH directions: pre-restore versions stay readable
+    * until vacuum ages them out, and the restore itself is one more
+    * auditable version on the chain. Returns the published version.
+    * ANY commit landing between the diff and the publish — append,
+    * delete, or rewrite — surfaces as the concurrent-commit error (the
+    * publish is pinned to the diffed snapshot via `expectedPrior`):
+    * RESTORE under live writers is a coordination decision, not a
+    * silent merge (Delta's rule). */
   private[graft] def restore(path: String, toVersion: Long): Long = {
     migrateLog(path)
     val target = committedState(path, Some(toVersion))
@@ -1638,7 +1642,7 @@ object KvSource {
     val removes = cur.files.filterNot(target.files.toSet)
     val dvAdd = target.dvFiles.filterNot(cur.dvFiles.toSet)
     val dvRemove = cur.dvFiles.filterNot(target.dvFiles.toSet)
-    commitVersionKeyed(path, addBack, None,
+    commitVersionKeyed(path, target.partsOf(addBack), None,
       removeFiles = removes ++ dvRemove, dvFiles = dvAdd,
       expectedPrior = pinned, op = Some("RESTORE"),
       // re-adds keep their ORIGINAL add-versions: the target snapshot's
@@ -1648,244 +1652,179 @@ object KvSource {
   }
 
   /** MERGE (upsert) — copy-on-write, the Delta MERGE INTO shape:
-    * rows of `updates` (key-unique (key, val)) REPLACE the live rows
-    * sharing their keys and insert otherwise, in ONE atomic version.
-    * COW: the merge rewrites the TOUCHED live files (survivors
-    * anti-joined on the update keys, union the updates) — the write
-    * amplification Delta's default MERGE pays for read-cheap scans.
-    * (Version-scoped DVs would also admit a merge-on-read variant —
-    * tombstone the update keys and append the new rows in one version,
-    * the new file being newer than its own DV; COW is kept for the
-    * clean-file property the stats/pruning path builds on.)
+    * rows of `updates` (key-unique, carrying every live column — Delta's
+    * MERGE schema enforcement) REPLACE the live rows sharing their keys
+    * and insert otherwise, in ONE atomic version through
+    * [[rewriteSnapshot]]. The layout rewrites only the TOUCHED live
+    * files — survivors anti-joined on the update keys, union the
+    * updates — the write amplification Delta's default MERGE pays for
+    * read-cheap scans ([[mergeOnRead]] makes the opposite trade).
     *
-    * TOUCHED-FILE PRUNING (Delta's touched-file optimization, closing
-    * the r15 note): a file whose `#stats:` key zone provably contains
-    * NO update key SURVIVES UNTOUCHED — the update keys range-join
-    * the file-count-sized broadcast stats table (a metadata-bounded
-    * BroadcastNestedLoopJoin: |updKeys| rows × |files| zones, never
-    * data × data), files without stats are always touched (safe
-    * default), and the rewrite scans ONLY the touched subset (the
-    * `onlyDataFiles` restriction, DV masks still applied). When files
-    * survive, the old DV files stay AS-IS: version-scoped masking
-    * keeps them binding on the (older) survivors and structurally
-    * inert on the (newer) result files — so a previously-DELETED
-    * update key resurrects with zero DV bookkeeping, while untouched
-    * files' tombstones keep holding. A full rewrite (nothing
-    * untouched) folds the DV set away, same as OPTIMIZE. The
-    * rewrite's own output files record fresh `#stats:` zones, so the
-    * NEXT merge can prune them too. The version carries CDF SIDECARS
-    * (the Delta _change_data
-    * shape): `#cdf_del:` files hold the replaced rows' PRE-IMAGES,
-    * `#cdf_ins:` the update rows — [[changeFeed]] emits logical
-    * changes from them instead of mis-reading the rewrite as silent
-    * (pruning never changes the sidecars: untouched files hold no
-    * update key, so the pre-image set is complete from the touched
-    * scan alone). Publish is pinned to the diffed snapshot
-    * (`expectedPrior`): any concurrent commit conflicts, Delta's
-    * MERGE rule. Returns (matched, inserted, version): matched counts
-    * DISTINCT update keys found live (an append log can hold
-    * duplicate rows per key — all copies are replaced and each
-    * appears as a CDF pre-image delete, but the KEY counts once),
-    * inserted the remaining distinct update keys. */
+    * TOUCHED-FILE PRUNING (Delta's touched-file optimization): a file
+    * whose `#stats:` key zone provably contains NO update key SURVIVES
+    * UNTOUCHED ([[touchedFiles]]; stats-free files are always touched),
+    * and the rewrite scans ONLY the touched subset, DV masks still
+    * applied. Surviving files keep the old DV files binding on them
+    * while the newer result files are structurally out of their reach,
+    * so a previously-DELETED update key resurrects with zero DV
+    * bookkeeping. The rewrite's own output files record fresh zones, so
+    * the NEXT merge can prune them too. The version carries CDF
+    * SIDECARS (the Delta _change_data shape): `#cdf_del:` files hold
+    * the replaced rows' PRE-IMAGES, `#cdf_ins:` the update rows —
+    * [[changeFeed]] emits logical changes from them instead of
+    * mis-reading the rewrite as silent (pruning never changes the
+    * sidecars: untouched files hold no update key). A caller that
+    * derived `updates` FROM the table pins the snapshot it read
+    * (`pinnedVersion`), so a commit landing in between conflicts
+    * instead of merging stale post-images; a concurrent append whose
+    * zones provably miss every update key rebases. Returns (matched,
+    * inserted, version): matched counts DISTINCT update keys found live
+    * (an append log can hold duplicate rows per key — all copies are
+    * replaced and each appears as a CDF pre-image delete, but the KEY
+    * counts once), inserted the remaining distinct update keys. */
   private[graft] def mergeUpsert(spark: org.apache.spark.sql.SparkSession,
                                    path: String,
                                    updates: org.apache.spark.sql.DataFrame,
                                    pinnedVersion: Option[Long] = None): (Long, Long, Long) = {
-    migrateLog(path)
-    // a caller that derived `updates` FROM the table (UPDATE) pins the
-    // snapshot it read — a commit landing in between then surfaces as
-    // the expectedPrior conflict instead of merging stale post-images
-    val v0 = pinnedVersion.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"KvSource: nothing to merge into at $path"))
-    val st = stateAt(path, v0)
-    // the update plan feeds four jobs (touch probe, survivor rewrite,
-    // cdf inserts, key counts) — persist once, release at the end; the
-    // LIVE scan intentionally stays unpersisted and runs twice
-    // (rewrite + pre-image extraction), the same two passes a COW
-    // merge pays in Delta — table-sized caching would cost more.
-    // `updates` must carry EVERY column of the snapshot's schema
-    // (Delta's MERGE schema enforcement) — on an evolved table the
-    // rewrite writes wide rows, old survivors null-fill (r17: the
-    // evolved-table guard is gone).
-    // bind in EXPOSED column space (what the caller and the live scan
-    // see); the write boundary below expands to the physical width,
-    // null-filling dropped slots
-    val upd = normalized(updates, st.exposedCols)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val updKeys = upd.select("key").distinct()
-    val salt = java.util.UUID.randomUUID().toString.take(8)
+    import org.apache.spark.sql.functions.{count, lit, max, min}
+    // the update plan feeds four jobs (key domain, touch probe, survivor
+    // rewrite, cdf inserts) — persist once, release at the end; the
+    // LIVE scan intentionally stays unpersisted and runs twice (rewrite
+    // + pre-images), the two passes a COW merge pays in Delta —
+    // table-sized caching would cost more
+    val upd0 = updates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // touched = files whose zone admits at least one update key
-      // (plus every stats-free file — pre-r15 appends, old rewrites)
-      val touched = touchedFiles(spark, st, updKeys)
-      val untouched = st.files.filterNot(touched.toSet)
-      val live = spark.read.format(classOf[KvSource].getName)
-        .option("path", path).option("versionAsOf", v0.toString)
-        .option("onlyDataFiles", touched.mkString(",")).load()
-      val resultParts =
-        writeKvParts(path, salt,
-          normalized(live.join(updKeys, Seq("key"), "left_anti").unionByName(upd),
-            st),
-          "part-merge")
-      val delParts =
-        writeKvParts(path, salt,
-          normalized(live.join(updKeys, Seq("key"), "left_semi"), st),
-          "cdf-del")
-      val insParts = writeKvParts(path, salt, normalized(upd, st), "cdf-ins")
-      val resultFiles = resultParts.map(_.name)
-      val delFiles = delParts.map(_.name)
-      val insFiles = insParts.map(_.name)
-      // DVs under VERSION-SCOPED semantics: when untouched files
-      // remain, the old DV files stay AS-IS — they keep masking the
-      // survivors (older than them) and structurally cannot mask the
-      // merge's result files (newer), so resurrected update keys are
-      // visible with zero DV bookkeeping (the r15-batch-7 DV-rewrite
-      // job is gone). A full rewrite (nothing untouched) folds the DV
-      // set away entirely, same as OPTIMIZE.
-      val dropDvs = if (untouched.isEmpty) st.dvFiles else Seq.empty
-      // KEY-level counts for the contract (row-level pre-image counts
-      // live in the cdf sidecars): matched keys come from the already-
-      // written cdf-del sidecar — a deletes-sized read, never a third
-      // table scan. Count and [min,max] domain ride one job; the
-      // domain is the OCC rebase window (a concurrent append whose
-      // zones provably miss every update key is compatible).
-      val dom = updKeys.agg(
-        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.min("key"),
-        org.apache.spark.sql.functions.max("key")).head()
+      // key count and [min,max] domain in one job: the domain is the
+      // OCC rebase window
+      val dom = upd0.selectExpr("CAST(key AS BIGINT) AS key").distinct()
+        .agg(count(lit(1)), min("key"), max("key")).head()
       val nUpdKeys = dom.getLong(0)
-      val nMatched =
-        if (delFiles.isEmpty) 0L
-        else spark.read.format(classOf[KvSource].getName)
-          .option("path", path).option("cdfFiles", delFiles.mkString(","))
-          .load().select("key").distinct().count()
-      val v = commitVersionKeyed(path, resultFiles, None,
-        removeFiles = touched ++ dropDvs,
-        expectedPrior = Some(v0),
-        occ = if (nUpdKeys == 0L) OccPolicy.AppendOk
-              else OccPolicy.KeyDisjoint(dom.getLong(1), dom.getLong(2)),
-        cdfDel = delFiles, cdfIns = insFiles,
-        stats = resultParts.map(_.keyStats).toMap,
-        valStats = valStatsOf(resultParts),
-        rowCounts = rowCountsOf(resultParts),
-      colStats = colStatsOf(resultParts),
-        op = Some("MERGE"))
+      val occ =
+        if (nUpdKeys == 0L) OccPolicy.AppendOk
+        else OccPolicy.KeyDisjoint(dom.getLong(1), dom.getLong(2))
+      val (nMatched, v) = rewriteSnapshot(spark, path, "MERGE", occ, pinnedVersion) { snap =>
+        val upd = normalized(upd0, snap.st.exposedCols)
+        val updPhys = normalized(upd, snap.st)
+        val updKeys = upd.select("key").distinct()
+        val touched = touchedFiles(spark, snap.st, updKeys)
+        val live = snap.rows(Some(touched))
+        val parts = snap.write(
+          live.join(updKeys, Seq("key"), "left_anti").unionByName(updPhys), "part-merge")
+        val delParts = snap.write(live.join(updKeys, Seq("key"), "left_semi"), "cdf-del")
+        val insParts = snap.write(updPhys, "cdf-ins")
+        Some(Rewrite(parts, touched, snap.distinctKeys(delParts), delParts, insParts))
+      }
       (nMatched, nUpdKeys - nMatched, v)
-    } finally upd.unpersist(blocking = false)
+    } finally upd0.unpersist(blocking = false)
   }
 
   /** MERGE-ON-READ (upsert) — the write-cheap merge VERSION-SCOPED
-    * DVs unlock (under global tombstones this was inexpressible: no
-    * tombstone could mask the OLD copy of a key while keeping the NEW
-    * copy visible; now a DV masks only files OLDER than itself, and
-    * the update file lands in the SAME version as its DV — equal
-    * version, never masked): ONE version carries the update rows as a
-    * plain append plus a `#dv:` key file of ALL update keys — every
-    * older copy of those keys goes dark, previously-deleted keys
-    * resurrect (their old DVs are older than the new file), and NOT A
-    * SINGLE DATA FILE IS REWRITTEN. This is the Delta
+    * DVs unlock: a DV masks only files OLDER than itself, and the
+    * update file lands in the SAME version as its DV — equal version,
+    * never masked. ONE version carries the update rows as a plain
+    * append plus a `#dv:` key file of ALL update keys — every older
+    * copy of those keys goes dark, previously-deleted keys resurrect
+    * (their old DVs are older than the new file), and NOT A SINGLE
+    * DATA FILE IS REWRITTEN. This is the Delta
     * merge-with-deletion-vectors path: O(updates) write cost at ANY
     * table size, trading read-side masking until the next OPTIMIZE
     * folds it (the COW [[mergeUpsert]] makes the opposite trade).
     * CDF sidecars carry the replaced rows' pre-images (live copies of
-    * update keys — a deletes-sized semi-join, read distributed) and
-    * the update rows, so [[changeFeed]] emits the same logical
-    * changes as the COW merge. Publish pinned via `expectedPrior`.
-    * Returns (matched, inserted, version) with the same key-level
-    * contract as [[mergeUpsert]]. */
+    * update keys — a deletes-sized semi-join over the zone-pruned
+    * touched files) and the update rows, so [[changeFeed]] emits the
+    * same logical changes as the COW merge. An empty `updates`
+    * publishes nothing. Publish pinned via `expectedPrior`. Returns
+    * (matched, inserted, version) with the same key-level contract as
+    * [[mergeUpsert]]. */
   private[graft] def mergeOnRead(spark: org.apache.spark.sql.SparkSession,
                                    path: String,
                                    updates: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
-    migrateLog(path)
-    val v0 = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"KvSource: nothing to merge into at $path"))
-    // `updates` must carry every column of the snapshot's schema; on
-    // an evolved table the appended rows are wide (r17 — guard gone)
-    val st0 = stateAt(path, v0)
-    val upd = normalized(updates, st0.exposedCols)
+    val snap = pinSnapshot(spark, path)
+    val upd = normalized(updates, snap.st.exposedCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val updPhys = normalized(upd, st0)
     try {
       val updKeys = upd.select("key").distinct()
-      // key count AND domain in ONE job: the count guards the empty
-      // publish (r15 advice: an empty merge used to commit a version
-      // carrying an empty dv-mor tombstone every scan then loaded),
-      // and the [min,max] domain is the OCC rebase window — a
+      // the tombstones first: ALL update keys (masking a key with no
+      // older live copy is a no-op). Their count guards the empty
+      // publish and their [min,max] is the OCC rebase window — a
       // concurrent append whose zones provably miss it is compatible
-      val dom = updKeys.agg(
-        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.min("key"),
-        org.apache.spark.sql.functions.max("key")).head()
-      val nUpdKeys = dom.getLong(0)
-      if (nUpdKeys == 0L) return (0L, 0L, v0)
-      val occ = OccPolicy.KeyDisjoint(dom.getLong(1), dom.getLong(2))
-      val salt = java.util.UUID.randomUUID().toString.take(8)
-      val live = spark.read.format(classOf[KvSource].getName)
-        .option("path", path).option("versionAsOf", v0.toString).load()
-      // the new rows: a plain append, stats recorded like any write
-      val dataParts = writeKvParts(path, salt, updPhys, "part-mor")
-      // the tombstones: ALL update keys (masking a key with no older
-      // live copy is a no-op; the new file is the same version as the
-      // DV, so it is never masked)
-      val dvName = s"dv-mor-$salt.dat"
-      updKeys.repartition(1)
-        .foreachPartition { rows: java.util.Iterator[org.apache.spark.sql.Row] =>
-          writeLinesAtomically(path, dvName, new java.util.Iterator[String] {
-            override def hasNext: Boolean = rows.hasNext
-            override def next(): String = rows.next().getLong(0).toString
-          })
-          ()
-        }
-      // CDF sidecars: pre-images = the LIVE copies of update keys
-      // (zone-pruned scan — only files whose zone admits an update key
-      // are read), post-images = the update rows themselves
-      val stMor = st0
-      val touched = touchedFiles(spark, stMor, updKeys)
-      val liveTouched = spark.read.format(classOf[KvSource].getName)
-        .option("path", path).option("versionAsOf", v0.toString)
-        .option("onlyDataFiles", touched.mkString(",")).load()
-      val delParts = writeKvParts(path, salt,
-        normalized(liveTouched.join(updKeys, Seq("key"), "left_semi"),
-          stMor), "cdf-del")
-      val insParts = writeKvParts(path, salt, updPhys, "cdf-ins")
-      val nMatched =
-        if (delParts.isEmpty) 0L
-        else spark.read.format(classOf[KvSource].getName)
-          .option("path", path)
-          .option("cdfFiles", delParts.map(_.name).mkString(",")).load()
-          .select("key").distinct().count()
-      val v = commitVersionKeyed(path, dataParts.map(_.name), None,
-        dvFiles = Seq(dvName), expectedPrior = Some(v0), occ = occ,
-        cdfDel = delParts.map(_.name), cdfIns = insParts.map(_.name),
-        stats = dataParts.map(_.keyStats).toMap,
-        valStats = valStatsOf(dataParts),
-        rowCounts = rowCountsOf(dataParts),
-      colStats = colStatsOf(dataParts),
-        op = Some("MERGE (MOR)"))
+      val dvName = s"dv-mor-${snap.salt}.dat"
+      val (nUpdKeys, lo, hi) = writeDv(spark, path, dvName, updKeys)
+      if (nUpdKeys == 0L) return (0L, 0L, snap.version)
+      val updPhys = normalized(upd, snap.st)
+      val dataParts = snap.write(updPhys, "part-mor")
+      val touched = touchedFiles(spark, snap.st, updKeys)
+      val delParts = snap.write(
+        snap.rows(Some(touched)).join(updKeys, Seq("key"), "left_semi"), "cdf-del")
+      val insParts = snap.write(updPhys, "cdf-ins")
+      val nMatched = snap.distinctKeys(delParts)
+      val v = snap.publish(dataParts, "MERGE (MOR)", OccPolicy.KeyDisjoint(lo, hi),
+        dvFiles = Seq(dvName), cdfDel = delParts, cdfIns = insParts)
       (nMatched, nUpdKeys - nMatched, v)
     } finally upd.unpersist(blocking = false)
   }
 
+  /** UPDATE ... SET val = <expr> WHERE <predicate> — the row-update
+    * DML verb with TRUE per-row semantics: every live row matching the
+    * predicate is rewritten in place with `setValExpr` (a SQL
+    * expression over the live columns); non-matching rows — including
+    * other copies of a matched key that do NOT satisfy the predicate —
+    * are preserved exactly. The rewrite is a pruned COW through
+    * [[rewriteSnapshot]]: the matched keys drive the same zone-map touch
+    * probe as MERGE, untouched files survive by name, the touched scan
+    * applies DV masks. CDF sidecars carry the matching rows' pre- and
+    * post-images. A concurrent pure APPEND rebases: the appended rows
+    * are post-snapshot (serialized after this UPDATE). Returns (rows
+    * updated, version published; version = pinned snapshot and 0 when
+    * the predicate matched nothing — publishing an empty change would
+    * be noise). */
+  private[graft] def updateWhere(spark: org.apache.spark.sql.SparkSession,
+                                   path: String, predicate: String,
+                                   setValExpr: String): (Long, Long) =
+    rewriteSnapshot(spark, path, "UPDATE", OccPolicy.AppendOk) { snap =>
+      val st = snap.st
+      // the matched-row probe prunes via the pushed key-range filter
+      // when the predicate is key-shaped (free file skipping)
+      val touched = touchedFiles(spark, st,
+        snap.scan().where(predicate).select("key").distinct())
+      val live = snap.scan(Some(touched))
+      // only `val` (position 1, under whatever name the table maps it
+      // to) is settable; evolved columns pass through, and predicate and
+      // set expression may reference them freely
+      val extras = st.livePos.drop(2).map(p => s"`${st.schemaCols(p)}`")
+      val vn = st.schemaCols(1)
+      val parts = snap.write(normalized(live.selectExpr(Seq("key",
+        s"CAST(CASE WHEN ($predicate) THEN ($setValExpr) ELSE `$vn` END AS STRING) AS `$vn`")
+        ++ extras: _*), st), "part-update")
+      val delParts = snap.write(normalized(live.where(predicate), st), "cdf-del")
+      val insParts = snap.write(normalized(live.where(predicate)
+        .selectExpr(Seq("key", s"CAST(($setValExpr) AS STRING) AS `$vn`") ++ extras: _*),
+        st), "cdf-ins")
+      // rows updated = the pre-image sidecar's row count
+      val nRows = delParts.flatMap(_.rows).sum
+      if (nRows > 0L) Some(Rewrite(parts, touched, nRows, delParts, insParts))
+      else {
+        (parts ++ delParts ++ insParts).foreach(p => new java.io.File(path, p.name).delete())
+        None
+      }
+    }
+
   /** The ONE implementation of the wide on-disk ROW format, shared by
-    * the DSv2 task writer and every rewrite verb's writer (r17
-    * review: [[writePartRows]] and [[KvDataWriter]] had become
-    * parallel copies of the format + validation + zone tracking —
-    * exactly the drift the r16 writePart consolidation existed to
-    * prevent, re-opened one layer up): renders a row's line text
-    * (key, val, evolved columns with `\N` nulls; the `#c:` header
-    * stays with the callers) while folding the row into the key/val/
-    * evolved-column zone maps and the row count. Val and evolved
-    * extremes compare as [[UTF8String]] (binary order, zero per-row
-    * allocation) and copy only on a new extreme. */
+    * the DSv2 task writer and every rewrite verb's writer: renders a
+    * row's line text (key, val, evolved columns with `\N` nulls; the
+    * `#c:` header stays with the callers) while folding the row into
+    * the key/val/evolved-column zones and the row count. Val and
+    * evolved extremes compare as [[UTF8String]] (binary order, zero
+    * per-row allocation) and copy only on a new extreme. */
   private[graft] final class WideRowCodec(nCols: Int,
                                           physMap: Array[Int] = null) {
-    var minKey: Long = Long.MaxValue
-    var maxKey: Long = Long.MinValue
-    var minVal: UTF8String = null
-    var maxVal: UTF8String = null
-    val minExtra = new Array[UTF8String](math.max(0, nCols - 2))
-    val maxExtra = new Array[UTF8String](math.max(0, nCols - 2))
-    var nRows: Long = 0L
+    private var minKey: Long = Long.MaxValue
+    private var maxKey: Long = Long.MinValue
+    private var minVal: UTF8String = null
+    private var maxVal: UTF8String = null
+    private val minExtra = new Array[UTF8String](math.max(0, nCols - 2))
+    private val maxExtra = new Array[UTF8String](math.max(0, nCols - 2))
+    private var nRows: Long = 0L
 
     /** Validate `row`, fold it into the zones, append its line text
       * (no trailing newline) to `sb`. `nCols` is the PHYSICAL width
@@ -1929,76 +1868,53 @@ object KvSource {
       }
     }
 
-    /** Evolved-column zone list, `(position, lo, hi)` per column that
-      * saw at least one non-null value. */
-    def colStatsSeq: Seq[(Int, Array[Byte], Array[Byte])] =
-      minExtra.indices.collect {
-        case i if minExtra(i) != null =>
-          (i + 2, minExtra(i).getBytes, maxExtra(i).getBytes)
-      }.toSeq
-
+    /** What the rendered rows make of file `name`: zones for every
+      * column that saw a non-null value, the row count always. */
     def partMeta(name: String): PartMeta =
-      PartMeta(name, minKey, maxKey,
-        if (minVal == null) null else minVal.getBytes,
-        if (maxVal == null) null else maxVal.getBytes, nRows,
-        minExtra.map(u => if (u == null) null else u.getBytes),
-        maxExtra.map(u => if (u == null) null else u.getBytes))
+      if (nRows == 0L) PartMeta(name, rows = Some(0L))
+      else PartMeta(name, Some((minKey, maxKey)), zone(minVal, maxVal),
+        minExtra.indices.flatMap(i => zone(minExtra(i), maxExtra(i)).map(i + 2 -> _)).toMap,
+        Some(nRows))
   }
 
-  /** Per-file write metadata: the committed name plus the zone maps
-    * (key min/max; val min/max in UTF8-byte order; per-EVOLVED-column
-    * min/max over non-null values, indexed by `position − 2`, null
-    * entry = column all-null in this file) tracked for free as the
-    * rows streamed through. */
-  private[graft] case class PartMeta(name: String, keyLo: Long, keyHi: Long,
-                                     valLo: Array[Byte], valHi: Array[Byte],
-                                     rows: Long = -1L,
-                                     extraLo: Array[Array[Byte]] = null,
-                                     extraHi: Array[Array[Byte]] = null) {
-    def keyStats: (String, (Long, Long)) = name -> ((keyLo, keyHi))
+  /** A string zone as the manifest records it: bounds truncated to
+    * [[ValBoundMaxLen]] bytes (the upper one incremented); an
+    * unincrementable upper bound or an all-null column records none. */
+  private def zone(lo: UTF8String, hi: UTF8String): Option[(Array[Byte], Array[Byte])] =
+    if (lo == null) None else truncHi(hi.getBytes).map(h => (truncLo(lo.getBytes), h))
+
+  /** What one data file holds, as the manifest records it: its key
+    * zone (`#stats:`), val zone (`#vstats:`), evolved-column zones by
+    * absolute schema position (`#cstats:` — rename-proof, positions
+    * never move), and row count (`#rows:`, the maintenance planner's
+    * denominator). String bounds are already truncated for the
+    * manifest; an absent entry is not recorded, and the file is then
+    * never pruned on it (the safe default — the accepted predicates
+    * are all null-rejecting, so value-zone pruning is sound on nullable
+    * columns). The DSv2 task writer returns it as its commit message,
+    * every rewrite writer collects it, and RESTORE and CLONE rebuild it
+    * from a snapshot ([[LogState.partsOf]]). */
+  private[graft] case class PartMeta(name: String,
+                                     keys: Option[(Long, Long)] = None,
+                                     vals: Option[(Array[Byte], Array[Byte])] = None,
+                                     cols: Map[Int, (Array[Byte], Array[Byte])] = Map.empty,
+                                     rows: Option[Long] = None)
+      extends WriterCommitMessage
+
+  /** The ONE rendering of per-file metadata headers — deltas,
+    * checkpoints and clones alike; base64 keeps arbitrary zone bytes
+    * colon- and newline-free. The first part per name wins. */
+  private[graft] def partMetaLines(parts: Seq[PartMeta]): Seq[String] = {
+    val b64 = java.util.Base64.getEncoder
+    def enc(z: (Array[Byte], Array[Byte])): String =
+      s"${b64.encodeToString(z._1)}:${b64.encodeToString(z._2)}"
+    parts.distinctBy(_.name).sortBy(_.name).flatMap { p =>
+      p.keys.map { case (lo, hi) => s"#stats:${p.name}:$lo:$hi" } ++
+        p.vals.map(z => s"#vstats:${p.name}:${enc(z)}") ++
+        p.cols.toSeq.sortBy(_._1).map { case (i, z) => s"#cstats:$i:${p.name}:${enc(z)}" } ++
+        p.rows.map(n => s"#rows:${p.name}:$n")
+    }
   }
-
-  /** `#rows:` entries for a set of written parts. */
-  private[graft] def rowCountsOf(parts: Seq[PartMeta]): Map[String, Long] =
-    parts.collect { case p if p.rows >= 0 => p.name -> p.rows }.toMap
-
-  /** `#vstats:` entries for a set of written parts — upper bounds that
-    * cannot be truncated safely (all-0xFF prefix) drop the zone. */
-  private[graft] def valStatsOf(parts: Seq[PartMeta]): Map[String, (Array[Byte], Array[Byte])] =
-    parts.flatMap(p => truncHi(p.valHi).map(h => p.name -> ((truncLo(p.valLo), h)))).toMap
-
-  /** The same truncation fold over task COMMIT MESSAGES — shared by
-    * the batch and streaming job commits so the zone-compression rule
-    * can never drift between them (r17 review). */
-  private[graft] def valStatsOfMsgs(msgs: Seq[KvCommitMessage]): Map[String, (Array[Byte], Array[Byte])] =
-    msgs.flatMap(m => m.valStats.flatMap { case (lo, hi) =>
-      truncHi(hi).map(h => m.file -> ((truncLo(lo), h)))
-    }).toMap
-
-  private[graft] def colStatsOfMsgs(msgs: Seq[KvCommitMessage]): Map[(Int, String), (Array[Byte], Array[Byte])] =
-    msgs.flatMap(m => m.colStats.flatMap { case (i, lo, hi) =>
-      truncHi(hi).map(h => (i, m.file) -> ((truncLo(lo), h)))
-    }).toMap
-
-  /** `#cstats:` entries for a set of written parts (r17 — zone maps
-    * for EVOLVED columns, the r16 verdict's item 2): keyed by ABSOLUTE
-    * schema position (2+), which is rename-proof (columns are
-    * append-only, positions never move) and colon-safe. A column with
-    * no non-null value in a file records no zone there — the file is
-    * then never pruned on that column (safe default; the accepted
-    * predicates are all null-rejecting, so value-zone pruning is
-    * sound on nullable columns). Same truncate-lower /
-    * increment-upper compression as the val zone. */
-  private[graft] def colStatsOf(parts: Seq[PartMeta]): Map[(Int, String), (Array[Byte], Array[Byte])] =
-    parts.flatMap { p =>
-      if (p.extraLo == null) Seq.empty
-      else p.extraLo.indices.flatMap { i =>
-        val lo = p.extraLo(i)
-        val hi = p.extraHi(i)
-        if (lo == null || hi == null) None
-        else truncHi(hi).map(h => (i + 2, p.name) -> ((truncLo(lo), h)))
-      }
-    }.toMap
 
   /** Normalize a DataFrame to the table's PHYSICAL column list for the
     * rewrite writers: `key` cast BIGINT, every other column cast
@@ -2024,18 +1940,11 @@ object KvSource {
                                   st: LogState): org.apache.spark.sql.DataFrame =
     normalized(df, st.schemaCols, st.droppedPos)
 
-  /** The ONE per-partition row writer every rewrite verb shares
-    * (r16 review: the zorder/binpack rewrites had drifted into
-    * near-identical private copies), SCHEMA-WIDTH-GENERAL since r17
-    * (the evolved-table guards are gone): streams Tungsten
-    * [[InternalRow]]s of the table's current column list into an
-    * atomically-renamed task file — per-file `#c:<n>` header when
-    * wide, `\N` encodes an evolved-column null, same contract as the
-    * DSv2 task writer. Key and val zones plus the row count are
-    * tracked as the rows pass; val extremes compare as [[UTF8String]]
-    * (binary order, ZERO per-row allocation — r16's review finding 7
-    * applied here too, closing the r16 verdict nit at the old
-    * writePart) and copy only when a new extreme lands. */
+  /** The ONE per-partition row writer every rewrite verb shares:
+    * streams Tungsten [[InternalRow]]s of the table's physical column
+    * list through a [[WideRowCodec]] into an atomically-renamed task
+    * file — per-file `#c:<n>` header when wide, same contract as the
+    * DSv2 task writer. An empty partition writes nothing. */
   private def writePartRows(path: String, name: String,
                               rows: Iterator[InternalRow],
                               nCols: Int): Iterator[PartMeta] =
@@ -2099,85 +2008,6 @@ object KvSource {
           .select("file").distinct().as[String].collect().toSeq
       }
     statless ++ touchedWithStats
-  }
-
-  /** UPDATE ... SET val = <expr> WHERE <predicate> — the row-update
-    * DML verb with TRUE per-row semantics: every live row matching the
-    * predicate is rewritten in place with `setValExpr` (a SQL
-    * expression over (key, val)); non-matching rows — including other
-    * copies of a matched key that do NOT satisfy the predicate — are
-    * preserved exactly (the r15 review found the earlier
-    * merge-composed form collapsed ALL copies of a matched key). The
-    * rewrite is a direct pruned COW: the matched keys drive the same
-    * zone-map touch probe as MERGE, untouched files survive by name,
-    * the touched scan applies DV masks, and the old DV files stay
-    * as-is (binding on older survivors, inert on the newer rewrite —
-    * version-scoped). CDF sidecars carry the matching rows' pre- and
-    * post-images. The publish is pinned to the scanned snapshot
-    * (`expectedPrior`). Returns (rows updated, version published;
-    * version = pinned snapshot and 0 when the predicate matched
-    * nothing — publishing an empty change would be noise). */
-  private[graft] def updateWhere(spark: org.apache.spark.sql.SparkSession,
-                                   path: String, predicate: String,
-                                   setValExpr: String): (Long, Long) = {
-    migrateLog(path)
-    val v0 = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"KvSource: nothing to update at $path"))
-    val st = stateAt(path, v0)
-    val live = spark.read.format(classOf[KvSource].getName)
-      .option("path", path).option("versionAsOf", v0.toString).load()
-    // the matched-row probe prunes via the pushed key-range filter
-    // when the predicate is key-shaped (free file skipping)
-    val matchedKeys = live.where(predicate).select("key").distinct()
-    val touched = touchedFiles(spark, st, matchedKeys)
-    val salt = java.util.UUID.randomUUID().toString.take(8)
-    val liveTouched = spark.read.format(classOf[KvSource].getName)
-      .option("path", path).option("versionAsOf", v0.toString)
-      .option("onlyDataFiles", touched.mkString(",")).load()
-    // evolved columns pass through the rewrite untouched (only `val`
-    // is settable — the table's one mutable payload column; predicate
-    // and set expression may REFERENCE evolved columns freely)
-    val extras = st.livePos.drop(2).map(p => s"`${st.schemaCols(p)}`")
-    // position-1 is the settable payload column under whatever name
-    // the table currently maps it to (rename-safe)
-    val vn = st.schemaCols(1)
-    val resultParts = writeKvParts(path, salt,
-      normalized(liveTouched.selectExpr(Seq("key",
-        s"CAST(CASE WHEN ($predicate) THEN ($setValExpr) ELSE `$vn` END AS STRING) AS `$vn`")
-        ++ extras: _*), st),
-      "part-update")
-    val delParts = writeKvParts(path, salt,
-      normalized(liveTouched.where(predicate), st), "cdf-del")
-    val insParts = writeKvParts(path, salt,
-      normalized(liveTouched.where(predicate)
-        .selectExpr(Seq("key", s"CAST(($setValExpr) AS STRING) AS `$vn`")
-          ++ extras: _*), st),
-      "cdf-ins")
-    // rows updated = the pre-image sidecar's row count (deletes-sized)
-    val nRows =
-      if (delParts.isEmpty) 0L
-      else spark.read.format(classOf[KvSource].getName)
-        .option("path", path)
-        .option("cdfFiles", delParts.map(_.name).mkString(",")).load().count()
-    if (nRows == 0L) {
-      (resultParts ++ delParts ++ insParts).foreach(p =>
-        new java.io.File(path, p.name).delete())
-      (0L, v0)
-    } else {
-      // a concurrent pure APPEND rebases: the appended rows are
-      // post-snapshot (serialized after this UPDATE), no DV is
-      // involved, and the touched-file removal is untouched by an add
-      val v = commitVersionKeyed(path, resultParts.map(_.name), None,
-        removeFiles = touched, expectedPrior = Some(v0),
-        occ = OccPolicy.AppendOk,
-        cdfDel = delParts.map(_.name), cdfIns = insParts.map(_.name),
-        stats = resultParts.map(_.keyStats).toMap,
-        valStats = valStatsOf(resultParts),
-        rowCounts = rowCountsOf(resultParts),
-      colStats = colStatsOf(resultParts),
-        op = Some("UPDATE"))
-      (nRows, v)
-    }
   }
 
   /** SHALLOW CLONE (the Delta CLONE verb): start a NEW commit chain at
@@ -2246,17 +2076,7 @@ object KvSource {
         st.droppedPos.toSeq.sorted.map(i => s"#coldrop:$i") ++
         inheritedAt.sortBy(_._1).map { case (n, u) => s"#addedat:$n:$u" } ++
         st.dvFiles.distinct.map(f => s"#dvstate:$f") ++
-        st.stats.toSeq.sortBy(_._1)
-          .map { case (f, (lo, hi)) => s"#stats:$f:$lo:$hi" } ++
-        st.valStats.toSeq.sortBy(_._1).map { case (f, (lo, hi)) =>
-          val e = java.util.Base64.getEncoder
-          s"#vstats:$f:${e.encodeToString(lo)}:${e.encodeToString(hi)}"
-        } ++
-        st.colStats.toSeq.sortBy(_._1).map { case ((i, f), (lo, hi)) =>
-          val e = java.util.Base64.getEncoder
-          s"#cstats:$i:$f:${e.encodeToString(lo)}:${e.encodeToString(hi)}"
-        } ++
-        st.rowCounts.toSeq.sortBy(_._1).map { case (f, n) => s"#rows:$f:$n" } ++
+        partMetaLines(st.partsOf(st.files)) ++
         st.files.distinct)).mkString("\n")
     if (!publishCas(dst, 1L, body)) {
       // the target was committed concurrently — an abandoned clone
@@ -2577,8 +2397,7 @@ class KvTable(path: String, cdfRead: Boolean = false,
   * zone maps, but every filter is also returned as a residual — Spark
   * re-applies them row-level, so pruning can only skip files whose
   * [min,max] provably misses the range, never change results. Files
-  * without stats (pre-r15 commits, OPTIMIZE/merge rewrites) are never
-  * pruned. `.explain` shows the accepted range via
+  * without stats (pre-r15 commits) are never pruned. `.explain` shows the accepted range via
   * [[KvScan.description]]. */
 class KvScanBuilder(path: String, asOf: Option[Long],
                     startingVersion: Option[Long],
@@ -3390,17 +3209,6 @@ class KvMicroBatchStream(path: String, startingVersion: Option[Long] = None,
 
 // ---- write side: staged task commit, version-chained job commit ----
 
-/** Task commit message: the committed file name plus its key min/max
-  * and val min/max (None for an empty file) — the per-file zone maps
-  * the job commit records as `#stats:` / `#vstats:` headers for
-  * scan-side file skipping on BOTH columns. */
-case class KvCommitMessage(file: String,
-                           stats: Option[(Long, Long)] = None,
-                           valStats: Option[(Array[Byte], Array[Byte])] = None,
-                           nRows: Long = -1L,
-                           colStats: Seq[(Int, Array[Byte], Array[Byte])] = Seq.empty)
-    extends WriterCommitMessage
-
 class KvBatchWrite(path: String, replayKey: Option[String], queryId: String,
                    nCols: Int = 2, physMap: Array[Int] = null)
     extends BatchWrite {
@@ -3416,23 +3224,16 @@ class KvBatchWrite(path: String, replayKey: Option[String], queryId: String,
     * [[KvSource.commitVersionKeyed]]. A reader either sees a complete
     * committed version or the previous one — never a half state, and
     * never a state missing a concurrent winner's files. */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.map(_.asInstanceOf[KvCommitMessage]).toSeq
-    KvSource.commitVersionKeyed(path, msgs.map(_.file), replayKey,
-      stats = msgs.flatMap(m => m.stats.map(m.file -> _)).toMap,
-      valStats = KvSource.valStatsOfMsgs(msgs),
-      rowCounts = msgs.collect {
-        case m if m.nRows >= 0 => m.file -> m.nRows
-      }.toMap,
-      colStats = KvSource.colStatsOfMsgs(msgs),
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    KvSource.commitVersionKeyed(path,
+      messages.map(_.asInstanceOf[KvSource.PartMeta]).toSeq, replayKey,
       op = Some("WRITE"))
-  }
 
   /** Job abort: whatever tasks already committed is garbage now —
     * remove it so a retry starts clean. */
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case m: KvCommitMessage => new java.io.File(path, m.file).delete()
+      case m: KvSource.PartMeta => new java.io.File(path, m.name).delete()
       case _ => ()
     }
 }
@@ -3465,25 +3266,18 @@ class KvStreamingWrite(path: String, queryId: String, fullQueryId: String,
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.map(_.asInstanceOf[KvCommitMessage]).toSeq
     // epoch keyed by the STREAMING QUERY's stable id: a replayed
     // micro-batch of THIS query absorbs; another query's epoch 0 (or a
     // fresh-checkpoint restart, which mints a new query id) appends
-    KvSource.commitVersionKeyed(path, msgs.map(_.file),
-      Some(s"$fullQueryId:$epochId"),
-      stats = msgs.flatMap(m => m.stats.map(m.file -> _)).toMap,
-      valStats = KvSource.valStatsOfMsgs(msgs),
-      rowCounts = msgs.collect {
-        case m if m.nRows >= 0 => m.file -> m.nRows
-      }.toMap,
-      colStats = KvSource.colStatsOfMsgs(msgs),
-      op = Some("STREAMING UPDATE"))
+    KvSource.commitVersionKeyed(path,
+      messages.map(_.asInstanceOf[KvSource.PartMeta]).toSeq,
+      Some(s"$fullQueryId:$epochId"), op = Some("STREAMING UPDATE"))
   }
 
   override def abort(epochId: Long,
                      messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case m: KvCommitMessage => new java.io.File(path, m.file).delete()
+      case m: KvSource.PartMeta => new java.io.File(path, m.name).delete()
       case _ => ()
     }
 }
@@ -3527,10 +3321,8 @@ class KvDataWriter(path: String, partitionId: Int, taskId: Long, queryId: String
   if (nCols > 2) { out.write(s"#c:$nCols"); out.write('\n') }
 
   // the shared row codec renders the line AND tracks the per-file
-  // zone maps (key, val, evolved columns — UTF8-byte order, extremes
-  // copied only when they change) as rows stream through: ONE
-  // implementation of the format for this writer and every rewrite
-  // verb (r17 review — the two had drifted into parallel copies)
+  // zones as rows stream through: ONE implementation of the format
+  // for this writer and every rewrite verb
   private val codec = new KvSource.WideRowCodec(nCols, physMap)
   private val sb = new java.lang.StringBuilder(64)
 
@@ -3546,12 +3338,7 @@ class KvDataWriter(path: String, partitionId: Int, taskId: Long, queryId: String
     import java.nio.file.{Files, Paths, StandardCopyOption}
     Files.move(tmpFile.toPath, Paths.get(path, finalName),
       StandardCopyOption.ATOMIC_MOVE)
-    KvCommitMessage(finalName,
-      if (codec.nRows > 0) Some((codec.minKey, codec.maxKey)) else None,
-      if (codec.nRows > 0) Some((codec.minVal.getBytes, codec.maxVal.getBytes))
-      else None,
-      codec.nRows,
-      if (codec.nRows > 0) codec.colStatsSeq else Seq.empty)
+    codec.partMeta(finalName)
   }
 
   override def abort(): Unit = { out.close(); tmpFile.delete() }

@@ -50,9 +50,8 @@ object OccRace {
       while (!committed) {
         val v0 = KvSource.latestVersion(path)
         try {
-          KvSource.commitVersionKeyed(path, Seq(name), None,
-            stats = Map(name -> ((lo, lo + 9))),
-            rowCounts = Map(name -> 10L),
+          KvSource.commitVersionKeyed(path,
+            Seq(KvSource.PartMeta(name, keys = Some((lo, lo + 9)), rows = Some(10L))), None,
             expectedPrior = v0,
             occ = KvSource.OccPolicy.KeyDisjoint(lo, lo + 9),
             op = Some("WRITE"))

@@ -135,7 +135,34 @@ class KvLogModelSpec extends AnyFunSuite {
     Seq(src, dst).foreach(d => SourceQueries.deleteRecursively(new java.io.File(d)))
   }
 
+  test("RESTORE re-adds files with the target's zones and row counts") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-kv-restore-meta").toString
+    (0 until 2).foreach { i =>
+      spark.range(i * 100L, i * 100L + 100L)
+        .selectExpr("id AS key", "concat('v', id % 7) AS val").repartition(1)
+        .write.format(classOf[KvSource].getName)
+        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    }                                                  // v1, v2
+    KvSource.deleteWhere(spark, dir, "key % 4 = 0")    // v3: 25% dead rows
+    def meta(st: KvSource.LogState) = st.files.sorted.map { f =>
+      (f, st.stats.get(f), st.valStats.get(f).map { case (lo, hi) => (lo.toSeq, hi.toSeq) },
+        st.colStats.collect { case ((i, g), (lo, hi)) if g == f => (i, lo.toSeq, hi.toSeq) }.toSet,
+        st.rowCounts.get(f))
+    }
+    def optimizeJobs = KvSource.maintenancePlan(dir).filter(_._1.startsWith("OPTIMIZE_"))
+    val target = meta(KvSource.committedState(dir, Some(3L)))
+    val targetPlan = optimizeJobs
+    assert(target.forall { case (_, k, v, _, r) => k.nonEmpty && v.nonEmpty && r.nonEmpty })
+    assert(targetPlan.map(_._1) == Seq("OPTIMIZE_DV_FOLD"), targetPlan.toString)
+    KvSource.optimizeBinPack(spark, dir, 2)            // v4
+    KvSource.restore(dir, 3L)                          // v5
+    assert(meta(KvSource.committedState(dir)) == target)
+    assert(optimizeJobs == targetPlan)
+    SourceQueries.deleteRecursively(new java.io.File(dir))
+  }
+
   test("random verb sequences: table == model after every verb; time travel and CDF net hold") {
+    var layouts = Set.empty[String]
     for (seed <- Seq(7L, 23L, 41L, 99L)) {
       val rnd = new scala.util.Random(seed)
       val dir = java.nio.file.Files.createTempDirectory(s"graft-kv-model$seed").toString
@@ -183,8 +210,15 @@ class KvLogModelSpec extends AnyFunSuite {
           acc.updated(nk, acc.getOrElse(nk, 0) + c)
         }
       }
+      // every OPTIMIZE layout goes through the model, picked by the seed
       def doOptimize(): Unit =
-        if (model.nonEmpty) { KvSource.optimizeCompact(spark, dir); () }
+        if (model.nonEmpty) {
+          rnd.nextInt(3) match {
+            case 0 => KvSource.optimizeCompact(spark, dir); layouts += "compact"
+            case 1 => KvSource.optimizeBinPack(spark, dir, 1 + rnd.nextInt(3)); layouts += "binpack"
+            case _ => KvSource.optimizeZorder(spark, dir, 2 << rnd.nextInt(2)); layouts += "zorder"
+          }
+        }
       var restoreVersions = List.empty[Long]
       def doRestore(): Unit = {
         val vs = KvSource.versions(dir)
@@ -248,5 +282,6 @@ class KvLogModelSpec extends AnyFunSuite {
       }
       SourceQueries.deleteRecursively(new java.io.File(dir))
     }
+    assert(layouts == Set("compact", "binpack", "zorder"), s"layouts run: $layouts")
   }
 }

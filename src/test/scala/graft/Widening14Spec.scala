@@ -345,7 +345,7 @@ class Widening14Spec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-kv-txn").toString
     def commit(name: String, key: String): Long = {
       stage(dir, name, 1L)
-      KvSource.commitVersionKeyed(dir, Seq(name), Some(key))
+      KvSource.commitVersionKeyed(dir, Seq(KvSource.PartMeta(name)), Some(key))
     }
     commit("part-a0.dat", "appA:0")
     commit("part-b0.dat", "appB:0") // a DIFFERENT writer's batch 0: must land
@@ -353,7 +353,7 @@ class Widening14Spec extends AnyFunSuite {
       "another app's batch 0 was falsely absorbed as a replay")
     // the same writer re-offering ITS batch 0 is absorbed
     stage(dir, "part-a0-replay.dat", 1L)
-    KvSource.commitVersionKeyed(dir, Seq("part-a0-replay.dat"), Some("appA:0"))
+    KvSource.commitVersionKeyed(dir, Seq(KvSource.PartMeta("part-a0-replay.dat")), Some("appA:0"))
     assert(KvSource.committedFiles(dir).size == 2, "same-app replay added rows")
     assert(!new java.io.File(dir, "part-a0-replay.dat").exists())
     // legacy r13 '#batch:<n>' headers parse into the empty-app space:

@@ -226,7 +226,7 @@ class Widening15Spec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-kv-txnmax").toString
     (0L until 12L).foreach { b =>
       stage(dir, s"part-app-$b.dat", b)
-      KvSource.commitVersionKeyed(dir, Seq(s"part-app-$b.dat"), Some(s"appA:$b"))
+      KvSource.commitVersionKeyed(dir, Seq(KvSource.PartMeta(s"part-app-$b.dat")), Some(s"appA:$b"))
     }
     // v10 is a checkpoint: its ledger must be ONE line for appA
     val v10 = scala.io.Source.fromFile(KvSource.manifestFile(dir, 10L), "UTF-8")
@@ -237,12 +237,12 @@ class Widening15Spec extends AnyFunSuite {
     // an epoch at or below the retained max absorbs even though its
     // individual key aged out of the ledger
     stage(dir, "part-app-replay.dat", 3L)
-    KvSource.commitVersionKeyed(dir, Seq("part-app-replay.dat"), Some("appA:3"))
+    KvSource.commitVersionKeyed(dir, Seq(KvSource.PartMeta("part-app-replay.dat")), Some("appA:3"))
     assert(KvSource.versions(dir).last == 12L, "replayed epoch 3 published a version")
     assert(!new java.io.File(dir, "part-app-replay.dat").exists())
     // the NEXT epoch (12) appends normally
     stage(dir, "part-app-12.dat", 12L)
-    KvSource.commitVersionKeyed(dir, Seq("part-app-12.dat"), Some("appA:12"))
+    KvSource.commitVersionKeyed(dir, Seq(KvSource.PartMeta("part-app-12.dat")), Some("appA:12"))
     assert(KvSource.versions(dir).last == 13L)
     assert(KvSource.committedFiles(dir).size == 13)
     SourceQueries.deleteRecursively(new java.io.File(dir))

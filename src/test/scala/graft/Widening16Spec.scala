@@ -83,7 +83,7 @@ class Widening16Spec extends AnyFunSuite {
     val f1 = KvSource.committedFiles(dir, Some(1L))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "part-occrw.dat"), "0,rw\n".getBytes("UTF-8"))
-    val v = KvSource.commitVersionKeyed(dir, Seq("part-occrw.dat"), None,
+    val v = KvSource.commitVersionKeyed(dir, Seq(KvSource.PartMeta("part-occrw.dat")), None,
       removeFiles = f1, expectedPrior = Some(1L),
       occ = KvSource.OccPolicy.AppendOk, op = Some("REWRITE"))
     assert(v == 3L)
@@ -93,7 +93,7 @@ class Widening16Spec extends AnyFunSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "part-occrw2.dat"), "0,rw2\n".getBytes("UTF-8"))
     val e = intercept[IllegalStateException] {
-      KvSource.commitVersionKeyed(dir, Seq("part-occrw2.dat"), None,
+      KvSource.commitVersionKeyed(dir, Seq(KvSource.PartMeta("part-occrw2.dat")), None,
         removeFiles = Seq("part-occrw.dat"), expectedPrior = Some(3L),
         occ = KvSource.OccPolicy.AppendOk, op = Some("REWRITE"))
     }
