@@ -17,8 +17,7 @@ object Plans {
     * reviewer reads top-down); every remaining `queries` key follows
     * alphabetically, so the file always covers the full surface. */
   val Headline = Seq(
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-    "q6_forecast_revenue", "q_window_running", "q_asof_join",
+    "q1_pricing_summary", "q6_forecast_revenue", "q_asof_join",
     "dedup_minhash_pairs", "dedup_ngram_jaccard", "dedup_embedding_cos",
     "dedup_corpus_sig", "ann_topk_bruteforce", "ann_ivf_topk",
     "stream_window_agg", "stream_sessionize", "pipeline_dedup_survivors",
@@ -26,7 +25,7 @@ object Plans {
     // round 4 additions
     "q_range_join", "q_bloom_join", "ann_pq_topk", "ann_ivfpq_topk",
     "ann_ivf_probe2", "stream_latest_state", "text_repetition",
-    "jdbc_live_extract", "ingest_partition_pruning", "q_grouping_sets",
+    "jdbc_live_extract", "ingest_partition_pruning",
     "dedup_containment", "dedup_components",
     // round 6 additions
     "q_lateral", "dedup_incremental", "split_decontaminate",
@@ -38,14 +37,14 @@ object Plans {
     "embed_kmeans_train", "text_search_rank", "stream_late_audit",
     "mm_shard_skew", "ann_recall_eval",
     // round 8 additions
-    "source_bucketed_join", "layout_zorder", "q_distinct_skew",
+    "source_bucketed_join", "layout_zorder",
     "load_agg_upsert", "sample_weighted", "ingest_gap_audit",
     "dedup_paragraph", "stream_deid_pipeline", "ann_cell_balance",
     "text_lm_score", "ingest_checksum_reconcile", "load_cdc_apply",
     "embed_random_projection", "stream_rate_anomaly", "dedup_fuzzy_link",
-    "q_interval_union", "pipeline_training_mix", "mm_binary_ingest",
+    "pipeline_training_mix", "mm_binary_ingest",
     // round 9 additions
-    "q_sequence_match", "q_skyline", "layout_column_stats",
+    "q_sequence_match", "q_skyline",
     "layout_compaction_plan", "text_bpe_pairs", "text_length_outliers",
     "pipeline_mix_weights", "embed_matryoshka_eval", "embed_dim_stats",
     "dedup_component_stats", "dedup_lsh_tuning", "dedup_source_dup_rate",

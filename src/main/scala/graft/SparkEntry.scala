@@ -23,27 +23,12 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.D core analytics
     "q1_pricing_summary" -> Analytics.q1PricingSummary _,
-    "q3_shipping_priority" -> Analytics.q3ShippingPriority _,
-    "q5_local_supplier" -> Analytics.q5LocalSupplier _,
     "q6_forecast_revenue" -> Analytics.q6ForecastRevenue _,
-    "q_window_running" -> Analytics.qWindowRunning _,
     "q_topk_per_group" -> Analytics.qTopkPerGroup _,
     "q_topk_native" -> Analytics.qTopkNative _,
-    "q_rollup" -> Analytics.qRollup _,
-    "q_semi_anti" -> Analytics.qSemiAnti _,
     "q_approx_distinct" -> Analytics.qApproxDistinct _,
-    "q_approx_quantile" -> Analytics.qApproxQuantile _,
-    "q_correlated_subquery" -> Analytics.qCorrelatedSubquery _,
-    "q_set_ops" -> Analytics.qSetOps _,
     "q_asof_join" -> AsOf.purchaseLastClick _,
-    "q_pivot" -> Analytics.qPivot _,
     "q_salted_join" -> Analytics.qSaltedJoin _,
-    "q_join_types" -> Analytics.qJoinTypes _,
-    "q_window_range" -> Analytics.qWindowRange _,
-    "q_cube" -> Analytics.qCube _,
-    "q_unpivot" -> Analytics.qUnpivot _,
-    "q_string_agg" -> Analytics.qStringAgg _,
-    "q_percentile" -> Analytics.qPercentile _,
     // §2.A ingest / schema
     "ingest_catalog" -> DlpQueries.ingestCatalog _,
     "ingest_offset_splits" -> DlpQueries.ingestOffsetSplits _,
@@ -112,10 +97,7 @@ object SparkEntry {
     "stream_event_join" -> Streams.eventJoinBatch _,
     "stream_latest_state" -> Streams.latestState _,
     "stream_windowed_topk" -> Streams.windowedTopkBatch _,
-    "q_histogram" -> Analytics.qHistogram _,
-    // §2.D/C (round 8): skew-staged distinct, z-order layout audit,
-    // bucketed co-located join
-    "q_distinct_skew" -> Analytics.qDistinctSkew _,
+    // §2.D/C (round 8): z-order layout audit, bucketed co-located join
     "layout_zorder" -> Analytics.layoutZorder _,
     "source_bucketed_join" -> SourceQueries.bucketedJoin _,
     "load_agg_upsert" -> SourceQueries.aggUpsert _,
@@ -131,7 +113,6 @@ object SparkEntry {
     "embed_random_projection" -> Ann.randomProjection _,
     "stream_rate_anomaly" -> Streams.rateAnomalyBatch _,
     "dedup_fuzzy_link" -> Dedup.fuzzyLink _,
-    "q_interval_union" -> Analytics.qIntervalUnion _,
     "pipeline_training_mix" -> Dedup.trainingMix _,
     "mm_binary_ingest" -> Multimodal.binaryIngest _,
     "ingest_incremental" -> ((s: SparkSession, d: String) => graft.etl.Ingest.incrementalPlan(s, d)),
@@ -152,9 +133,7 @@ object SparkEntry {
     "jdbc_type_map" -> SourceQueries.jdbcTypeMap _,
     // §2.D/E/G (round 4): interval join, dedup components, repetition
     "q_range_join" -> Analytics.qRangeJoin _,
-    "q_grouping_sets" -> Analytics.qGroupingSets _,
     "q_lateral" -> Analytics.qLateral _,
-    "q_window_lead_lag" -> Analytics.qWindowLeadLag _,
     "q_ntile" -> Analytics.qNtile _,
     "q_bloom_join" -> BloomJoin.qBloomJoin _,
     "dlp_format_preserving" -> DlpQueries.dlpFormatPreserving _,
@@ -194,11 +173,10 @@ object SparkEntry {
     "stream_sessionize_replay" -> Streams.sessionizeReplay _,
     "stream_latest_state_replay" -> Streams.latestStateReplay _,
     "stream_rate_anomaly_replay" -> Streams.rateAnomalyReplay _,
-    // round 9: funnel-sequence match, lakehouse maintenance (column
-    // stats + compaction planning), tokenizer/corpus statistics,
+    // round 9: funnel-sequence match, lakehouse maintenance
+    // (compaction planning), tokenizer/corpus statistics,
     // training-mix allocation, truncated-embedding eval, dup-mass curve
     "q_sequence_match" -> Analytics.qSequenceMatch _,
-    "layout_column_stats" -> Analytics.layoutColumnStats _,
     "layout_compaction_plan" -> ((s: SparkSession, d: String) => Analytics.layoutCompactionPlan(s, d)),
     "text_bpe_pairs" -> TextOps.bpePairs _,
     "text_length_outliers" -> TextOps.lengthOutliers _,
@@ -455,10 +433,9 @@ object SparkEntry {
     "embed_hamming_topk" -> Ann.hammingTopk _,
     "stream_absence_timeout" -> ((s: SparkSession, d: String) => Streams.absenceTimeout(s, d)),
     "dlp_hash_collision_audit" -> DlpQueries.dlpHashCollisionAudit _,
-    // round 12 batch 16: binned two-sample KS, Markov steady state,
-    // 1-bit recall bill, Heaps vocabulary curve, retention sweep
+    // round 12 batch 16: binned two-sample KS, 1-bit recall bill,
+    // Heaps vocabulary curve, retention sweep
     "q_ks_binned" -> ((s: SparkSession, d: String) => Analytics.qKsBinned(s, d)),
-    "q_markov_steady" -> ((s: SparkSession, d: String) => Analytics.qMarkovSteady(s, d)),
     "ann_hamming_recall" -> Ann.hammingRecall _,
     "text_heaps_curve" -> ((s: SparkSession, d: String) => TextOps.heapsCurve(s, d)),
     "dlp_retention_sweep" -> ((s: SparkSession, d: String) => DlpQueries.dlpRetentionSweep(s, d)),
@@ -490,9 +467,7 @@ object SparkEntry {
     "stream_exactly_once_sink" -> Streams.exactlyOnceSink _,
     // round 13 batch 2: BPE apply (tokenizer-denominated token bill)
     "text_bpe_apply" -> ((s: SparkSession, d: String) => TextOps.bpeApply(s, d)),
-    // round 13 batch 3: sketch-based ANALYZE (the 100 TB shape),
-    // video scene segmentation
-    "layout_column_stats_approx" -> Analytics.layoutColumnStatsApprox _,
+    // round 13 batch 3: video scene segmentation
     "mm_scene_cut" -> Multimodal.sceneCut _,
     // round 14 batch 1: commit-log checkpoint + retention lifecycle
     "load_manifest_compaction" -> SourceQueries.manifestCompaction _,
@@ -887,39 +862,11 @@ object SparkEntry {
         |  COUNT(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |  CAST(SUM(CAST(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-03-15'
-        |  AND l_shipdate > TIMESTAMP '1996-03-15'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""".stripMargin,
-    "q5_local_supplier" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
     "q6_forecast_revenue" ->
       """SELECT CAST(SUM(CAST(CAST(l_extendedprice*l_discount AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
         |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q_window_running" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber,
-        |  CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
-        |  CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_qty
-        |FROM lineitem
-        |WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity)
-        |ORDER BY l_suppkey, rn""".stripMargin,
     "q_topk_per_group" ->
       """SELECT * FROM (
         |  SELECT o_custkey, o_orderkey,
@@ -934,34 +881,6 @@ object SparkEntry {
         |    CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rk
         |  FROM orders) t
         |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-    "q_rollup" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
-        |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "q_semi_anti" ->
-      """SELECT c_custkey AS key, 'has_big_order' AS tag FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400000)
-        |UNION ALL
-        |SELECT s_suppkey AS key, 'idle_supplier' AS tag FROM supplier
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey AND l_shipdate >= TIMESTAMP '2001-01-01')
-        |ORDER BY tag, key""".stripMargin,
-    "q_correlated_subquery" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price
-        |FROM orders o
-        |WHERE CAST(o_totalprice AS DECIMAL(18,2)) * 2 *
-        |      (SELECT COUNT(*) FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |    > 3 * (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
-        |           FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_set_ops" ->
-      """SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |INTERSECT
-        |SELECT o_custkey FROM orders WHERE o_totalprice > 300000
-        |EXCEPT
-        |SELECT c_custkey FROM customer WHERE c_acctbal < 0
-        |ORDER BY c_custkey""".stripMargin,
     "q_asof_join" ->
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |p AS (SELECT event_id, user_id, us FROM e WHERE event_type = 'purchase'),
@@ -970,48 +889,12 @@ object SparkEntry {
         |  CAST(p.us - c.us AS BIGINT) AS gap_us
         |FROM p ASOF JOIN c ON p.user_id = c.user_id AND p.us >= c.us
         |ORDER BY purchase_id""".stripMargin,
-    "q_pivot" ->
-      """SELECT o_orderstatus,
-        |  COUNT(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 END) AS p1,
-        |  COUNT(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 END) AS p2,
-        |  COUNT(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 END) AS p3,
-        |  COUNT(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 END) AS p4,
-        |  COUNT(CASE WHEN o_orderpriority = '5-LOW' THEN 1 END) AS p5
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_string_agg" ->
-      """SELECT s_nationkey, string_agg(s_name, ',' ORDER BY s_name) AS names, COUNT(*) AS n
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "q_cube" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(grouping(o_orderstatus) AS BIGINT) AS g_status,
-        |  CAST(grouping(o_orderpriority) AS BIGINT) AS g_priority,
-        |  COUNT(*) AS n
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "q_unpivot" ->
-      """SELECT p_partkey, attr, CAST(CAST(val AS DECIMAL(18,2)) * 100 AS BIGINT) AS val
-        |FROM (UNPIVOT (SELECT p_partkey, CAST(p_size AS DOUBLE) AS size_v, p_retailprice AS price_v FROM part)
-        |      ON size_v, price_v INTO NAME attr VALUE val)
-        |ORDER BY p_partkey, attr""".stripMargin,
-    "q_percentile" ->
-      """SELECT l_returnflag,
-        |  quantile_cont(l_quantity, 0.5) AS p50,
-        |  quantile_cont(l_quantity, 0.9) AS p90
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
     // HLL estimates are engine-specific; the deterministic contract
     // (estimate within 6% = 3 sigma of exact at rsd 0.02) is what
     // crosses the oracle boundary.
     "q_approx_distinct" ->
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS exact_parts,
         |  CAST(1 AS BIGINT) AS within_band
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // approx sketch value is engine-specific; the rank-error contract
-    // is not (see qApproxQuantile)
-    "q_approx_quantile" ->
-      """SELECT l_returnflag,
-        |  quantile_cont(l_quantity, 0.49) AS p49,
-        |  quantile_cont(l_quantity, 0.51) AS p51,
-        |  CAST(1 AS BIGINT) AS within_bound
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
     // §2.A
     "ingest_catalog" ->
@@ -1155,22 +1038,6 @@ object SparkEntry {
         |SELECT c_mktsegment, c_nationkey, COUNT(*) AS class_size,
         |  COUNT(DISTINCT bal_bucket) AS l_diversity
         |FROM q GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_join_types" ->
-      """SELECT c_custkey, c_name, o_custkey, total
-        |FROM (SELECT c_custkey, c_name FROM customer WHERE c_custkey < 700) c
-        |FULL OUTER JOIN (SELECT o_custkey,
-        |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
-        |  FROM orders GROUP BY o_custkey) o
-        |ON c_custkey = o_custkey
-        |ORDER BY COALESCE(c_custkey, o_custkey), c_custkey ASC NULLS FIRST""".stripMargin,
-    "q_window_range" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, value FROM events)
-        |SELECT user_id, event_id,
-        |  COUNT(*) OVER w AS cnt_1h,
-        |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) OVER w AS BIGINT) AS sum_1h
-        |FROM e
-        |WINDOW w AS (PARTITION BY user_id ORDER BY us RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
     "text_ngram_freq" ->
       """WITH g AS (SELECT unnest(list_transform(range(1, greatest(len(w) - 1, 1) + 1),
         |    i -> concat_ws(' ', w[i], w[i+1]))) AS gram
@@ -1629,13 +1496,6 @@ object SparkEntry {
         |  CAST(row_number() OVER (PARTITION BY window_start ORDER BY n DESC, event_type) AS BIGINT) AS rk FROM c)
         |SELECT window_start, event_type, n, rk FROM r WHERE rk <= 3
         |ORDER BY window_start, rk""".stripMargin,
-    "q_histogram" ->
-      """SELECT CAST(floor(l_extendedprice / 5000) AS BIGINT) AS bucket,
-        |  CAST(floor(l_extendedprice / 5000) AS BIGINT) * 5000 AS lo,
-        |  (CAST(floor(l_extendedprice / 5000) AS BIGINT) + 1) * 5000 AS hi,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total_cents
-        |FROM lineitem GROUP BY 1, 2, 3 ORDER BY bucket""".stripMargin,
     "stream_latest_state" ->
       """WITH e AS (SELECT user_id, event_id, event_type,
         |  epoch_us(CAST(ts AS TIMESTAMP)) AS us,
@@ -1752,15 +1612,6 @@ object SparkEntry {
         |      GROUP BY purchase_id)
         |SELECT purchase_id, CAST(n_clicks AS BIGINT) AS n_clicks
         |FROM j ORDER BY purchase_id""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(grouping(o_orderstatus) AS BIGINT) AS g_status,
-        |  CAST(grouping(o_orderpriority) AS BIGINT) AS g_priority,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
     "q_lateral" ->
       """SELECT c_custkey, t.o_orderkey,
         |  CAST(CAST(t.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price
@@ -1769,17 +1620,6 @@ object SparkEntry {
         |         WHERE o_custkey = c_custkey
         |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
         |ORDER BY c_custkey""".stripMargin,
-    "q_window_lead_lag" ->
-      """WITH t AS (SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate,
-        |  CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS qty FROM lineitem)
-        |SELECT l_suppkey, l_orderkey, l_linenumber, qty,
-        |  CAST(row_number() OVER w AS BIGINT) AS rn,
-        |  lag(qty, 1) OVER w AS prev_qty,
-        |  lead(qty, 1) OVER w AS next_qty,
-        |  first_value(qty) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_qty
-        |FROM t
-        |WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber, qty)
-        |ORDER BY l_suppkey, rn""".stripMargin,
     "q_ntile" ->
       """WITH t AS (SELECT l_returnflag,
         |  CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS qty,
@@ -2025,9 +1865,6 @@ object SparkEntry {
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total_cents
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_distinct_skew" ->
-      """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
     // round 8: the oracle is the FULL recompute over raw events — the
     // hash match proves the incremental stored-state + batch merge in
     // aggUpsert is lossless
@@ -2408,29 +2245,6 @@ object SparkEntry {
         |  CAST(levenshtein(name_a, name_b) AS BIGINT) AS dist FROM cand)
         |SELECT name_a, name_b, dist FROM d WHERE dist <= 3
         |ORDER BY name_a, name_b""".stripMargin,
-    // round 8 (cont): interval union — identical windows both engines;
-    // tie rows are identical tuples so island numbering is stable;
-    // epoch floor-cast per the stream_window_agg idiom
-    "q_interval_union" ->
-      """WITH iv AS (SELECT user_id,
-        |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS s,
-        |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) + 300 AS e
-        |  FROM events WHERE user_id IS NOT NULL),
-        |cm AS (SELECT user_id, s, e,
-        |    MAX(e) OVER (PARTITION BY user_id ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-        |  FROM iv),
-        |fl AS (SELECT user_id, s, e,
-        |    CASE WHEN pme IS NULL OR s > pme THEN 1 ELSE 0 END AS ni FROM cm),
-        |isl AS (SELECT user_id, s, e,
-        |    SUM(ni) OVER (PARTITION BY user_id ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        |  FROM fl),
-        |g AS (SELECT user_id, island, MIN(s) AS is_, MAX(e) AS ie
-        |  FROM isl GROUP BY 1, 2)
-        |SELECT user_id, COUNT(*) AS n_islands,
-        |  CAST(SUM(ie - is_) AS BIGINT) AS covered_sec
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
     // round 8 (cont): the full funnel — composed from the SAME proven
     // fragments as its standalone stages (pairs/bands from the dedup
     // oracles, gate from pipeline_quality_gate, split/token count
@@ -2495,34 +2309,6 @@ object SparkEntry {
         |  CAST(CASE WHEN MIN(p_q) IS NOT NULL THEN 3 WHEN MIN(c_q) IS NOT NULL THEN 2
         |            WHEN MIN(s_q) IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage
         |FROM s5 GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // layout_column_stats: ANALYZE-shaped per-month per-column stats;
-    // DuckDB SUM/COUNT DISTINCT outputs cast to BIGINT per the
-    // HUGEINT portability rule
-    "layout_column_stats" ->
-      """WITH o AS (SELECT
-        |  CAST(date_part('year', o_orderdate) * 100 + date_part('month', o_orderdate) AS BIGINT) AS part_month,
-        |  o_orderstatus, o_orderpriority, o_custkey,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_c FROM orders),
-        |a AS (SELECT part_month, COUNT(*) AS n_rows,
-        |  MIN(o_orderstatus) AS min_status, MAX(o_orderstatus) AS max_status,
-        |  CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS ndv_status,
-        |  CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_status,
-        |  MIN(o_orderpriority) AS min_prio, MAX(o_orderpriority) AS max_prio,
-        |  CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT) AS ndv_prio,
-        |  CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_prio,
-        |  CAST(MIN(o_custkey) AS VARCHAR) AS min_cust, CAST(MAX(o_custkey) AS VARCHAR) AS max_cust,
-        |  CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS ndv_cust,
-        |  CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_cust,
-        |  CAST(MIN(price_c) AS VARCHAR) AS min_price, CAST(MAX(price_c) AS VARCHAR) AS max_price,
-        |  CAST(COUNT(DISTINCT price_c) AS BIGINT) AS ndv_price,
-        |  CAST(SUM(CASE WHEN price_c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_price
-        |  FROM o GROUP BY part_month)
-        |SELECT part_month, col_name, min_s, max_s, ndv, n_null, n_rows FROM (
-        |  SELECT part_month, n_rows, 'o_orderstatus' AS col_name, min_status AS min_s, max_status AS max_s, ndv_status AS ndv, null_status AS n_null FROM a
-        |  UNION ALL SELECT part_month, n_rows, 'o_orderpriority', min_prio, max_prio, ndv_prio, null_prio FROM a
-        |  UNION ALL SELECT part_month, n_rows, 'o_custkey', min_cust, max_cust, ndv_cust, null_cust FROM a
-        |  UNION ALL SELECT part_month, n_rows, 'o_totalprice_c', min_price, max_price, ndv_price, null_price FROM a)
-        |ORDER BY part_month, col_name""".stripMargin,
     // layout_compaction_plan: cumulative-byte next-fit packing at a
     // 64 KiB target; `//` (DuckDB) = DIV (Spark) on non-negative longs
     "layout_compaction_plan" ->
@@ -5500,38 +5286,6 @@ object SparkEntry {
         |SELECT n1, n2, CAST(bin AS BIGINT) AS ks_bin,
         |  CAST((abs(cum1 * n2 - cum2 * n1) * 10000) // (n1 * n2) AS BIGINT) AS ks_bp
         |FROM c, t ORDER BY abs(cum1 * n2 - cum2 * n1) DESC, bin LIMIT 1""".stripMargin,
-    // Markov steady state: the quantized power iteration unrolled as
-    // 8 CTE steps — every floor of the recurrence mirrored exactly
-    "q_markov_steady" -> {
-      val steps = (1 to 8).map(i =>
-        s"""it$i AS (SELECT tm.to_type AS state,
-           |  CAST(SUM(p.pi_bp * tm.p_bp) // 10000 AS BIGINT) AS pi_bp
-           |  FROM it${i - 1} p JOIN tm ON p.state = tm.from_type GROUP BY 1)""".stripMargin)
-        .mkString(",\n")
-      s"""WITH seq AS (SELECT user_id, event_id, event_type,
-         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-         |lagd AS (SELECT event_type AS to_type,
-         |    lag(event_type) OVER (PARTITION BY user_id ORDER BY us, event_id) AS from_type
-         |  FROM seq),
-         |cnt AS (SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
-         |  FROM lagd WHERE from_type IS NOT NULL GROUP BY 1, 2),
-         |tm AS (SELECT from_type, to_type, n,
-         |    CAST((n * 10000) // SUM(n) OVER (PARTITION BY from_type) AS BIGINT) AS p_bp
-         |  FROM cnt),
-         |st AS (SELECT DISTINCT from_type AS state FROM tm
-         |  UNION SELECT DISTINCT to_type FROM tm),
-         |ks AS (SELECT CAST(COUNT(*) AS BIGINT) AS k, MIN(state) AS first FROM st),
-         |it0 AS (SELECT state,
-         |    CAST(10000 // k + CASE WHEN state = first THEN 10000 % k ELSE 0 END AS BIGINT) AS pi_bp
-         |  FROM st, ks),
-         |$steps,
-         |nout AS (SELECT from_type AS state, CAST(SUM(n) AS BIGINT) AS n_out FROM tm GROUP BY 1)
-         |SELECT i0.state AS event_type, i0.pi_bp AS pi0_bp,
-         |  CAST(COALESCE(i8.pi_bp, 0) AS BIGINT) AS steady_bp,
-         |  CAST(COALESCE(n_out, 0) AS BIGINT) AS n_out
-         |FROM it0 i0 LEFT JOIN it8 i8 ON i0.state = i8.state
-         |LEFT JOIN nout ON nout.state = i0.state ORDER BY event_type""".stripMargin
-    },
     // 1-bit Hamming recall vs exact cosine — same query slice and
     // ground truth as ann_int8_recall (the quantization recall bill)
     "ann_hamming_recall" ->
@@ -6668,26 +6422,6 @@ object SparkEntry {
         |  (bpe_tokens * 10000) // chars_alpha AS compression_bp
         |FROM agg JOIN aw ON aw.source = agg.source
         |ORDER BY 1""".stripMargin),
-    // layout_column_stats_approx: the HLL estimate is engine-specific;
-    // the portable contract is the within-6%-or-±2 bit over the exact
-    // ndv (the q_approx_distinct convention; 3 sigma at rsd 0.02)
-    "layout_column_stats_approx" ->
-      """WITH o AS (SELECT
-        |  CAST(date_part('year', o_orderdate) * 100 + date_part('month', o_orderdate) AS BIGINT) AS part_month,
-        |  o_orderstatus, o_orderpriority, o_custkey,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_c FROM orders),
-        |a AS (SELECT part_month,
-        |  CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS ndv_status,
-        |  CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT) AS ndv_prio,
-        |  CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS ndv_cust,
-        |  CAST(COUNT(DISTINCT price_c) AS BIGINT) AS ndv_price
-        |  FROM o GROUP BY part_month)
-        |SELECT part_month, col_name, ndv, CAST(1 AS BIGINT) AS within_band FROM (
-        |  SELECT part_month, 'o_orderstatus' AS col_name, ndv_status AS ndv FROM a
-        |  UNION ALL SELECT part_month, 'o_orderpriority', ndv_prio FROM a
-        |  UNION ALL SELECT part_month, 'o_custkey', ndv_cust FROM a
-        |  UNION ALL SELECT part_month, 'o_totalprice_c', ndv_price FROM a)
-        |ORDER BY part_month, col_name""".stripMargin,
     // mm_scene_cut: identical frame-signature recurrence (32-byte
     // windows, two-hex-digit decode, 8-bit Hamming >= 5), per-doc
     // ledger then source rollup

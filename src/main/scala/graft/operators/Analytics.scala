@@ -45,47 +45,6 @@ object Analytics {
       .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
 
-  /** TPC-H Q3: shipping priority — customer ⋈ orders ⋈ lineitem,
-    * revenue per order, top 10. The customer side is NOT broadcast-
-    * hinted: customer is fact-sized (grows with SF), so a forced hint
-    * would OOM at 100×; AQE broadcasts it at small SF on its own and
-    * falls back to shuffle join at scale. */
-  def q3ShippingPriority(spark: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.customer(spark, dir).filter(col("c_mktsegment") === "BUILDING")
-    val ord = Tables.orders(spark, dir).filter(col("o_orderdate") < lit("1998-03-15").cast("timestamp"))
-    val li = Tables.lineitem(spark, dir).filter(col("l_shipdate") > lit("1996-03-15").cast("timestamp"))
-    li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(cust, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      .agg(csum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
-      .orderBy(col("revenue").desc, col("o_orderdate"), col("l_orderkey"))
-      .limit(10)
-  }
-
-  /** TPC-H Q5-shaped: revenue by nation for one region+year.
-    * Only the truly fixed-size dims (nation/region) carry broadcast
-    * hints; customer/supplier scale with the data, so their join
-    * strategy is left to AQE (broadcast at small SF, shuffle at 100×). */
-  def q5LocalSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val ord = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-    val cust = Tables.customer(spark, dir)
-    val supp = Tables.supplier(spark, dir)
-    val nat = Tables.nation(spark, dir)
-    val reg = Tables.region(spark, dir).filter(col("r_name") === "ASIA")
-    li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(cust, col("o_custkey") === col("c_custkey"))
-      .join(supp, col("l_suppkey") === col("s_suppkey") &&
-                  col("c_nationkey") === col("s_nationkey"))
-      .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("n_name"))
-      .agg(csum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name"))
-  }
-
   /** TPC-H Q6: forecast revenue change — selective filter + single agg.
     * The whole predicate reaches the parquet scan (PushedFilters). */
   def q6ForecastRevenue(spark: SparkSession, dir: String): DataFrame = {
@@ -95,26 +54,6 @@ object Analytics {
               col("l_discount").between(0.03, 0.07) &&
               col("l_quantity") < 24)
       .agg(csum(col("l_extendedprice") * col("l_discount"), 4).as("revenue"))
-  }
-
-  /** Window functions: per-supplier running quantity + row numbers.
-    * l_quantity joins the order spec: the testdata contains duplicate
-    * (orderkey, linenumber) rows, and a running sum is only
-    * engine-portable when the order is total over every column that
-    * feeds the sum (fully-identical tied rows commute; different
-    * quantities must not). */
-  def qWindowRunning(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val w = Window.partitionBy(col("l_suppkey"))
-      .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity"))
-    li.select(
-        col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        row_number().over(w).cast("long").as("rn"),
-        sum(cents(col("l_quantity"), 2))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .as("running_qty"))
-      .orderBy(col("l_suppkey"), col("rn"))
   }
 
   /** Top-k rows per group (rank ≤ 3 orders per customer by price). */
@@ -129,62 +68,6 @@ object Analytics {
       .orderBy(col("o_custkey"), col("rk"))
   }
 
-  /** ROLLUP aggregation over status × priority. */
-  def qRollup(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir)
-      .rollup(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"),
-           csum(col("o_totalprice"), 2).as("total"))
-      .orderBy(col("o_orderstatus").asc_nulls_first,
-               col("o_orderpriority").asc_nulls_first)
-  }
-
-  /** Left-semi + left-anti joins: customers with orders > 400k
-    * (EXISTS) and suppliers with no lineitem this year (NOT EXISTS),
-    * unioned with a tag column. */
-  def qSemiAnti(spark: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.customer(spark, dir)
-    val bigOrders = Tables.orders(spark, dir).filter(col("o_totalprice") > 400000)
-    val withBig = cust.join(bigOrders, col("c_custkey") === col("o_custkey"), "left_semi")
-      .select(col("c_custkey").as("key"), lit("has_big_order").as("tag"))
-    val supp = Tables.supplier(spark, dir)
-    val recent = Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate") >= lit("2001-01-01").cast("timestamp"))
-    val idleSupp = supp.join(recent, col("s_suppkey") === col("l_suppkey"), "left_anti")
-      .select(col("s_suppkey").as("key"), lit("idle_supplier").as("tag"))
-    withBig.unionAll(idleSupp).orderBy(col("tag"), col("key"))
-  }
-
-  /** Correlated scalar subqueries (decorrelated by Catalyst into
-    * aggregated joins): orders priced above 1.5× their customer's
-    * average. The comparison is all-integer/decimal
-    * (2·cnt·price > 3·sum) so no float average crosses the oracle
-    * boundary. Also exercises the spark.sql parser path. */
-  def qCorrelatedSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("orders_v")
-    spark.sql(
-      """SELECT o_orderkey, o_custkey,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price
-        |FROM orders_v o
-        |WHERE CAST(o_totalprice AS DECIMAL(18,2)) * 2 *
-        |      (SELECT COUNT(*) FROM orders_v o2 WHERE o2.o_custkey = o.o_custkey)
-        |    > 3 * (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
-        |           FROM orders_v o2 WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin)
-  }
-
-  /** Set operations with distinct semantics: BUILDING-segment
-    * customers ∩ big-order customers ∖ negative-balance customers. */
-  def qSetOps(spark: SparkSession, dir: String): DataFrame = {
-    val building = Tables.customer(spark, dir)
-      .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
-    val bigOrder = Tables.orders(spark, dir)
-      .filter(col("o_totalprice") > 300000).select(col("o_custkey").as("c_custkey"))
-    val negative = Tables.customer(spark, dir)
-      .filter(col("c_acctbal") < 0).select("c_custkey")
-    building.intersect(bigOrder).except(negative).orderBy("c_custkey")
-  }
-
   /** Same result as [[qTopkPerGroup]] through the custom
     * TopKPerKeyPlan/Exec operator (bounded per-key heaps, no window
     * sort) — the oracle that checks the window form also checks the
@@ -197,36 +80,6 @@ object Analytics {
         Seq("o_custkey"),
         Seq("price" -> false, "o_orderkey" -> true), 3)
       .orderBy("o_custkey", "rk")
-  }
-
-  /** Full outer join with null sides: a customer subset vs per-key
-    * order totals — left-only, right-only, and matched rows all
-    * present, sentinel-free (nullable output, deterministic order on
-    * the coalesced key). */
-  def qJoinTypes(spark: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.customer(spark, dir)
-      .filter(col("c_custkey") < 700)
-      .select(col("c_custkey"), col("c_name"))
-    val totals = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey"))
-      .agg(csum(col("o_totalprice"), 2).as("total"))
-    cust.join(totals, col("c_custkey") === col("o_custkey"), "full_outer")
-      .select(col("c_custkey"), col("c_name"), col("o_custkey"), col("total"))
-      .orderBy(coalesce(col("c_custkey"), col("o_custkey")),
-        col("c_custkey").asc_nulls_first)
-  }
-
-  /** Time-range window frames: per-user trailing-1-hour event count
-    * and value sum (RANGE frame over event-time micros). */
-  def qWindowRange(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"), col("value"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"))
-      .rangeBetween(-3600000000L, 0L)
-    e.select(col("user_id"), col("event_id"),
-        count(lit(1)).over(w).as("cnt_1h"),
-        sum(cents(col("value"), 2)).over(w).as("sum_1h"))
-      .orderBy("user_id", "event_id")
   }
 
   /** Salted fact-fact join (Skew.saltedJoin) — result must equal the
@@ -245,82 +98,6 @@ object Analytics {
         cents(col("o_totalprice"), 2).as("total"))
     Skew.saltedJoin(li, ord, "l_orderkey", 8, hotThreshold = 5L)
       .orderBy("l_orderkey", "l_linenumber")
-  }
-
-  /** Pivot: order counts by status × priority, priorities as columns
-    * (explicit value list keeps the schema static and plannable). */
-  def qPivot(spark: SparkSession, dir: String): DataFrame = {
-    val priorities = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-    val p = Tables.orders(spark, dir)
-      .groupBy(col("o_orderstatus"))
-      .pivot("o_orderpriority", priorities)
-      .count()
-    p.select(col("o_orderstatus") +:
-        priorities.zipWithIndex.map { case (v, i) =>
-          coalesce(col(s"`$v`"), lit(0L)).as(s"p${i + 1}") }: _*)
-      .orderBy("o_orderstatus")
-  }
-
-  /** CUBE with grouping indicators — all four aggregation levels in
-    * one pass (partial-aggregated expansion, no re-scan per level). */
-  def qCube(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir)
-      .cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(grouping(col("o_orderstatus")).cast("long").as("g_status"),
-        grouping(col("o_orderpriority")).cast("long").as("g_priority"),
-        count(lit(1)).as("n"))
-      .orderBy(col("o_orderstatus").asc_nulls_first,
-        col("o_orderpriority").asc_nulls_first)
-  }
-
-  /** Unpivot (melt): wide per-part numeric columns to (attr, value)
-    * rows — schema-evolution-friendly long form. */
-  def qUnpivot(spark: SparkSession, dir: String): DataFrame = {
-    Tables.part(spark, dir)
-      .selectExpr("p_partkey",
-        "CAST(p_size AS DOUBLE) AS size_v", "p_retailprice AS price_v")
-      .unpivot(Array(col("p_partkey")),
-        Array(col("size_v"), col("price_v")), "attr", "val")
-      .select(col("p_partkey"), col("attr"),
-        cents(col("val"), 2).as("val"))
-      .orderBy("p_partkey", "attr")
-  }
-
-  /** Ordered string aggregation: per-nation sorted roster of supplier
-    * names (deterministic: sort before join). */
-  def qStringAgg(spark: SparkSession, dir: String): DataFrame = {
-    Tables.supplier(spark, dir)
-      .groupBy(col("s_nationkey"))
-      .agg(array_join(array_sort(collect_list(col("s_name"))), ",").as("names"),
-        count(lit(1)).as("n"))
-      .orderBy("s_nationkey")
-  }
-
-  /** Exact percentiles (type-7 linear interpolation in both engines):
-    * median and p90 of quantity per return flag. */
-  def qPercentile(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(expr("percentile(l_quantity, 0.5D)").as("p50"),
-        expr("percentile(l_quantity, 0.9D)").as("p90"))
-      .orderBy("l_returnflag")
-  }
-
-  /** Explicit GROUPING SETS (beyond rollup/cube): per-status totals,
-    * per-priority totals, and the grand total in one pass — Catalyst
-    * expands to a single partial-aggregated Expand, no re-scan per
-    * set. SQL path (the DataFrame API has no grouping-sets surface). */
-  def qGroupingSets(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("orders_gs")
-    spark.sql(
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(grouping(o_orderstatus) AS BIGINT) AS g_status,
-        |  CAST(grouping(o_orderpriority) AS BIGINT) AS g_priority,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
-        |FROM orders_gs
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)
   }
 
   /** NTILE quartiles: per return flag, quantity quartile boundaries
@@ -403,25 +180,6 @@ object Analytics {
         |ORDER BY c_custkey""".stripMargin)
   }
 
-  /** Window value functions: lag/lead/first_value over the totalized
-    * per-supplier shipment order (the summed/peeked column joins the
-    * order spec — duplicate rows exist in the data and neighbor
-    * values are only portable under a total order). */
-  def qWindowLeadLag(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("l_suppkey"))
-      .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"), col("qty"))
-    Tables.lineitem(spark, dir)
-      .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        col("l_shipdate"), cents(col("l_quantity"), 2).as("qty"))
-      .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"), col("qty"),
-        row_number().over(w).cast("long").as("rn"),
-        lag(col("qty"), 1).over(w).as("prev_qty"),
-        lead(col("qty"), 1).over(w).as("next_qty"),
-        first_value(col("qty")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("first_qty"))
-      .orderBy("l_suppkey", "rn")
-  }
-
   /** Pure interval join — NO equality key, the case Spark would plan
     * as a broadcast-nested-loop: every high-value purchase opens a
     * 30-minute window; count the clicks (any user) landing inside it.
@@ -453,36 +211,6 @@ object Analytics {
       .orderBy("purchase_id")
   }
 
-  /** Fixed-width numeric histogram of extended price (5000-wide
-    * buckets) — one partial-aggregated pass, the profiling query
-    * behind every data-quality dashboard. */
-  def qHistogram(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .selectExpr("CAST(floor(l_extendedprice / 5000) AS BIGINT) AS bucket",
-        "l_extendedprice")
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"),
-        csum(col("l_extendedprice"), 2).as("total_cents"))
-      .selectExpr("bucket", "bucket * 5000 AS lo", "(bucket + 1) * 5000 AS hi",
-        "n", "total_cents")
-      .orderBy("bucket")
-
-  /** Approximate percentile (GK sketch) vs exact — same contract
-    * pattern as [[qApproxDistinct]]: the sketch value is
-    * engine-specific, but the algorithm guarantees rank error ≤ 1%
-    * at accuracy 100, so "approx p50 lies between exact p49 and
-    * exact p51" is a deterministic boolean any engine can check. */
-  def qApproxQuantile(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(expr("approx_percentile(l_quantity, 0.5D, 100)").as("approx_p50"),
-        expr("percentile(l_quantity, 0.49D)").as("p49"),
-        expr("percentile(l_quantity, 0.51D)").as("p51"))
-      .select(col("l_returnflag"), col("p49"), col("p51"),
-        (col("approx_p50") >= col("p49") && col("approx_p50") <= col("p51"))
-          .cast("long").as("within_bound"))
-      .orderBy("l_returnflag")
-
   /** Approximate distinct (HLL) vs exact. The estimate itself is
     * engine-specific, but the CONTRACT is not: the output folds the
     * HLL value into a deterministic accuracy bit, which any engine can
@@ -500,30 +228,6 @@ object Analytics {
           .cast("long").as("within_band"))
       .orderBy(col("l_returnflag"))
   }
-
-  /** EXACT distinct-count under key skew, staged explicitly: phase 1
-    * deduplicates (event_type, user_id) pairs — that shuffle is keyed
-    * on the PAIR, so a hot event_type's rows spread across partitions
-    * by user_id and partial aggregation combines map-side — and
-    * phase 2 counts survivors per key, where every group is already
-    * collapsed to one row per distinct value. Spark's COUNT(DISTINCT)
-    * plans the same two-aggregate shape through Expand, but the
-    * explicit staging is what composes when the pipeline needs the
-    * deduplicated pairs AGAIN downstream (e.g. a per-day rollup over
-    * the same distinct set reuses phase 1 instead of re-expanding) —
-    * the shape a 100 TB unique-users job actually ships. */
-  def qDistinctSkew(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("event_type"), col("user_id"))
-      .distinct()
-      .groupBy(col("event_type"))
-      // COUNT(user_id), not COUNT(*): COUNT(DISTINCT x) ignores NULLs
-      // in both engines, but a pre-distinct isNotNull FILTER would
-      // also drop an event_type whose user_ids are ALL null — the
-      // oracle still emits that group with 0. distinct() collapses
-      // the nulls to one row per group, which count(col) then skips.
-      .agg(count(col("user_id")).as("n_users"))
-      .orderBy("event_type")
 
   /** Z-ORDER clustering audit — the multi-dimensional data-layout
     * technique behind data-skipping file pruning: interleave the bits
@@ -554,38 +258,6 @@ object Analytics {
         min(col("cb")).as("cb_min"), max(col("cb")).as("cb_max"),
         min(col("db")).as("db_min"), max(col("db")).as("db_max"))
       .orderBy("zbucket")
-  }
-
-  /** Interval union per key (gaps-and-islands): each event opens a
-    * 5-minute activity interval; overlapping/adjacent intervals merge,
-    * and the output is each user's island count and total covered
-    * seconds — the interval-algebra primitive behind billing meters,
-    * uptime/SLA windows, and session coverage. ONE shuffle on the
-    * key, then two per-key windows (running max-end marks island
-    * starts, running sum numbers them) and two aggregates; all
-    * integer seconds. Tie rows are identical (same s, e), so island
-    * numbering is order-stable at any parallelism. Skew note: a
-    * pathologically hot key serializes its own window — at 100 TB the
-    * standard fix composes here (pre-split hot keys by day, union the
-    * day boundaries through a second merge pass). */
-  def qIntervalUnion(spark: SparkSession, dir: String): DataFrame = {
-    val iv = Tables.events(spark, dir)
-      .filter(col("user_id").isNotNull)
-      .selectExpr("user_id", "unix_seconds(ts) AS s", "unix_seconds(ts) + 300 AS e")
-    val w = Window.partitionBy(col("user_id")).orderBy(col("s"), col("e"))
-    val islands = iv
-      .withColumn("pme", max(col("e")).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("ni",
-        when(col("pme").isNull || col("s") > col("pme"), 1L).otherwise(0L))
-      .withColumn("island", sum(col("ni")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("island"))
-      .agg(min(col("s")).as("is_"), max(col("e")).as("ie"))
-    islands.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_islands"),
-        sum(col("ie") - col("is_")).as("covered_sec"))
-      .orderBy("user_id")
   }
 
   /** Ordered funnel-sequence match (MATCH_RECOGNIZE-lite): per user,
@@ -681,107 +353,6 @@ object Analytics {
     survivors(local, Seq.empty).orderBy("price_c", "o_orderkey")
   }
 
-  /** Per-partition column statistics — the data-skipping index a
-    * lakehouse maintains (parquet footer min/max, ANALYZE ndv/null
-    * counts): for each month partition of orders × each tracked
-    * column, min/max (stringified), exact distinct count, null count,
-    * row count. Shape (r13): a map-side `stack` unpivot to
-    * (month, column, value) — one narrow row per tracked cell — then
-    * a TWO-LEVEL distinct: level 1 groups by (month, column, value)
-    * with map-side partial aggregation (low-NDV columns collapse to
-    * their value domain before the shuffle), level 2 rolls the
-    * distinct-value table up to one row per (month, column). This
-    * replaces the r12 multi-`countDistinct` groupBy, whose Catalyst
-    * rewrite replicated the fact scan ×5 through an Expand — the one
-    * plan in the repo that would not survive 100× (the ANALYZE pass
-    * runs on EVERY table). PlanSpec pins "no Expand over the fact
-    * scan". Numeric columns carry their BIGINT value alongside the
-    * canonical string group key so min/max stay numerically ordered
-    * (`coalesce(CAST(min(v_n)), min(v_s))`); nulls group to one
-    * level-1 row whose count is the column's null count, and
-    * `count(v_s)` at level 2 counts exactly the non-null distinct
-    * values — countDistinct semantics, no Expand. Output is
-    * months×columns-sized at any SF. Feeds partition pruning: a
-    * filter on any tracked column consults this table to skip whole
-    * months. */
-  def layoutColumnStats(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir).select(
-      (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-        .cast("long").as("part_month"),
-      col("o_orderstatus"), col("o_orderpriority"), col("o_custkey"),
-      cents(col("o_totalprice"), 2).as("price_c"))
-    // unpivot: (month, column, string group key, numeric sort key).
-    // CAST(long AS STRING) is injective, so distinct-v_s = distinct
-    // values; v_n is NULL for genuinely-string columns.
-    val vals = o.selectExpr("part_month",
-      """stack(4,
-        |'o_orderstatus',   o_orderstatus,             CAST(NULL AS BIGINT),
-        |'o_orderpriority', o_orderpriority,           CAST(NULL AS BIGINT),
-        |'o_custkey',       CAST(o_custkey AS STRING), CAST(o_custkey AS BIGINT),
-        |'o_totalprice_c',  CAST(price_c AS STRING),   price_c
-        |) AS (col_name, v_s, v_n)""".stripMargin.replace("\n", " "))
-    // level 1: one row per distinct (month, column, value), carrying
-    // its multiplicity (null values collapse to one row = null count)
-    val lvl1 = vals.groupBy(col("part_month"), col("col_name"), col("v_s"))
-      .agg(count(lit(1)).as("cnt"), min(col("v_n")).as("v_n"))
-    // level 2: distinct-value table → per-(month, column) stats row
-    lvl1.groupBy(col("part_month"), col("col_name"))
-      .agg(
-        coalesce(min(col("v_n")).cast("string"), min(col("v_s"))).as("min_s"),
-        coalesce(max(col("v_n")).cast("string"), max(col("v_s"))).as("max_s"),
-        count(col("v_s")).as("ndv"),
-        sum(when(col("v_s").isNull, col("cnt")).otherwise(0L)).as("n_null"),
-        sum(col("cnt")).as("n_rows"))
-      .select(col("part_month"), col("col_name"), col("min_s"), col("max_s"),
-        col("ndv"), col("n_null"), col("n_rows"))
-      .orderBy("part_month", "col_name")
-  }
-
-  /** The 100 TB-honest ANALYZE variant of [[layoutColumnStats]]
-    * (r12 verdict item 1's second half): per month × column, the HLL
-    * `approx_count_distinct` estimate computed in ONE pass — four
-    * sketches ride one map-side-combined aggregate with NO Expand and
-    * NO per-value shuffle (sketch buffers are constant-size; shuffle
-    * volume is months × 4 sketches at any SF), which is the plan an
-    * ANALYZE that runs on EVERY table at 100 TB actually ships; the
-    * exact two-level-distinct table joins in only to FOLD the
-    * engine-specific estimate into the portable contract bit
-    * (|approx − exact| ≤ max(6% · exact, 2) — the [[qApproxDistinct]]
-    * convention plus an absolute slack of 2 for tiny cardinalities,
-    * where the relative band is sub-integer and HLL's discrete
-    * register jitter can legitimately miss by one; rsd pinned at 0.02
-    * so the 6% band is a full 3 sigma everywhere it is the binding
-    * one — wide enough that no single legitimate deviation at an
-    * untested SF can flip the oracle bit). A deployment keeps the
-    * sketch path; the exact path here is the auditor. */
-  def layoutColumnStatsApprox(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir).select(
-      (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-        .cast("long").as("part_month"),
-      col("o_orderstatus"), col("o_orderpriority"), col("o_custkey"),
-      cents(col("o_totalprice"), 2).as("price_c"))
-    val approx = o.groupBy(col("part_month")).agg(
-        approx_count_distinct(col("o_orderstatus"), 0.02).as("a_status"),
-        approx_count_distinct(col("o_orderpriority"), 0.02).as("a_prio"),
-        approx_count_distinct(col("o_custkey"), 0.02).as("a_cust"),
-        approx_count_distinct(col("price_c"), 0.02).as("a_price"))
-      .selectExpr("part_month",
-        """stack(4,
-          |'o_orderstatus',   a_status,
-          |'o_orderpriority', a_prio,
-          |'o_custkey',       a_cust,
-          |'o_totalprice_c',  a_price) AS (col_name, approx_ndv)"""
-          .stripMargin.replace("\n", " "))
-    val exact = layoutColumnStats(spark, dir)
-      .select(col("part_month"), col("col_name"), col("ndv"))
-    approx.join(exact, Seq("part_month", "col_name"))
-      .select(col("part_month"), col("col_name"), col("ndv"),
-        (abs(col("approx_ndv") - col("ndv")) * 100 <= col("ndv") * 6 ||
-          abs(col("approx_ndv") - col("ndv")) <= 2)
-          .cast("long").as("within_band"))
-      .orderBy("part_month", "col_name")
-  }
-
   /** CUSUM control chart over the daily order-count series — the
     * drift detector a pipeline health monitor runs on ingest volume
     * (Page's cumulative-sum test; [[qChangepoint]] finds the single
@@ -830,12 +401,11 @@ object Analytics {
       .orderBy("yr")
   }
 
-  /** One table's contribution to the catalog-wide ANALYZE sweep: the
-    * [[layoutColumnStats]] stack-unpivot + two-level distinct, with
-    * the table name, partition key, and tracked columns parameterized
-    * (`stackSql` rows are `'col', string_value, numeric_value`
-    * triples; the input must already expose a STRING `part_key`).
-    * Same plan as the single-table pass — map-side Generate, no
+  /** One table's contribution to the catalog-wide ANALYZE sweep: a
+    * stack-unpivot + two-level distinct, with the table name,
+    * partition key, and tracked columns parameterized (`stackSql`
+    * rows are `'col', string_value, numeric_value` triples; the input
+    * must already expose a STRING `part_key`). Map-side Generate, no
     * Expand, low-NDV columns collapse to their value domain before
     * the shuffle. */
   private def tableColumnStats(df: DataFrame, tableName: String,
@@ -855,8 +425,8 @@ object Analytics {
         col("min_s"), col("max_s"), col("ndv"), col("n_null"), col("n_rows"))
   }
 
-  /** Catalog-wide ANALYZE sweep (VERDICT r13 item 5): the
-    * [[layoutColumnStats]] pass run over EVERY major table —
+  /** Catalog-wide ANALYZE sweep (VERDICT r13 item 5): per-partition
+    * column statistics (min, max, ndv, nulls) over EVERY major table —
     * orders/lineitem by month partition, customer as one unpartitioned
     * table, documents by source — unioned into the single stats table
     * a lakehouse catalog actually maintains. Each branch is the same
@@ -962,8 +532,8 @@ object Analytics {
     * nightly 100 TB stats job actually ships; [[layoutStatsSweep]]'s
     * exact two-level pass is its auditor, joined in only to fold each
     * estimate into the portable |approx − exact| ≤ max(6%, 2)
-    * contract bit — the [[layoutColumnStatsApprox]] convention at
-    * 3 sigma). */
+    * contract bit — the [[qApproxDistinct]] band plus an absolute
+    * slack of 2 for tiny cardinalities, at 3 sigma). */
   def layoutStatsSweepApprox(spark: SparkSession, dir: String): DataFrame = {
     def branch(df: DataFrame, table: String,
                cols: Seq[(String, String)]): DataFrame = {
@@ -1087,14 +657,13 @@ object Analytics {
       .orderBy("depth")
   }
 
-  /** Max-concurrency interval analytics — the sweep-line complement
-    * of [[qIntervalUnion]] (same 5-minute activity intervals): per
-    * user, the PEAK number of simultaneously-open intervals. The
-    * classic sweep: every interval contributes a +1 at its start and
-    * a −1 at its end, order endpoints (−1 before +1 at the same
-    * instant — half-open [s,e) intervals touch without overlapping),
-    * running sum = live depth, max = answer. ONE shuffle on the user
-    * key; the window is per-user, never global. The same shape prices
+  /** Max-concurrency interval analytics over 5-minute activity
+    * intervals: per user, the PEAK number of simultaneously-open
+    * intervals. The classic sweep: every interval contributes a +1
+    * at its start and a −1 at its end, order endpoints (−1 before +1
+    * at the same instant — half-open [s,e) intervals touch without
+    * overlapping), running sum = live depth, max = answer. ONE
+    * shuffle on the user key; the window is per-user, never global. The same shape prices
     * concurrent-session licensing, peak connection counts, and
     * decoder-pool contention. */
   def qSessionOverlap(spark: SparkSession, dir: String): DataFrame = {
@@ -1230,8 +799,7 @@ object Analytics {
     * once when queries filter on two dims. One map-side pass partial-
     * aggregates to the ≤64×64 (file_lin, file_z) cell grid; the four
     * conditional distinct-counts run over that bounded grid (the
-    * Expand sits ABOVE the aggregate, never on the scan — the
-    * layout_column_stats lesson). */
+    * Expand sits ABOVE the aggregate, never on the scan). */
   def layoutZorderCluster(spark: SparkSession, dir: String): DataFrame = {
     val zBits = (0 until 8).map(i =>
       s"(shiftleft(shiftright(px, $i) & 1, ${2 * i}) + " +
@@ -3386,66 +2954,6 @@ object Analytics {
       .limit(1)
       .selectExpr("n1", "n2", "CAST(bin AS BIGINT) AS ks_bin",
         "(gap * 10000) DIV (n1 * n2) AS ks_bp")
-  }
-
-  /** Stationary distribution of the event-type Markov chain —
-    * [[qTransitionMatrix]] gives the one-step mix; the steady state
-    * answers "where does traffic SETTLE" (the long-run share each
-    * event type commands if users keep walking the chain — the
-    * equilibrium load profile a capacity planner actually needs):
-    * same lag rollup to the k×k transition matrix in row-floored bp,
-    * then `rounds` quantized power-iteration steps
-    * π′_j = (Σ_i π_i·P_ij) DIV 10⁴ in pure Int64 — every floor is
-    * part of the DOCUMENTED recurrence, mirrored step-for-step in
-    * the oracle's unrolled CTE chain, so both engines land on the
-    * identical fixed point (quantized mass may leak a few bp per
-    * step; `pi0_bp` and the final mass are both emitted so the leak
-    * is auditable, never hidden). Everything after the one fact
-    * rollup is domain-bounded (k ≤ 5 states, k² matrix) — the
-    * iteration joins move k-row frames, rounds×3 tiny stages, the
-    * honest [[qPagerank]] shape on a bounded domain. */
-  def qMarkovSteady(spark: SparkSession, dir: String,
-                    rounds: Int = 8): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    val tm = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("us"), col("event_type"))
-      .withColumn("from_type", lag(col("event_type"), 1).over(w))
-      .filter(col("from_type").isNotNull)
-      .groupBy(col("from_type"), col("event_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("n_from", sum(col("n")).over(Window.partitionBy(col("from_type"))))
-      .selectExpr("from_type", "to_type", "n", "(n * 10000) DIV n_from AS p_bp")
-    val states = tm.select(col("from_type").as("state"))
-      .unionAll(tm.select(col("to_type")))
-      .distinct()
-    val init = states
-      .crossJoin(broadcast(states.agg(count(lit(1)).as("k"),
-        min(col("state")).as("first"))))
-      .selectExpr("state",
-        "10000 DIV k + CASE WHEN state = first THEN 10000 % k ELSE 0 END AS pi_bp")
-    var pi = init
-    (1 to rounds).foreach { _ =>
-      pi = pi.join(tm.select(col("from_type"), col("to_type"), col("p_bp")),
-          col("state") === col("from_type"))
-        .groupBy(col("to_type"))
-        .agg(sum(col("pi_bp") * col("p_bp")).as("num"))
-        .selectExpr("to_type AS state", "num DIV 10000 AS pi_bp")
-    }
-    val nOut = tm.groupBy(col("from_type").as("state"))
-      .agg(sum(col("n")).as("n_out"))
-    // r13 (advice): LEFT-join the iterated π back onto the full state
-    // list — a state receiving zero mass in the final round still
-    // appears with steady_bp = 0 instead of silently dropping, so the
-    // output row set is the state domain, never data-dependent
-    init.select(col("state"), col("pi_bp").as("pi0_bp"))
-      .join(pi.select(col("state"), col("pi_bp").as("steady_raw")),
-        Seq("state"), "left_outer")
-      .join(nOut, Seq("state"), "left_outer")
-      .selectExpr("state AS event_type", "pi0_bp",
-        "COALESCE(steady_raw, 0) AS steady_bp",
-        "COALESCE(n_out, 0) AS n_out")
-      .orderBy("event_type")
   }
 
   /** Winsorized mean of order totals per priority — the robust

@@ -194,8 +194,7 @@ object DlpQueries {
     * distribution — what fixed-width buckets can't guarantee under
     * skew, and the k-anonymity-friendly way to generalize a numeric
     * quasi-identifier. Exactness here is the oracle contract; at
-    * corpus scale the same shape runs off approx_percentile bounds
-    * (the engine ships that contract as q_approx_quantile).
+    * corpus scale the same shape runs off approx_percentile bounds.
     *
     * The global rank is derived DISTRIBUTIVELY (the ingest_gap_audit
     * two-level decomposition, SourceQueries.gapAudit): rows range-

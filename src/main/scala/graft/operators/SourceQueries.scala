@@ -881,8 +881,7 @@ object SourceQueries {
     * and a parallel extract keyed on it would silently drop rows —
     * while only the full triple is a real key. Exact distinct counts
     * for all four candidates come from ONE aggregate (Catalyst
-    * Expand: 4× map-side row expansion, the [[Analytics]]
-    * layout_column_stats multi-ndv shape — never four table scans),
+    * Expand: 4× map-side row expansion — never four table scans),
     * then a 4-row unpivot ranks them. Output is candidate-set-sized
     * at any scale. */
   def ingestCompositeKey(spark: SparkSession, dir: String): DataFrame = {

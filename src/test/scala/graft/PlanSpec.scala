@@ -170,23 +170,6 @@ class PlanSpec extends AnyFunSuite {
         s"stale=${stale.toSeq.sorted.take(10)} — regenerate with graft.Plans")
   }
 
-  test("q5 broadcasts fixed-size dims only; fact-sized sides carry no hint") {
-    // nation/region are truly bounded → hinted broadcast; customer and
-    // supplier grow with SF, so a forced hint would OOM at 100× — their
-    // strategy must be left to AQE (no ResolvedHint in the plan).
-    val q5 = Analytics.q5LocalSupplier(spark, sf)
-    assert(q5.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
-      "nation/region hints should produce at least one broadcast join")
-    val hinted5 = q5.queryExecution.analyzed.collect {
-      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-    }
-    assert(hinted5.size == 2, s"q5 must hint exactly nation+region, got ${hinted5.size}")
-    val q3Hints = Analytics.q3ShippingPriority(spark, sf).queryExecution.analyzed.collect {
-      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-    }
-    assert(q3Hints.isEmpty, "q3 must not force-broadcast the fact-sized customer table")
-  }
-
   test("ANN brute force broadcasts the query set, not the corpus") {
     val plan = Ann.topkBruteforce(spark, sf).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
@@ -914,46 +897,6 @@ class PlanSpec extends AnyFunSuite {
       assert(aggsBelow.nonEmpty,
         s"q_ntile window input must be the bucket-count Aggregate, got:\n${w.child.treeString}")
     }
-  }
-
-  // r12 verdict item 1: the multi-countDistinct ANALYZE used to ride
-  // Catalyst's RewriteDistinctAggregates Expand — the orders scan was
-  // replicated ×5 through the aggregate, the heaviest shuffle
-  // amplification in the repo. The r13 shape is a stack unpivot + a
-  // two-level distinct, so the plan must contain NO Expand at all and
-  // the ndv must still be exact (cross-checked per column here).
-  test("layout_column_stats: no Expand over the fact scan, exact ndv preserved") {
-    import org.apache.spark.sql.catalyst.plans.logical
-    val df = Analytics.layoutColumnStats(spark, sf)
-    val expands = df.queryExecution.optimizedPlan.collect {
-      case e: logical.Expand => e
-    }
-    assert(expands.isEmpty,
-      s"ANALYZE plan must not replicate the fact scan through Expand:\n" +
-        df.queryExecution.optimizedPlan.treeString)
-    // exactness: ndv per (month, column) equals a direct countDistinct
-    val got = df.collect()
-      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(4)).toMap
-    val o = Tables.orders(spark, sf).selectExpr(
-      "CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS pm",
-      "o_orderstatus", "o_custkey")
-    val expStatus = o.groupBy("pm").agg(countDistinct(col("o_orderstatus")).as("d"))
-      .collect().map(r => (r.getLong(0), "o_orderstatus") -> r.getLong(1)).toMap
-    val expCust = o.groupBy("pm").agg(countDistinct(col("o_custkey")).as("d"))
-      .collect().map(r => (r.getLong(0), "o_custkey") -> r.getLong(1)).toMap
-    (expStatus ++ expCust).foreach { case (k, v) =>
-      assert(got(k) == v, s"ndv mismatch at $k: got ${got(k)}, want $v")
-    }
-    // the sketch variant must ALSO be Expand-free (four HLL buffers in
-    // one pass is its entire reason to exist), and its contract bit
-    // must hold everywhere at this SF
-    val ap = Analytics.layoutColumnStatsApprox(spark, sf)
-    assert(ap.queryExecution.optimizedPlan.collect {
-      case e: logical.Expand => e
-    }.isEmpty, "approx ANALYZE must not Expand")
-    val bits = ap.collect().map(r => r.getLong(3))
-    assert(bits.nonEmpty && bits.forall(_ == 1L),
-      "every sketch estimate within 5% of exact")
   }
 
   test("pair histogram covers the exact sample mass with valid buckets") {

@@ -169,7 +169,7 @@ class ScaleSpec extends AnyFunSuite {
     // whether the shuffle fans out over 3 or 13 partitions
     val keys = Seq("dedup_minhash_pairs", "dedup_ngram_jaccard",
       "dedup_components", "q_topk_native", "ann_pq_topk", "stream_sessionize",
-      "q_histogram", "embed_centroid_update",
+      "embed_centroid_update",
       "dedup_incremental", "split_decontaminate", "mm_feature_extract",
       // round 7: chunk boundaries, integer tf-idf ranks, int8 codes,
       // cluster labels, kmeans codebook — all must be bit-stable at
@@ -187,14 +187,14 @@ class ScaleSpec extends AnyFunSuite {
       // mm_binary_ingest: only the READ path varies here — staging is
       // memoized on disk across runs, so both parallelisms scan the
       // same staged files (the write is local-mode scaffolding)
-      "q_interval_union", "pipeline_training_mix", "mm_binary_ingest",
+      "pipeline_training_mix", "mm_binary_ingest",
       // round 9: funnel stages (window AND state-machine forms),
       // skyline membership, compaction bins, median/MAD, mix
       // allocations, BPE pair ranks, BM25 ranks, sample selection,
       // tuning-table counts, drift cells, curation funnels — all
       // bit-stable at any parallelism
       "q_sequence_match", "stream_funnel_match_replay", "q_skyline",
-      "layout_compaction_plan", "layout_column_stats",
+      "layout_compaction_plan",
       "text_length_outliers", "pipeline_mix_weights", "text_bpe_pairs",
       "text_bm25", "sample_group_topk", "dedup_lsh_tuning",
       "ann_reassign_drift", "embed_dim_stats", "pipeline_mm_curation",

@@ -38,39 +38,6 @@ class Widening12mSpec extends AnyFunSuite {
     Caches.clearAll()
   }
 
-  test("markov steady: quantized power iteration re-derives; mass leak bounded") {
-    val trans = Analytics.qTransitionMatrix(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val pbp = trans.map(t => (t._1, t._2) -> t._4).toMap
-    val states = (trans.map(_._1) ++ trans.map(_._2)).distinct.sorted
-    val k = states.length
-    var pi = states.map(s => s ->
-      (10000L / k + (if (s == states.head) 10000L % k else 0L))).toMap
-    val pi0 = pi
-    (1 to 8).foreach { _ =>
-      pi = states.map { to =>
-        to -> states.map(from =>
-          pi.getOrElse(from, 0L) * pbp.getOrElse((from, to), 0L)).sum / 10000L
-      }.toMap
-    }
-    val got = Analytics.qMarkovSteady(spark, sf).collect()
-    assert(got.length == k)
-    got.foreach { r =>
-      val s = r.getString(0)
-      assert(r.getLong(1) == pi0(s), s"$s initial")
-      assert(r.getLong(2) == pi(s), s"$s steady re-derives")
-      assert(r.getLong(3) == trans.filter(_._1 == s).map(_._3).sum, s"$s n_out")
-    }
-    val mass = got.map(_.getLong(2)).sum
-    // two leak sources per step: the π′ floor (≤ 1 bp per state) and
-    // the row-floored transition matrix itself (each row sums to as
-    // little as 10⁴ − (k−1) bp, shaving the pushed mass) — together
-    // ≤ (2k − 1) bp per step
-    assert(mass <= 10000L && mass >= 10000L - 8L * (2L * k - 1),
-      s"quantized mass leak bounded: $mass")
-    Caches.clearAll()
-  }
-
   test("hamming recall: hits re-derive from independent top-5 sets; bill is coherent") {
     val vecs = Tables.embeddings(spark, sf)
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS emb")

@@ -129,8 +129,8 @@ class Widening14Spec extends AnyFunSuite {
   test("layout_stats_sweep: per-table row counts pinned; no Expand in the plan") {
     import graft.operators.Analytics
     val df = Analytics.layoutStatsSweep(spark, sf)
-    // Expand-free across ALL four branches — the layout_column_stats
-    // lesson, held for the parameterized sweep too
+    // Expand-free across ALL four branches: a multi-countDistinct
+    // rewrite would replicate every scan
     val expands = df.queryExecution.optimizedPlan.collect {
       case e: org.apache.spark.sql.catalyst.plans.logical.Expand => e
     }

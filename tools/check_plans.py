@@ -8,7 +8,7 @@ A fingerprint is the scale-relevant shape of a plan, not its text
   - shuffles:   count of ShuffleExchange nodes ("Exchange hash/range/...")
   - broadcasts: count of BroadcastExchange nodes
   - sorts:      count of Sort nodes (excluding TakeOrdered)
-  - expands:    count of Expand nodes (the layout_column_stats lesson)
+  - expands:    count of Expand nodes (a multi-countDistinct rewrite replicates the scan)
   - windows:    count of Window exec nodes
   - pushdown:   whether any scan carries a non-empty PushedFilters
   - readschema: whether any FileScan prunes columns (ReadSchema present)

@@ -30,6 +30,12 @@ for mode in ("shared", "isolate"):
     oq, nq = old["queries"], new["queries"]
     print(f"== {mode}: old total {old.get('value')} ({len(oq)} q) -> "
           f"new total {new.get('value')} ({len(nq)} q)")
+    # the totals above cover different query sets when operators were
+    # added or deleted; only the shared-query sums compare like for like
+    common = oq.keys() & nq.keys()
+    print(f"  shared {len(common)} q: old {sum(oq[k] for k in common):.2f} -> "
+          f"new {sum(nq[k] for k in common):.2f}; "
+          f"only old {len(oq.keys() - common)} q, only new {len(nq.keys() - common)} q")
     movers = []
     for k, v in nq.items():
         if k in oq and v >= floor and oq[k] > 0 and v / oq[k] >= 2.0:
