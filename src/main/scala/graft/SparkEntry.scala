@@ -328,7 +328,6 @@ object SparkEntry {
     "q_supplier_spread" -> Analytics.qSupplierSpread _,
     "ingest_row_width" -> SourceQueries.rowWidth _,
     // round 12 batch 1: concentration/cadence/cohort analytics
-    "q_lorenz_topshare" -> Analytics.qLorenzTopshare _,
     "q_autocorr" -> Analytics.qAutocorr _,
     "q_cohort_ltv" -> Analytics.qCohortLtv _,
     "q_interorder_gap" -> Analytics.qInterorderGap _,
@@ -478,10 +477,9 @@ object SparkEntry {
     // round 14 batch 3: iterated BPE (merges that compose)
     "text_bpe_train_iter" -> ((s: SparkSession, d: String) => TextOps.bpeTrainIter(s, d)),
     // round 14 batch 4: deletion-vector read path, FK-derived load
-    // order, CUSUM drift alarms, farthest-point codebook seeding
+    // order, farthest-point codebook seeding
     "load_deletion_vectors" -> SourceQueries.deletionVectors _,
     "ingest_load_order" -> SourceQueries.loadOrderPlan _,
-    "q_cusum_alarm" -> Analytics.qCusumAlarm _,
     "embed_kmeanspp_seed" -> ((s: SparkSession, d: String) => Ann.kmeansppSeed(s, d)),
     // round 14 batch 5: the sketch half of the catalog-wide ANALYZE,
     // the DLP transformation-summary audit record
@@ -520,11 +518,10 @@ object SparkEntry {
     "load_update_verb" -> SourceQueries.updateVerbOp _,
     "load_clone_shallow" -> SourceQueries.cloneShallowOp _,
     "load_cdf_sync" -> SourceQueries.cdfSyncOp _,
-    // round 15 batch 8: protocol versioning, the streaming CDF
-    // surface (readChangeFeed), and z-order clustering quality
+    // round 15 batch 8: protocol versioning and the streaming CDF
+    // surface (readChangeFeed)
     "load_protocol_gate" -> SourceQueries.protocolGateOp _,
     "stream_cdf_consume" -> Streams.streamCdfConsume _,
-    "layout_zorder_cluster" -> Analytics.layoutZorderCluster _,
     // round 15 batch 9: the admin/audit verbs — DESCRIBE HISTORY
     // (#op: commit info), DESCRIBE DETAIL, VACUUM DRY RUN
     "load_describe_history" -> SourceQueries.describeHistoryOp _,
@@ -4112,21 +4109,6 @@ object SparkEntry {
       selects.mkString("", "\nUNION ALL ", "\nORDER BY table_name")
     },
     // ---- round 12 additions ----
-    "q_lorenz_topshare" ->
-      """WITH sp AS (SELECT o_custkey,
-        |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS spend
-        |  FROM orders GROUP BY o_custkey),
-        |r AS (SELECT spend, CAST(row_number() OVER (ORDER BY spend, o_custkey) AS BIGINT) AS rn,
-        |    CAST(COUNT(*) OVER () AS BIGINT) AS n,
-        |    CAST(SUM(spend // 100) OVER () AS BIGINT) AS total_d FROM sp),
-        |p AS (SELECT * FROM (VALUES (1), (5), (10), (20)) t(top_pct)),
-        |c AS (SELECT top_pct, rn, spend, n, total_d,
-        |    GREATEST((n * top_pct) // 100, 1) AS k FROM r CROSS JOIN p)
-        |SELECT CAST(top_pct AS BIGINT) AS top_pct,
-        |  CAST(SUM(CASE WHEN rn > n - k THEN 1 ELSE 0 END) AS BIGINT) AS n_top,
-        |  CAST(SUM(CASE WHEN rn > n - k THEN spend ELSE 0 END) AS BIGINT) AS top_spend,
-        |  CAST(SUM(CASE WHEN rn > n - k THEN spend // 100 ELSE 0 END) * 10000 // MIN(total_d) AS BIGINT) AS share_bp
-        |FROM c GROUP BY top_pct ORDER BY top_pct""".stripMargin,
     "q_autocorr" ->
       """WITH day AS (SELECT CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) // 86400 AS dn,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 100000) AS BIGINT) AS rev_k
@@ -5889,33 +5871,6 @@ object SparkEntry {
         |  UNION ALL SELECT 4, 'insert', key FROM c WHERE key % 3 = 0
         |  UNION ALL SELECT 4, 'insert', key + 10000000 FROM c WHERE key % 11 = 0
         |) t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // layout_zorder_cluster: both engines compute the same Morton
-    // interleave closed-form; files are modeled ranges, so every count
-    // derives from the data alone
-    "layout_zorder_cluster" -> {
-      val zd = (0 until 8).map(i =>
-        s"((((px >> $i) & 1) << ${2 * i}) + (((sx >> $i) & 1) << ${2 * i + 1}))")
-        .mkString(" + ")
-      s"""WITH b AS (SELECT MAX(l_partkey) + 1 AS mp, MAX(l_suppkey) + 1 AS ms FROM lineitem),
-         |e AS (SELECT CAST(l_partkey * 256 // mp AS BIGINT) AS px,
-         |  CAST(l_suppkey * 256 // ms AS BIGINT) AS sx FROM lineitem, b),
-         |z AS (SELECT px, sx, ($zd) AS z FROM e),
-         |g AS (SELECT px // 4 AS file_lin, z // 1024 AS file_z,
-         |  CASE WHEN px BETWEEN 16 AND 31 THEN 1 ELSE 0 END AS pp,
-         |  CASE WHEN sx BETWEEN 16 AND 31 THEN 1 ELSE 0 END AS ps FROM z)
-         |SELECT layout, probe, CAST(files_touched AS BIGINT) AS files_touched,
-         |  CAST(rows_matched AS BIGINT) AS rows_matched FROM (
-         |  SELECT 'linear' AS layout, 'partkey' AS probe,
-         |    COUNT(DISTINCT CASE WHEN pp = 1 THEN file_lin END) AS files_touched,
-         |    SUM(pp) AS rows_matched FROM g
-         |  UNION ALL SELECT 'linear', 'suppkey',
-         |    COUNT(DISTINCT CASE WHEN ps = 1 THEN file_lin END), SUM(ps) FROM g
-         |  UNION ALL SELECT 'zorder', 'partkey',
-         |    COUNT(DISTINCT CASE WHEN pp = 1 THEN file_z END), SUM(pp) FROM g
-         |  UNION ALL SELECT 'zorder', 'suppkey',
-         |    COUNT(DISTINCT CASE WHEN ps = 1 THEN file_z END), SUM(ps) FROM g
-         |) t ORDER BY layout, probe""".stripMargin
-    },
     "load_cdf_sync" ->
       """WITH c AS (SELECT c_custkey AS key, c_mktsegment AS seg FROM customer),
         |final AS (
@@ -6376,32 +6331,6 @@ object SparkEntry {
         |  CAST(SUM(del) * 10000 // COUNT(*) AS BIGINT) AS dead_bp,
         |  CAST(CASE WHEN SUM(del) * 10000 // COUNT(*) >= 2000 THEN 1 ELSE 0 END AS BIGINT) AS rewrite
         |FROM b GROUP BY file_id ORDER BY file_id""".stripMargin,
-    // q_cusum_alarm: the reflection identity (running sum minus its
-    // running min) replayed with the same year-partitioned windows
-    "q_cusum_alarm" ->
-      """WITH daily AS (SELECT o_orderdate AS d,
-        |  CAST(date_part('year', o_orderdate) AS BIGINT) AS yr,
-        |  CAST(COUNT(*) AS BIGINT) AS cnt FROM orders GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY yr ORDER BY cnt, d) AS rn,
-        |  COUNT(*) OVER (PARTITION BY yr) AS n_days FROM daily),
-        |m AS (SELECT *, MAX(CASE WHEN rn = (n_days + 1) // 2 THEN cnt END)
-        |  OVER (PARTITION BY yr) AS ref FROM r),
-        |s AS (SELECT *, GREATEST(ref // 20, 1) AS slack, GREATEST(ref // 4, 1) AS h FROM m),
-        |c AS (SELECT *,
-        |  SUM(cnt - ref - slack) OVER (PARTITION BY yr ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sp,
-        |  SUM(ref - cnt - slack) OVER (PARTITION BY yr ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sn FROM s),
-        |p AS (SELECT *,
-        |  sp - LEAST(MIN(sp) OVER (PARTITION BY yr ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS pos,
-        |  sn - LEAST(MIN(sn) OVER (PARTITION BY yr ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS neg FROM c)
-        |SELECT yr, CAST(COUNT(*) AS BIGINT) AS n_days,
-        |  CAST(MIN(ref) AS BIGINT) AS ref_daily,
-        |  CAST(MIN(slack) AS BIGINT) AS slack,
-        |  CAST(MIN(h) AS BIGINT) AS threshold,
-        |  CAST(SUM(CASE WHEN pos > h THEN 1 ELSE 0 END) AS BIGINT) AS alarms_pos,
-        |  CAST(SUM(CASE WHEN neg > h THEN 1 ELSE 0 END) AS BIGINT) AS alarms_neg,
-        |  CAST(MAX(pos) AS BIGINT) AS max_pos,
-        |  CAST(MAX(neg) AS BIGINT) AS max_neg
-        |FROM p GROUP BY yr ORDER BY yr""".stripMargin,
     // text_bpe_apply: the SAME two-sweep replace fold over the ranked
     // merge list, via list_reduce with the spaced word prepended as
     // the fold seed; token count = spaces - 1

@@ -6,6 +6,7 @@ import graft.Tables
 
 import scala.concurrent.{Await, ExecutionContext, Future, blocking}
 import scala.concurrent.duration._
+import scala.util.{Failure, Success}
 
 /** The reference's whole program as one composed operation
   * (DBImportPipeline.java:69-165): enumerate tables, apply the
@@ -71,9 +72,20 @@ object Migration {
     }
     // finite timeout: a wedged table import must surface as a failed
     // import, not hang the driver forever (per-table writes at this
-    // scale finish in minutes; 2h is generous headroom, not Inf)
-    val rows = Await.result(Future.sequence(futures), 2.hours)
-    rows.toDF("table_name", "n_rows", "deid_applied", "n_dead")
+    // scale finish in minutes; 2h is generous headroom, not Inf).
+    // Every table settles before the import fails: failing on the
+    // first failed table would return while the others still write.
+    val settled = Await.result(
+      Future.sequence(futures.map(_.transform(Success(_)))), 2.hours)
+    val failed = Tables.all.zip(settled).collect { case (t, Failure(e)) => t -> e }
+    if (failed.nonEmpty) {
+      val err = new RuntimeException("import failed for table(s) " +
+        failed.map { case (t, e) => s"$t (${e.getClass.getSimpleName}: ${e.getMessage})" }
+          .mkString(", "))
+      failed.foreach { case (_, e) => err.addSuppressed(e) }
+      throw err
+    }
+    settled.map(_.get).toDF("table_name", "n_rows", "deid_applied", "n_dead")
       .orderBy("table_name")
   }
 

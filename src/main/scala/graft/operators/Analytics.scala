@@ -353,54 +353,6 @@ object Analytics {
     survivors(local, Seq.empty).orderBy("price_c", "o_orderkey")
   }
 
-  /** CUSUM control chart over the daily order-count series — the
-    * drift detector a pipeline health monitor runs on ingest volume
-    * (Page's cumulative-sum test; [[qChangepoint]] finds the single
-    * biggest level shift, CUSUM raises ALARMS online as soon as
-    * cumulative drift exceeds a threshold). The textbook recurrence
-    * `pos_t = max(0, pos_{t-1} + x_t − ref − slack)` is RECURSIVE and
-    * window-inexpressible — but the reflection identity
-    * `pos_t = S_t − min(0, min_{i≤t} S_i)` (S = running sum of
-    * deviations) turns it into two stock windows: a running sum and a
-    * running min, both partitioned by YEAR and ordered by day. So the
-    * whole detector is calendar-bounded windowed arithmetic — no
-    * fold, no collect, no global window — and every quantity is an
-    * integer (per-year lower-median reference, slack = ref/20,
-    * threshold = ref/4), so the oracle replay is exact. Output: one
-    * row per year with the reference, both one-sided alarm counts,
-    * and the max CUSUM excursions. */
-  def qCusumAlarm(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.orders(spark, dir)
-      .groupBy(col("o_orderdate").as("d"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("yr", year(col("d")).cast("long"))
-    val wRank = Window.partitionBy(col("yr")).orderBy(col("cnt"), col("d"))
-    val wYear = Window.partitionBy(col("yr"))
-    val wCum = Window.partitionBy(col("yr")).orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val scored = daily
-      .withColumn("rn", row_number().over(wRank))
-      .withColumn("n_days", count(lit(1)).over(wYear))
-      .withColumn("ref",
-        max(when(col("rn") === expr("(n_days + 1) DIV 2"), col("cnt"))).over(wYear))
-      .withColumn("slack", expr("GREATEST(ref DIV 20, 1)"))
-      .withColumn("h", expr("GREATEST(ref DIV 4, 1)"))
-      .withColumn("sp", sum(col("cnt") - col("ref") - col("slack")).over(wCum))
-      .withColumn("sn", sum(col("ref") - col("cnt") - col("slack")).over(wCum))
-      .withColumn("pos", col("sp") - least(min(col("sp")).over(wCum), lit(0L)))
-      .withColumn("neg", col("sn") - least(min(col("sn")).over(wCum), lit(0L)))
-    scored.groupBy(col("yr"))
-      .agg(count(lit(1)).as("n_days"),
-        min(col("ref")).as("ref_daily"),
-        min(col("slack")).as("slack"),
-        min(col("h")).as("threshold"),
-        sum(when(col("pos") > col("h"), 1L).otherwise(0L)).as("alarms_pos"),
-        sum(when(col("neg") > col("h"), 1L).otherwise(0L)).as("alarms_neg"),
-        max(col("pos")).as("max_pos"),
-        max(col("neg")).as("max_neg"))
-      .orderBy("yr")
-  }
-
   /** One table's contribution to the catalog-wide ANALYZE sweep: a
     * stack-unpivot + two-level distinct, with the table name,
     * partition key, and tracked columns parameterized (`stackSql`
@@ -782,58 +734,6 @@ object Analytics {
         sum(col("skipped")).as("n_skipped"),
         sum(expr("CASE WHEN skipped = 0 THEN n_rows ELSE 0 END")).as("rows_scanned"))
       .orderBy("pred_id")
-  }
-
-  /** Z-ORDER clustering quality (the Delta ZORDER BY / Iceberg
-    * sort-order story — MULTI-dimensional file skipping, where a
-    * linear sort gives perfect pruning on its sort key and none on
-    * any other column): both dims normalize to 8-bit rank cells
-    * (`x·256 DIV (max+1)` — closed-form, no window, identical in the
-    * oracle), the z-value INTERLEAVES their bits (the Morton curve),
-    * and files are modeled as 64 equal z-ranges (`z DIV 1024`) vs 64
-    * equal partkey ranges (`px DIV 4`) for the linear layout. For a
-    * 1/16-keyspace probe on EACH dim, the ledger counts the files a
-    * zone-map scan must touch under each layout: linear touches ~4 on
-    * its own key and nearly all on the other; z-order touches ~8 ON
-    * BOTH — the balanced skipping that makes the rewrite worth paying
-    * once when queries filter on two dims. One map-side pass partial-
-    * aggregates to the ≤64×64 (file_lin, file_z) cell grid; the four
-    * conditional distinct-counts run over that bounded grid (the
-    * Expand sits ABOVE the aggregate, never on the scan). */
-  def layoutZorderCluster(spark: SparkSession, dir: String): DataFrame = {
-    val zBits = (0 until 8).map(i =>
-      s"(shiftleft(shiftright(px, $i) & 1, ${2 * i}) + " +
-        s"shiftleft(shiftright(sx, $i) & 1, ${2 * i + 1}))").mkString(" + ")
-    val li = Tables.lineitem(spark, dir).select("l_partkey", "l_suppkey")
-    val bounds = li.agg(max("l_partkey").as("mp"), max("l_suppkey").as("ms"))
-    val cells = li.crossJoin(broadcast(bounds))
-      .selectExpr(
-        "CAST(l_partkey * 256 DIV (mp + 1) AS BIGINT) AS px",
-        "CAST(l_suppkey * 256 DIV (ms + 1) AS BIGINT) AS sx")
-      .selectExpr("px", "sx", s"($zBits) AS z")
-      .selectExpr("px DIV 4 AS file_lin", "z DIV 1024 AS file_z",
-        "CASE WHEN px BETWEEN 16 AND 31 THEN 1 ELSE 0 END AS pp",
-        "CASE WHEN sx BETWEEN 16 AND 31 THEN 1 ELSE 0 END AS ps")
-      .groupBy("file_lin", "file_z")
-      .agg(sum(col("pp")).as("np"), sum(col("ps")).as("ns"))
-    cells.agg(
-      countDistinct(when(col("np") > 0, col("file_lin"))).as("flp"),
-      countDistinct(when(col("ns") > 0, col("file_lin"))).as("fls"),
-      countDistinct(when(col("np") > 0, col("file_z"))).as("fzp"),
-      countDistinct(when(col("ns") > 0, col("file_z"))).as("fzs"),
-      sum(col("np")).as("rp"), sum(col("ns")).as("rs"))
-      .selectExpr(
-        """stack(4,
-          |  'linear', 'partkey', flp, rp,
-          |  'linear', 'suppkey', fls, rs,
-          |  'zorder', 'partkey', fzp, rp,
-          |  'zorder', 'suppkey', fzs, rs
-          |) AS (layout, probe, files_touched, rows_matched)"""
-          .stripMargin.replace("\n", " "))
-      .selectExpr("layout", "probe",
-        "CAST(files_touched AS BIGINT) AS files_touched",
-        "CAST(rows_matched AS BIGINT) AS rows_matched")
-      .orderBy("layout", "probe")
   }
 
   /** ANALYZE → PRUNE, closed end-to-end (VERDICT r14 item 7): the
@@ -1874,60 +1774,6 @@ object Analytics {
       .orderBy("n_name")
   }
 
-  /** Lorenz-curve top-share concentration (the Pareto "what do the top
-    * 1/5/10/20% of customers hold" read next to [[qGini]]'s single
-    * coefficient): customers rank ascending by lifetime spend via the
-    * SAME two-level bucket decomposition as qGini (in-bucket
-    * partitioned windows + a bucket-count-sized offset cumulative —
-    * never a global data-sized sort), the top-k cut for each
-    * percentile is rank arithmetic (k = max(n·p DIV 100, 1)), and all
-    * four percentiles fold as conditional sums in ONE aggregate pass.
-    * Shares divide in dollars (the qGini r12 overflow rule: cents ×
-    * 10⁴ would pass Int64 around SF 100); reported spend stays exact
-    * cents. The only global window runs over bucket-count rows
-    * (spend-domain-bounded — whitelisted in PlanSpec with the other
-    * two-level users). */
-  def qLorenzTopshare(spark: SparkSession, dir: String): DataFrame = {
-    val x = Tables.orders(spark, dir)
-      .select(col("o_custkey"), cents(col("o_totalprice"), 2).as("sp"))
-      .groupBy(col("o_custkey")).agg(sum(col("sp")).as("spend"))
-      .withColumn("b", expr("spend DIV 1000000"))
-    val wIn = Window.partitionBy(col("b")).orderBy(col("spend"), col("o_custkey"))
-    val bc = x.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
-    val wOff = Window.orderBy(col("b")).rowsBetween(Window.unboundedPreceding, -1)
-    val off = bc.withColumn("off", coalesce(sum(col("cnt")).over(wOff), lit(0L)))
-      .select(col("b"), col("off"))
-    val stats = x.agg(count(lit(1)).as("n"),
-      sum(col("spend")).as("total_c"), sum(expr("spend DIV 100")).as("total_d"))
-    val ranked = x.withColumn("rin", row_number().over(wIn).cast("long"))
-      .join(broadcast(off), Seq("b"))
-      .withColumn("rn", col("off") + col("rin"))
-      .crossJoin(broadcast(stats))
-    def cut(p: Int) = s"GREATEST((n * $p) DIV 100, 1)"
-    val one = ranked.agg(
-      max(col("n")).as("n"), max(col("total_d")).as("total_d"),
-      sum(expr(s"IF(rn > n - ${cut(1)}, 1, 0)")).as("n1"),
-      sum(expr(s"IF(rn > n - ${cut(1)}, spend, 0)")).as("s1"),
-      sum(expr(s"IF(rn > n - ${cut(1)}, spend DIV 100, 0)")).as("d1"),
-      sum(expr(s"IF(rn > n - ${cut(5)}, 1, 0)")).as("n5"),
-      sum(expr(s"IF(rn > n - ${cut(5)}, spend, 0)")).as("s5"),
-      sum(expr(s"IF(rn > n - ${cut(5)}, spend DIV 100, 0)")).as("d5"),
-      sum(expr(s"IF(rn > n - ${cut(10)}, 1, 0)")).as("n10"),
-      sum(expr(s"IF(rn > n - ${cut(10)}, spend, 0)")).as("s10"),
-      sum(expr(s"IF(rn > n - ${cut(10)}, spend DIV 100, 0)")).as("d10"),
-      sum(expr(s"IF(rn > n - ${cut(20)}, 1, 0)")).as("n20"),
-      sum(expr(s"IF(rn > n - ${cut(20)}, spend, 0)")).as("s20"),
-      sum(expr(s"IF(rn > n - ${cut(20)}, spend DIV 100, 0)")).as("d20"))
-    one.selectExpr(
-        """stack(4, 1L, n1, s1, d1, 5L, n5, s5, d5,
-          |10L, n10, s10, d10, 20L, n20, s20, d20)
-          |AS (top_pct, n_top, top_spend, top_d)""".stripMargin.replace("\n", " "),
-        "total_d")
-      .selectExpr("top_pct", "n_top", "top_spend",
-        "(top_d * 10000) DIV total_d AS share_bp")
-      .orderBy("top_pct")
-  }
-
   /** Calendar-lag autocorrelation of daily revenue (lags 1–7 days) —
     * the weekly-cycle fingerprint a forecasting pipeline checks before
     * choosing seasonal terms (a spike at lag 7 = strong day-of-week
@@ -2093,7 +1939,7 @@ object Analytics {
   }
 
   /** ABC inventory classification of parts by revenue (the Pareto
-    * cousin of [[qLorenzTopshare]], cut by MASS instead of head-count:
+    * cut by MASS instead of head-count:
     * A = parts covering the first 80% of revenue, B = next 15%, C =
     * the tail): parts rank DESCENDING by exact discounted revenue via
     * the two-level bucket decomposition, the cumulative revenue prefix

@@ -2090,10 +2090,10 @@ object SourceQueries {
   }
 
   /** OPTIMIZE ZORDER BY (key, val) — clustering as a commit-log verb
-    * (r15 verdict item 5, closed): the Morton-interleave machinery
-    * proven by `layout_zorder_cluster` wired into the compaction
-    * rewrite, so a SINGLE atomic version re-lays the table in
-    * 2-D-locality order and BOTH zone maps tighten. The ledger is the
+    * (r15 verdict item 5, closed): Morton-interleave clustering
+    * wired into the compaction rewrite, so a SINGLE atomic version
+    * re-lays the table in 2-D-locality order and BOTH zone maps
+    * tighten. The ledger is the
     * Delta ZORDER payoff measured on our own source: the table starts
     * as 8 mod-sliced files (every file's key zone spans the whole
     * keyspace and holds every segment — zone maps useless, both

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -113,6 +113,30 @@ class EtlSpec extends AnyFunSuite {
     assert(okN == manifest("events")._1)
     assert(deadN == manifest("events")._3)
     assert(okN + deadN == Tables.events(spark, sf).count())
+  }
+
+  test("Migration.runImport waits for every table before it reports a failed one") {
+    // one table's write fails at once, the others finish later: the
+    // import must not throw until every other write has finished, and
+    // its error must name the failed table
+    val done = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val sink = new graft.sources.WarehouseSink {
+      def write(df: DataFrame, dataset: String, table: String,
+                disposition: String, partitionBy: Seq[String]): Unit = {
+        if (table == "region") throw new IllegalStateException("sink rejected region")
+        Thread.sleep(1500)
+        df.write.format("noop").mode("overwrite").save()
+        done.add(table)
+      }
+    }
+    val err = intercept[RuntimeException] {
+      graft.etl.Migration.runImport(spark, sf, graft.etl.DlpConfig.ExampleConfig,
+        sink, "imported")
+    }
+    val others = Tables.all.filterNot(_ == "region") :+ "events_dead_letter"
+    assert(others.forall(done.contains), "writes still running at failure: " +
+      others.filterNot(done.contains).mkString(", "))
+    assert(err.getMessage.contains("region"), err.getMessage)
   }
 
   test("cosine_sim is callable from SQL after registration") {

@@ -804,7 +804,6 @@ class PlanSpec extends AnyFunSuite {
     "q_rfm_segments" -> "3 quartile windows, each over one row per present value bucket (the dlp_quantile_bucketing two-level decomposition, per RFM dimension)",
     "dlp_top_coding" -> "window input = one row per present value bucket (domain DIV 16384 ~ 70 rows at any table size)",
     "q_forecast_backtest" -> "window input = one row per calendar week (bounded by the time domain, never the order count)",
-    "q_lorenz_topshare" -> "window input = one row per present spend bucket (domain DIV 10⁶ — the qGini two-level decomposition, global because the Lorenz cut is corpus-wide)",
     "q_abc_class" -> "window input = one row per present revenue bucket (domain DIV 10⁶ — bucket-offset cumulative for the descending ABC prefix)",
     "q_customer_lifespan" -> "window input = one row per present lifespan value (bounded by the calendar-month domain)",
     "q_weekly_volatility" -> "median rank windows over one row per calendar week (time-domain-bounded, the q_forecast_backtest frame)",

@@ -6,35 +6,12 @@ import graft.operators.Analytics
 import graft.dedup.Dedup
 import graft.sim.Ann
 
-/** Round-12 widening operators: Lorenz top-share concentration,
-  * calendar-lag autocorrelation, cohort LTV, inter-order cadence,
+/** Round-12 widening operators: calendar-lag autocorrelation,
+  * cohort LTV, inter-order cadence,
   * dedup method agreement, dedup token ledger, sample cell coverage.
   */
 class Widening12Spec extends AnyFunSuite {
   import SparkTestSession._
-
-  test("lorenz top-share: cuts nest, shares monotone, k formula exact") {
-    val rows = Analytics.qLorenzTopshare(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    assert(rows.keySet == Set(1L, 5L, 10L, 20L))
-    val n = Tables.orders(spark, sf).select("o_custkey").distinct().count()
-    rows.foreach { case (p, (nTop, _, shareBp)) =>
-      assert(nTop == math.max(n * p / 100, 1L), s"top-$p% cut must be rank arithmetic")
-      assert(shareBp >= 0 && shareBp <= 10000)
-      // concentration floor: the top p% (by spend) hold at least their
-      // head-count share, k/n — up to the rank-cut floor (1/n) and a
-      // few bp of dollar flooring
-      assert(shareBp >= p * 100 - 10000 / n - 10,
-        s"top-$p% cannot hold under its own mass share")
-    }
-    // nesting: a wider cut holds at least as much spend and as many customers
-    val ps = Seq(1L, 5L, 10L, 20L)
-    ps.sliding(2).foreach { case Seq(a, b) =>
-      assert(rows(a)._1 <= rows(b)._1 && rows(a)._2 <= rows(b)._2,
-        s"top-$a% must nest inside top-$b%")
-    }
-    Caches.clearAll()
-  }
 
   test("autocorr: 7 lags, Cauchy-Schwarz bound, pair counts match day adjacency") {
     val rows = Analytics.qAutocorr(spark, sf).collect()

@@ -267,36 +267,6 @@ class Widening14Spec extends AnyFunSuite {
       s"unexpected load order: $rows")
   }
 
-  test("q_cusum_alarm reflection identity equals the recursive CUSUM fold") {
-    import graft.operators.Analytics
-    val got = Analytics.qCusumAlarm(spark, sf).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    // driver-side TRUE recursion: pos' = max(0, pos + x - ref - slack)
-    val daily = Tables.orders(spark, sf)
-      .groupBy(col("o_orderdate").as("d")).agg(count(lit(1)).as("cnt"))
-      .selectExpr("CAST(year(d) AS BIGINT) AS yr", "CAST(d AS STRING) AS ds", "cnt")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    daily.groupBy(_._1).foreach { case (yr, days) =>
-      val sorted = days.sortBy(_._2).map(_._3)
-      val ref = sorted.sorted.apply((sorted.length + 1) / 2 - 1)
-      val slack = math.max(ref / 20, 1L)
-      val h = math.max(ref / 4, 1L)
-      var pos = 0L; var neg = 0L
-      var aPos = 0L; var aNeg = 0L; var mPos = 0L; var mNeg = 0L
-      sorted.foreach { x =>
-        pos = math.max(0L, pos + x - ref - slack)
-        neg = math.max(0L, neg + ref - x - slack)
-        if (pos > h) aPos += 1
-        if (neg > h) aNeg += 1
-        mPos = math.max(mPos, pos); mNeg = math.max(mNeg, neg)
-      }
-      val r = got(yr)
-      assert(r.getLong(2) == ref && r.getLong(5) == aPos && r.getLong(6) == aNeg &&
-        r.getLong(7) == mPos && r.getLong(8) == mNeg,
-        s"year $yr: window identity diverges from the recursive fold")
-    }
-  }
-
   test("embed_kmeanspp_seed: separations non-increasing and spread beats the naive seed") {
     import graft.sim.Ann
     val rows = Ann.kmeansppSeed(spark, sf).collect()

@@ -7,8 +7,7 @@ import graft.operators.SourceQueries
 
 /** Round-15 batch-8: protocol versioning (reader/writer gates, the
   * Delta minReaderVersion/minWriterVersion contract), the CDF read
-  * mode (batch `readChangeFeed` + the streaming CDF source), and the
-  * z-order interleave invariants.
+  * mode (batch `readChangeFeed` + the streaming CDF source).
   */
 class Widening15cSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -126,32 +125,5 @@ class Widening15cSpec extends AnyFunSuite {
       got2.toString)
     Seq(ckpt, dir, sinkDir).foreach(d =>
       SourceQueries.deleteRecursively(new java.io.File(d)))
-  }
-
-  test("z-order interleave: even bits carry px, odd bits carry sx; probes bound file fan-out") {
-    // the expression used by the op, checked against a driver-side
-    // reference interleave over the full 8-bit × 8-bit grid corner
-    val zBits = (0 until 8).map(i =>
-      s"(shiftleft(shiftright(px, $i) & 1, ${2 * i}) + " +
-        s"shiftleft(shiftright(sx, $i) & 1, ${2 * i + 1}))").mkString(" + ")
-    val rows = spark.range(0, 256)
-      .selectExpr("id DIV 16 AS px", "id % 16 AS sx")
-      .selectExpr("px", "sx", s"($zBits) AS z")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    def ref(px: Long, sx: Long): Long =
-      (0 until 8).map(i => (((px >> i) & 1L) << (2 * i)) |
-        (((sx >> i) & 1L) << (2 * i + 1))).sum
-    rows.foreach { case (px, sx, z) =>
-      assert(z == ref(px, sx), s"interleave($px,$sx)")
-    }
-    // op-level geometry at sf0.001: a second-dim probe under z-order
-    // touches at most 8 of 64 files (3 free high bits), and never more
-    // than the linear layout does; the first-dim linear probe stays ≤ 4
-    val out = graft.operators.Analytics.layoutZorderCluster(spark, sf)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(out(("zorder", "suppkey")) <= 8L)
-    assert(out(("zorder", "partkey")) <= 8L)
-    assert(out(("linear", "partkey")) <= 4L)
-    assert(out(("zorder", "suppkey")) <= out(("linear", "suppkey")))
   }
 }

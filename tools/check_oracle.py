@@ -6,7 +6,9 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify),
 runs the matching SQL from oracle_sql.json in DuckDB with views over
 <sfDir>/*.parquet, and compares: schema (column names), row count, and
-values (columns sorted by name, rows sorted by all columns).
+values (columns sorted by name, rows sorted by all columns). An
+oracle_sql.json key with no output directory is a failure: graft.Verify
+logs an operator that throws and writes nothing for it.
 """
 import sys, os, json, glob
 import duckdb
@@ -74,6 +76,8 @@ def main(sf_dir, out_dir):
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
     n_pass = n_fail = n_skip = 0
+    for name in sorted(set(oracle) - set(names)):
+        print(f"FAIL  {name}: no output"); n_fail += 1
     for name in names:
         files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
         if not files:

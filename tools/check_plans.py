@@ -130,7 +130,7 @@ GLOBAL_WINDOW_ALLOWLIST = {
     "embed_pair_hist", "ingest_gap_audit", "layout_compaction_plan",
     "pipeline_mix_weights", "q_funnel_conversion", "q_skyline",
     "text_vocab", "text_zipf_fit", "q_rfm_segments", "dlp_top_coding",
-    "q_forecast_backtest", "q_lorenz_topshare", "q_abc_class",
+    "q_forecast_backtest", "q_abc_class",
     "q_customer_lifespan", "q_weekly_volatility", "layout_cluster_depth",
     "q_discount_elasticity", "q_runs_test", "q_order_linecount_dist",
     "dedup_pair_sim_histogram", "q_chi_square", "stream_concurrency_curve",
