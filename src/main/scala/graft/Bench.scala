@@ -1,11 +1,14 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
-  * and prints one JSON line. Optional env knobs for local iteration:
-  *   SPARK_GRAFT_ONLY   comma-separated query names to run
-  *   SPARK_GRAFT_REPEAT run each query N times, report the min
+/** Benchmark main: times every SparkEntry query and prints one JSON
+  * line. Environment:
+  *   SPARK_GRAFT_SF_DIR  testdata directory (default /root/testdata/sf0.1)
+  *   SPARK_GRAFT_CPUS    local[N] cores and shuffle partitions (default 4)
+  *   SPARK_GRAFT_ONLY    comma-separated query names to run
+  *   SPARK_GRAFT_REPEAT  run each query N times, report the min
   *     (steady-state, excludes first-run file-listing/JIT noise)
+  *   SPARK_GRAFT_ISOLATE 1 = clear all caches before every query
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -32,18 +35,9 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE pre-coalesce ceiling, env-tunable for experiments. The r17
-      // residual hypothesized that raising it to 8×cores would fix
-      // q_ancestor_closure's fixed-width bind at sf10 — MEASURED and
-      // REJECTED this round: at a matched ambient-load window the
-      // closure ran 105–171 s at ceiling 32 vs 203–469 s at 256
-      // (sf10, REPEAT=2 + retry), and the winnowing family regressed
-      // ~2× at sf1 under 256 (more, smaller sort-merge runs over the
-      // shared 150M-row cache). Default stays = cores; the closure
-      // width fix belongs INSIDE the iterative operator, not in a
-      // global knob (r18 note in SURVEY).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CEIL", cpus))
+      // AQE pre-coalesce ceiling = cores: 8×cores was measured slower at
+      // sf1/sf10 (r18 note in SURVEY)
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -200,7 +194,7 @@ object Bench {
     // measured (git rev-parse HEAD:src/main/scala — first 7 hex), so a
     // combined file can never silently merge halves from different
     // CODE, while commits that only add artifacts (the pair commit
-    // itself, a verdict file, PLANS.md) do NOT invalidate a half. This
+    // itself, a verdict file, PLANS.tsv) do NOT invalidate a half. This
     // is the r12 fix for two straight rounds of refused driver
     // combines: stamping HEAD made the pair-recording commit itself a
     // "different rev", so a post-commit re-run of one half could never

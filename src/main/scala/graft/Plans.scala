@@ -1,63 +1,71 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.execution.{DataSourceScanExec, ExpandExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins._
+import org.apache.spark.sql.execution.window.WindowExec
 import java.nio.file.{Files, Paths}
 
-/** Dumps the executed plan of EVERY SparkEntry query to PLANS.md — the
-  * explain-and-iterate audit trail (SURVEY.md §5): broadcasts where
-  * expected, pushdown reaching scans, codegen stages wide. Coverage is
-  * exhaustive by construction: the section list is the `queries` key
-  * set itself, and the generator fails if any key lacks a section —
-  * the r9 global-window shape shipped precisely because its plan was
-  * never rendered.
+/** Writes the plan gate's baseline: one fingerprint row per
+  * SparkEntry query, taken from its executed plan (SURVEY.md §5).
+  * Coverage is exhaustive by construction: the rows are the `queries`
+  * key set itself, sorted by name. tools/check_plans.py compares a
+  * fresh file against the committed PLANS.tsv. Full plans stay
+  * available through graft.tools.ExplainDump.
   * Usage: graft.Plans [sfDir] [outFile]
   */
 object Plans {
-  /** Audit-priority queries rendered first (the expensive shapes a
-    * reviewer reads top-down); every remaining `queries` key follows
-    * alphabetically, so the file always covers the full surface. */
-  val Headline = Seq(
-    "q1_pricing_summary", "q6_forecast_revenue", "q_asof_join",
-    "dedup_minhash_pairs", "dedup_ngram_jaccard", "dedup_embedding_cos",
-    "dedup_corpus_sig", "ann_topk_bruteforce", "ann_ivf_topk",
-    "stream_window_agg", "stream_sessionize", "pipeline_dedup_survivors",
-    "q_topk_native", "q_salted_join", "stream_event_join", "dlp_k_anonymity",
-    // round 4 additions
-    "q_range_join", "q_bloom_join", "ann_pq_topk", "ann_ivfpq_topk",
-    "ann_ivf_probe2", "stream_latest_state", "text_repetition",
-    "jdbc_live_extract", "ingest_partition_pruning",
-    "dedup_containment", "dedup_components",
-    // round 6 additions
-    "q_lateral", "dedup_incremental", "split_decontaminate",
-    "pipeline_quality_gate", "jdbc_live_extract_nopk",
-    "ann_pq_rerank", "dedup_keep_best", "mm_decode_batch_plan",
-    // round 7 additions
-    "text_chunking", "text_ngram_coverage", "text_tfidf",
-    "ann_lsh_topk", "embed_quantize_int8", "dedup_semantic_cluster",
-    "embed_kmeans_train", "text_search_rank", "stream_late_audit",
-    "mm_shard_skew", "ann_recall_eval",
-    // round 8 additions
-    "source_bucketed_join", "layout_zorder",
-    "load_agg_upsert", "sample_weighted", "ingest_gap_audit",
-    "dedup_paragraph", "stream_deid_pipeline", "ann_cell_balance",
-    "text_lm_score", "ingest_checksum_reconcile", "load_cdc_apply",
-    "embed_random_projection", "stream_rate_anomaly", "dedup_fuzzy_link",
-    "pipeline_training_mix", "mm_binary_ingest",
-    // round 9 additions
-    "q_sequence_match", "q_skyline",
-    "layout_compaction_plan", "text_bpe_pairs", "text_length_outliers",
-    "pipeline_mix_weights", "embed_matryoshka_eval", "embed_dim_stats",
-    "dedup_component_stats", "dedup_lsh_tuning", "dedup_source_dup_rate",
-    "ingest_snapshot_diff", "sample_group_topk", "text_bm25",
-    "mm_payload_dedup", "ann_probe_curve", "ann_reassign_drift",
-    "q_funnel_conversion", "stream_funnel_match_replay",
-    "pipeline_mm_curation", "dedup_corpus_matrix", "dedup_lsh_recall",
-    "text_cooccurrence", "dlp_quantile_bucketing", "stream_reorder_depth",
-    "embed_pair_hist")
+  val Fields = Seq("shuffles", "broadcasts", "sorts", "expands", "windows",
+    "global_windows", "bhj", "smj", "shj", "bnlj", "cart", "pushdown", "readschema")
+
+  /** Every node of a physical plan, over the edges `treeString` prints:
+    * `children`, plus `innerChildren` (subqueries, the plan inside a
+    * cached relation), plus AQE's current plan. */
+  private def nodes(n: TreeNode[_]): Iterator[TreeNode[_]] = {
+    val next = n match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case _ => (n.children ++ n.innerChildren).map(_.asInstanceOf[TreeNode[_]])
+    }
+    Iterator(n) ++ next.iterator.flatMap(nodes)
+  }
+
+  /** Node-class counts of a physical plan, one value per `Fields` name.
+    * `global_windows` counts windows with an empty partition spec;
+    * `pushdown` and `readschema` are 0/1 over the plan's scans. */
+  def fingerprint(plan: SparkPlan): Map[String, Int] = {
+    val all = nodes(plan).toSeq
+    // a scan's `metadata` (the PushedFilters / ReadSchema that explain
+    // prints) is protected in Scala but public in bytecode
+    val metadata = classOf[DataSourceScanExec].getMethod("metadata")
+    val scans = all.collect { case s: DataSourceScanExec =>
+      metadata.invoke(s).asInstanceOf[Map[String, String]]
+    }
+    def any(p: Map[String, String] => Boolean): Int = if (scans.exists(p)) 1 else 0
+    Map(
+      "shuffles" -> all.count(_.isInstanceOf[ShuffleExchangeExec]),
+      "broadcasts" -> all.count(_.isInstanceOf[BroadcastExchangeExec]),
+      "sorts" -> all.count(_.isInstanceOf[SortExec]),
+      "expands" -> all.count(_.isInstanceOf[ExpandExec]),
+      "windows" -> all.count(_.isInstanceOf[WindowExec]),
+      "global_windows" -> all.count {
+        case w: WindowExec => w.partitionSpec.isEmpty
+        case _ => false
+      },
+      "bhj" -> all.count(_.isInstanceOf[BroadcastHashJoinExec]),
+      "smj" -> all.count(_.isInstanceOf[SortMergeJoinExec]),
+      "shj" -> all.count(_.isInstanceOf[ShuffledHashJoinExec]),
+      "bnlj" -> all.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      "cart" -> all.count(_.isInstanceOf[CartesianProductExec]),
+      "pushdown" -> any(_.get("PushedFilters").exists(_ != "[]")),
+      "readschema" -> any(_.contains("ReadSchema")))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = args.lift(1).getOrElse("PLANS.md")
+    val out = args.lift(1).getOrElse("PLANS.tsv")
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.adaptive.enabled", "true")
@@ -65,52 +73,12 @@ object Plans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val all = Headline ++ SparkEntry.queries.keys.toSeq.filterNot(Headline.contains).sorted
-    // key parity both ways: a queries key with no plan section (or a
-    // stale Headline name with no query) must fail the generator, not
-    // silently narrow the audit
-    val missing = SparkEntry.queries.keySet -- all.toSet
-    val stale = all.toSet -- SparkEntry.queries.keySet
-    require(missing.isEmpty && stale.isEmpty,
-      s"plan/key parity broken: missing=${missing.toSeq.sorted} stale=${stale.toSeq.sorted}")
-    val sb = new StringBuilder
-    sb.append("# PLANS — executed plans of ALL operators\n\n")
-    sb.append(s"Generated by `graft.Plans` on `$sfDir` — ${all.size} plans, one per\n")
-    sb.append("`SparkEntry.queries` key (parity asserted). Things to check per\n")
-    sb.append("plan: dims broadcast, filters in PushedFilters, ReadSchema\n")
-    sb.append("pruned, `*(n)` codegen stages wide, no stray Exchange,\n")
-    sb.append("no unpartitioned Window over table-sized input.\n")
-    sb.append("tools/check_plans.py holds those shapes as fingerprints;\n")
-    sb.append("UNPARTITIONED windows specifically are gated against its\n")
-    sb.append("GLOBAL_WINDOW_ALLOWLIST, which mirrors (and is spec-pinned\n")
-    sb.append("to) PlanSpec.boundedGlobalWindows — each entry there carries\n")
-    sb.append("the written justification for why that window's input is\n")
-    sb.append("domain-bounded, never table-sized.\n")
-    all.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"\n## $name\n\n```\n")
-      // cap per plan, but NEVER mid-line: a Window/Exchange line cut at
-      // the boundary would misclassify in check_plans.py's fingerprint
-      // (and a sub-cap truncation made the gate blind below it — the
-      // r14 review finding; the 400k cap below clears every current
-      // plan with wide margin, and the explicit marker makes any
-      // future overflow visible to the gate)
-      // giant literal blobs (bloom-filter bytes render as megabytes of
-      // hex in `mightContain`) carry no plan structure — scrub them so
-      // the cap below never has to truncate a real plan
-      val plan = df.queryExecution.executedPlan.toString
-        .replaceAll("[0-9A-Fa-f]{512,}", "<LITERAL-BLOB>")
-      val cap = 400000
-      if (plan.length <= cap) sb.append(plan)
-      else {
-        val cut = plan.lastIndexOf('\n', cap)
-        sb.append(plan.take(math.max(cut, 0)))
-        sb.append("\n[PLAN TRUNCATED]")
-      }
-      sb.append("\n```\n")
+    val rows = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      val fp = fingerprint(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+      (name +: Fields.map(fp(_).toString)).mkString("\t")
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out: ${all.size} plans")
+    Files.writeString(Paths.get(out), (("query" +: Fields).mkString("\t") +: rows).mkString("", "\n", "\n"))
+    println(s"wrote $out: ${rows.size} fingerprints")
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 

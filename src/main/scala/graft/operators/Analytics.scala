@@ -1204,14 +1204,6 @@ object Analytics {
       .limit(20)
   }
 
-  /** Exact quartile thresholds of a BIGINT column WITHOUT a global
-    * ranking window — the same two-level decomposition as
-    * `dlp_quantile_bucketing` (DlpQueries.scala:148): rows rank inside
-    * value-range buckets (partitioned window), bucket offsets come
-    * from a bucket-count-sized cumulative (bounded by the value
-    * domain, never the row count), and the three (n+1)·q DIV 4 order
-    * statistics fall out of one aggregate. Returns a 1-row frame
-    * (q1/q2/q3) meant to be broadcast. */
   /** Exact per-dimension quartiles over an unpivoted (dim, v, tie)
     * frame, one fused two-level rank pass for ALL dimensions: rows
     * rank inside (dim, value-bucket) partitions, bucket offsets come

@@ -1481,8 +1481,6 @@ object Ann {
     val e = embDf(spark, dir)
     val M = 4
     val sub = 16
-    def sqL2(a: String, b: String, lo: Int) =
-      graft.functions.SqL2Sub.sqL2(col(a), col(b), lo, sub)
     // map-side per-subspace min against the collected codebook (r18):
     // same distances, same min semantics, no corpus exchange
     val cents = collectCentroids(e.filter(col("vec_id") < 8)

@@ -4,7 +4,6 @@ import java.sql.DriverManager
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Live JDBC ingest path, proven end-to-end against an embedded Derby
   * database (the Derby jars ship with Spark). This is the reference's

@@ -12,7 +12,6 @@ class PlanSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("CosineSim native expression matches the HOF formula bitwise") {
-    import spark.implicits._
     val df = Tables.embeddings(spark, sf)
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS emb")
       .limit(50)
@@ -153,20 +152,19 @@ class PlanSpec extends AnyFunSuite {
       s"poly anchor density off: $n of $positions")
   }
 
-  test("committed PLANS.md carries exactly one section per SparkEntry query") {
-    // the generator asserts parity at write time; this pins the
-    // COMMITTED artifact so a new operator can't ship without its
-    // executed plan rendered (the r9 global-window shape shipped
-    // precisely because its plan was never rendered)
-    val plansPath = java.nio.file.Paths.get("PLANS.md")
-    assert(java.nio.file.Files.exists(plansPath), "PLANS.md missing — run graft.Plans")
-    val sections = scala.jdk.CollectionConverters.IteratorHasAsScala(
+  test("committed PLANS.tsv carries exactly one row per SparkEntry query") {
+    // pins the COMMITTED gate baseline so a new operator can't ship
+    // without its plan fingerprinted (the r9 global-window shape
+    // shipped precisely because its plan was never audited)
+    val plansPath = java.nio.file.Paths.get("PLANS.tsv")
+    assert(java.nio.file.Files.exists(plansPath), "PLANS.tsv missing — run graft.Plans")
+    val rows = scala.jdk.CollectionConverters.IteratorHasAsScala(
       java.nio.file.Files.lines(plansPath).iterator()).asScala
-      .filter(_.startsWith("## ")).map(_.drop(3).trim).toSet
-    val missing = SparkEntry.queries.keySet -- sections
-    val stale = sections -- SparkEntry.queries.keySet
+      .drop(1).map(_.takeWhile(_ != '\t')).toSet
+    val missing = SparkEntry.queries.keySet -- rows
+    val stale = rows -- SparkEntry.queries.keySet
     assert(missing.isEmpty && stale.isEmpty,
-      s"PLANS.md stale: missing=${missing.toSeq.sorted.take(10)} " +
+      s"PLANS.tsv stale: missing=${missing.toSeq.sorted.take(10)} " +
         s"stale=${stale.toSeq.sorted.take(10)} — regenerate with graft.Plans")
   }
 
@@ -784,7 +782,7 @@ class PlanSpec extends AnyFunSuite {
 
   // The r9 lesson: dlp_quantile_bucketing shipped a full-table
   // unpartitioned WindowExec for a round because its plan was never
-  // audited. This sweep walks EVERY SparkEntry query's optimized plan
+  // audited. This sweep walks EVERY SparkEntry query's executed plan
   // and fails on any Window with an empty partitionSpec, unless the
   // query is whitelisted here with a justification for why that
   // window's input is provably bounded (sketch-/group-/survivor-sized,
@@ -801,7 +799,6 @@ class PlanSpec extends AnyFunSuite {
     "q_skyline" -> "phase-2 window input = union of 16 per-bucket Pareto frontiers (survivor-sized)",
     "text_vocab" -> "window input = top-200 vocabulary rows after TakeOrdered",
     "text_zipf_fit" -> "window input = top-50 vocabulary rows after TakeOrdered",
-    "q_rfm_segments" -> "3 quartile windows, each over one row per present value bucket (the dlp_quantile_bucketing two-level decomposition, per RFM dimension)",
     "dlp_top_coding" -> "window input = one row per present value bucket (domain DIV 16384 ~ 70 rows at any table size)",
     "q_forecast_backtest" -> "window input = one row per calendar week (bounded by the time domain, never the order count)",
     "q_abc_class" -> "window input = one row per present revenue bucket (domain DIV 10⁶ — bucket-offset cumulative for the descending ABC prefix)",
@@ -820,18 +817,15 @@ class PlanSpec extends AnyFunSuite {
     "ann_incremental_assign" -> "share windows over k IVF cell rows (k fixed by config — the ann_cell_balance bound, before AND after the batch merge)")
 
   test("no query ships an unpartitioned window over table-sized input") {
-    import org.apache.spark.sql.catalyst.plans.logical
+    // the executed plan as graft.Plans fingerprints it, so the sweep
+    // also sees windows inside subqueries
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val globals =
-        try {
-          val df = fn(spark, sf)
-          df.queryExecution.optimizedPlan.collect {
-            case w: logical.Window if w.partitionSpec.isEmpty => w
-          }
-        } catch { case scala.util.control.NonFatal(e) =>
-          fail(s"query $name failed to build/analyze in the sweep: $e")
+        try Plans.fingerprint(fn(spark, sf).queryExecution.executedPlan)("global_windows")
+        catch { case scala.util.control.NonFatal(e) =>
+          fail(s"query $name failed to build/plan in the sweep: $e")
         }
-      if (globals.nonEmpty && !boundedGlobalWindows.contains(name)) Some(name) else None
+      if (globals > 0 && !boundedGlobalWindows.contains(name)) Some(name) else None
     }
     Caches.clearAll(); spark.catalog.clearCache()
     assert(offenders.isEmpty,
@@ -841,18 +835,31 @@ class PlanSpec extends AnyFunSuite {
     assert(stale.isEmpty, s"whitelist names no longer in SparkEntry.queries: $stale")
   }
 
-  test("check_plans.py GLOBAL_WINDOW_ALLOWLIST mirrors boundedGlobalWindows 1:1") {
-    // the Python plan gate (tools/check_plans.py) enforces the same
-    // unpartitioned-window rule against PLANS.md text; its allowlist
-    // must stay exactly this spec's justified set — parse the literal
-    // out of the script so neither side can drift silently.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("tools/check_plans.py")), "UTF-8")
-    val body = src.split("GLOBAL_WINDOW_ALLOWLIST = \\{")(1).split("\\}")(0)
-    val pyNames = "\"([a-z0-9_]+)\"".r.findAllMatchIn(body).map(_.group(1)).toSet
-    assert(pyNames == boundedGlobalWindows.keySet,
-      s"allowlist drift: onlyInPython=${(pyNames -- boundedGlobalWindows.keySet).toSeq.sorted} " +
-        s"onlyInSpec=${(boundedGlobalWindows.keySet -- pyNames).toSeq.sorted}")
+  test("Plans.fingerprint counts physical nodes by class, subqueries included") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val facts = (1 to 200).map(i => (i % 20L, i.toLong, i % 7L)).toDF("k", "v", "c")
+    val dims = (0 until 20).map(i => (i.toLong, s"n$i")).toDF("k", "name")
+    // exact counts: every field not named is 0
+    def check(df: DataFrame, expect: (String, Int)*): Unit = {
+      val plan = df.queryExecution.executedPlan
+      assert(plan.isInstanceOf[AdaptiveSparkPlanExec], "expected an AQE plan, as graft.Plans sees it")
+      assert(Plans.fingerprint(plan) == Plans.Fields.map(_ -> 0).toMap ++ expect, plan.treeString)
+    }
+    check(facts.join(dims, "k"), "broadcasts" -> 1, "bhj" -> 1)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try check(facts.join(dims, "k"), "shuffles" -> 2, "sorts" -> 2, "smj" -> 1)
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    check(facts.agg(countDistinct("k"), countDistinct("c")), "shuffles" -> 2, "expands" -> 1)
+    check(facts.withColumn("rn", row_number().over(Window.partitionBy("k").orderBy("v"))),
+      "shuffles" -> 1, "sorts" -> 1, "windows" -> 1)
+    // the only window sits in a scalar subquery: unpartitioned, and
+    // invisible to optimizedPlan.collect
+    val top = facts.select(row_number().over(Window.orderBy("v")).as("rn")).agg(max("rn"))
+    check(dims.select(col("k"), top.scalar().as("m")),
+      "shuffles" -> 1, "sorts" -> 1, "windows" -> 1, "global_windows" -> 1)
   }
 
   // Compare-boundary type guard (the round-1 DECIMAL and round-8/11

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Analytics
-import graft.dedup.Dedup
 
 /** Round-11 batch-15 operators: DAU/MAU vs a brute-force trailing
   * window, label-precision accounting, day-of-week conservation.

@@ -100,7 +100,6 @@ class Widening12gSpec extends AnyFunSuite {
       assert(r.getLong(2) <= r.getLong(1))
     }
     // forge a failed page: remove keys 300..349 (inside bucket 0)
-    import spark.implicits._
     val holed = Tables.orders(spark, sf).selectExpr("o_orderkey AS k")
       .filter(!col("k").between(300, 349))
     val ledger = SourceQueries.pkCompletenessOf(holed).collect()
