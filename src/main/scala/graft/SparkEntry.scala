@@ -56,7 +56,6 @@ object SparkEntry {
     "reid_publish_format" -> DlpQueries.reidPublishFormat _,
     "migration_manifest" -> graft.etl.Migration.manifest _,
     // §2.G text analysis
-    "text_token_count" -> TextOps.tokenCount _,
     "text_lang_id" -> TextOps.langId _,
     "text_quality_score" -> TextOps.qualityScore _,
     "text_fingerprint" -> TextOps.fingerprint _,
@@ -65,7 +64,6 @@ object SparkEntry {
     "dedup_minhash_sig" -> Dedup.minhashSig _,
     "dedup_minhash_pairs" ->
       ((s: SparkSession, d: String) => Dedup.minhashPairs(s, d).orderBy("doc_a", "doc_b")),
-    "dedup_simhash" -> Dedup.simhash _,
     "dedup_ngram_jaccard" -> ((s: SparkSession, d: String) => Dedup.ngramJaccard(s, d)),
     "dedup_containment" -> Dedup.containment _,
     "dedup_minhash_est" -> Dedup.minhashEstimate _,
@@ -91,7 +89,6 @@ object SparkEntry {
     "stream_window_agg" -> Streams.windowAggBatch _,
     "stream_sessionize" -> Streams.sessionizeBatch _,
     "stream_dedup" -> Streams.dedupBatch _,
-    "stream_session_window" -> Streams.sessionWindowBatch _,
     "stream_funnel" -> Streams.funnel _,
     "stream_retention" -> Streams.retention _,
     "stream_event_join" -> Streams.eventJoinBatch _,
@@ -102,7 +99,6 @@ object SparkEntry {
     "source_bucketed_join" -> SourceQueries.bucketedJoin _,
     "load_agg_upsert" -> SourceQueries.aggUpsert _,
     "sample_weighted" -> TextOps.sampleWeighted _,
-    "ingest_gap_audit" -> SourceQueries.gapAudit _,
     "dedup_paragraph" -> Dedup.paragraphDedup _,
     "dedup_substring" -> Dedup.substringDedup _,
     "stream_deid_pipeline" -> Streams.deidPipelineBatch _,
@@ -115,23 +111,16 @@ object SparkEntry {
     "dedup_fuzzy_link" -> Dedup.fuzzyLink _,
     "pipeline_training_mix" -> Dedup.trainingMix _,
     "mm_binary_ingest" -> Multimodal.binaryIngest _,
-    "ingest_incremental" -> ((s: SparkSession, d: String) => graft.etl.Ingest.incrementalPlan(s, d)),
     // §2.H multimodal
-    "mm_binary_meta" -> Multimodal.binaryMeta _,
-    "mm_frame_sample" -> Multimodal.frameSample _,
-    "mm_modality_route" -> Multimodal.modalityRoute _,
-    "mm_decode_batch_plan" -> Multimodal.decodeBatchPlan _,
     "mm_feature_extract" -> Multimodal.featureExtract _,
     // §2.G (cont.)
-    "text_normalize" -> TextOps.normalize _,
-    "text_ngram_freq" -> TextOps.ngramFreq _,
     "text_vocab" -> TextOps.vocab _,
     // §2.A/§2.C (round 4): live JDBC path, reid shaping, load retry,
     // CSV/JSON source round-trips
     "jdbc_live_extract" -> SourceQueries.jdbcLiveExtract _,
     "jdbc_live_extract_nopk" -> SourceQueries.jdbcLiveExtractNoPk _,
     "jdbc_type_map" -> SourceQueries.jdbcTypeMap _,
-    // §2.D/E/G (round 4): interval join, dedup components, repetition
+    // §2.D/E (round 4): interval join, dedup components
     "q_range_join" -> Analytics.qRangeJoin _,
     "q_lateral" -> Analytics.qLateral _,
     "q_ntile" -> Analytics.qNtile _,
@@ -140,7 +129,6 @@ object SparkEntry {
     "ingest_partition_pruning" -> SourceQueries.partitionPruning _,
     "dedup_components" -> ((s: SparkSession, d: String) => Dedup.components(s, d)),
     "dedup_keep_best" -> Dedup.keepBest _,
-    "text_repetition" -> TextOps.repetition _,
     "sample_stratified" -> TextOps.sampleStratified _,
     "split_train_eval" -> TextOps.splitTrainEval _,
     "jdbc_pk_catalog" -> SourceQueries.jdbcPkCatalog _,
@@ -148,9 +136,7 @@ object SparkEntry {
     "reid_group_signature" -> SourceQueries.reidGroupSignature _,
     "load_retry_deadletter" -> SourceQueries.loadRetryDispositions _,
     "source_csv_roundtrip" -> SourceQueries.csvRoundtrip _,
-    "load_scd2_merge" -> SourceQueries.scd2Merge _,
     "migration_jdbc_manifest" -> SourceQueries.jdbcImportManifest _,
-    "dlp_k_map" -> DlpQueries.dlpKMap _,
     "source_json_roundtrip" -> SourceQueries.jsonRoundtrip _,
     "source_orc_roundtrip" -> SourceQueries.orcRoundtrip _,
     // §2.E/F/G (round 7): chunking, corpus-fluency scoring, tf-idf
@@ -166,7 +152,6 @@ object SparkEntry {
     "ann_recall_eval" -> Ann.recallEval _,
     "stream_late_audit" -> ((s: SparkSession, d: String) => Streams.lateAuditBatch(s, d)),
     "text_search_rank" -> ((s: SparkSession, d: String) => TextOps.searchRank(s, d)),
-    "mm_shard_skew" -> Multimodal.shardSkew _,
     // §2.I (round 9): the streaming STATE MACHINES themselves run in
     // batch execution and land in the gate — stream/batch equivalence
     // as oracle-checked rows, not just spec assertions
@@ -309,9 +294,6 @@ object SparkEntry {
     "q_growth_accounting" -> Analytics.qGrowthAccounting _,
     "q_countmin_audit" -> Analytics.qCountminAudit _,
     "embed_pca_power" -> Ann.pcaPower _,
-    // round 11 batch 14: t-closeness risk, ship-latency percentiles
-    "dlp_t_closeness" -> DlpQueries.dlpTCloseness _,
-    "q_ship_latency" -> Analytics.qShipLatency _,
     // round 11 batch 15: DAU/MAU stickiness, cosine-band label
     // precision, day-of-week seasonality
     "q_dau_mau" -> Analytics.qDauMau _,
@@ -572,13 +554,8 @@ object SparkEntry {
     // (#coldrop, position-keyed), protocol-gated to 5:5; completes
     // the ADD + RENAME + DROP schema-evolution verb surface
     "load_drop_column" -> SourceQueries.dropColumnOp _,
-    // round 17 batch 6: LLM-pipeline additions — soft dedup weights
-    // (keep-everything 1/cluster reweighting), epsilon-ball range
-    // search with LSH-bucket recall, tokenizer fertility by language,
-    // TTL-windowed streaming dedup (bounded-state dropDuplicates)
-    "dedup_soft_weights" -> Dedup.softDedupWeights _,
-    "ann_epsilon_ball" -> Ann.epsilonBall _,
-    "text_tokenizer_fertility" -> TextOps.tokenizerFertility _,
+    // round 17 batch 6: TTL-windowed streaming dedup (bounded-state
+    // dropDuplicates)
     "stream_dedup_window" -> Streams.dedupWindowBatch _,
   )
 
@@ -797,10 +774,6 @@ object SparkEntry {
        |  JOIN tb t2q ON t2q.query_id = t0q.query_id AND t2q.cent_id = codes.c2
        |  JOIN tb t3q ON t3q.query_id = t0q.query_id AND t3q.cent_id = codes.c3
        |  WHERE codes.vec_id <> t0q.query_id)""".stripMargin
-
-  private val SimhashExpr = (0 until 16).map { j =>
-    s"(CASE WHEN 2 * len(list_filter(mdw, h -> substr(h, ${j + 1}, 1) >= '8')) > len(mdw) THEN ${1L << j} ELSE 0 END)"
-  }.mkString(" + ")
 
   private def langHits(words: Seq[String]): String =
     s"CAST(len(list_filter(w, x -> x IN (${words.map(w => s"'$w'").mkString(", ")}))) AS BIGINT)"
@@ -1035,12 +1008,6 @@ object SparkEntry {
         |SELECT c_mktsegment, c_nationkey, COUNT(*) AS class_size,
         |  COUNT(DISTINCT bal_bucket) AS l_diversity
         |FROM q GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "text_ngram_freq" ->
-      """WITH g AS (SELECT unnest(list_transform(range(1, greatest(len(w) - 1, 1) + 1),
-        |    i -> concat_ws(' ', w[i], w[i+1]))) AS gram
-        |  FROM (SELECT string_split(text, ' ') AS w FROM documents))
-        |SELECT gram, COUNT(*) AS n FROM g GROUP BY gram
-        |ORDER BY n DESC, gram LIMIT 100""".stripMargin,
     "text_vocab" ->
       """WITH c AS (SELECT word, COUNT(*) AS n FROM
         |    (SELECT unnest(string_split(text, ' ')) AS word FROM documents) GROUP BY word),
@@ -1092,11 +1059,6 @@ object SparkEntry {
         |  '","c_mktsegment":"' || c_mktsegment || '"}' AS message
         |FROM customer ORDER BY c_custkey""".stripMargin,
     // §2.G
-    "text_token_count" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
     "text_lang_id" ->
       (s"""WITH t AS (SELECT doc_id, lang AS labeled_lang, string_split(text, ' ') AS w FROM documents),
          |s AS (SELECT doc_id, labeled_lang,
@@ -1211,10 +1173,6 @@ object SparkEntry {
          |FROM und u JOIN s ON s.doc_id = u.doc_id AND s.split <> 'train'
          |JOIN s t ON t.doc_id = u.nbr AND t.split = 'train'
          |GROUP BY u.doc_id, s.split ORDER BY u.doc_id""".stripMargin),
-    "dedup_simhash" ->
-      (s"""WITH m AS (SELECT doc_id, list_transform(string_split(text, ' '), x -> md5(x)) AS mdw FROM documents),
-         |s AS (SELECT doc_id, CAST($SimhashExpr AS BIGINT) AS simhash FROM m)
-         |SELECT doc_id, simhash, CAST(simhash // 16 AS BIGINT) AS bucket FROM s ORDER BY doc_id""".stripMargin),
     "dedup_ngram_jaccard" ->
       (s"""WITH $GramsCte,
          |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1451,15 +1409,6 @@ object SparkEntry {
         |SELECT user_id, event_type, make_timestamp(MIN(us)) AS first_ts,
         |  MIN(event_id) AS min_event_id, COUNT(*) AS n
         |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "stream_session_window" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |s AS (SELECT user_id, event_id, us,
-        |  CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |t AS (SELECT user_id, us, SUM(new_s) OVER
-        |  (PARTITION BY user_id ORDER BY us, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM s)
-        |SELECT user_id, make_timestamp(MIN(us)) AS session_start, COUNT(*) AS n_events
-        |FROM t GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
     "pipeline_dedup_survivors" ->
       (s"""WITH $GramsCte,
          |$SigCte,
@@ -1501,14 +1450,6 @@ object SparkEntry {
         |SELECT user_id, event_id AS last_event_id, event_type AS last_type,
         |  value_cents AS last_value, us AS last_us
         |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "ingest_incremental" ->
-      """WITH b AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS lo,
-        |                  MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS hi FROM events),
-        |c AS (SELECT (lo + hi) // 2 AS ckpt_us FROM b)
-        |SELECT (SELECT ckpt_us FROM c) AS ckpt_us,
-        |  COUNT(*) AS n_new,
-        |  MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS next_ckpt_us
-        |FROM events WHERE epoch_us(CAST(ts AS TIMESTAMP)) > (SELECT ckpt_us FROM c)""".stripMargin,
     "stream_funnel" ->
       """WITH e AS (SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |s AS (SELECT user_id,
@@ -1527,59 +1468,6 @@ object SparkEntry {
         |      WHERE day >= cohort_day + 7 AND day < cohort_day + 14)
         |SELECT cohort_day, COUNT(*) AS n_users, COUNT(retained) AS n_retained
         |FROM f LEFT JOIN a USING (user_id) GROUP BY cohort_day ORDER BY cohort_day""".stripMargin,
-    "text_normalize" ->
-      """WITH t AS (SELECT doc_id, text,
-        |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS normalized
-        |  FROM documents)
-        |SELECT doc_id, normalized,
-        |  CAST(CASE WHEN normalized = text THEN 0 ELSE 1 END AS BIGINT) AS changed
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "mm_frame_sample" ->
-      """SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-        |  md5(substr(text, 1 + frame_idx * 64, 16)) AS frame_hash
-        |FROM (SELECT doc_id, text,
-        |      unnest(range(0, least(3, (length(text) - 1) // 64) + 1)) AS frame_idx FROM documents)
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    // mm_modality_route: Spark sniffs the actual leading bytes of the
-    // payload; the oracle derives modality from the generator rule —
-    // two independent formulations that must agree.
-    "mm_modality_route" ->
-      """WITH m AS (SELECT doc_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png' ELSE 'audio/wav' END AS modality,
-        |  CAST(octet_length(encode(text)) + CASE doc_id % 3 WHEN 0 THEN 3 ELSE 4 END AS BIGINT) AS n_bytes
-        |  FROM documents)
-        |SELECT modality, COUNT(*) AS n_docs, MIN(doc_id) AS min_doc,
-        |  CAST(SUM(n_bytes) AS BIGINT) AS total_bytes
-        |FROM m GROUP BY modality ORDER BY modality""".stripMargin,
-    // mm_decode_batch_plan: byte-budgeted decode batches per
-    // (modality, shard) — the window is bounded at 1000 rows/shard.
-    "mm_decode_batch_plan" ->
-      """WITH m AS (SELECT doc_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png' ELSE 'audio/wav' END AS modality,
-        |  CAST(octet_length(encode(text)) + CASE doc_id % 3 WHEN 0 THEN 3 ELSE 4 END AS BIGINT) AS n_bytes,
-        |  CAST(doc_id // 1000 AS BIGINT) AS shard
-        |  FROM documents),
-        |c AS (SELECT doc_id, modality, shard, n_bytes,
-        |  SUM(n_bytes) OVER (PARTITION BY modality, shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM m)
-        |SELECT doc_id, modality, shard, n_bytes,
-        |  CAST((cum - n_bytes) // 4096 AS BIGINT) AS batch_in_shard
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // decoder-pool balance audit over the decode_batch_plan layout
-    "mm_shard_skew" ->
-      """WITH m AS (SELECT doc_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png' ELSE 'audio/wav' END AS modality,
-        |  CAST(octet_length(encode(text)) + CASE doc_id % 3 WHEN 0 THEN 3 ELSE 4 END AS BIGINT) AS n_bytes,
-        |  CAST(doc_id // 1000 AS BIGINT) AS shard
-        |  FROM documents),
-        |p AS (SELECT modality, shard, COUNT(*) AS n_payloads,
-        |  CAST(SUM(n_bytes) AS BIGINT) AS total_bytes FROM m GROUP BY modality, shard),
-        |t AS (SELECT modality, CAST(SUM(total_bytes) AS BIGINT) AS mod_bytes,
-        |  COUNT(*) AS n_shards FROM p GROUP BY modality)
-        |SELECT p.modality, shard, n_payloads, total_bytes,
-        |  CAST(total_bytes * 10000 * n_shards // mod_bytes AS BIGINT) AS load_bp
-        |FROM p JOIN t ON p.modality = t.modality
-        |ORDER BY p.modality, shard""".stripMargin,
     // mm_feature_extract: the mapPartitions decode produces
     // md5/byte-derived features the oracle recomputes in SQL.
     "mm_feature_extract" ->
@@ -1588,14 +1476,6 @@ object SparkEntry {
         |  CAST(128 + ascii(substr(md5(text), 1, 1)) AS BIGINT) AS fake_width,
         |  CAST(128 + ascii(substr(md5(text), 2, 1)) AS BIGINT) AS fake_height,
         |  CAST(ascii(substr(text, 1, 1)) AS BIGINT) AS head_cp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // §2.H
-    "mm_binary_meta" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  substr(to_base64(encode(text)), 1, 16) AS b64_head,
-        |  CAST(128 + ascii(substr(md5(text), 1, 1)) AS BIGINT) AS fake_width,
-        |  CAST(128 + ascii(substr(md5(text), 2, 1)) AS BIGINT) AS fake_height
         |FROM documents ORDER BY doc_id""".stripMargin,
     // §2.D (round 4): bucketed interval join — oracle is the direct
     // inequality join DuckDB plans natively.
@@ -1728,17 +1608,6 @@ object SparkEntry {
       (s"""WITH s AS (SELECT doc_id, source, ${TextOps.SplitCaseSql} AS split FROM documents)
          |SELECT source, split, COUNT(*) AS n, MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
          |FROM s GROUP BY source, split ORDER BY source, split""".stripMargin),
-    // §2.G (round 4): Gopher-style repetition filters.
-    "text_repetition" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |b AS (SELECT doc_id, w, list_transform(range(1, greatest(len(w) - 1, 1) + 1),
-        |  i -> concat_ws(' ', w[i], w[i+1])) AS bg FROM t)
-        |SELECT doc_id,
-        |  CAST(len(w) AS BIGINT) AS n_words,
-        |  CAST((len(w) - len(list_distinct(w))) * 10000 // len(w) AS BIGINT) AS dup_word_bp,
-        |  CAST(list_max(list_transform(list_distinct(w), x -> len(list_filter(w, y -> y = x)))) * 10000 // len(w) AS BIGINT) AS top_word_bp,
-        |  CAST(list_max(list_transform(list_distinct(bg), x -> len(list_filter(bg, y -> y = x)))) * 10000 // len(bg) AS BIGINT) AS top_bigram_bp
-        |FROM b ORDER BY doc_id""".stripMargin,
     // §2.A/§2.C (round 4)
     // jdbc_live_extract: Spark reads rows back out of a live Derby DB
     // via a partitioned JDBC range scan; the oracle reads the same rows
@@ -1821,28 +1690,6 @@ object SparkEntry {
         |  UNION ALL
         |  SELECT 'supplier', (SELECT COUNT(*) FROM supplier), 's_suppkey', 4, 1
         |) ORDER BY table_name""".stripMargin,
-    "dlp_k_map" ->
-      """WITH s AS (SELECT c_mktsegment, c_nationkey, COUNT(*) AS n_sample
-        |  FROM customer WHERE c_custkey % 7 = 0 GROUP BY 1, 2),
-        |p AS (SELECT c_mktsegment, c_nationkey, COUNT(*) AS k_map
-        |  FROM customer GROUP BY 1, 2)
-        |SELECT c_mktsegment, c_nationkey, n_sample, k_map
-        |FROM s JOIN p USING (c_mktsegment, c_nationkey)
-        |ORDER BY c_mktsegment, c_nationkey""".stripMargin,
-    "load_scd2_merge" ->
-      """WITH cur AS (SELECT c_custkey, c_mktsegment FROM customer),
-        |chg AS (SELECT c_custkey, 'MACHINERY' AS new_segment FROM cur
-        |        WHERE c_custkey % 10 = 3 AND c_mktsegment <> 'MACHINERY')
-        |SELECT c_custkey, c_mktsegment, '1995-01-01' AS valid_from,
-        |  CAST(NULL AS VARCHAR) AS valid_to, CAST(1 AS BIGINT) AS is_current
-        |FROM cur WHERE c_custkey NOT IN (SELECT c_custkey FROM chg)
-        |UNION ALL
-        |SELECT c_custkey, c_mktsegment, '1995-01-01', '1996-06-01', 0
-        |FROM cur WHERE c_custkey IN (SELECT c_custkey FROM chg)
-        |UNION ALL
-        |SELECT c_custkey, new_segment, '1996-06-01', CAST(NULL AS VARCHAR), 1
-        |FROM chg
-        |ORDER BY c_custkey, valid_from, is_current""".stripMargin,
     "source_csv_roundtrip" ->
       """SELECT o_orderstatus, COUNT(*) AS n,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total
@@ -1876,19 +1723,6 @@ object SparkEntry {
          |    CAST(FLOOR(CAST(${TextOps.Hash24Sql} AS DOUBLE) * 1000000 / GREATEST(n_chars, 1)) AS BIGINT) AS priority
          |  FROM documents ORDER BY priority, doc_id LIMIT 50) t
          |ORDER BY doc_id""".stripMargin),
-    // round 8: the oracle is the NAIVE single global window; the Spark
-    // side runs the two-level (bucketed + boundary) decomposition, so
-    // the hash match proves the decomposition exact
-    "ingest_gap_audit" ->
-      """WITH e AS (SELECT o_orderkey FROM orders
-        |  WHERE CAST(FLOOR(o_orderkey / 512) AS BIGINT) % 17 <> 5),
-        |g AS (SELECT o_orderkey, LAG(o_orderkey) OVER (ORDER BY o_orderkey) AS prev
-        |  FROM e),
-        |gaps AS (SELECT prev + 1 AS gap_start, o_orderkey - 1 AS gap_end,
-        |    o_orderkey - prev - 1 AS n_missing
-        |  FROM g WHERE prev IS NOT NULL AND o_orderkey - prev > 1
-        |  ORDER BY n_missing DESC, gap_start LIMIT 25)
-        |SELECT gap_start, gap_end, n_missing FROM gaps ORDER BY gap_start""".stripMargin,
     // round 8: deid transforms + range batching + order-insensitive
     // payload fingerprint (sorted token list) — same token/sha256
     // fragment as dlp_config_apply
@@ -3933,44 +3767,6 @@ object SparkEntry {
          |SELECT j AS dim, CAST(${signSafe("x", "GREATEST(m, 1)")} AS BIGINT) AS loading_milli
          |FROM x2 CROSS JOIN m2 ORDER BY dim""".stripMargin
     },
-    // round 11 batch 14
-    "dlp_t_closeness" ->
-      """WITH c AS (SELECT c_mktsegment, c_nationkey,
-        |    CAST(FLOOR(c_acctbal / 2000) AS BIGINT) AS sb FROM customer),
-        |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM c),
-        |gd AS (SELECT sb, CAST((COUNT(*) * 10000) // n_total AS BIGINT) AS g_bp
-        |  FROM c CROSS JOIN n GROUP BY sb, n_total),
-        |cl AS (SELECT c_mktsegment, c_nationkey, CAST(COUNT(*) AS BIGINT) AS class_size
-        |  FROM c GROUP BY 1, 2),
-        |cells AS (SELECT c_mktsegment, c_nationkey, sb, CAST(COUNT(*) AS BIGINT) AS n_cs
-        |  FROM c GROUP BY 1, 2, 3),
-        |dense AS (SELECT cl.c_mktsegment, cl.c_nationkey, cl.class_size, gd.sb, gd.g_bp,
-        |    CAST((COALESCE(n_cs, 0) * 10000) // cl.class_size AS BIGINT) AS c_bp
-        |  FROM cl CROSS JOIN gd
-        |  LEFT JOIN cells ON cells.c_mktsegment = cl.c_mktsegment
-        |    AND cells.c_nationkey = cl.c_nationkey AND cells.sb = gd.sb),
-        |cum AS (SELECT c_mktsegment, c_nationkey, class_size,
-        |    SUM(c_bp - g_bp) OVER (PARTITION BY c_mktsegment, c_nationkey ORDER BY sb
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM dense),
-        |nb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets FROM gd)
-        |SELECT c_mktsegment, c_nationkey, class_size,
-        |  CAST(SUM(ABS(cum)) // GREATEST(n_buckets - 1, 1) AS BIGINT) AS t_bp
-        |FROM cum CROSS JOIN nb
-        |GROUP BY c_mktsegment, c_nationkey, class_size, n_buckets
-        |ORDER BY c_mktsegment, c_nationkey""".stripMargin,
-    "q_ship_latency" ->
-      """WITH d AS (SELECT o_orderpriority AS prio, l_orderkey, l_linenumber,
-        |    CAST(date_diff('day', o_orderdate, l_shipdate) AS BIGINT) AS days
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |r AS (SELECT prio, days,
-        |    CAST(row_number() OVER (PARTITION BY prio ORDER BY days, l_orderkey, l_linenumber) AS BIGINT) AS rn,
-        |    CAST(COUNT(*) OVER (PARTITION BY prio) AS BIGINT) AS n FROM d)
-        |SELECT prio AS o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_lines,
-        |  CAST(MIN(CASE WHEN rn = GREATEST((n + 1) // 2, 1) THEN days END) AS BIGINT) AS p50_days,
-        |  CAST(MIN(CASE WHEN rn = GREATEST((9 * (n + 1)) // 10, 1) THEN days END) AS BIGINT) AS p90_days,
-        |  CAST(MAX(days) AS BIGINT) AS max_days
-        |FROM r GROUP BY prio ORDER BY o_orderpriority""".stripMargin,
     // round 11 batch 15
     "q_dau_mau" ->
       """WITH ud AS (SELECT DISTINCT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
@@ -6213,46 +6009,6 @@ object SparkEntry {
         |  UNION ALL SELECT '07_readd', 'mg_nat', (SELECT n7 FROM c)
         |  UNION ALL SELECT '08_history', 'drop_ops', 1
         |) t ORDER BY stage, metric""".stripMargin,
-    // dedup_soft_weights: global md5 clusters, per-source rollup;
-    // integer-bp weights (10000 // n) are engine-exact
-    "dedup_soft_weights" ->
-      """WITH cl AS (SELECT md5(text) AS th, CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY 1),
-        |d AS (SELECT source, md5(text) AS th FROM documents)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_docs,
-        |  CAST(SUM(10000 // n) AS BIGINT) AS eff_bp
-        |FROM d JOIN cl USING (th) GROUP BY source ORDER BY source""".stripMargin,
-    // ann_epsilon_ball: exact cosine ball at 0.2 vs the 8-bit sign-LSH
-    // bucketed ball (the ann_lsh_topk bucket), recall in integer bp
-    "ann_epsilon_ball" ->
-      (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         |eb AS (SELECT vec_id, emb,
-         |  (CASE WHEN emb[1] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[2] >= 0 THEN '1' ELSE '0' END ||
-         |   CASE WHEN emb[3] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[4] >= 0 THEN '1' ELSE '0' END ||
-         |   CASE WHEN emb[5] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[6] >= 0 THEN '1' ELSE '0' END ||
-         |   CASE WHEN emb[7] >= 0 THEN '1' ELSE '0' END || CASE WHEN emb[8] >= 0 THEN '1' ELSE '0' END) AS bucket FROM e),
-         |q AS (SELECT vec_id AS query_id, emb AS qe, bucket AS qbucket FROM eb WHERE vec_id >= 8 AND vec_id < 18),
-         |s AS (SELECT query_id, qbucket, eb.bucket, ${duckCos("qe", "emb")} AS c
-         |  FROM q JOIN eb ON eb.vec_id <> query_id),
-         |f AS (SELECT * FROM s WHERE c >= 0.2)
-         |SELECT query_id, CAST(COUNT(*) AS BIGINT) AS exact_n,
-         |  CAST(SUM(CASE WHEN bucket = qbucket THEN 1 ELSE 0 END) AS BIGINT) AS lsh_n,
-         |  CAST(SUM(CASE WHEN bucket = qbucket THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS recall_bp
-         |FROM f GROUP BY query_id ORDER BY query_id""".stripMargin),
-    // text_tokenizer_fertility: the text_token_count regex per
-    // language; strlen = BYTES in DuckDB (octet_length in Spark)
-    "text_tokenizer_fertility" ->
-      """WITH t AS (SELECT lang,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS tok,
-        |  CAST(strlen(text) AS BIGINT) AS nb FROM documents)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(ws) AS BIGINT) AS words, CAST(SUM(tok) AS BIGINT) AS tokens,
-        |  CAST(SUM(nb) AS BIGINT) AS bytes,
-        |  CAST(SUM(tok) * 10000 // SUM(ws) AS BIGINT) AS fertility_bp,
-        |  CAST(SUM(nb) * 10000 // SUM(tok) AS BIGINT) AS bytes_per_token_bp
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
     // stream_dedup_window: kept = distinct (user, type, 15-min
     // tumbling window) groups; timestamps positive so // == DIV
     "stream_dedup_window" ->

@@ -8,17 +8,17 @@ import graft.{Caches, Tables}
 import graft.functions.VectorExprs.cosineSim
 
 /** Deduplication operators over the documents corpus: exact-hash,
-  * MinHash+LSH, SimHash, blocked n-gram Jaccard, and embedding-cosine
-  * near-dup. All candidate generation is equality-join on LSH/blocking
-  * keys — never a cross join — so each stage stays shuffle-bounded at
+  * MinHash+LSH, blocked n-gram Jaccard, and embedding-cosine near-dup.
+  * All candidate generation is equality-join on LSH/blocking keys —
+  * never a cross join — so each stage stays shuffle-bounded at
   * 100 TB (pairs per bucket ≈ constant; AQE handles hot buckets).
   *
   * Algorithms per the published literature: MinHash resemblance
   * sketches (Broder, "On the resemblance and containment of
   * documents", 1997) with banding LSH (Leskovec/Rajaraman/Ullman,
-  * Mining of Massive Datasets ch.3); SimHash (Charikar, "Similarity
-  * estimation techniques from rounding algorithms", STOC 2002);
-  * random-hyperplane sign-LSH for cosine (same paper).
+  * Mining of Massive Datasets ch.3); random-hyperplane sign-LSH for
+  * cosine (Charikar, "Similarity estimation techniques from rounding
+  * algorithms", STOC 2002).
   */
 object Dedup {
 
@@ -543,22 +543,6 @@ object Dedup {
     // consumers apply their own ordering (the file's cache convention)
     all.join(sizes, "comp")
       .select(col("doc_id"), col("comp"), col("n_members"))
-  }
-
-  /** 16-bit SimHash over the word stream (majority vote per md5
-    * nibble), plus its 12-bit bucket prefix for blocking. */
-  def simhash(spark: SparkSession, dir: String): DataFrame = {
-    val bits = (0 until 16).map { j =>
-      s"(CASE WHEN 2 * size(filter(mdw, h -> substr(h, ${j + 1}, 1) >= '8')) > size(mdw) THEN ${1L << j} ELSE 0 END)"
-    }.mkString(" + ")
-    // deliberately NOT spread (r17, measured): steady 0.21 s unspread
-    // vs 0.31 s spread — the md5-per-word transform is too cheap to
-    // pay back the exchange at this operator's row volume
-    Tables.documents(spark, dir)
-      .selectExpr("doc_id", "transform(split(text, ' '), x -> md5(x)) AS mdw")
-      .selectExpr("doc_id", s"CAST($bits AS BIGINT) AS simhash")
-      .selectExpr("doc_id", "simhash", "CAST(simhash DIV 16 AS BIGINT) AS bucket")
-      .orderBy("doc_id")
   }
 
   /** SEGMENT-level exact dedup (the paragraph-dedup of C4 / the
@@ -1431,32 +1415,5 @@ object Dedup {
         "twa + twb - w_shared AS w_union",
         "(w_shared * 10000) DIV (twa + twb - w_shared) AS wj_bp")
       .orderBy("doc_a", "doc_b")
-  }
-
-  /** SOFT dedup weighting (the "keep everything, weight it down"
-    * alternative to dropping duplicates — SoftDeDup-style common-ness
-    * reweighting): every document stays in the corpus but carries
-    * sampling weight 1/|exact-dup cluster|, so a text repeated 40
-    * times across crawls contributes one document's worth of
-    * gradient signal instead of 40. Weights are integer basis points
-    * (10000 DIV n — deterministic on any engine); the per-source
-    * rollup reports raw docs, docs that belong to a multi-doc
-    * cluster, and the EFFECTIVE corpus size in bp — the dedup report
-    * a mixture designer reads next to [[Dedup.exact]]. Execution is
-    * the same md5(text) hash-groupBy `dedup_exact` pays (clusters are
-    * GLOBAL — a cluster spanning sources weights all its members
-    * down together), one hash-join back on the digest key, and a
-    * map-side-combining source rollup — two shuffles total at any
-    * corpus size, never a pairwise join. */
-  def softDedupWeights(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), md5(col("text")).as("th"))
-    val clusters = d.groupBy(col("th")).agg(count(lit(1)).as("n"))
-    d.join(clusters, "th")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("n") > 1, 1L).otherwise(0L)).as("dup_docs"),
-        sum(expr("10000 DIV n")).as("eff_bp"))
-      .orderBy("source")
   }
 }

@@ -57,23 +57,6 @@ object Ingest {
       .withColumnRenamed("split_id", "batch_id")
       .withColumnRenamed("planned_rows", "rows_in_batch")
 
-  /** Incremental-extract plan: the reference re-runs its import on a
-    * schedule; the Spark-native form keeps a high-watermark and pulls
-    * only rows past it. The checkpoint here is derived (midpoint of
-    * the observed event-time range, exact integer arithmetic) so both
-    * engines compute the identical cut; output = what the next
-    * incremental run would ingest plus the new checkpoint. */
-  def incrementalPlan(spark: SparkSession, dir: String): DataFrame = {
-    Tables.events(spark, dir).createOrReplaceTempView("events_inc")
-    spark.sql(
-      """WITH b AS (SELECT MIN(unix_micros(ts)) AS lo, MAX(unix_micros(ts)) AS hi FROM events_inc),
-        |c AS (SELECT (lo + hi) DIV 2 AS ckpt_us FROM b)
-        |SELECT (SELECT ckpt_us FROM c) AS ckpt_us,
-        |  COUNT(*) AS n_new,
-        |  MAX(unix_micros(ts)) AS next_ckpt_us
-        |FROM events_inc WHERE unix_micros(ts) > (SELECT ckpt_us FROM c)""".stripMargin)
-  }
-
   /** Dead-letter routing (DBImportPipeline.java:140-160): validate
     * rows, tag ok/dead with a reason, keep both sides flowing. The
     * whole check is codegen'd expressions — no row-level try/catch. */

@@ -135,23 +135,9 @@ object Multimodal {
     f.delete()
   }
 
-  /** Metadata extraction over the binary column — byte length, base64
-    * head (wire format sample), and decode-stub features: fake
-    * width/height derived deterministically from the content hash
-    * (a real decoder would replace exactly this expression). */
-  def binaryMeta(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .selectExpr("doc_id",
-        "CAST(octet_length(CAST(text AS BINARY)) AS BIGINT) AS n_bytes",
-        "substr(base64(CAST(text AS BINARY)), 1, 16) AS b64_head",
-        s"$FakeWidthSql AS fake_width",
-        s"$FakeHeightSql AS fake_height")
-      .orderBy("doc_id")
-
-  // THE stubbed-decoder dimension rule, defined once (binaryMeta and
-  // resolutionBucket share it; a real decoder replaces exactly these
-  // two expressions with header parsing — SURVEY §5's no-hand-copies
-  // rule). The oracle derives the same dims from md5 independently.
+  // THE stubbed-decoder dimension rule: a real decoder replaces
+  // exactly these two expressions with header parsing. The oracle
+  // derives the same dims from md5 independently.
   private val FakeWidthSql =
     "CAST(128 + ascii(substr(md5(text), 1, 1)) AS BIGINT)"
   private val FakeHeightSql =
@@ -252,25 +238,13 @@ object Multimodal {
       .orderBy("modality")
   }
 
-  /** Frame sampling plan over binary payloads: every 64 bytes emit a
-    * 16-byte frame slice with its index and content hash — the Spark
-    * plumbing (explode over computed offsets, per-frame rows) of a
-    * video frame-sampler, with the codec stubbed to byte slicing. */
-  def frameSample(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .selectExpr("doc_id", "text",
-        "explode(sequence(0, CAST(least(3, (length(text) - 1) DIV 64) AS INT))) AS frame_idx")
-      .selectExpr("doc_id", "CAST(frame_idx AS BIGINT) AS frame_idx",
-        "md5(substr(text, 1 + frame_idx * 64, 16)) AS frame_hash")
-      .orderBy("doc_id", "frame_idx")
-
   /** Scene-cut detection over per-video frame signatures — the
     * segmentation pass a video-curation pipeline runs between decode
     * and frame sampling (sample per SCENE, not per fixed stride, or
     * a static shot floods the batch with near-identical frames):
     * each doc's payload stands in for a decoded frame sequence
-    * (consecutive 32-byte windows → one 8-bit signature each, the
-    * [[frameSample]] convention at finer stride; a real deployment
+    * (consecutive 32-byte windows → one 8-bit signature each, taken
+    * from the md5 of the window's bytes; a real deployment
     * plugs a perceptual frame hash into the same column), a cut fires
     * where adjacent signatures differ in ≥ 5 of 8 bits (Hamming over
     * xor — random-content neighbors average 4, so the threshold
@@ -322,7 +296,7 @@ object Multimodal {
   private val PngMagic = Array(0x89, 0x50, 0x4E, 0x47).map(_.toByte)
   private val RiffMagic = "RIFF".getBytes("UTF-8")
 
-  /** THE synthetic-payload rule, defined once (three operators share
+  /** THE synthetic-payload rule, defined once (two operators share
     * it, and two hand-copies WILL drift — SURVEY §5): magic header
     * chosen by doc_id % 3, prepended to the text bytes in column
     * `bin`. The oracle derives modality from the same % 3 rule, so a
@@ -333,7 +307,7 @@ object Multimodal {
       .otherwise(concat(lit(RiffMagic), col("bin")))
 
   /** Generator-rule modality (the % 3 rule as SQL) — what the payloads
-    * above were GENERATED as, used by the operators that shard/batch by
+    * above were GENERATED as, used by the operators that group by
     * modality without re-sniffing bytes. */
   private val GeneratorModalitySql =
     "CASE WHEN doc_id % 3 = 0 THEN 'image/jpeg' WHEN doc_id % 3 = 1 THEN 'image/png' ELSE 'audio/wav' END AS modality"
@@ -343,83 +317,6 @@ object Multimodal {
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("text").cast("binary").as("bin"))
       .select(col("doc_id"), syntheticPayload.as("payload"))
-
-  /** Container-format routing by magic bytes — the first step of any
-    * mixed-modality ingest (route JPEG payloads to the image decoder
-    * pool, RIFF/WAV to audio, etc.). The payload is synthesized here
-    * (magic header + text bytes, keyed by doc_id), but the SNIFF side
-    * reads only the actual leading bytes of the binary column —
-    * exactly what it would do on real payloads — while the oracle
-    * derives modality from the generator rule, so the two must agree
-    * independently. */
-  def modalityRoute(spark: SparkSession, dir: String): DataFrame = {
-    val sniffed = when(substring(col("payload"), 1, 3) === lit(JpegMagic), "image/jpeg")
-      .when(substring(col("payload"), 1, 4) === lit(PngMagic), "image/png")
-      .when(substring(col("payload"), 1, 4) === lit(RiffMagic), "audio/wav")
-      .otherwise("application/octet-stream")
-    payloadView(spark, dir)
-      .select(col("doc_id"), sniffed.as("modality"),
-        (length(col("payload"))).cast("long").as("n_bytes"))
-      .groupBy(col("modality"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"),
-        sum(col("n_bytes")).as("total_bytes"))
-      .orderBy("modality")
-  }
-
-  /** Decode-batch planning: assign each decode-pool shard's payloads
-    * a batch index from cumulative payload bytes (the GPU-decoder
-    * feeding pattern — batches are sized by device memory, not row
-    * count; compare the reference's row-count DLP batching,
-    * DLPProperties batchSize). The assignment is FIXED-OFFSET
-    * bucketing: batch = start-offset DIV 4096, so a payload straddling
-    * a 4 KiB boundary overflows its batch by up to one payload and a
-    * payload larger than the budget skips indices — the cheap
-    * window-expressible form; exact greedy packing needs a running
-    * reset per batch (sequential within a shard) and buys little when
-    * payloads ≪ budget. Shard key = (modality, doc_id DIV 1000):
-    * batching is per decode-pool shard, so the cumulative window is
-    * bounded at 1000 rows and the plan is embarrassingly parallel —
-    * never a corpus-wide window. */
-  def decodeBatchPlan(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("modality"), col("shard"))
-      .orderBy(col("doc_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    payloadView(spark, dir)
-      .selectExpr("doc_id", GeneratorModalitySql,
-        "CAST(octet_length(payload) AS BIGINT) AS n_bytes",
-        "doc_id DIV 1000 AS shard")
-      .withColumn("cum", sum(col("n_bytes")).over(w))
-      .selectExpr("doc_id", "modality", "shard", "n_bytes",
-        "CAST((cum - n_bytes) DIV 4096 AS BIGINT) AS batch_in_shard")
-      .orderBy("doc_id")
-  }
-
-  /** Decoder-pool balance audit over the same (modality, shard)
-    * layout as [[decodeBatchPlan]]: per-shard payload count and byte
-    * volume plus the shard's imbalance against its modality's mean in
-    * integer basis points (10000 = exactly mean). An imbalanced shard
-    * is a straggling GPU — this is the metric that decides when to
-    * re-shard. Two partial-agg exchanges (per-shard rollup, then a
-    * broadcast-joined per-modality mean) — no window over the corpus. */
-  def shardSkew(spark: SparkSession, dir: String): DataFrame = {
-    val perShard = payloadView(spark, dir)
-      .selectExpr("doc_id", GeneratorModalitySql,
-        "CAST(octet_length(payload) AS BIGINT) AS n_bytes",
-        "doc_id DIV 1000 AS shard")
-      .groupBy("modality", "shard")
-      .agg(count(lit(1)).as("n_payloads"), sum(col("n_bytes")).as("total_bytes"))
-    val mean = perShard.groupBy("modality")
-      .agg(sum(col("total_bytes")).as("mod_bytes"), count(lit(1)).as("n_shards"))
-    perShard.join(broadcast(mean), "modality")
-      .selectExpr("modality", "shard", "n_payloads",
-        "CAST(total_bytes AS BIGINT) AS total_bytes",
-        // all-integer bp vs the modality mean (mean = mod/shards, so
-        // bytes/mean = bytes*shards/mod): exact on any engine
-        "total_bytes * 10000 * n_shards DIV mod_bytes AS load_bp")
-      .orderBy("modality", "shard")
-  }
 
   /** The decode contract [[featureExtractWith]] runs against: one
     * instance per partition, one decode per row. Implementations are
@@ -573,7 +470,7 @@ object Multimodal {
       .selectExpr("doc_id", "n_bytes",
         "CAST(size(array_distinct(bs)) AS BIGINT) AS n_distinct_bytes",
         // most-frequent byte count == longest equal-run in the sorted
-        // array (the text_repetition maxFreq idiom)
+        // array: one pass, no per-element filter
         """aggregate(array_sort(bs),
           |  named_struct('prev', '', 'run', 0L, 'best', 0L),
           |  (a, x) -> named_struct(

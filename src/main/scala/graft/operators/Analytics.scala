@@ -1414,45 +1414,6 @@ object Analytics {
       .orderBy("event_type", "dow")
   }
 
-  /** Order-to-ship latency percentiles per order priority — the SLA
-    * read of fulfilment: exact p50/p90 of datediff(shipdate,
-    * orderdate) in days, rank-selected per priority under the
-    * two-level bucket decomposition (rows rank inside 16-day
-    * value-range buckets partitioned by (priority, bucket); offsets
-    * come from a per-priority cumulative over the bucket list, which
-    * is bounded by the latency DOMAIN, never the row count). One
-    * fact-scale join, one window pass, a 5-row report. */
-  def qShipLatency(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
-      .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderdate"),
-        col("o_orderpriority")), col("l_orderkey") === col("o_orderkey"))
-      .selectExpr("o_orderpriority AS prio", "l_orderkey", "l_linenumber",
-        "CAST(datediff(l_shipdate, o_orderdate) AS BIGINT) AS days")
-      .withColumn("b", expr("days DIV 16"))
-    val wIn = Window.partitionBy(col("prio"), col("b"))
-      .orderBy(col("days"), col("l_orderkey"), col("l_linenumber"))
-    val ranked = d.withColumn("rb", row_number().over(wIn))
-    val wB = Window.partitionBy(col("prio")).orderBy(col("b"))
-    val offs = d.groupBy(col("prio"), col("b"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("off",
-        coalesce(sum(col("cnt")).over(wB.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("cnt")).over(
-        wB.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .drop("cnt")
-    ranked.join(broadcast(offs), Seq("prio", "b"))
-      .withColumn("rn", col("off") + col("rb"))
-      .groupBy(col("prio"))
-      .agg(count(lit(1)).as("n_lines"),
-        min(when(col("rn") === expr("GREATEST((n + 1) DIV 2, 1)"), col("days"))).as("p50_days"),
-        min(when(col("rn") === expr("GREATEST((9 * (n + 1)) DIV 10, 1)"), col("days"))).as("p90_days"),
-        max(col("days")).as("max_days"))
-      .select(col("prio").as("o_orderpriority"), col("n_lines"),
-        col("p50_days"), col("p90_days"), col("max_days"))
-      .orderBy("o_orderpriority")
-  }
-
   /** Growth accounting of the event stream — the weekly
     * new/retained/resurrected/churned decomposition every activity
     * dashboard runs (the "quick ratio" inputs): per user-week of
@@ -2800,10 +2761,11 @@ object Analytics {
     * p5/p95 ranks reports what the typical book looks like, and the
     * raw mean ships alongside so the gap IS the tail's weight): exact
     * rank selection via the two-level bucket-rank decomposition
-    * ([[qShipLatency]]'s machinery — in-bucket row_number windows
-    * partitioned by (priority, $10k value bucket) + broadcast bucket
-    * offsets; NEVER a priority-partitioned table-sized sort window,
-    * the q_ntile lesson), bounds at ranks max(1, 5(n+1) DIV 100) and
+    * (in-bucket row_number windows partitioned by (priority, $10k
+    * value bucket) + broadcast per-priority bucket offsets, so the
+    * global rank = bucket offset + in-bucket rank; NEVER a
+    * priority-partitioned table-sized sort window, the q_ntile
+    * lesson), bounds at ranks max(1, 5(n+1) DIV 100) and
     * min(n, 95(n+1) DIV 100), then one clamped-sum pass over the fact
     * with the 5-row bounds table broadcast. Two fact passes total —
     * the price of exact rank bounds at any SF. */

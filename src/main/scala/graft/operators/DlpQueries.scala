@@ -196,16 +196,15 @@ object DlpQueries {
     * quasi-identifier. Exactness here is the oracle contract; at
     * corpus scale the same shape runs off approx_percentile bounds.
     *
-    * The global rank is derived DISTRIBUTIVELY (the ingest_gap_audit
-    * two-level decomposition, SourceQueries.gapAudit): rows range-
-    * bucket on the value itself (truncating division is monotone, so
-    * buckets are contiguous value intervals), each bucket ranks its
-    * own rows under a PARTITIONED window, and a bucket-count-sized
-    * boundary pass turns per-bucket counts into cumulative offsets —
-    * global rank = bucket offset + within-bucket rank, exact, with no
-    * unpartitioned window ever seeing table-sized input. The one
-    * ORDER-BY-only window left runs over one row per present bucket
-    * (value-domain/width ≈ 70 rows at ANY table size). */
+    * The global rank is derived DISTRIBUTIVELY, by a two-level
+    * decomposition: rows range-bucket on the value itself (truncating
+    * division is monotone, so buckets are contiguous value intervals),
+    * each bucket ranks its own rows under a PARTITIONED window, and a
+    * bucket-count-sized boundary pass turns per-bucket counts into
+    * cumulative offsets — global rank = bucket offset + within-bucket
+    * rank, exact, with no unpartitioned window ever seeing table-sized
+    * input. The one ORDER-BY-only window left runs over one row per
+    * present bucket (value-domain/width ≈ 70 rows at ANY table size). */
   def dlpQuantileBucketing(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val c = Tables.customer(spark, dir).selectExpr("c_custkey",
@@ -368,53 +367,6 @@ object DlpQueries {
         countDistinct(col("bal_bucket")).as("l_diversity"))
       .orderBy("c_mktsegment", "c_nationkey")
 
-  /** t-closeness risk analysis (Li, Li & Venkatasubramanian ICDE
-    * 2007) — the third leg of the disclosure-risk family after
-    * [[dlpKAnonymity]] and [[dlpLDiversity]]: per QI class, the Earth
-    * Mover's Distance between the class's sensitive-attribute
-    * distribution and the global one, for the ORDERED sensitive
-    * attribute (acctbal in 2000-unit buckets) where EMD is the
-    * normalized sum of absolute cumulative share differences. A class
-    * can be k-anonymous and l-diverse yet leak through skew — this is
-    * the metric that catches it.
-    *
-    * Scale shape: distributions are (class × bucket)-sized with the
-    * bucket list a value-domain constant (~7 buckets), densified by a
-    * broadcast cross join so missing buckets carry zero share; the
-    * cumulative runs under a class-partitioned window over ≤ B rows.
-    * Shares in bp; |cum diff| sums are non-negative before the single
-    * normalizing division (Spark DIV ≡ DuckDB // on non-negatives). */
-  def dlpTCloseness(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_mktsegment", "c_nationkey",
-        "CAST(FLOOR(c_acctbal / 2000) AS BIGINT) AS sb")
-    val n = c.agg(count(lit(1)).as("n_total"))
-    val globalDist = c.groupBy(col("sb")).agg(count(lit(1)).as("n_g"))
-      .crossJoin(broadcast(n))
-      .selectExpr("sb", "(n_g * 10000) DIV n_total AS g_bp")
-    val classes = c.groupBy(col("c_mktsegment"), col("c_nationkey"))
-      .agg(count(lit(1)).as("class_size"))
-    val cells = c.groupBy(col("c_mktsegment"), col("c_nationkey"), col("sb"))
-      .agg(count(lit(1)).as("n_cs"))
-    val dense = classes.crossJoin(broadcast(globalDist.select(col("sb"), col("g_bp"))))
-      .join(cells, Seq("c_mktsegment", "c_nationkey", "sb"), "left")
-      .selectExpr("c_mktsegment", "c_nationkey", "class_size", "sb", "g_bp",
-        "(COALESCE(n_cs, 0) * 10000) DIV class_size AS c_bp")
-    val wC = Window.partitionBy(col("c_mktsegment"), col("c_nationkey"))
-      .orderBy(col("sb"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nb = globalDist.agg(count(lit(1)).as("n_buckets"))
-    dense
-      .withColumn("cum", sum(col("c_bp") - col("g_bp")).over(wC))
-      .groupBy(col("c_mktsegment"), col("c_nationkey"), col("class_size"))
-      .agg(sum(abs(col("cum"))).as("s"))
-      .crossJoin(broadcast(nb))
-      .selectExpr("c_mktsegment", "c_nationkey", "class_size",
-        "s DIV GREATEST(n_buckets - 1, 1) AS t_bp")
-      .orderBy("c_mktsegment", "c_nationkey")
-  }
-
   /** Hotword context boosting (DLP CustomInfoType.DetectionRule
     * .HotwordRule): a finding's likelihood is raised when a trigger
     * word appears within a proximity window BEFORE the match — the
@@ -480,24 +432,6 @@ object DlpQueries {
       .select(col("c_custkey"), col("phone"),
         Dlp.fpeDigits("phone", "fpe-key").as("fpe_phone"))
       .orderBy("c_custkey")
-
-  /** K-map risk estimate (DLP KMapEstimationConfig analog): for each
-    * quasi-identifier combination in the released sample, how many
-    * records in the reference POPULATION share it — the
-    * re-identifiability of the release against an external dataset,
-    * which k-anonymity (sample-only) understates. One aggregate over
-    * the population joined to the sample's distinct QI combos. */
-  def dlpKMap(spark: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.customer(spark, dir)
-    val sample = cust.filter(col("c_custkey") % 7 === 0)
-      .groupBy(col("c_mktsegment"), col("c_nationkey"))
-      .agg(count(lit(1)).as("n_sample"))
-    val population = cust
-      .groupBy(col("c_mktsegment"), col("c_nationkey"))
-      .agg(count(lit(1)).as("k_map"))
-    sample.join(population, Seq("c_mktsegment", "c_nationkey"))
-      .orderBy("c_mktsegment", "c_nationkey")
-  }
 
   // ---- §2.A ingest/schema ----
 

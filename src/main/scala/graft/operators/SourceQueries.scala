@@ -231,48 +231,6 @@ object SourceQueries {
   private lazy val bucketedWarehouseDir: String =
     java.nio.file.Files.createTempDirectory("graft-buck").toString
 
-  /** PK-sequence GAP audit — the integrity check a migration runs
-    * after a partitioned extract: row counts alone (the reference's
-    * validation, ServerUtil.getRowCount) can't say WHERE rows went
-    * missing; the gap list can. The naive form is one global-order
-    * window (lag over the whole key space) — a single-partition
-    * bottleneck at scale — so this runs TWO-LEVEL: keys bucket by
-    * `key div 8192` and each bucket finds its internal gaps under a
-    * PARTITIONED window (fully parallel), then per-bucket (min, max)
-    * — sketch-scale, one row per present bucket — feeds one tiny
-    * global window that emits the cross-boundary gaps (including
-    * whole missing buckets). Every gap lies within one bucket or
-    * between two consecutive present buckets, so the union is exactly
-    * the global gap list. The audited extract uses the same
-    * deterministic fault model as the dead-letter path: 512-key
-    * splits whose id ≡ 5 (mod 17) are "dropped", so the audit must
-    * recover exactly those ranges — a 0-gap pass on pristine data
-    * would check nothing. Top 25 largest gaps keeps the report
-    * bounded at any corpus size. */
-  def gapAudit(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = 8192L
-    val keys = Tables.orders(spark, dir)
-      .filter(floor(col("o_orderkey") / 512) % 17 =!= 5)
-      .select(col("o_orderkey").as("k"), (col("o_orderkey") / bucket).cast("long").as("b"))
-    val wIn = Window.partitionBy(col("b")).orderBy(col("k"))
-    val inner = keys
-      .withColumn("prev", lag(col("k"), 1).over(wIn))
-      .filter(col("prev").isNotNull && col("k") - col("prev") > 1)
-      .select((col("prev") + 1).as("gap_start"), (col("k") - 1).as("gap_end"))
-    val wEdge = Window.orderBy(col("b")) // rows = present buckets only
-    val boundary = keys.groupBy(col("b"))
-      .agg(min(col("k")).as("lo"), max(col("k")).as("hi"))
-      .withColumn("prev_hi", lag(col("hi"), 1).over(wEdge))
-      .filter(col("prev_hi").isNotNull && col("lo") - col("prev_hi") > 1)
-      .select((col("prev_hi") + 1).as("gap_start"), (col("lo") - 1).as("gap_end"))
-    inner.unionAll(boundary)
-      .select(col("gap_start"), col("gap_end"),
-        (col("gap_end") - col("gap_start") + 1).as("n_missing"))
-      .orderBy(col("n_missing").desc, col("gap_start"))
-      .limit(25)
-      .orderBy("gap_start")
-  }
-
   /** Incremental aggregate maintenance — the daily-refresh rollup
     * shape: yesterday's STORED per-key aggregate state (count, cents
     * sum, last-event timestamp over the historic slice) is merged
@@ -455,34 +413,6 @@ object SourceQueries {
         "p1 AS v1_price_c", "p2 AS v2_price_c")
       .filter(col("diff_type") =!= "same")
       .orderBy("order_key")
-  }
-
-  /** SCD2 merge (the warehouse MERGE INTO / slowly-changing-dimension
-    * pattern the reference's append-only dispositions lack): apply a
-    * deterministic change set to the customer dimension — changed keys
-    * close their current row (valid_to set, is_current 0) and open a
-    * new one; unchanged keys pass through. One anti-join + one
-    * semi-join + the change set, all on the dimension key: at scale
-    * this is exactly Delta/Iceberg's merge shuffle shape. */
-  def scd2Merge(spark: SparkSession, dir: String): DataFrame = {
-    val cur = Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment"))
-    val changes = cur
-      .filter(col("c_custkey") % 10 === 3 && col("c_mktsegment") =!= "MACHINERY")
-      .select(col("c_custkey"), lit("MACHINERY").as("new_segment"))
-    val unchanged = cur.join(changes, Seq("c_custkey"), "left_anti")
-      .select(col("c_custkey"), col("c_mktsegment"),
-        lit("1995-01-01").as("valid_from"), lit(null.asInstanceOf[String]).as("valid_to"),
-        lit(1L).as("is_current"))
-    val closed = cur.join(changes, Seq("c_custkey"), "left_semi")
-      .select(col("c_custkey"), col("c_mktsegment"),
-        lit("1995-01-01").as("valid_from"), lit("1996-06-01").as("valid_to"),
-        lit(0L).as("is_current"))
-    val opened = changes
-      .select(col("c_custkey"), col("new_segment").as("c_mktsegment"),
-        lit("1996-06-01").as("valid_from"), lit(null.asInstanceOf[String]).as("valid_to"),
-        lit(1L).as("is_current"))
-    unchanged.unionAll(closed).unionAll(opened)
-      .orderBy(col("c_custkey"), col("valid_from"), col("is_current"))
   }
 
   /** JSON round-trip: same contract over the JSON source. */

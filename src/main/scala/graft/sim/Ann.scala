@@ -681,11 +681,11 @@ object Ann {
     * scale is governed by the LARGEST cell a query can land in (a
     * 10×-overweight cell makes every probe into it 10× the scan), so
     * a production deploy tracks per-cell population share against the
-    * uniform ideal and re-clusters when drift exceeds budget — the
-    * same audit shape as [[graft.multimodal.Multimodal.shardSkew]],
-    * applied to the ANN index. One aggregate over the (long, long)
-    * assignment table; the share math rides a window over the 8
-    * result rows (cell-count-sized, never data-sized). */
+    * uniform ideal and re-clusters when drift exceeds budget: each
+    * cell's count against the total, in integer basis points. One
+    * aggregate over the (long, long) assignment table; the share math
+    * rides a window over the 8 result rows (cell-count-sized, never
+    * data-sized). */
   def cellBalance(spark: SparkSession, dir: String): DataFrame =
     cellBalance(spark, dir, k = 8)
 
@@ -1781,39 +1781,5 @@ object Ann {
           | (n_base + n_new) * 10000 DIV tot_after) >= 50
           | THEN 1 ELSE 0 END AS BIGINT) AS retrain""".stripMargin.replace("\n", " "))
       .orderBy("cell")
-  }
-
-  /** EPSILON-BALL range search (the FAISS/Milvus `range_search` verb
-    * — "all neighbors within distance", the retrieval shape dedup
-    * thresholds and near-duplicate audits want, where top-k is the
-    * wrong contract because the true neighbor count varies per
-    * query): every corpus vector with cosine >= 0.2 of each query
-    * (vec_id 8..17) counts as a neighbor. The op runs BOTH paths the
-    * way [[recallEval]] does — the exact ball from one broadcast
-    * scan, and the 8-bit sign-LSH bucketed ball ([[lshTopk]]'s
-    * bucket) that a 100 TB serving index would actually execute
-    * (same-bucket candidates only) — and reports per query the exact
-    * count, the bucketed count, and bucket recall in bp. One corpus
-    * scan total: the per-row bucket comparison rides the same
-    * broadcast join, and the rollup is a map-side-combining
-    * aggregate keyed by 10 queries. At scale only the bucketed side
-    * runs; the exact side is the oracle-checkable recall harness. */
-  def epsilonBall(spark: SparkSession, dir: String): DataFrame = {
-    val bucketExpr = "concat(" + (1 to 8).map(i =>
-      s"CASE WHEN element_at(emb, $i) >= 0 THEN '1' ELSE '0' END").mkString(", ") + ") AS bucket"
-    val e = embDf(spark, dir).selectExpr("vec_id", "emb", bucketExpr)
-    val q = e.filter(col("vec_id") >= 8 && col("vec_id") < 18)
-      .select(col("vec_id").as("query_id"), col("emb").as("qe"),
-        col("bucket").as("qbucket"))
-    e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("qbucket"), col("bucket"),
-        cosineSim(col("qe"), col("emb")).as("c"))
-      .filter(col("c") >= 0.2)
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("exact_n"),
-        sum(when(col("bucket") === col("qbucket"), 1L).otherwise(0L)).as("lsh_n"))
-      .selectExpr("query_id", "exact_n", "lsh_n",
-        "lsh_n * 10000 DIV exact_n AS recall_bp")
-      .orderBy("query_id")
   }
 }

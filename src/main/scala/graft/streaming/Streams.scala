@@ -176,18 +176,6 @@ object Streams {
       .orderBy("user_id", "session_id")
   }
 
-  /** Same sessionization via Spark's built-in session_window — the
-    * engine's native session semantics vs the hand-rolled islands SQL
-    * (the oracle): two independent definitions must agree. */
-  def sessionWindowBatch(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        ntz(col("w.start")).as("session_start"),
-        col("n_events"))
-      .orderBy("user_id", "session_start")
-
   case class Ev(user_id: Long, event_id: Long, us: Long)
   /** `reorder_overflow` = how many beyond-displacement-bound pops the
     * bounded streaming reorder absorbed into this session (always 0

@@ -12,9 +12,6 @@ import graft.{Caches, Tables}
   */
 object TextOps {
 
-  /** BPE-ish token regex: letter runs, digit runs, single symbols. */
-  val BpeRe = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
-
   /** Per-language stopword marker lists for the n-gram/stopword-hit
     * language heuristic. Deterministic argmax with lexicographic
     * tie-break; 'unknown' when nothing hits. */
@@ -23,14 +20,6 @@ object TextOps {
     "de" -> Seq("der", "die", "und", "das", "ist"),
     "es" -> Seq("el", "la", "y", "de", "que"),
     "fr" -> Seq("le", "la", "et", "les", "des"))
-
-  /** Whitespace + BPE-ish token counts per document. */
-  def tokenCount(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).selectExpr(
-        "doc_id",
-        "CAST(size(split(text, ' ')) AS BIGINT) AS ws_tokens",
-        s"CAST(size(regexp_extract_all(text, '$BpeRe', 0)) AS BIGINT) AS bpe_tokens")
-      .orderBy("doc_id")
 
   private def hits(lang: String): String = {
     val list = LangMarkers.toMap.apply(lang).map(w => s"'$w'").mkString(", ")
@@ -76,19 +65,6 @@ object TextOps {
           |AS BIGINT) AS quality_bp""".stripMargin.replace("\n", " "))
       .orderBy("doc_id")
 
-  /** Corpus bigram frequency table (top 100) — the raw statistic
-    * under BPE/tokenizer training and collocation mining. Non-distinct
-    * windows (frequency, not set membership). */
-  def ngramFreq(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .selectExpr("split(text, ' ') AS w")
-      .selectExpr("explode(transform(sequence(1, greatest(size(w) - 1, 1)), " +
-        "i -> concat_ws(' ', try_element_at(w, i), try_element_at(w, i + 1)))) AS gram")
-      .groupBy("gram")
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("gram"))
-      .limit(100)
-
   /** Vocabulary with cumulative corpus coverage in integer basis
     * points — "how many types cover 90% of tokens" is the standard
     * tokenizer sizing question. Exact integer arithmetic throughout.
@@ -121,53 +97,6 @@ object TextOps {
       .withColumn("cum", sum(col("n")).over(wOrd))
       .selectExpr("word", "n", "CAST(cum * 10000 DIV total AS BIGINT) AS cum_bp")
       .orderBy(col("n").desc, col("word"))
-  }
-
-  /** Repetition filters in integer basis points (the Gopher quality
-    * rules — Rae et al., "Scaling Language Models: Methods, Analysis &
-    * Insights from Training Gopher", 2021, §A1.3: duplicate-line and
-    * top-n-gram fractions; word-level here since the corpus is
-    * single-line):
-    *  - dup_word_bp: fraction of tokens that repeat an earlier token;
-    *  - top_word_bp: share of the most frequent token;
-    *  - top_bigram_bp: share of the most frequent bigram.
-    * All per-row higher-order functions — no shuffle, no UDF; a 100 TB
-    * corpus filters in one codegen'd scan.
-    *
-    * The top-count is a ONE-PASS aggregate over the sorted token array
-    * (longest equal-run = max frequency): O(n log n) per document,
-    * where the naive transform×filter form is O(n²) — the difference
-    * between milliseconds and ~10⁹ comparisons on a 50k-token web
-    * document. */
-  def repetition(spark: SparkSession, dir: String): DataFrame = {
-    // longest run of equal adjacent values in the sorted array ==
-    // count of the most frequent element. '' sentinel is safe: a run
-    // always (re)starts at 1 whether or not x equals the sentinel,
-    // because run=0 at that point.
-    def maxFreq(arr: String) =
-      s"""aggregate(array_sort($arr),
-         |  named_struct('prev', '', 'run', 0L, 'best', 0L),
-         |  (a, x) -> named_struct(
-         |    'prev', x,
-         |    'run',  IF(x = a.prev, a.run + 1L, 1L),
-         |    'best', greatest(a.best, IF(x = a.prev, a.run + 1L, 1L))),
-         |  a -> a.best)""".stripMargin.replace("\n", " ")
-    Tables.documents(spark, dir)
-      .selectExpr("doc_id", "split(text, ' ') AS w")
-      .selectExpr("doc_id", "w",
-        // try_element_at: single-word docs index past the end; ANSI
-        // element_at throws, try_element_at yields null and concat_ws
-        // skips it — matching DuckDB's out-of-bounds-is-NULL indexing
-        "transform(sequence(1, greatest(size(w) - 1, 1)), " +
-          "i -> concat_ws(' ', try_element_at(w, i), try_element_at(w, i + 1))) AS bg")
-      .selectExpr("doc_id",
-        "CAST(size(w) AS BIGINT) AS n_words",
-        // BIGINT before the multiply — INT dup_count * 10000 wraps
-        // negative past ~215k duplicate tokens
-        "(CAST(size(w) AS BIGINT) - CAST(size(array_distinct(w)) AS BIGINT)) * 10000 DIV size(w) AS dup_word_bp",
-        s"CAST(${maxFreq("w")} * 10000 DIV size(w) AS BIGINT) AS top_word_bp",
-        s"CAST(${maxFreq("bg")} * 10000 DIV size(bg) AS BIGINT) AS top_bigram_bp")
-      .orderBy("doc_id")
   }
 
   /** Composite quality GATE — the filter pipeline a pretraining corpus
@@ -295,17 +224,6 @@ object TextOps {
       .agg(count(lit(1)).as("n"), min(col("doc_id")).as("min_doc"),
         max(col("doc_id")).as("max_doc"))
       .orderBy("source", "split")
-
-  /** Canonical text normalization: lowercase, strip non-alphanumerics,
-    * collapse whitespace runs, trim — the first stage of every
-    * dedup/quality pipeline (normalize before hashing). */
-  def normalize(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .selectExpr("doc_id", "text",
-        "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ''), ' +', ' ')) AS normalized")
-      .selectExpr("doc_id", "normalized",
-        "CAST(CASE WHEN normalized = text THEN 0 ELSE 1 END AS BIGINT) AS changed")
-      .orderBy("doc_id")
 
   /** Sliding token-window chunking — the unit-of-work transform every
     * LLM data pipeline runs before tokenization (context-length-sized
@@ -1206,7 +1124,7 @@ object TextOps {
   }
 
   /** Intra-document duplicate-bigram profile per source — the Gopher
-    * repetition rule at the n-gram grain ([[repetition]] catches a
+    * repetition rule at the n-gram grain (a line-level rule catches a
     * doc repeating one LINE; this catches the subtler loop where a
     * generator cycles short phrases, which shows as bigram mass
     * concentrating long before any full line repeats): per doc, all
@@ -1281,28 +1199,4 @@ object TextOps {
         col("new_words"), col("cum_vocab"))
       .orderBy("bucket")
   }
-
-  /** Tokenizer FERTILITY by language — the report read when choosing
-    * or auditing a tokenizer for a multilingual corpus (fertility =
-    * subword tokens per whitespace word; bytes per token is the
-    * compression the context window actually feels; a language whose
-    * fertility is 2x another's pays 2x the sequence length for the
-    * same text, the classic under-trained-tokenizer tax). Tokens are
-    * the [[BpeRe]] regex class count (the same proto-BPE segmentation
-    * [[tokenCount]] uses), ratios integer bp. One map-only scan into
-    * a language-keyed map-side-combining aggregate — no shuffle wider
-    * than the language count at any corpus size. */
-  def tokenizerFertility(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .selectExpr("lang",
-        "CAST(size(split(text, ' ')) AS BIGINT) AS ws",
-        s"CAST(size(regexp_extract_all(text, '$BpeRe', 0)) AS BIGINT) AS tok",
-        "CAST(octet_length(text) AS BIGINT) AS nb")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum("ws").as("words"),
-        sum("tok").as("tokens"), sum("nb").as("bytes"))
-      .selectExpr("lang", "n_docs", "words", "tokens", "bytes",
-        "tokens * 10000 DIV words AS fertility_bp",
-        "bytes * 10000 DIV tokens AS bytes_per_token_bp")
-      .orderBy("lang")
 }

@@ -37,13 +37,12 @@ class AnalyticsSpec extends AnyFunSuite {
     }
     // Silent-empty net: a refactor that turns a result empty would
     // still hash-match an empty oracle — every query must return rows
-    // at sf0.001 except the documented exceptions: ingest_gap_audit's
-    // injected fault lies beyond the tiny keyspace, and
-    // q_spearman_rho's 2-suppliers-per-nation floor drops every
-    // nation at sf0.001's 10-supplier toy scale (Widening12kSpec pins
-    // BOTH the sf0.001 emptiness and the sf0.01 population, so a
-    // refactor that empties it at real scale still fails loudly)
-    val mayBeEmptyAtTinySf = Set("ingest_gap_audit", "q_spearman_rho")
+    // at sf0.001 except the one documented exception: q_spearman_rho's
+    // 2-suppliers-per-nation floor drops every nation at sf0.001's
+    // 10-supplier toy scale (Widening12kSpec pins BOTH the sf0.001
+    // emptiness and the sf0.01 population, so a refactor that empties
+    // it at real scale still fails loudly)
+    val mayBeEmptyAtTinySf = Set("q_spearman_rho")
     val empties = SparkEntry.queries.flatMap { case (name, fn) =>
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty, s"$name has no columns")

@@ -792,7 +792,6 @@ class PlanSpec extends AnyFunSuite {
     "dedup_component_stats" -> "window input = component-SIZE histogram rows (distinct sizes)",
     "dlp_quantile_bucketing" -> "window input = one row per present value bucket (domain DIV 16384 ~ 70 rows at any table size)",
     "embed_pair_hist" -> "window input = 10 histogram bucket rows (64-vector deterministic sample)",
-    "ingest_gap_audit" -> "window input = one row per present 8192-key bucket (two-level gap decomposition)",
     "layout_compaction_plan" -> "window input = file inventory rows (one per planned file), not data rows",
     "pipeline_mix_weights" -> "window input = one row per corpus source (~20)",
     "q_funnel_conversion" -> "window input = funnel survivor counts per stage (3 rows)",

@@ -176,11 +176,11 @@ class ScaleSpec extends AnyFunSuite {
       // any parallelism
       "text_chunking", "text_tfidf", "embed_quantize_int8",
       "dedup_semantic_cluster", "embed_kmeans_train", "stream_late_audit",
-      // round 8: gap spans, paragraph hashes, z-buckets, PPS sample,
-      // deid batch fingerprints — and the continuation's LM scores,
-      // bucket checksums, CDC merge, JL projection, anomaly flags,
-      // fuzzy pairs: all bit-stable at any parallelism
-      "ingest_gap_audit", "dedup_paragraph", "layout_zorder",
+      // round 8: paragraph hashes, z-buckets, PPS sample, deid batch
+      // fingerprints — and the continuation's LM scores, bucket
+      // checksums, CDC merge, JL projection, anomaly flags, fuzzy
+      // pairs: all bit-stable at any parallelism
+      "dedup_paragraph", "layout_zorder",
       "sample_weighted", "stream_deid_pipeline", "text_lm_score",
       "ingest_checksum_reconcile", "load_cdc_apply",
       "embed_random_projection", "stream_rate_anomaly", "dedup_fuzzy_link",
@@ -217,13 +217,9 @@ class ScaleSpec extends AnyFunSuite {
     }
     val a = runAll(3)
     val b = runAll(13)
-    // gap_audit's fault model drops bucket 5 (keys 2560-3071), beyond
-    // the sf0.001 keyspace — legitimately empty here, non-empty at the
-    // driver's sf0.01 gate; invariance (a == b) still applies
-    val mayBeEmptyAtTinySf = Set("ingest_gap_audit")
     keys.foreach { k =>
       assert(a(k) == b(k), s"$k differs across partition counts")
-      assert(a(k).nonEmpty || mayBeEmptyAtTinySf(k), s"$k returned nothing")
+      assert(a(k).nonEmpty, s"$k returned nothing")
     }
   }
 
