@@ -89,8 +89,6 @@ object SparkEntry {
     "stream_window_agg" -> Streams.windowAggBatch _,
     "stream_sessionize" -> Streams.sessionizeBatch _,
     "stream_dedup" -> Streams.dedupBatch _,
-    "stream_funnel" -> Streams.funnel _,
-    "stream_retention" -> Streams.retention _,
     "stream_event_join" -> Streams.eventJoinBatch _,
     "stream_latest_state" -> Streams.latestState _,
     "stream_windowed_topk" -> Streams.windowedTopkBatch _,
@@ -99,7 +97,6 @@ object SparkEntry {
     "source_bucketed_join" -> SourceQueries.bucketedJoin _,
     "load_agg_upsert" -> SourceQueries.aggUpsert _,
     "sample_weighted" -> TextOps.sampleWeighted _,
-    "dedup_paragraph" -> Dedup.paragraphDedup _,
     "dedup_substring" -> Dedup.substringDedup _,
     "stream_deid_pipeline" -> Streams.deidPipelineBatch _,
     "ann_cell_balance" -> Ann.cellBalance _,
@@ -1450,24 +1447,6 @@ object SparkEntry {
         |SELECT user_id, event_id AS last_event_id, event_type AS last_type,
         |  value_cents AS last_value, us AS last_us
         |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "stream_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |s AS (SELECT user_id,
-        |  min(CASE WHEN event_type = 'signup' THEN us END) AS t_signup,
-        |  min(CASE WHEN event_type = 'click' THEN us END) AS t_click,
-        |  min(CASE WHEN event_type = 'purchase' THEN us END) AS t_purchase
-        |  FROM e GROUP BY user_id)
-        |SELECT COUNT(CASE WHEN t_signup IS NOT NULL THEN 1 END) AS n_signup,
-        |  COUNT(CASE WHEN t_signup IS NOT NULL AND t_click > t_signup THEN 1 END) AS n_click_after,
-        |  COUNT(CASE WHEN t_signup IS NOT NULL AND t_click > t_signup AND t_purchase > t_click THEN 1 END) AS n_purchase_after
-        |FROM s""".stripMargin,
-    "stream_retention" ->
-      """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day FROM events),
-        |f AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY user_id),
-        |a AS (SELECT DISTINCT e.user_id, 1 AS retained FROM e JOIN f USING (user_id)
-        |      WHERE day >= cohort_day + 7 AND day < cohort_day + 14)
-        |SELECT cohort_day, COUNT(*) AS n_users, COUNT(retained) AS n_retained
-        |FROM f LEFT JOIN a USING (user_id) GROUP BY cohort_day ORDER BY cohort_day""".stripMargin,
     // mm_feature_extract: the mapPartitions decode produces
     // md5/byte-derived features the oracle recomputes in SQL.
     "mm_feature_extract" ->
@@ -1739,17 +1718,6 @@ object SparkEntry {
          |  md5(array_to_string(list_sort(list(tok)), ',')) AS payload_md5
          |FROM deid GROUP BY 1 ORDER BY 1""".stripMargin
     },
-    // round 8: DuckDB list slice ws[a:b] is 1-based inclusive =
-    // Spark slice(ws, a, 8); range(0,16) covers the ≤100-word docs
-    "dedup_paragraph" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |seg AS (SELECT doc_id, md5(array_to_string(ws[i*8+1 : i*8+8], ' ')) AS h
-        |  FROM w, (SELECT unnest(range(0, 16)) AS i) g
-        |  WHERE len(ws) >= (i+1)*8)
-        |SELECT h, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  COUNT(*) AS n_occ, MIN(doc_id) AS min_doc
-        |FROM seg GROUP BY h HAVING COUNT(DISTINCT doc_id) > 1
-        |ORDER BY h""".stripMargin,
     // round 10: character-granularity exact-substring dedup — 64-char
     // windows anchored where md5 of the 8-gram ends in '0' (winnowing-
     // style content-defined anchors, alignment-invariant); window texts

@@ -545,39 +545,6 @@ object Dedup {
       .select(col("doc_id"), col("comp"), col("n_members"))
   }
 
-  /** SEGMENT-level exact dedup (the paragraph-dedup of C4 / the
-    * aligned-granularity proxy of exact-substring dedup, Lee et al.
-    * 2022, "Deduplicating Training Data Makes Language Models
-    * Better"): each document splits into consecutive 8-word segments,
-    * each segment hashes once, and a hash-groupBy reports every
-    * segment text shared by MORE THAN ONE document — the boilerplate
-    * spans document-level near-dup never catches (two mostly-distinct
-    * docs sharing one licensed paragraph). Map-side explode (one pass,
-    * ~len/8 rows per doc) into a partial-aggregated count — the same
-    * linear shape as dedup_exact, just at sub-document granularity;
-    * no pairwise work at any scale. */
-  def paragraphDedup(spark: SparkSession, dir: String): DataFrame =
-    // deliberately NOT spread (r17, measured): steady 0.66 s unspread
-    // vs 0.72 s spread — segments cap at 16/doc, too little CPU above
-    // the scan to pay back the exchange
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 8)
-      .select(col("doc_id"), col("ws"),
-        // cap at 16 segments (128 words) to pin the same bound the
-        // oracle's range(0,16) uses — without the clamp a longer doc
-        // would emit segments the oracle never sees
-        explode(sequence(lit(0),
-          least((size(col("ws")) / 8).cast("int") - 1, lit(15)))).as("i"))
-      .select(col("doc_id"),
-        md5(concat_ws(" ", slice(col("ws"), col("i") * 8 + 1, lit(8)))).as("h"))
-      .groupBy(col("h"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("n_occ"),
-        min(col("doc_id")).as("min_doc"))
-      .filter(col("n_docs") > 1)
-      .orderBy("h")
-
   /** Exact-substring dedup at CHARACTER granularity — the suffix-
     * array-free approximation of Lee et al. 2022 §4.1 ("Deduplicating
     * Training Data Makes Language Models Better", ExactSubstr), built
@@ -588,8 +555,9 @@ object Dedup {
     * LOCAL CONTENT, so two copies of a shared block at ANY alignment
     * produce the same in-block anchors and therefore identical window
     * texts — the alignment invariance a fixed stride grid cannot give
-    * (a grid only matches shifts ≡ 0 mod stride), and what
-    * [[paragraphDedup]]'s aligned 8-word segments structurally miss.
+    * (a grid only matches shifts ≡ 0 mod stride), and what aligned
+    * 8-word segment hashing (C4-style paragraph dedup) structurally
+    * misses.
     * A window text appearing in MORE THAN ONE document marks its
     * anchors duplicated; per document, overlapping/adjacent duplicated
     * windows merge into maximal SPANS (start, chars, window count).

@@ -59,8 +59,8 @@ object Ingest {
 
   /** Dead-letter routing (DBImportPipeline.java:140-160): validate
     * rows, tag ok/dead with a reason, keep both sides flowing. The
-    * whole check is codegen'd expressions — no row-level try/catch. */
-  /** Row validation + routing columns, no ordering — usable on both
+    * whole check is codegen'd expressions — no row-level try/catch.
+    * Adds the routing columns without ordering, so it works on both
     * batch tables and streaming micro-batches. */
   def deadLetterRoute(events: DataFrame): DataFrame = {
     val k = regexp_extract(col("props"), "\"k\": ([0-9]+)", 1)
@@ -76,6 +76,7 @@ object Ingest {
           .otherwise("").as("reason"))
   }
 
+  /** [[deadLetterRoute]] over a batch table, ordered by event_id. */
   def deadLetterSplit(events: DataFrame): DataFrame =
     deadLetterRoute(events).orderBy("event_id")
 }

@@ -91,9 +91,12 @@ object Migration {
 
   /** Queries-facing form: run the import into a fresh temp dir and
     * return the manifest (the driver checks it against per-table
-    * count/validation oracles). */
+    * count/validation oracles). The manifest is driver-side rows, so
+    * the imported copy is deleted once it is built. */
   def manifest(spark: SparkSession, dir: String): DataFrame = {
     val out = java.nio.file.Files.createTempDirectory("graft-import").toString
-    runImport(spark, dir, DlpConfig.ExampleConfig, out)
+    val rows = runImport(spark, dir, DlpConfig.ExampleConfig, out)
+    graft.operators.SourceQueries.deleteRecursively(new java.io.File(out))
+    rows
   }
 }

@@ -984,8 +984,8 @@ object Analytics {
   }
 
   /** Cohort retention matrix — the full product-analytics triangle
-    * [[graft.streaming.Streams.retention]]'s single week-1 read is a
-    * slice of: users cohorted by first-seen week, each later week's
+    * that a single day-7..14 retention read is one slice of: users
+    * cohorted by first-seen week, each later week's
     * active share of the cohort in bp. Shape: (user, week) collapses
     * to distinct pairs map-side, one join against the user-count-
     * sized first-seen table, then everything is cohort×offset-sized.

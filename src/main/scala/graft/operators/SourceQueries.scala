@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.etl.{LoadRetry, Reid}
-import graft.sources.{Jdbc, Sources}
+import graft.sources.{Jdbc, KvSource, Sources}
 
 /** Pipeline-surface queries added in round 4: the live JDBC extract
   * path (embedded Derby — the reference's actual ingest loop run for
@@ -331,6 +331,8 @@ object SourceQueries {
         val n = spark.read.parquet(s"$out/imported/$name").count()
         (name, n, pk.toLowerCase, 4L, if (deid) 1L else 0L)
       }}}), 10.minutes)
+    // the manifest is driver-side rows: the imported copy can go
+    deleteRecursively(new java.io.File(out))
     rows.toDF("table_name", "n_rows", "pk_col", "n_splits", "deid_applied")
       .orderBy("table_name")
   }
@@ -999,20 +1001,15 @@ object SourceQueries {
     * file, an uncommitted temp leaking into the read, or a manifest
     * torn mid-write all fail the hash. Fresh sink dir per run (the
     * write is the thing under test — nothing to memoize). */
-  def dsv2WriteRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-kvsink").toString
-    Tables.orders(spark, dir)
-      .selectExpr("o_orderkey AS key", "o_orderstatus AS val")
-      .write.format(classOf[graft.sources.KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    materializeAndClean(
-      spark.read.format(classOf[graft.sources.KvSource].getName)
-        .option("path", out).load()
+  def dsv2WriteRoundtrip(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kvsink") { case Seq(out) =>
+      KvSource.append(Tables.orders(spark, dir)
+        .selectExpr("o_orderkey AS key", "o_orderstatus AS val"), out)
+      KvSource.read(spark, out)
         .groupBy(col("val"))
         .agg(count(lit(1)).as("n"), sum(col("key")).as("key_sum"))
-        .orderBy("val"),
-      out)
-  }
+        .orderBy("val")
+    }
 
   /** Time-travel read over the [[graft.sources.KvSource]] version
     * chain — the consumer-side payoff of the r13 version-chained
@@ -1028,29 +1025,19 @@ object SourceQueries {
     * source-of-truth table (v1 = the even-custkey half, latest =
     * all), so a version chain that leaks the second job's files into
     * v1, or drops the first job's from v2, fails the hash. */
-  def timeTravelRead(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-tt").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    def append(df: DataFrame): Unit =
-      df.write.format(classOf[graft.sources.KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    append(c.filter(col("key") % 2 === 0)) // → _manifest.v1
-    append(c.filter(col("key") % 2 === 1)) // → _manifest.v2
-    def snapshot(asOf: Option[Long], label: Long): DataFrame = {
-      val r = spark.read.format(classOf[graft.sources.KvSource].getName)
-        .option("path", out)
-      asOf.foreach(v => r.option("versionAsOf", v.toString))
-      r.load().groupBy(col("val"))
-        .agg(count(lit(1)).as("n"), sum(col("key")).as("key_sum"))
-        .withColumn("version", lit(label))
-    }
-    materializeAndClean(
+  def timeTravelRead(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-tt") { case Seq(out) =>
+      val c = customerKv(spark, dir)
+      KvSource.append(c.filter(col("key") % 2 === 0), out) // → _manifest.v1
+      KvSource.append(c.filter(col("key") % 2 === 1), out) // → _manifest.v2
+      def snapshot(asOf: Option[Long], label: Long): DataFrame =
+        KvSource.read(spark, out, asOf).groupBy(col("val"))
+          .agg(count(lit(1)).as("n"), sum(col("key")).as("key_sum"))
+          .withColumn("version", lit(label))
       snapshot(Some(1L), 1L).unionAll(snapshot(None, 2L))
         .select(col("version"), col("val"), col("n"), col("key_sum"))
-        .orderBy("version", "val"),
-      out)
-  }
+        .orderBy("version", "val")
+    }
 
   /** Sample-based statistics accuracy audit — the meta-question every
     * ANALYZE-on-a-sample deployment owes an answer to (at 100 TB
@@ -1180,37 +1167,20 @@ object SourceQueries {
     * The ledger pins the protocol: files before/after, the atomic
     * version, and row conservation recomputed from the
     * source-of-truth table on both sides. */
-  def optimizeCompactOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-optimize").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    (0L until 6L).foreach { i =>
-      c.filter(col("key") % 6 === i).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def optimizeCompactOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-optimize") { case Seq(out) =>
+      appendModSlices(spark, dir, out, 6)
+      val before = Seq(
+        ("01_before", "files", KvSource.committedFiles(out).size.toLong),
+        ("01_before", "rows_readable", KvSource.read(spark, out).count()))
+      val (removed, version) = KvSource.optimizeCompact(spark, out)
+      ledger(spark, before ++ Seq(
+        ("02_optimize", "files_removed", removed),
+        ("02_optimize", "version_published", version),
+        ("03_after", "files", KvSource.committedFiles(out).size.toLong),
+        ("03_after", "rows_readable", KvSource.read(spark, out).count()),
+        ("03_after", "rows_at_pre_compaction_v6", KvSource.read(spark, out, Some(6L)).count())))
     }
-    def readCount(asOf: Option[Long]): Long = {
-      val r = spark.read.format(classOf[KvSource].getName).option("path", out)
-      asOf.foreach(v => r.option("versionAsOf", v.toString))
-      r.load().count()
-    }
-    val before = Seq(
-      ("01_before", "files", KvSource.committedFiles(out).size.toLong),
-      ("01_before", "rows_readable", readCount(None)))
-    val (removed, version) = KvSource.optimizeCompact(spark, out)
-    val after = Seq(
-      ("02_optimize", "files_removed", removed),
-      ("02_optimize", "version_published", version),
-      ("03_after", "files", KvSource.committedFiles(out).size.toLong),
-      ("03_after", "rows_readable", readCount(None)),
-      ("03_after", "rows_at_pre_compaction_v6", readCount(Some(6L))))
-    import spark.implicits._
-    materializeAndClean(
-      (before ++ after).toDF("stage", "metric", "value")
-        .orderBy("stage", "metric"),
-      out)
-  }
 
   /** RESTORE on the commit log (the Delta rollback verb — the last
     * lakehouse verb after OPTIMIZE/vacuum/checkpointing): three
@@ -1227,36 +1197,20 @@ object SourceQueries {
     * recomputes both row sets from the source-of-truth table: a
     * restore that leaks a post-v1 file into the rolled-back state, or
     * breaks the forward snapshot, fails the hash. */
-  def restoreOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-restore").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    (0L until 3L).foreach { i =>
-      c.filter(col("key") % 3 === i)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def restoreOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-restore") { case Seq(out) =>
+      val c = customerKv(spark, dir)
+      (0L until 3L).foreach(i => KvSource.append(c.filter(col("key") % 3 === i), out))
+      val before = Seq(
+        ("01_before", "rows_at_v1", KvSource.read(spark, out, Some(1L)).count()),
+        ("01_before", "rows_latest", KvSource.read(spark, out).count()))
+      val v = KvSource.restore(out, 1L)
+      ledger(spark, before ++ Seq(
+        ("02_restore", "version_published", v),
+        ("03_after", "rows_latest", KvSource.read(spark, out).count()),
+        ("03_after", "rows_at_v3_forward", KvSource.read(spark, out, Some(3L)).count()),
+        ("03_after", "versions", KvSource.versions(out).size.toLong)))
     }
-    def readCount(asOf: Option[Long]): Long = {
-      val r = spark.read.format(classOf[KvSource].getName).option("path", out)
-      asOf.foreach(v => r.option("versionAsOf", v.toString))
-      r.load().count()
-    }
-    val before = Seq(
-      ("01_before", "rows_at_v1", readCount(Some(1L))),
-      ("01_before", "rows_latest", readCount(None)))
-    val v = KvSource.restore(out, 1L)
-    val after = Seq(
-      ("02_restore", "version_published", v),
-      ("03_after", "rows_latest", readCount(None)),
-      ("03_after", "rows_at_v3_forward", readCount(Some(3L))),
-      ("03_after", "versions", KvSource.versions(out).size.toLong))
-    import spark.implicits._
-    materializeAndClean(
-      (before ++ after).toDF("stage", "metric", "value")
-        .orderBy("stage", "metric"),
-      out)
-  }
 
   /** DELETE on the REAL read path — merge-on-read through the commit
     * log (wiring [[deletionVectors]]'s modeled anti-join into
@@ -1272,41 +1226,27 @@ object SourceQueries {
     * file from the state. The oracle recomputes every count from the
     * delete rule — a scan that leaks a deleted row, over-masks a live
     * one, or loses rows in the DV-folding rewrite fails the hash. */
-  def deleteVerbOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-delete").toString
-    Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    def readCount(asOf: Option[Long]): Long = {
-      val r = spark.read.format(classOf[KvSource].getName).option("path", out)
-      asOf.foreach(v => r.option("versionAsOf", v.toString))
-      r.load().count()
+  def deleteVerbOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-delete") { case Seq(out) =>
+      KvSource.append(customerKv(spark, dir), out)
+      val before = Seq(("01_before", "rows_readable", KvSource.read(spark, out).count()))
+      val (nDel, vDel) = KvSource.deleteWhere(spark, out, "key % 7 = 0")
+      val afterDelete = Seq(
+        ("02_delete", "keys_deleted", nDel),
+        ("02_delete", "version_published", vDel),
+        ("03_after_delete", "rows_readable", KvSource.read(spark, out).count()),
+        ("03_after_delete", "rows_at_v1", KvSource.read(spark, out, Some(1L)).count()),
+        ("03_after_delete", "dv_files",
+          KvSource.committedState(out).dvFiles.size.toLong))
+      val (_, vOpt) = KvSource.optimizeCompact(spark, out)
+      ledger(spark, before ++ afterDelete ++ Seq(
+        ("04_optimize", "version_published", vOpt),
+        ("04_optimize", "rows_readable", KvSource.read(spark, out).count()),
+        ("04_optimize", "files",
+          KvSource.committedFiles(out).size.toLong),
+        ("04_optimize", "dv_files",
+          KvSource.committedState(out).dvFiles.size.toLong)))
     }
-    val before = Seq(("01_before", "rows_readable", readCount(None)))
-    val (nDel, vDel) = KvSource.deleteWhere(spark, out, "key % 7 = 0")
-    val afterDelete = Seq(
-      ("02_delete", "keys_deleted", nDel),
-      ("02_delete", "version_published", vDel),
-      ("03_after_delete", "rows_readable", readCount(None)),
-      ("03_after_delete", "rows_at_v1", readCount(Some(1L))),
-      ("03_after_delete", "dv_files",
-        KvSource.committedState(out).dvFiles.size.toLong))
-    val (_, vOpt) = KvSource.optimizeCompact(spark, out)
-    val afterOptimize = Seq(
-      ("04_optimize", "version_published", vOpt),
-      ("04_optimize", "rows_readable", readCount(None)),
-      ("04_optimize", "files",
-        KvSource.committedFiles(out).size.toLong),
-      ("04_optimize", "dv_files",
-        KvSource.committedState(out).dvFiles.size.toLong))
-    import spark.implicits._
-    materializeAndClean(
-      (before ++ afterDelete ++ afterOptimize).toDF("stage", "metric", "value")
-        .orderBy("stage", "metric"),
-      out)
-  }
 
   /** CHANGE DATA FEED over the commit log (the Delta `table_changes`
     * verb — the audit/downstream-sync primitive that lets a consumer
@@ -1325,25 +1265,18 @@ object SourceQueries {
     * change_type) is oracle-pinned from the source-of-truth rules —
     * a feed that leaks a rewrite's shuffled rows, misses a delete,
     * or double-counts a checkpoint re-list fails the hash. */
-  def changeFeedOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-cdf").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    def append(df: DataFrame): Unit =
-      df.write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    append(c.filter(col("key") % 2 === 0)) // v1
-    append(c.filter(col("key") % 2 === 1)) // v2
-    KvSource.deleteWhere(spark, out, "key % 5 = 0") // v3
-    KvSource.optimizeCompact(spark, out)            // v4: no logical change
-    materializeAndClean(
+  def changeFeedOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-cdf") { case Seq(out) =>
+      val c = customerKv(spark, dir)
+      KvSource.append(c.filter(col("key") % 2 === 0), out) // v1
+      KvSource.append(c.filter(col("key") % 2 === 1), out) // v2
+      KvSource.deleteWhere(spark, out, "key % 5 = 0")     // v3
+      KvSource.optimizeCompact(spark, out)                // v4: no logical change
       KvSource.changeFeed(spark, out, 0L, 4L)
         .groupBy(col("commit_version"), col("change_type"))
         .agg(count(lit(1)).as("n"), sum(col("key")).as("key_sum"))
-        .orderBy("commit_version", "change_type"),
-      out)
-  }
+        .orderBy("commit_version", "change_type")
+    }
 
   /** MERGE (upsert) on the commit log — the last classic lakehouse
     * verb after append / DELETE / OPTIMIZE / vacuum / RESTORE / time
@@ -1359,44 +1292,42 @@ object SourceQueries {
     * the oracle from the update rules, so a merge that duplicates an
     * updated key, drops a survivor, or mis-declares its sidecars
     * fails the hash. */
-  def mergeVerbOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-merge").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    c.write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    val updates = Tables.customer(spark, dir)
+  def mergeVerbOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-merge") { case Seq(out) =>
+      KvSource.append(customerKv(spark, dir), out)
+      val (matched, inserted, v) =
+        KvSource.mergeUpsert(spark, out, customerUpdates(spark, dir))
+      val cdf = KvSource.changeFeed(spark, out, 1L, v)
+      ledger(spark, Seq(
+        ("01_before", "rows_readable", KvSource.read(spark, out, Some(1L)).count()),
+        ("02_merge", "matched", matched),
+        ("02_merge", "inserted", inserted),
+        ("02_merge", "version_published", v),
+        ("03_after", "rows_readable", KvSource.read(spark, out).count()),
+        ("03_after", "rows_updated_val",
+          KvSource.read(spark, out).filter(col("val") === "UPDATED").count()),
+        ("03_after", "rows_at_v1", KvSource.read(spark, out, Some(1L)).count()),
+        ("04_cdf", "deletes",
+          cdf.filter(col("change_type") === "delete").count()),
+        ("04_cdf", "inserts",
+          cdf.filter(col("change_type") === "insert").count())))
+    }
+
+  /** The customer table as commit-log rows: (c_custkey, c_mktsegment)
+    * as (key, val). */
+  private[graft] def customerKv(spark: SparkSession, dir: String): DataFrame =
+    Tables.customer(spark, dir).selectExpr("c_custkey AS key", "c_mktsegment AS val")
+
+  /** The MERGE updates table the merge ops share: every key%3
+    * customer re-valued 'UPDATED', every key%11 customer re-keyed
+    * +10M as a NEW row. */
+  private[graft] def customerUpdates(spark: SparkSession, dir: String): DataFrame =
+    Tables.customer(spark, dir)
       .filter(col("c_custkey") % 3 === 0)
       .selectExpr("c_custkey AS key", "'UPDATED' AS val")
       .unionByName(Tables.customer(spark, dir)
         .filter(col("c_custkey") % 11 === 0)
         .selectExpr("c_custkey + 10000000 AS key", "'NEWROW' AS val"))
-    val (matched, inserted, v) = KvSource.mergeUpsert(spark, out, updates)
-    def readAt(asOf: Option[Long]) = {
-      val r = spark.read.format(classOf[KvSource].getName).option("path", out)
-      asOf.foreach(x => r.option("versionAsOf", x.toString))
-      r.load()
-    }
-    val cdf = KvSource.changeFeed(spark, out, 1L, v)
-    val rows = Seq(
-      ("01_before", "rows_readable", readAt(Some(1L)).count()),
-      ("02_merge", "matched", matched),
-      ("02_merge", "inserted", inserted),
-      ("02_merge", "version_published", v),
-      ("03_after", "rows_readable", readAt(None).count()),
-      ("03_after", "rows_updated_val",
-        readAt(None).filter(col("val") === "UPDATED").count()),
-      ("03_after", "rows_at_v1", readAt(Some(1L)).count()),
-      ("04_cdf", "deletes",
-        cdf.filter(col("change_type") === "delete").count()),
-      ("04_cdf", "inserts",
-        cdf.filter(col("change_type") === "insert").count()))
-    import spark.implicits._
-    materializeAndClean(
-      rows.toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
 
   /** MERGE-ON-READ on the commit log — the write-cheap upsert that
     * VERSION-SCOPED deletion vectors unlock (and the payoff of the
@@ -1412,56 +1343,37 @@ object SourceQueries {
     * away. At 100 TB this is O(updates) write cost at any table size;
     * the COW merge makes the opposite trade (clean files, heavy
     * write) — an engine needs both. */
-  def mergeMorOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-mor").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    c.write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    val filesBefore = KvSource.committedFiles(out).toSet
-    val updates = Tables.customer(spark, dir)
-      .filter(col("c_custkey") % 3 === 0)
-      .selectExpr("c_custkey AS key", "'UPDATED' AS val")
-      .unionByName(Tables.customer(spark, dir)
-        .filter(col("c_custkey") % 11 === 0)
-        .selectExpr("c_custkey + 10000000 AS key", "'NEWROW' AS val"))
-    val (matched, inserted, v) = KvSource.mergeOnRead(spark, out, updates)
-    val filesAfter = KvSource.committedFiles(out).toSet
-    def readAt(asOf: Option[Long]) = {
-      val r = spark.read.format(classOf[KvSource].getName).option("path", out)
-      asOf.foreach(x => r.option("versionAsOf", x.toString))
-      r.load()
+  def mergeMorOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-mor") { case Seq(out) =>
+      KvSource.append(customerKv(spark, dir), out)
+      val filesBefore = KvSource.committedFiles(out).toSet
+      val (matched, inserted, v) =
+        KvSource.mergeOnRead(spark, out, customerUpdates(spark, dir))
+      val filesAfter = KvSource.committedFiles(out).toSet
+      val cdf = KvSource.changeFeed(spark, out, 1L, v)
+      val preOpt = Seq(
+        ("01_before", "rows_readable", KvSource.read(spark, out, Some(1L)).count()),
+        ("02_merge", "matched", matched),
+        ("02_merge", "inserted", inserted),
+        ("02_merge", "version_published", v),
+        ("02_merge", "files_rewritten",
+          (filesBefore -- filesAfter).size.toLong),
+        ("02_merge", "dv_files",
+          KvSource.committedState(out).dvFiles.size.toLong),
+        ("03_after", "rows_readable", KvSource.read(spark, out).count()),
+        ("03_after", "rows_updated_val",
+          KvSource.read(spark, out).filter(col("val") === "UPDATED").count()),
+        ("03_after", "rows_at_v1", KvSource.read(spark, out, Some(1L)).count()),
+        ("04_cdf", "deletes",
+          cdf.filter(col("change_type") === "delete").count()),
+        ("04_cdf", "inserts",
+          cdf.filter(col("change_type") === "insert").count()))
+      KvSource.optimizeCompact(spark, out)
+      ledger(spark, preOpt ++ Seq(
+        ("05_optimize", "rows_readable", KvSource.read(spark, out).count()),
+        ("05_optimize", "dv_files",
+          KvSource.committedState(out).dvFiles.size.toLong)))
     }
-    val cdf = KvSource.changeFeed(spark, out, 1L, v)
-    val preOpt = Seq(
-      ("01_before", "rows_readable", readAt(Some(1L)).count()),
-      ("02_merge", "matched", matched),
-      ("02_merge", "inserted", inserted),
-      ("02_merge", "version_published", v),
-      ("02_merge", "files_rewritten",
-        (filesBefore -- filesAfter).size.toLong),
-      ("02_merge", "dv_files",
-        KvSource.committedState(out).dvFiles.size.toLong),
-      ("03_after", "rows_readable", readAt(None).count()),
-      ("03_after", "rows_updated_val",
-        readAt(None).filter(col("val") === "UPDATED").count()),
-      ("03_after", "rows_at_v1", readAt(Some(1L)).count()),
-      ("04_cdf", "deletes",
-        cdf.filter(col("change_type") === "delete").count()),
-      ("04_cdf", "inserts",
-        cdf.filter(col("change_type") === "insert").count()))
-    KvSource.optimizeCompact(spark, out)
-    val postOpt = Seq(
-      ("05_optimize", "rows_readable", readAt(None).count()),
-      ("05_optimize", "dv_files",
-        KvSource.committedState(out).dvFiles.size.toLong))
-    import spark.implicits._
-    materializeAndClean(
-      (preOpt ++ postOpt).toDF("stage", "metric", "value")
-        .orderBy("stage", "metric"),
-      out)
-  }
 
   /** FILE SKIPPING on the DSv2 commit log — real filter pushdown
     * (`SupportsPushDownFilters`) against per-file key zone maps: each
@@ -1478,37 +1390,31 @@ object SourceQueries {
     * change rows. The oracle recomputes rows/sums from the predicate
     * and pins files_planned=2; a stats map that loses a file's zone
     * (or prunes a file it shouldn't) fails the hash. */
-  def fileSkipping(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-skip").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    val n = Tables.customer(spark, dir).count()
-    // contiguous key-range slices (keys are dense 0..n−1):
-    // bucket = key*8 DIV n
-    (0L until 8L).foreach { b =>
-      c.filter(expr(s"key * 8 DIV $n") === b).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    }
-    // probe the first quarter: intersects exactly slices 0 and 1 for
-    // any n ≥ 8 (slice 2 starts at ceil(n/4) ≥ n DIV 4)
-    val probe = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-      .where(col("key") < lit(n / 4))
-    val planned = probe.rdd.getNumPartitions.toLong
-    val agg = probe.agg(count(lit(1)).as("rows"), sum(col("key")).as("key_sum")).head()
-    import spark.implicits._
-    materializeAndClean(
-      Seq(
+  def fileSkipping(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-skip") { case Seq(out) =>
+      val n = appendKeySlices(spark, dir, out)
+      // probe the first quarter: intersects exactly slices 0 and 1 for
+      // any n ≥ 8 (slice 2 starts at ceil(n/4) ≥ n DIV 4)
+      val probe = KvSource.read(spark, out).where(col("key") < lit(n / 4))
+      val planned = probe.rdd.getNumPartitions.toLong
+      val agg = probe.agg(count(lit(1)).as("rows"), sum(col("key")).as("key_sum")).head()
+      ledger(spark, Seq(
         ("01_layout", "files_total",
           KvSource.committedFiles(out).size.toLong),
         ("02_probe", "files_planned", planned),
         ("03_result", "key_sum", agg.getLong(1)),
-        ("03_result", "rows", agg.getLong(0)))
-        .toDF("stage", "metric", "value")
-        .orderBy("stage", "metric"),
-      out)
+        ("03_result", "rows", agg.getLong(0))))
+    }
+
+  /** Stage the customer keyspace at `out` as 8 contiguous key-range
+    * files, one single-task append (version) each — keys are dense
+    * 0..n−1, slice = key*8 DIV n — and return n. */
+  private def appendKeySlices(spark: SparkSession, dir: String, out: String): Long = {
+    val c = customerKv(spark, dir)
+    val n = Tables.customer(spark, dir).count()
+    (0L until 8L).foreach(b =>
+      KvSource.append(c.filter(expr(s"key * 8 DIV $n") === b).repartition(1), out))
+    n
   }
 
   /** UPDATE on the commit log — the row-update DML verb, completing
@@ -1528,45 +1434,31 @@ object SourceQueries {
     * post-images; every count, including the survivor set size, is
     * recomputed by the oracle from the predicate and the slice
     * geometry. */
-  def updateVerbOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-update").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    val n = Tables.customer(spark, dir).count()
-    (0L until 8L).foreach { b =>
-      c.filter(expr(s"key * 8 DIV $n") === b).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def updateVerbOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-update") { case Seq(out) =>
+      val n = appendKeySlices(spark, dir, out)
+      val filesBefore = KvSource.committedFiles(out).toSet
+      val (updated, v) = KvSource.updateWhere(spark, out,
+        s"key < ${n / 4}", "concat(val, '!')")
+      val filesAfter = KvSource.committedFiles(out).toSet
+      val after = KvSource.read(spark, out)
+      val cdf = KvSource.changeFeed(spark, out, v - 1, v)
+      ledger(spark, Seq(
+        ("01_layout", "files_total", filesBefore.size.toLong),
+        ("02_update", "keys_updated", updated),
+        ("02_update", "files_untouched_surviving",
+          (filesBefore intersect filesAfter).size.toLong),
+        ("03_after", "rows_readable", after.count()),
+        ("03_after", "rows_updated_val",
+          after.filter(col("val").endsWith("!")).count()),
+        ("03_after", "rows_at_pre_update",
+          KvSource.read(spark, out, Some(v - 1))
+            .filter(col("val").endsWith("!")).count()),
+        ("04_cdf", "pre_images",
+          cdf.filter(col("change_type") === "delete").count()),
+        ("04_cdf", "post_images",
+          cdf.filter(col("change_type") === "insert").count())))
     }
-    val filesBefore = KvSource.committedFiles(out).toSet
-    val (updated, v) = KvSource.updateWhere(spark, out,
-      s"key < ${n / 4}", "concat(val, '!')")
-    val filesAfter = KvSource.committedFiles(out).toSet
-    val after = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val cdf = KvSource.changeFeed(spark, out, v - 1, v)
-    val rows = Seq(
-      ("01_layout", "files_total", filesBefore.size.toLong),
-      ("02_update", "keys_updated", updated),
-      ("02_update", "files_untouched_surviving",
-        (filesBefore intersect filesAfter).size.toLong),
-      ("03_after", "rows_readable", after.count()),
-      ("03_after", "rows_updated_val",
-        after.filter(col("val").endsWith("!")).count()),
-      ("03_after", "rows_at_pre_update",
-        spark.read.format(classOf[KvSource].getName).option("path", out)
-          .option("versionAsOf", (v - 1).toString).load()
-          .filter(col("val").endsWith("!")).count()),
-      ("04_cdf", "pre_images",
-        cdf.filter(col("change_type") === "delete").count()),
-      ("04_cdf", "post_images",
-        cdf.filter(col("change_type") === "insert").count()))
-    import spark.implicits._
-    materializeAndClean(
-      rows.toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
 
   /** SHALLOW CLONE on the commit log (the Delta CLONE verb — the
     * zero-copy table fork a dev/test/experimentation workflow runs
@@ -1581,48 +1473,32 @@ object SourceQueries {
     * only in the source, and the ledger re-reads both sides after
     * each divergence — a clone that leaks a post-clone source change
     * (or loses the inherited DV mask) fails the hash. */
-  def cloneShallowOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val src = java.nio.file.Files.createTempDirectory("graft-kv-clone-src").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft-kv-clone-dst").toString
-    // the clone target must not have a chain yet — the temp dir is
-    // fresh; cloneShallow links into it and publishes v1
-    SourceQueries.deleteRecursively(new java.io.File(dst))
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    c.write.format(classOf[KvSource].getName)
-      .option("path", src).mode(org.apache.spark.sql.SaveMode.Append).save()
-    KvSource.deleteWhere(spark, src, "key % 7 = 0") // v2: DV
-    val cloneV = KvSource.cloneShallow(src, dst)
-    def readAll(p: String) = spark.read.format(classOf[KvSource].getName)
-      .option("path", p).load()
-    val atClone = Seq(
-      ("01_clone", "clone_version", cloneV),
-      ("01_clone", "clone_rows", readAll(dst).count()),
-      ("01_clone", "clone_dv_masked_key7",
-        readAll(dst).filter(col("key") % 7 === 0).count()))
-    // diverge: append NEW rows to the CLONE only
-    Tables.customer(spark, dir).filter(col("c_custkey") % 13 === 0)
-      .selectExpr("c_custkey + 20000000 AS key", "'NEWROW' AS val")
-      .write.format(classOf[KvSource].getName)
-      .option("path", dst).mode(org.apache.spark.sql.SaveMode.Append).save()
-    // diverge: DELETE more rows from the SOURCE only
-    KvSource.deleteWhere(spark, src, "key % 3 = 0")
-    val diverged = Seq(
-      ("02_diverge", "clone_rows_after_append", readAll(dst).count()),
-      ("02_diverge", "source_rows_after_delete", readAll(src).count()),
-      ("03_isolated", "clone_rows_unaffected_by_source_delete",
-        readAll(dst).filter(col("key") % 3 === 0 && col("key") < 20000000).count()),
-      ("03_isolated", "source_rows_unaffected_by_clone_append",
-        readAll(src).filter(col("key") >= 20000000).count()))
-    import spark.implicits._
-    val res = materializeAndClean(
-      (atClone ++ diverged).toDF("stage", "metric", "value")
-        .orderBy("stage", "metric"),
-      src)
-    SourceQueries.deleteRecursively(new java.io.File(dst))
-    res
-  }
+  def cloneShallowOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-clone-src", "graft-kv-clone-dst") { case Seq(src, dst) =>
+      // the clone target must not have a chain yet — the temp dir is
+      // fresh; cloneShallow links into it and publishes v1
+      deleteRecursively(new java.io.File(dst))
+      KvSource.append(customerKv(spark, dir), src)
+      KvSource.deleteWhere(spark, src, "key % 7 = 0") // v2: DV
+      val cloneV = KvSource.cloneShallow(src, dst)
+      val atClone = Seq(
+        ("01_clone", "clone_version", cloneV),
+        ("01_clone", "clone_rows", KvSource.read(spark, dst).count()),
+        ("01_clone", "clone_dv_masked_key7",
+          KvSource.read(spark, dst).filter(col("key") % 7 === 0).count()))
+      // diverge: append NEW rows to the CLONE only
+      KvSource.append(Tables.customer(spark, dir).filter(col("c_custkey") % 13 === 0)
+        .selectExpr("c_custkey + 20000000 AS key", "'NEWROW' AS val"), dst)
+      // diverge: DELETE more rows from the SOURCE only
+      KvSource.deleteWhere(spark, src, "key % 3 = 0")
+      ledger(spark, atClone ++ Seq(
+        ("02_diverge", "clone_rows_after_append", KvSource.read(spark, dst).count()),
+        ("02_diverge", "source_rows_after_delete", KvSource.read(spark, src).count()),
+        ("03_isolated", "clone_rows_unaffected_by_source_delete",
+          KvSource.read(spark, dst).filter(col("key") % 3 === 0 && col("key") < 20000000).count()),
+        ("03_isolated", "source_rows_unaffected_by_clone_append",
+          KvSource.read(spark, src).filter(col("key") >= 20000000).count())))
+    }
 
   /** CDF-DRIVEN DOWNSTREAM SYNC — the theorem that makes the change
     * feed USEFUL, proven as data: a downstream aggregate maintained
@@ -1640,45 +1516,31 @@ object SourceQueries {
     * drops a retraction, double-delivers a checkpoint re-list, or
     * mis-classifies the merge's sidecars diverges from its own
     * snapshot column and fails the hash. */
-  def cdfSyncOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-cdfsync").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    def append(df: DataFrame): Unit =
-      df.write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    append(c.filter(col("key") % 2 === 0)) // v1
-    append(c.filter(col("key") % 2 === 1)) // v2
-    KvSource.deleteWhere(spark, out, "key % 5 = 0") // v3: DV delete
-    val updates = Tables.customer(spark, dir)
-      .filter(col("c_custkey") % 3 === 0)
-      .selectExpr("c_custkey AS key", "'UPDATED' AS val")
-      .unionByName(Tables.customer(spark, dir)
-        .filter(col("c_custkey") % 11 === 0)
-        .selectExpr("c_custkey + 10000000 AS key", "'NEWROW' AS val"))
-    val (_, _, v) = KvSource.mergeUpsert(spark, out, updates) // v4
-    val feed = KvSource.changeFeed(spark, out, 0L, v)
-      .groupBy(col("val"))
-      .agg(
-        sum(when(col("change_type") === "insert", 1L).otherwise(-1L))
-          .as("n_feed"),
-        sum(when(col("change_type") === "insert", col("key"))
-          .otherwise(-col("key"))).as("key_sum_feed"))
-    val snap = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-      .groupBy(col("val"))
-      .agg(count(lit(1)).as("n_snap"), sum(col("key")).as("key_sum_snap"))
-    materializeAndClean(
+  def cdfSyncOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-cdfsync") { case Seq(out) =>
+      val c = customerKv(spark, dir)
+      KvSource.append(c.filter(col("key") % 2 === 0), out) // v1
+      KvSource.append(c.filter(col("key") % 2 === 1), out) // v2
+      KvSource.deleteWhere(spark, out, "key % 5 = 0")     // v3: DV delete
+      val (_, _, v) = KvSource.mergeUpsert(spark, out, customerUpdates(spark, dir)) // v4
+      val feed = KvSource.changeFeed(spark, out, 0L, v)
+        .groupBy(col("val"))
+        .agg(
+          sum(when(col("change_type") === "insert", 1L).otherwise(-1L))
+            .as("n_feed"),
+          sum(when(col("change_type") === "insert", col("key"))
+            .otherwise(-col("key"))).as("key_sum_feed"))
+      val snap = KvSource.read(spark, out)
+        .groupBy(col("val"))
+        .agg(count(lit(1)).as("n_snap"), sum(col("key")).as("key_sum_snap"))
       feed.join(snap, Seq("val"), "full_outer")
         .select(col("val"),
           coalesce(col("n_feed"), lit(0L)).as("n_feed"),
           coalesce(col("key_sum_feed"), lit(0L)).as("key_sum_feed"),
           coalesce(col("n_snap"), lit(0L)).as("n_snap"),
           coalesce(col("key_sum_snap"), lit(0L)).as("key_sum_snap"))
-        .orderBy("val"),
-      out)
-  }
+        .orderBy("val")
+    }
 
   /** PROTOCOL VERSIONING on the commit log (the Delta
     * minReaderVersion/minWriterVersion gate — what lets a table FORMAT
@@ -1693,48 +1555,34 @@ object SourceQueries {
     * while time travel to the pre-future snapshot still reads under
     * the old protocol (the gate is per-snapshot, Delta's rule). Every
     * refusal is recorded as a flag the oracle pins. */
-  def protocolGateOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-proto").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    c.write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v1
-    def readCount(asOf: Option[Long]): Long = {
-      val r = spark.read.format(classOf[KvSource].getName).option("path", out)
-      asOf.foreach(v => r.option("versionAsOf", v.toString))
-      r.load().count()
-    }
-    val p0 = KvSource.protocolAt(out)
-    val vUp = KvSource.upgradeProtocol(out, 2, 2) // v2
-    val p1 = KvSource.protocolAt(out)
-    val afterUpgrade = readCount(None)
-    Tables.customer(spark, dir).filter(col("c_custkey") % 13 === 0)
-      .selectExpr("c_custkey + 10000000 AS key", "'NEWROW' AS val")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v3
-    val afterWrite = readCount(None)
-    // a FUTURE engine commits v4 under a protocol this engine lacks
-    require(KvSource.publishCas(out, 4L, "#protocol:9:9"),
-      "future-protocol publish must win (no concurrent committers here)")
-    // Spark may wrap a planning/commit failure — walk the cause chain
-    def refused(f: => Unit): Long =
-      try { f; 0L } catch {
-        case e: Throwable =>
-          val hit = Iterator.iterate[Throwable](e)(_.getCause)
-            .takeWhile(_ != null).take(10)
-            .exists(t => Option(t.getMessage).exists(_.contains("requires protocol")))
-          if (hit) 1L else throw e
-      }
-    val readRefused = refused(readCount(None))
-    val writeRefused = refused {
-      c.limit(1).write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    }
-    val timeTravelRows = readCount(Some(3L)) // pre-future snapshot: old protocol
-    import spark.implicits._
-    materializeAndClean(
-      Seq(
+  def protocolGateOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-proto") { case Seq(out) =>
+      val c = customerKv(spark, dir)
+      KvSource.append(c, out) // v1
+      val p0 = KvSource.protocolAt(out)
+      val vUp = KvSource.upgradeProtocol(out, 2, 2) // v2
+      val p1 = KvSource.protocolAt(out)
+      val afterUpgrade = KvSource.read(spark, out).count()
+      KvSource.append(Tables.customer(spark, dir).filter(col("c_custkey") % 13 === 0)
+        .selectExpr("c_custkey + 10000000 AS key", "'NEWROW' AS val"), out) // v3
+      val afterWrite = KvSource.read(spark, out).count()
+      // a FUTURE engine commits v4 under a protocol this engine lacks
+      require(KvSource.publishCas(out, 4L, "#protocol:9:9"),
+        "future-protocol publish must win (no concurrent committers here)")
+      // Spark may wrap a planning/commit failure — walk the cause chain
+      def refused(f: => Unit): Long =
+        try { f; 0L } catch {
+          case e: Throwable =>
+            val hit = Iterator.iterate[Throwable](e)(_.getCause)
+              .takeWhile(_ != null).take(10)
+              .exists(t => Option(t.getMessage).exists(_.contains("requires protocol")))
+            if (hit) 1L else throw e
+        }
+      val readRefused = refused(KvSource.read(spark, out).count())
+      val writeRefused = refused(KvSource.append(c.limit(1), out))
+      // the pre-future snapshot still reads under the old protocol
+      val timeTravelRows = KvSource.read(spark, out, Some(3L)).count()
+      ledger(spark, Seq(
         ("01_default", "reader_version", p0._1.toLong),
         ("01_default", "writer_version", p0._2.toLong),
         ("02_upgrade", "version_published", vUp),
@@ -1744,11 +1592,8 @@ object SourceQueries {
         ("03_write_under_v2", "rows_readable", afterWrite),
         ("04_future", "read_refused", readRefused),
         ("04_future", "write_refused", writeRefused),
-        ("04_future", "time_travel_pre_future_rows", timeTravelRows))
-        .toDF("stage", "metric", "value")
-        .orderBy("stage", "metric"),
-      out)
-  }
+        ("04_future", "time_travel_pre_future_rows", timeTravelRows)))
+    }
 
   /** DESCRIBE HISTORY on the commit log (the Delta audit verb — the
     * per-version operation ledger an operator reads before trusting a
@@ -1761,32 +1606,26 @@ object SourceQueries {
     * legacy versions that predate the header, which the op proves by
     * hand-publishing one header-less version. Driver-side over
     * manifest metadata only; never opens a data file. */
-  def describeHistoryOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-history").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    c.repartition(1).write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v1 WRITE
-    KvSource.deleteWhere(spark, out, "key % 5 = 0")                          // v2 DELETE
-    KvSource.mergeUpsert(spark, out,
-      Tables.customer(spark, dir).filter(col("c_custkey") % 3 === 0)
-        .selectExpr("c_custkey AS key", "'UPDATED' AS val"))                 // v3 MERGE
-    KvSource.optimizeCompact(spark, out)                                     // v4 OPTIMIZE
-    KvSource.upgradeProtocol(out, 2, 2)                                      // v5 UPGRADE
-    // a legacy version with NO #op: header: classified structurally
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(out, "part-legacy.dat"), "1,x\n".getBytes("UTF-8"))
-    require(KvSource.publishCas(out, 6L, "part-legacy.dat"),
-      "legacy publish must win (no concurrent committers here)")
-    import spark.implicits._
-    materializeAndClean(
+  def describeHistoryOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-history") { case Seq(out) =>
+      KvSource.append(customerKv(spark, dir).repartition(1), out) // v1 WRITE
+      KvSource.deleteWhere(spark, out, "key % 5 = 0")                          // v2 DELETE
+      KvSource.mergeUpsert(spark, out,
+        Tables.customer(spark, dir).filter(col("c_custkey") % 3 === 0)
+          .selectExpr("c_custkey AS key", "'UPDATED' AS val"))                 // v3 MERGE
+      KvSource.optimizeCompact(spark, out)                                     // v4 OPTIMIZE
+      KvSource.upgradeProtocol(out, 2, 2)                                      // v5 UPGRADE
+      // a legacy version with NO #op: header: classified structurally
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(out, "part-legacy.dat"), "1,x\n".getBytes("UTF-8"))
+      require(KvSource.publishCas(out, 6L, "part-legacy.dat"),
+        "legacy publish must win (no concurrent committers here)")
+      import spark.implicits._
       KvSource.describeHistory(out)
         .toDF("version", "operation", "has_adds", "has_removes", "n_dvs",
           "is_checkpoint")
-        .orderBy("version"),
-      out)
-  }
+        .orderBy("version")
+    }
 
   /** DESCRIBE DETAIL on the commit log (the Delta table-summary verb):
     * the latest snapshot's structural facts — live/DV file counts,
@@ -1794,26 +1633,25 @@ object SourceQueries {
     * readable row count, all from one metadata fold. The chain is
     * three single-task appends, a merge-on-read DELETE, and a protocol
     * upgrade, so every number is closed-form. */
-  def describeDetailOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-detail").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    (0L until 3L).foreach { i =>
-      c.filter(col("key") % 3 === i).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def describeDetailOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-detail") { case Seq(out) =>
+      appendModSlices(spark, dir, out, 3)
+      KvSource.deleteWhere(spark, out, "key % 7 = 0") // v4
+      KvSource.upgradeProtocol(out, 2, 2)             // v5
+      val rows = KvSource.describeDetail(out) :+
+        (("rows_readable", KvSource.read(spark, out).count()))
+      import spark.implicits._
+      rows.toDF("metric", "value").orderBy("metric")
     }
-    KvSource.deleteWhere(spark, out, "key % 7 = 0") // v4
-    KvSource.upgradeProtocol(out, 2, 2)             // v5
-    val rows = KvSource.describeDetail(out) :+
-      (("rows_readable",
-        spark.read.format(classOf[KvSource].getName).option("path", out)
-          .load().count()))
-    import spark.implicits._
-    materializeAndClean(
-      rows.toDF("metric", "value").orderBy("metric"),
-      out)
+
+  /** Stage the customer table at `out` as `k` key-mod slices (slice i
+    * = key % k = i), one single-task append (version) each: every
+    * file's key zone spans the whole keyspace. */
+  private def appendModSlices(spark: SparkSession, dir: String, out: String,
+                              k: Long): Unit = {
+    val c = customerKv(spark, dir)
+    (0L until k).foreach(i =>
+      KvSource.append(c.filter(col("key") % k === i).repartition(1), out))
   }
 
   /** VACUUM DRY RUN (the Delta audit-before-reclaim flag): the dry run
@@ -1826,61 +1664,69 @@ object SourceQueries {
     * half; 12 appends + an OPTIMIZE give the manifest half its
     * checkpoint geometry (horizon 11 folds from checkpoint 10 → 9
     * manifests reclaimable). */
-  def vacuumDryRunOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-vacdry").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    (0L until 12L).foreach { i =>
-      c.filter(col("key") % 12 === i).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def vacuumDryRunOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-vacdry") { case Seq(out) =>
+      appendModSlices(spark, dir, out, 12)
+      KvSource.optimizeCompact(spark, out) // v13
+      // an aged orphan (crash leftover): eligible for the stray sweep
+      val stray = agedStray(out, "part-orphan.dat", "1,x\n")
+      val n0 = KvSource.read(spark, out).count()
+      val (dryM, dryS, dryH) = KvSource.vacuum(out, retainLast = 3, dryRun = true)
+      val afterDry = Seq(
+        ("02_dryrun", "manifests_reclaimable", dryM),
+        ("02_dryrun", "strays_reclaimable", dryS),
+        ("02_dryrun", "new_horizon", dryH),
+        ("03_after_dryrun", "versions", KvSource.versions(out).size.toLong),
+        ("03_after_dryrun", "rows_readable", KvSource.read(spark, out).count()),
+        ("03_after_dryrun", "stray_present", if (stray.exists()) 1L else 0L))
+      val (vm, vs, vh) = KvSource.vacuum(out, retainLast = 3)
+      ledger(spark,
+        Seq(("01_before", "versions", 13L), ("01_before", "rows_readable", n0)) ++
+          afterDry ++ Seq(
+          ("04_vacuum", "manifests_deleted", vm),
+          ("04_vacuum", "strays_deleted", vs),
+          ("04_vacuum", "new_horizon", vh),
+          ("05_after", "versions", KvSource.versions(out).size.toLong),
+          ("05_after", "rows_readable", KvSource.read(spark, out).count()),
+          ("05_after", "stray_present", if (stray.exists()) 1L else 0L)))
     }
-    KvSource.optimizeCompact(spark, out) // v13
-    // an aged orphan (crash leftover): eligible for the stray sweep
-    val stray = new java.io.File(out, "part-orphan.dat")
-    java.nio.file.Files.write(stray.toPath, "1,x\n".getBytes("UTF-8"))
+
+  /** A crash leftover: a data file in `out` that no manifest lists,
+    * aged an hour past the in-flight guard (vacuum only touches strays
+    * older than strayMinAgeMs — a fresh unreferenced file may belong
+    * to a commit that is about to publish). */
+  private def agedStray(out: String, name: String, body: String): java.io.File = {
+    val stray = new java.io.File(out, name)
+    java.nio.file.Files.write(stray.toPath, body.getBytes("UTF-8"))
     stray.setLastModified(System.currentTimeMillis() - 60L * 60 * 1000)
-    def readCount(): Long = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load().count()
-    val n0 = readCount()
-    val (dryM, dryS, dryH) = KvSource.vacuum(out, retainLast = 3, dryRun = true)
-    val afterDry = Seq(
-      ("02_dryrun", "manifests_reclaimable", dryM),
-      ("02_dryrun", "strays_reclaimable", dryS),
-      ("02_dryrun", "new_horizon", dryH),
-      ("03_after_dryrun", "versions", KvSource.versions(out).size.toLong),
-      ("03_after_dryrun", "rows_readable", readCount()),
-      ("03_after_dryrun", "stray_present", if (stray.exists()) 1L else 0L))
-    val (vm, vs, vh) = KvSource.vacuum(out, retainLast = 3)
-    val afterReal = Seq(
-      ("04_vacuum", "manifests_deleted", vm),
-      ("04_vacuum", "strays_deleted", vs),
-      ("04_vacuum", "new_horizon", vh),
-      ("05_after", "versions", KvSource.versions(out).size.toLong),
-      ("05_after", "rows_readable", readCount()),
-      ("05_after", "stray_present", if (stray.exists()) 1L else 0L))
-    import spark.implicits._
-    materializeAndClean(
-      (Seq(("01_before", "versions", 13L), ("01_before", "rows_readable", n0)) ++
-        afterDry ++ afterReal)
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
+    stray
   }
 
-  /** Finish a side-stateful gate op: localize its BOUNDED final
-    * rollup (metadata-sized — versions, rollup rows, never data), then
-    * delete the op's temp sink directory so repeated invocations
-    * (REPEAT-bench, the correctness sweep) leave /tmp flat. The
-    * collect is by design and bounded by the require; deletion happens
-    * only on success — a failed op keeps its directory for debugging. */
-  private[graft] def materializeAndClean(df: DataFrame, dir: String): DataFrame = {
+  /** The scratch harness of a side-stateful gate op: creates one temp
+    * directory per prefix (table, clone target, checkpoint, sink …),
+    * runs `body` on them in order, and localizes its BOUNDED result
+    * (metadata-sized — versions, rollup rows, never data). The collect
+    * is by design and bounded by the require. Every directory is
+    * deleted only on success, so repeated invocations (REPEAT-bench,
+    * the correctness sweep) leave /tmp flat while a failed op keeps
+    * its directories for debugging. */
+  private[graft] def scratch(prefixes: String*)(body: Seq[String] => DataFrame): DataFrame = {
+    val dirs = prefixes.map(p => java.nio.file.Files.createTempDirectory(p).toString)
+    val df = body(dirs)
     val rows = df.collect()
     require(rows.length <= 100000,
-      s"materializeAndClean is for bounded gate rollups, got ${rows.length} rows")
-    deleteRecursively(new java.io.File(dir))
+      s"scratch is for bounded gate rollups, got ${rows.length} rows")
+    dirs.foreach(d => deleteRecursively(new java.io.File(d)))
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema)
+  }
+
+  /** The (stage, metric, value) ledger a scratch op reports, ordered
+    * by stage and metric. */
+  private[graft] def ledger(spark: SparkSession,
+                            rows: Seq[(String, String, Long)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("stage", "metric", "value").orderBy("stage", "metric")
   }
 
   private[graft] def deleteRecursively(f: java.io.File): Unit = {
@@ -1908,44 +1754,23 @@ object SourceQueries {
     * that deletes a referenced file fails the hash. Commit-log
     * metadata is driver-sized by construction; the DATA path stays
     * distributed through the DSv2 writer/reader. */
-  def manifestCompaction(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-compact").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    (0L until 12L).foreach { i =>
-      c.filter(col("key") % 12 === i).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def manifestCompaction(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-compact") { case Seq(out) =>
+      appendModSlices(spark, dir, out, 12)
+      val latest = KvSource.latestVersion(out).get
+      val before = Seq(
+        ("01_before", "manifests_read_for_latest", latest - KvSource.foldBase(latest) + 1),
+        ("01_before", "rows_readable", KvSource.read(spark, out).count()),
+        ("01_before", "versions", KvSource.versions(out).size.toLong))
+      agedStray(out, "part-stray-crashleft.dat", "0,stray\n")
+      val (dropped, strays, oldest) = KvSource.vacuum(out, retainLast = 3)
+      ledger(spark, before ++ Seq(
+        ("02_vacuum", "manifests_dropped", dropped),
+        ("02_vacuum", "oldest_readable", oldest),
+        ("02_vacuum", "strays_removed", strays),
+        ("03_after", "rows_readable", KvSource.read(spark, out).count()),
+        ("03_after", "versions", KvSource.versions(out).size.toLong)))
     }
-    def readCount(): Long =
-      spark.read.format(classOf[KvSource].getName)
-        .option("path", out).load().count()
-    val latest = KvSource.latestVersion(out).get
-    val before = Seq(
-      ("01_before", "manifests_read_for_latest", latest - KvSource.foldBase(latest) + 1),
-      ("01_before", "rows_readable", readCount()),
-      ("01_before", "versions", KvSource.versions(out).size.toLong))
-    // a crash leftover: a task file that reached the directory but no
-    // manifest, AGED past the in-flight guard (vacuum only touches
-    // strays older than strayMinAgeMs — a fresh unreferenced file may
-    // belong to a commit that is about to publish)
-    val stray = new java.io.File(out, "part-stray-crashleft.dat")
-    java.nio.file.Files.write(stray.toPath, "0,stray\n".getBytes("UTF-8"))
-    stray.setLastModified(System.currentTimeMillis() - 60L * 60 * 1000)
-    val (dropped, strays, oldest) = KvSource.vacuum(out, retainLast = 3)
-    val after = Seq(
-      ("02_vacuum", "manifests_dropped", dropped),
-      ("02_vacuum", "oldest_readable", oldest),
-      ("02_vacuum", "strays_removed", strays),
-      ("03_after", "rows_readable", readCount()),
-      ("03_after", "versions", KvSource.versions(out).size.toLong))
-    import spark.implicits._
-    materializeAndClean(
-      (before ++ after).toDF("stage", "metric", "value")
-        .orderBy("stage", "metric"),
-      out)
-  }
 
   /** OCC AUTO-RETRY on the commit log (the Delta ConflictChecker
     * semantics — VERDICT r15 item 3): a pinned verb that loses its
@@ -1968,56 +1793,44 @@ object SourceQueries {
     * re-drives a full MERGE scan". Every count — slice populations,
     * versions, final value distribution — is recomputed by the oracle
     * from the slice geometry. */
-  def occRetryOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-occ").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    val n = Tables.customer(spark, dir).count()
-    (0L until 8L).foreach { b =>
-      c.filter(expr(s"key * 8 DIV $n") === b).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def occRetryOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-occ") { case Seq(out) =>
+      val n = appendKeySlices(spark, dir, out)
+      val c = customerKv(spark, dir)
+      val v0 = KvSource.latestVersion(out).get // = 8, the shared pin
+      // merge A wins the race: top slice (keys with key*8 DIV n = 7)
+      val (ma, ia, va) = KvSource.mergeUpsert(spark, out,
+        c.filter(expr(s"key * 8 DIV $n") === 7)
+          .selectExpr("key", "'A' AS val"))
+      // merge B lost the race (pinned at v0): bottom slice — rebases
+      val (mb, ib, vb) = KvSource.mergeUpsert(spark, out,
+        c.filter(expr(s"key * 8 DIV $n") === 0)
+          .selectExpr("key", "'B' AS val"),
+        pinnedVersion = Some(v0))
+      // merge C: stale pin AND keys overlapping A's outputs — true
+      // conflict, must error (never silently resurrect A's pre-images)
+      val conflicted =
+        try {
+          KvSource.mergeUpsert(spark, out,
+            c.filter(expr(s"key * 8 DIV $n") === 7)
+              .selectExpr("key", "'C' AS val"),
+            pinnedVersion = Some(v0))
+          0L
+        } catch { case e: IllegalStateException
+            if e.getMessage.contains("concurrent commit") => 1L }
+      val rows = KvSource.read(spark, out)
+      ledger(spark, Seq(
+        ("01_race", "pin_version", v0),
+        ("02_merge_a", "matched", ma),
+        ("02_merge_a", "version", va),
+        ("03_merge_b_rebased", "matched", mb),
+        ("03_merge_b_rebased", "version", vb),
+        ("04_conflict", "true_conflict_errored", conflicted),
+        ("05_after", "rows_readable", rows.count()),
+        ("05_after", "rows_val_a", rows.filter(col("val") === "A").count()),
+        ("05_after", "rows_val_b", rows.filter(col("val") === "B").count()),
+        ("05_after", "inserted_total", ia + ib)))
     }
-    val v0 = KvSource.latestVersion(out).get // = 8, the shared pin
-    // merge A wins the race: top slice (keys with key*8 DIV n = 7)
-    val (ma, ia, va) = KvSource.mergeUpsert(spark, out,
-      c.filter(expr(s"key * 8 DIV $n") === 7)
-        .selectExpr("key", "'A' AS val"))
-    // merge B lost the race (pinned at v0): bottom slice — rebases
-    val (mb, ib, vb) = KvSource.mergeUpsert(spark, out,
-      c.filter(expr(s"key * 8 DIV $n") === 0)
-        .selectExpr("key", "'B' AS val"),
-      pinnedVersion = Some(v0))
-    // merge C: stale pin AND keys overlapping A's outputs — true
-    // conflict, must error (never silently resurrect A's pre-images)
-    val conflicted =
-      try {
-        KvSource.mergeUpsert(spark, out,
-          c.filter(expr(s"key * 8 DIV $n") === 7)
-            .selectExpr("key", "'C' AS val"),
-          pinnedVersion = Some(v0))
-        0L
-      } catch { case e: IllegalStateException
-          if e.getMessage.contains("concurrent commit") => 1L }
-    val rows = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val ledger = Seq(
-      ("01_race", "pin_version", v0),
-      ("02_merge_a", "matched", ma),
-      ("02_merge_a", "version", va),
-      ("03_merge_b_rebased", "matched", mb),
-      ("03_merge_b_rebased", "version", vb),
-      ("04_conflict", "true_conflict_errored", conflicted),
-      ("05_after", "rows_readable", rows.count()),
-      ("05_after", "rows_val_a", rows.filter(col("val") === "A").count()),
-      ("05_after", "rows_val_b", rows.filter(col("val") === "B").count()),
-      ("05_after", "inserted_total", ia + ib))
-    import spark.implicits._
-    materializeAndClean(
-      ledger.toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
 
   /** OPTIMIZE ZORDER BY (key, val) — clustering as a commit-log verb
     * (r15 verdict item 5, closed): Morton-interleave clustering
@@ -2036,30 +1849,17 @@ object SourceQueries {
     * = (key⁠₁₅, val⁠₁₅, key⁠₁₄): a sub-quarter key window fixes two of
     * three bits → 2 buckets; a low-group segment fixes val₁₅ → 4),
     * so the planned counts are closed-form, not measured luck. */
-  def optimizeZorderOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-zorder").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    val n = Tables.customer(spark, dir).count()
-    (0L until 8L).foreach { b =>
-      c.filter(col("key") % 8 === b).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    }
-    def reload() = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    def probe(df: DataFrame): (Long, Long) =
-      (df.rdd.getNumPartitions.toLong, df.count())
-    val keyPred = col("key") < lit(n / 4)
-    val (pk0, nk0) = probe(reload().where(keyPred))
-    val (pv0, nv0) = probe(reload().where(col("val") === "BUILDING"))
-    val (filesBefore, v) = KvSource.optimizeZorder(spark, out, 8)
-    val (pk1, nk1) = probe(reload().where(keyPred))
-    val (pv1, nv1) = probe(reload().where(col("val") === "BUILDING"))
-    import spark.implicits._
-    materializeAndClean(
-      Seq(
+  def optimizeZorderOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-zorder") { case Seq(out) =>
+      val n = Tables.customer(spark, dir).count()
+      appendModSlices(spark, dir, out, 8)
+      val keyPred = col("key") < lit(n / 4)
+      val (pk0, nk0) = plannedAndRows(KvSource.read(spark, out).where(keyPred))
+      val (pv0, nv0) = plannedAndRows(KvSource.read(spark, out).where(col("val") === "BUILDING"))
+      val (filesBefore, v) = KvSource.optimizeZorder(spark, out, 8)
+      val (pk1, nk1) = plannedAndRows(KvSource.read(spark, out).where(keyPred))
+      val (pv1, nv1) = plannedAndRows(KvSource.read(spark, out).where(col("val") === "BUILDING"))
+      ledger(spark, Seq(
         ("01_layout", "files_before", filesBefore),
         ("02_probe_before", "key_files_planned", pk0),
         ("02_probe_before", "val_files_planned", pv0),
@@ -2070,12 +1870,14 @@ object SourceQueries {
         ("04_probe_after", "key_rows", nk1),
         ("04_probe_after", "val_files_planned", pv1),
         ("04_probe_after", "val_rows", nv1),
-        ("05_invariant", "rows_readable", reload().count()),
+        ("05_invariant", "rows_readable", KvSource.read(spark, out).count()),
         ("05_invariant", "key_rows_stable", if (nk0 == nk1) 1L else 0L),
-        ("05_invariant", "val_rows_stable", if (nv0 == nv1) 1L else 0L))
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
+        ("05_invariant", "val_rows_stable", if (nv0 == nv1) 1L else 0L)))
+    }
+
+  /** A pruning probe's (planned scan partitions = files, rows). */
+  private def plannedAndRows(df: DataFrame): (Long, Long) =
+    (df.rdd.getNumPartitions.toLong, df.count())
 
   /** SCHEMA EVOLUTION on the commit log (r15 verdict item 6, closed —
     * the KvSource analog of `load_schema_evolve`'s parquet semantics):
@@ -2095,28 +1897,14 @@ object SourceQueries {
     * read, the protocol bump, and the history verb naming the ALTER —
     * all recomputed by the oracle. At 100 TB, adding a column by
     * rewriting nothing is the only viable ALTER. */
-  def schemaEvolutionOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-schema").toString
-    val c = Tables.customer(spark, dir)
-    c.selectExpr("c_custkey AS key", "c_name AS val")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v1
-    val n = c.count()
-    val vAlter = KvSource.alterAddColumn(out, "segment")               // v2
-    c.selectExpr(s"c_custkey + ${n} AS key", "c_name AS val",
-        "c_mktsegment AS segment")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v3
-    val wide = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val narrow = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).option("versionAsOf", "1").load()
-    val hist = KvSource.describeHistory(out)
-    val proto = KvSource.protocolAt(out)
-    import spark.implicits._
-    materializeAndClean(
-      Seq(
+  def schemaEvolutionOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-schema") { case Seq(out) =>
+      val (vAlter, _) = appendEvolved(spark, dir, out)
+      val wide = KvSource.read(spark, out)
+      val narrow = KvSource.read(spark, out, Some(1L))
+      val hist = KvSource.describeHistory(out)
+      val proto = KvSource.protocolAt(out)
+      ledger(spark, Seq(
         ("01_alter", "version", vAlter),
         ("01_alter", "reader_protocol", proto._1.toLong),
         ("02_wide", "cols", wide.schema.size.toLong),
@@ -2128,9 +1916,22 @@ object SourceQueries {
         ("03_travel", "cols_at_v1", narrow.schema.size.toLong),
         ("03_travel", "rows_at_v1", narrow.count()),
         ("04_history", "alter_ops",
-          hist.count(_._2 == "ALTER TABLE ADD COLUMN").toLong))
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
+          hist.count(_._2 == "ALTER TABLE ADD COLUMN").toLong)))
+    }
+
+  /** Stage the two-epoch evolved customer table at `out`: v1 narrow
+    * (key, name), v2 ALTER ADD `segment`, v3 the same customers
+    * re-keyed +n carrying their market segment. Returns (the ALTER's
+    * version, n). */
+  private def appendEvolved(spark: SparkSession, dir: String,
+                            out: String): (Long, Long) = {
+    val c = Tables.customer(spark, dir)
+    val n = c.count()
+    KvSource.append(c.selectExpr("c_custkey AS key", "c_name AS val"), out) // v1
+    val vAlter = KvSource.alterAddColumn(out, "segment")                    // v2
+    KvSource.append(c.selectExpr(s"c_custkey + $n AS key", "c_name AS val",
+      "c_mktsegment AS segment"), out)                                      // v3
+    (vAlter, n)
   }
 
   /** AUTO-MAINTENANCE PLANNER as an operator (r15 verdict item 7,
@@ -2149,52 +1950,39 @@ object SourceQueries {
     * from the staging geometry and recomputed by the oracle — a
     * planner that mis-counts rows, misses a trigger, or fires a
     * spurious one fails the hash. */
-  def maintenancePlanOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-plan").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    val n = Tables.customer(spark, dir).count()
-    (0L until 8L).foreach { b =>                     // v1..v8: wide zones
-      c.filter(col("key") % 8 === b).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def maintenancePlanOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-plan") { case Seq(out) =>
+      val n = Tables.customer(spark, dir).count()
+      appendModSlices(spark, dir, out, 8)              // v1..v8: wide zones
+      import spark.implicits._
+      (0 until 3).foreach(i =>                         // v9..v11: past the checkpoint
+        KvSource.append(Seq((n + i, "tail")).toDF("key", "val").repartition(1), out))
+      val (nDel, _) = KvSource.deleteWhere(spark, out,
+        s"key < $n AND key % 4 = 0")                   // v12: dead_bp ≈ 2500
+      val plan = KvSource.maintenancePlan(out, retainLast = 2)
+      val byJob = plan.map(j => j._1 -> j).toMap
+      val st = KvSource.committedState(out)
+      ledger(spark, Seq(
+        ("01_state", "dv_files", st.dvFiles.size.toLong),
+        ("01_state", "files_live", st.files.size.toLong),
+        ("01_state", "keys_deleted", nDel),
+        ("02_plan", "jobs_planned", plan.size.toLong),
+        ("02_plan", "compact_fired",
+          if (byJob.contains("OPTIMIZE_COMPACT")) 1L else 0L),
+        ("02_plan", "compact_files",
+          byJob.get("OPTIMIZE_COMPACT").map(_._3).getOrElse(0L)),
+        ("02_plan", "dv_fold_fired",
+          if (byJob.contains("OPTIMIZE_DV_FOLD")) 1L else 0L),
+        ("02_plan", "dead_bp",
+          byJob.get("OPTIMIZE_DV_FOLD").map(_._3).getOrElse(0L)),
+        ("02_plan", "vacuum_fired", if (byJob.contains("VACUUM")) 1L else 0L),
+        ("02_plan", "vacuum_reclaimable",
+          byJob.get("VACUUM").map(_._3).getOrElse(0L)),
+        ("02_plan", "zorder_fired",
+          if (byJob.contains("OPTIMIZE_ZORDER")) 1L else 0L),
+        ("02_plan", "max_overlap",
+          byJob.get("OPTIMIZE_ZORDER").map(_._3).getOrElse(0L))))
     }
-    import spark.implicits._
-    (0 until 3).foreach { i =>                       // v9..v11: past the checkpoint
-      Seq((n + i, "tail")).toDF("key", "val").repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    }
-    val (nDel, _) = KvSource.deleteWhere(spark, out,
-      s"key < $n AND key % 4 = 0")                   // v12: dead_bp ≈ 2500
-    val plan = KvSource.maintenancePlan(out, retainLast = 2)
-    val byJob = plan.map(j => j._1 -> j).toMap
-    val st = KvSource.committedState(out)
-    val ledger = Seq(
-      ("01_state", "dv_files", st.dvFiles.size.toLong),
-      ("01_state", "files_live", st.files.size.toLong),
-      ("01_state", "keys_deleted", nDel),
-      ("02_plan", "jobs_planned", plan.size.toLong),
-      ("02_plan", "compact_fired",
-        if (byJob.contains("OPTIMIZE_COMPACT")) 1L else 0L),
-      ("02_plan", "compact_files",
-        byJob.get("OPTIMIZE_COMPACT").map(_._3).getOrElse(0L)),
-      ("02_plan", "dv_fold_fired",
-        if (byJob.contains("OPTIMIZE_DV_FOLD")) 1L else 0L),
-      ("02_plan", "dead_bp",
-        byJob.get("OPTIMIZE_DV_FOLD").map(_._3).getOrElse(0L)),
-      ("02_plan", "vacuum_fired", if (byJob.contains("VACUUM")) 1L else 0L),
-      ("02_plan", "vacuum_reclaimable",
-        byJob.get("VACUUM").map(_._3).getOrElse(0L)),
-      ("02_plan", "zorder_fired",
-        if (byJob.contains("OPTIMIZE_ZORDER")) 1L else 0L),
-      ("02_plan", "max_overlap",
-        byJob.get("OPTIMIZE_ZORDER").map(_._3).getOrElse(0L)))
-    materializeAndClean(
-      ledger.toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
 
   /** THE MAINTENANCE CYCLE CLOSED (r16 — the planner's output proven
     * actionable): plan → execute → re-plan. The staged chain fires
@@ -2209,27 +1997,17 @@ object SourceQueries {
     * the oracle recomputes the before-plan job list, the dead ratio,
     * the after state (n−n/4 rows in 4 files), and the quarter-probe
     * planning exactly 1 file off the rewritten zones. */
-  def maintenanceCycleOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-cycle").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    val n = Tables.customer(spark, dir).count()
-    (0L until 8L).foreach { b =>
-      c.filter(col("key") % 8 === b).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    }
-    val (nDel, _) = KvSource.deleteWhere(spark, out, s"key % 4 = 0") // v9
-    val before = KvSource.maintenancePlan(out, retainLast = 50)
-    val (filesBefore, v) = KvSource.optimizeBinPack(spark, out, 4)   // v10
-    val after = KvSource.maintenancePlan(out, retainLast = 50)
-    val reloaded = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val st = KvSource.committedState(out)
-    import spark.implicits._
-    materializeAndClean(
-      Seq(
+  def maintenanceCycleOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-cycle") { case Seq(out) =>
+      val n = Tables.customer(spark, dir).count()
+      appendModSlices(spark, dir, out, 8)
+      val (nDel, _) = KvSource.deleteWhere(spark, out, s"key % 4 = 0") // v9
+      val before = KvSource.maintenancePlan(out, retainLast = 50)
+      val (filesBefore, v) = KvSource.optimizeBinPack(spark, out, 4)   // v10
+      val after = KvSource.maintenancePlan(out, retainLast = 50)
+      val reloaded = KvSource.read(spark, out)
+      val st = KvSource.committedState(out)
+      ledger(spark, Seq(
         ("01_plan", "jobs", before.size.toLong),
         ("01_plan", "compact_fired",
           if (before.exists(_._1 == "OPTIMIZE_COMPACT")) 1L else 0L),
@@ -2244,10 +2022,8 @@ object SourceQueries {
         ("04_after", "files_live", st.files.size.toLong),
         ("04_after", "quarter_probe_files_planned",
           reloaded.where(col("key") < lit(n / 4)).rdd.getNumPartitions.toLong),
-        ("04_after", "rows_readable", reloaded.count()))
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
+        ("04_after", "rows_readable", reloaded.count())))
+    }
 
   /** VAL-COLUMN FILE SKIPPING on the commit log (r15 verdict item 4,
     * closed — zone maps covered the key column only, so a val
@@ -2268,38 +2044,34 @@ object SourceQueries {
     * the segment histogram. At 100 TB a dimension-valued predicate
     * pruning 4/5 of the scan before planning is the difference
     * between a metadata decision and a cluster-wide read. */
-  def fileSkippingValOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-vskip").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-    segs.foreach { s =>
-      c.filter(col("val") === s).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def fileSkippingValOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-vskip") { case Seq(out) =>
+      val c = customerKv(spark, dir)
+      Segments.foreach(s => KvSource.append(c.filter(col("val") === s).repartition(1), out))
+      ledger(spark, probeRows(spark, out, col("val")))
     }
-    def probe(df: DataFrame): (Long, Long) =
-      (df.rdd.getNumPartitions.toLong, df.count())
-    val base = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val (pEq, nEq) = probe(base.where(col("val") === "BUILDING"))
-    val (pRange, nRange) =
-      probe(base.where(col("val") >= "F" && col("val") < "I"))
-    val (pPrefix, nPrefix) = probe(base.where(col("val").startsWith("MACH")))
-    import spark.implicits._
-    materializeAndClean(
-      Seq(
-        ("01_layout", "files_total",
-          KvSource.committedFiles(out).size.toLong),
-        ("02_eq", "files_planned", pEq),
-        ("02_eq", "rows", nEq),
-        ("03_range", "files_planned", pRange),
-        ("03_range", "rows", nRange),
-        ("04_prefix", "files_planned", pPrefix),
-        ("04_prefix", "rows", nPrefix))
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
+
+  /** The five customer market segments, in byte order. */
+  private val Segments = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
+
+  /** The zone-pruning ledger rows of the table at `out` laid out one
+    * file per segment: files total, then planned files and rows for an
+    * equality probe on `c` (BUILDING), a byte-order range covering
+    * two segments ([F, I)) and a prefix probe (MACH). */
+  private def probeRows(spark: SparkSession, out: String,
+                        c: org.apache.spark.sql.Column): Seq[(String, String, Long)] = {
+    val base = KvSource.read(spark, out)
+    val (pEq, nEq) = plannedAndRows(base.where(c === "BUILDING"))
+    val (pRange, nRange) = plannedAndRows(base.where(c >= "F" && c < "I"))
+    val (pPrefix, nPrefix) = plannedAndRows(base.where(c.startsWith("MACH")))
+    Seq(
+      ("01_layout", "files_total", KvSource.committedFiles(out).size.toLong),
+      ("02_eq", "files_planned", pEq),
+      ("02_eq", "rows", nEq),
+      ("03_range", "files_planned", pRange),
+      ("03_range", "rows", nRange),
+      ("04_prefix", "files_planned", pPrefix),
+      ("04_prefix", "rows", nPrefix))
   }
 
   /** CROSS-PROCESS OCC RACE (r17 — the r16 verdict's item 4: the
@@ -2320,33 +2092,29 @@ object SourceQueries {
     * from the slice arithmetic via generate_series). No SparkSession
     * in the children — the commit log is driver-side file I/O, which
     * is what makes a true multi-process test this cheap. */
-  def occCrossProcOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-xproc").toString
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getPath
-    def launch(slice: Int): Process =
-      new ProcessBuilder(javaBin, "-cp", sys.props("java.class.path"),
-        "graft.tools.OccRace", out, "30", slice.toString)
-        .redirectOutput(ProcessBuilder.Redirect.DISCARD)
-        .redirectError(ProcessBuilder.Redirect.DISCARD)
-        .start()
-    val a = launch(0)
-    val b = launch(1)
-    val okA = a.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
-    val okB = b.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
-    if (!okA) a.destroyForcibly()
-    if (!okB) b.destroyForcibly()
-    val exitA = if (okA) a.exitValue().toLong else -1L
-    val exitB = if (okB) b.exitValue().toLong else -1L
-    val vs = KvSource.versions(out)
-    val dense = if (vs == (1L to vs.lastOption.getOrElse(0L))) 1L else 0L
-    val st = KvSource.committedState(out)
-    val rows = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    import spark.implicits._
-    materializeAndClean(
-      Seq(
+  def occCrossProcOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-xproc") { case Seq(out) =>
+      val javaBin = new java.io.File(
+        new java.io.File(sys.props("java.home"), "bin"), "java").getPath
+      def launch(slice: Int): Process =
+        new ProcessBuilder(javaBin, "-cp", sys.props("java.class.path"),
+          "graft.tools.OccRace", out, "30", slice.toString)
+          .redirectOutput(ProcessBuilder.Redirect.DISCARD)
+          .redirectError(ProcessBuilder.Redirect.DISCARD)
+          .start()
+      val a = launch(0)
+      val b = launch(1)
+      val okA = a.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
+      val okB = b.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
+      if (!okA) a.destroyForcibly()
+      if (!okB) b.destroyForcibly()
+      val exitA = if (okA) a.exitValue().toLong else -1L
+      val exitB = if (okB) b.exitValue().toLong else -1L
+      val vs = KvSource.versions(out)
+      val dense = if (vs == (1L to vs.lastOption.getOrElse(0L))) 1L else 0L
+      val st = KvSource.committedState(out)
+      val rows = KvSource.read(spark, out)
+      ledger(spark, Seq(
         ("01_race", "exit_a", exitA),
         ("01_race", "exit_b", exitB),
         ("02_chain", "versions", vs.size.toLong),
@@ -2356,10 +2124,8 @@ object SourceQueries {
         ("03_rows", "key_sum",
           rows.agg(sum("key")).head().getLong(0)),
         ("03_rows", "rows_a", rows.filter(col("val") === "p0").count()),
-        ("03_rows", "rows_b", rows.filter(col("val") === "p1").count()))
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
+        ("03_rows", "rows_b", rows.filter(col("val") === "p1").count())))
+    }
 
   /** ALTER TABLE RENAME COLUMN (r17 — Delta column-mapping `name`
     * mode, the r16 verdict's item 6): rename is METADATA-ONLY — a
@@ -2371,36 +2137,22 @@ object SourceQueries {
     * schema, a MERGE binding the new name, zone pruning), proves the
     * OLD name below the rename via time travel, and pins the history
     * + protocol ledger. */
-  def renameColumnOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-rename").toString
-    val c = Tables.customer(spark, dir)
-    val n = c.count()
-    c.selectExpr("c_custkey AS key", "c_name AS val")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v1
-    KvSource.alterAddColumn(out, "segment")                                  // v2
-    c.selectExpr(s"c_custkey + $n AS key", "c_name AS val",
-        "c_mktsegment AS segment")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v3
-    val vRen = KvSource.renameColumn(out, "segment", "mktseg")               // v4
-    val proto = KvSource.protocolAt(out)
-    // a MERGE binds the NEW name (the updates df must carry `mktseg`)
-    val updates = c.filter(col("c_custkey") % 7 === 0)
-      .selectExpr("c_custkey AS key", "concat('m:', c_name) AS val",
-        "'MG' AS mktseg")
-    val (matched, _, vMerge) = KvSource.mergeUpsert(spark, out, updates)     // v5
-    val wide = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val names = wide.schema.fieldNames.toSeq
-    // time travel BELOW the rename reads the old name
-    val atV3 = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).option("versionAsOf", "3").load()
-    val hist = KvSource.describeHistory(out)
-    import spark.implicits._
-    materializeAndClean(
-      Seq(
+  def renameColumnOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-rename") { case Seq(out) =>
+      appendEvolved(spark, dir, out)                                           // v1..v3
+      val vRen = KvSource.renameColumn(out, "segment", "mktseg")               // v4
+      val proto = KvSource.protocolAt(out)
+      // a MERGE binds the NEW name (the updates df must carry `mktseg`)
+      val updates = Tables.customer(spark, dir).filter(col("c_custkey") % 7 === 0)
+        .selectExpr("c_custkey AS key", "concat('m:', c_name) AS val",
+          "'MG' AS mktseg")
+      val (matched, _, vMerge) = KvSource.mergeUpsert(spark, out, updates)     // v5
+      val wide = KvSource.read(spark, out)
+      val names = wide.schema.fieldNames.toSeq
+      // time travel BELOW the rename reads the old name
+      val atV3 = KvSource.read(spark, out, Some(3L))
+      val hist = KvSource.describeHistory(out)
+      ledger(spark, Seq(
         ("01_rename", "version", vRen),
         ("01_rename", "reader_protocol", proto._1.toLong),
         ("01_rename", "writer_protocol", proto._2.toLong),
@@ -2418,10 +2170,8 @@ object SourceQueries {
           wide.filter(col("mktseg") === "BUILDING").count()),
         ("05_after", "null_rows", wide.filter(col("mktseg").isNull).count()),
         ("06_history", "rename_ops",
-          hist.count(_._2 == "RENAME COLUMN").toLong))
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
+          hist.count(_._2 == "RENAME COLUMN").toLong)))
+    }
 
   /** PER-COLUMN ZONE MAPS FOR EVOLVED COLUMNS (r17 — the r16
     * verdict's item 2: `#stats:`/`#vstats:` covered key and val only,
@@ -2440,53 +2190,27 @@ object SourceQueries {
     * appends pushing the chain onto the v10 CHECKPOINT so every
     * probe's stats provably survive the fold; three probe shapes pin
     * planned-partition counts and oracle-recomputed rows. */
-  def fileSkippingColsOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-cskip").toString
-    val c = Tables.customer(spark, dir)
-    val n = c.count()
-    c.selectExpr("c_custkey AS key", "c_name AS val")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v1
-    KvSource.alterAddColumn(out, "segment")                                  // v2
-    val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-    segs.foreach { s =>                                                      // v3..v7
-      c.filter(col("c_mktsegment") === s)
-        .selectExpr(s"c_custkey + $n AS key", "c_name AS val",
-          "c_mktsegment AS segment").repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def fileSkippingColsOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-cskip") { case Seq(out) =>
+      val c = Tables.customer(spark, dir)
+      val n = c.count()
+      KvSource.append(c.selectExpr("c_custkey AS key", "c_name AS val"), out) // v1
+      KvSource.alterAddColumn(out, "segment")                                 // v2
+      Segments.foreach { s =>                                                 // v3..v7
+        KvSource.append(c.filter(col("c_mktsegment") === s)
+          .selectExpr(s"c_custkey + $n AS key", "c_name AS val",
+            "c_mktsegment AS segment").repartition(1), out)
+      }
+      import spark.implicits._
+      (0 until 3).foreach { i =>                                              // v8..v10
+        KvSource.append(Seq((10 * n + i, "tail", "ZTAIL")).toDF("key", "val", "segment")
+          .repartition(1), out)
+      }
+      val detail = KvSource.describeDetail(out).toMap
+      // the narrow v1 file has no segment zone → always planned (+1)
+      ledger(spark, probeRows(spark, out, col("segment")) :+
+        (("01_layout", "fold_base", detail("fold_base"))))
     }
-    import spark.implicits._
-    (0 until 3).foreach { i =>                                               // v8..v10
-      Seq((10 * n + i, "tail", "ZTAIL")).toDF("key", "val", "segment")
-        .repartition(1).write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    }
-    def probe(df: DataFrame): (Long, Long) =
-      (df.rdd.getNumPartitions.toLong, df.count())
-    val base = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    // the narrow v1 file has no segment zone → always planned (+1)
-    val (pEq, nEq) = probe(base.where(col("segment") === "BUILDING"))
-    val (pRange, nRange) =
-      probe(base.where(col("segment") >= "F" && col("segment") < "I"))
-    val (pPrefix, nPrefix) = probe(base.where(col("segment").startsWith("MACH")))
-    val detail = KvSource.describeDetail(out).toMap
-    materializeAndClean(
-      Seq(
-        ("01_layout", "files_total",
-          KvSource.committedFiles(out).size.toLong),
-        ("01_layout", "fold_base", detail("fold_base")),
-        ("02_eq", "files_planned", pEq),
-        ("02_eq", "rows", nEq),
-        ("03_range", "files_planned", pRange),
-        ("03_range", "rows", nRange),
-        ("04_prefix", "files_planned", pPrefix),
-        ("04_prefix", "rows", nPrefix))
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
 
   /** MERGE + UPDATE on a SCHEMA-EVOLVED table (r17 — the r16 verdict's
     * #1 item: the six "follow-up surface" guards that permanently
@@ -2502,33 +2226,20 @@ object SourceQueries {
     * table; the 100 TB point is the verdict's own: a table you can
     * never MERGE or compact again after its first ALTER is untenable,
     * and Delta's rewrites-after-ADD-COLUMNS just work. */
-  def mergeEvolvedOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-mergevo").toString
-    val c = Tables.customer(spark, dir)
-    val n = c.count()
-    c.selectExpr("c_custkey AS key", "c_name AS val")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v1
-    val vAlter = KvSource.alterAddColumn(out, "segment")                     // v2
-    c.selectExpr(s"c_custkey + $n AS key", "c_name AS val",
-        "c_mktsegment AS segment")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v3
-    // COW MERGE over the evolved schema: replace the key%3 narrow rows
-    val updates = c.filter(col("c_custkey") % 3 === 0)
-      .selectExpr("c_custkey AS key", "concat('m:', c_name) AS val",
-        "'MERGED' AS segment")
-    val (matched, inserted, vMerge) = KvSource.mergeUpsert(spark, out, updates) // v4
-    // UPDATE predicated on the EVOLVED column
-    val (updRows, vUpd) = KvSource.updateWhere(spark, out,
-      "segment = 'BUILDING'", "concat('u:', val)")                           // v5
-    val wide = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val feed = KvSource.changeFeed(spark, out, vMerge - 1, vUpd)
-    import spark.implicits._
-    materializeAndClean(
-      Seq(
+  def mergeEvolvedOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-mergevo") { case Seq(out) =>
+      val (vAlter, _) = appendEvolved(spark, dir, out)                         // v1..v3
+      // COW MERGE over the evolved schema: replace the key%3 narrow rows
+      val updates = Tables.customer(spark, dir).filter(col("c_custkey") % 3 === 0)
+        .selectExpr("c_custkey AS key", "concat('m:', c_name) AS val",
+          "'MERGED' AS segment")
+      val (matched, inserted, vMerge) = KvSource.mergeUpsert(spark, out, updates) // v4
+      // UPDATE predicated on the EVOLVED column
+      val (updRows, vUpd) = KvSource.updateWhere(spark, out,
+        "segment = 'BUILDING'", "concat('u:', val)")                           // v5
+      val wide = KvSource.read(spark, out)
+      val feed = KvSource.changeFeed(spark, out, vMerge - 1, vUpd)
+      ledger(spark, Seq(
         ("01_alter", "version", vAlter),
         ("02_merge", "matched", matched),
         ("02_merge", "inserted", inserted),
@@ -2547,10 +2258,8 @@ object SourceQueries {
           feed.filter(col("change_type") === "insert").count()),
         ("05_cdf", "merged_inserts",
           feed.filter(col("change_type") === "insert" &&
-            col("segment") === "MERGED").count()))
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
+            col("segment") === "MERGED").count())))
+    }
 
   /** MAINTENANCE SURVIVES ALTER (r17): the plan → execute → re-plan
     * cycle of `load_maintenance_cycle`, ON AN EVOLVED CHAIN. Four
@@ -2564,33 +2273,24 @@ object SourceQueries {
     * failure this op pins against: r16's engine threw
     * "follow-up surface" here, so an evolved table could never be
     * compacted again. */
-  def optimizeEvolvedOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-optevo").toString
-    val c = Tables.customer(spark, dir)
-    val n = c.count()
-    val narrow = c.selectExpr("c_custkey AS key", "c_name AS val")
-    (0L until 4L).foreach { b =>                                   // v1..v4
-      narrow.filter(col("key") % 4 === b).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    }
-    KvSource.alterAddColumn(out, "segment")                        // v5
-    c.selectExpr(s"c_custkey + $n AS key", "c_name AS val",
-        "c_mktsegment AS segment").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v6
-    val (nDel, _) = KvSource.deleteWhere(spark, out,
-      s"key < $n AND key % 2 = 0")                                 // v7: dead_bp ≈ 2500
-    val before = KvSource.maintenancePlan(out, retainLast = 50)
-    val (filesBefore, vOpt) = KvSource.optimizeBinPack(spark, out, 4) // v8
-    val after = KvSource.maintenancePlan(out, retainLast = 50)
-    val reloaded = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val st = KvSource.committedState(out)
-    import spark.implicits._
-    materializeAndClean(
-      Seq(
+  def optimizeEvolvedOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-optevo") { case Seq(out) =>
+      val c = Tables.customer(spark, dir)
+      val n = c.count()
+      val narrow = c.selectExpr("c_custkey AS key", "c_name AS val")
+      (0L until 4L).foreach(b =>                                     // v1..v4
+        KvSource.append(narrow.filter(col("key") % 4 === b).repartition(1), out))
+      KvSource.alterAddColumn(out, "segment")                        // v5
+      KvSource.append(c.selectExpr(s"c_custkey + $n AS key", "c_name AS val",
+        "c_mktsegment AS segment").repartition(1), out)              // v6
+      val (nDel, _) = KvSource.deleteWhere(spark, out,
+        s"key < $n AND key % 2 = 0")                                 // v7: dead_bp ≈ 2500
+      val before = KvSource.maintenancePlan(out, retainLast = 50)
+      val (filesBefore, vOpt) = KvSource.optimizeBinPack(spark, out, 4) // v8
+      val after = KvSource.maintenancePlan(out, retainLast = 50)
+      val reloaded = KvSource.read(spark, out)
+      val st = KvSource.committedState(out)
+      ledger(spark, Seq(
         ("01_stage", "files", filesBefore),
         ("01_stage", "keys_deleted", nDel),
         ("02_plan", "compact_fired",
@@ -2609,10 +2309,8 @@ object SourceQueries {
         ("05_after", "quarter_probe_files_planned",
           reloaded.where(col("key") <= lit(n / 4)).rdd.getNumPartitions.toLong),
         ("05_after", "quarter_probe_rows",
-          reloaded.where(col("key") <= lit(n / 4)).count()))
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
+          reloaded.where(col("key") <= lit(n / 4)).count())))
+    }
 
   /** CHANGE FEED ACROSS AN ALTER (r17): the feed reads under the
     * LATEST schema (Delta's CDF rule) — pre-ALTER inserts null-fill
@@ -2623,33 +2321,26 @@ object SourceQueries {
     * post-images. Per-(version, change_type) rollups with key sums
     * and per-column null counts pin every rule; the r16 engine
     * refused this read outright. */
-  def cdfEvolvedOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-cdfevo").toString
-    val c = Tables.customer(spark, dir)
-    c.filter(col("c_custkey") % 2 === 0)
-      .selectExpr("c_custkey AS key", "c_name AS val")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v1
-    KvSource.alterAddColumn(out, "segment")                                  // v2
-    c.filter(col("c_custkey") % 2 === 1)
-      .selectExpr("c_custkey AS key", "c_name AS val",
-        "c_mktsegment AS segment")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v3
-    KvSource.deleteWhere(spark, out, "key % 10 = 5")                         // v4
-    val updates = c.filter(col("c_custkey") % 6 === 0)
-      .selectExpr("c_custkey AS key", "concat('m:', c_name) AS val",
-        "'M' AS segment")
-    KvSource.mergeUpsert(spark, out, updates)                                // v5
-    val feed = KvSource.changeFeed(spark, out, 0L, 5L)
-    materializeAndClean(
-      feed.groupBy(col("commit_version"), col("change_type"))
+  def cdfEvolvedOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-cdfevo") { case Seq(out) =>
+      val c = Tables.customer(spark, dir)
+      KvSource.append(c.filter(col("c_custkey") % 2 === 0)
+        .selectExpr("c_custkey AS key", "c_name AS val"), out)                 // v1
+      KvSource.alterAddColumn(out, "segment")                                  // v2
+      KvSource.append(c.filter(col("c_custkey") % 2 === 1)
+        .selectExpr("c_custkey AS key", "c_name AS val",
+          "c_mktsegment AS segment"), out)                                     // v3
+      KvSource.deleteWhere(spark, out, "key % 10 = 5")                         // v4
+      val updates = c.filter(col("c_custkey") % 6 === 0)
+        .selectExpr("c_custkey AS key", "concat('m:', c_name) AS val",
+          "'M' AS segment")
+      KvSource.mergeUpsert(spark, out, updates)                                // v5
+      KvSource.changeFeed(spark, out, 0L, 5L)
+        .groupBy(col("commit_version"), col("change_type"))
         .agg(count(lit(1)).as("n"), sum("key").cast("long").as("key_sum"),
           sum(when(col("segment").isNull, 1L).otherwise(0L)).as("null_segment"))
-        .orderBy("commit_version", "change_type"),
-      out)
-  }
+        .orderBy("commit_version", "change_type")
+    }
 
   /** ALTER TABLE DROP COLUMN (r17 — completing the schema-evolution
     * verb surface: ADD + RENAME + DROP, the Delta column-mapping safe
@@ -2668,69 +2359,50 @@ object SourceQueries {
     * drop provably survives the re-listed fold. Reference: Delta
     * DROP COLUMN under column mapping (metadata-only; physical data
     * retained until rewritten). */
-  def dropColumnOp(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-drop").toString
-    val c = Tables.customer(spark, dir)
-    val n = c.count()
-    c.selectExpr("c_custkey AS key", "c_name AS val")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v1
-    KvSource.alterAddColumn(out, "segment")                                  // v2
-    c.selectExpr(s"c_custkey + $n AS key", "c_name AS val",
-        "c_mktsegment AS segment")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v3
-    KvSource.alterAddColumn(out, "nat")                                      // v4
-    c.selectExpr(s"c_custkey + ${2 * n} AS key", "c_name AS val",
-        "c_mktsegment AS segment", "CAST(c_nationkey AS STRING) AS nat")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v5
-    val vDrop = KvSource.dropColumn(out, "segment")                          // v6
-    val proto = KvSource.protocolAt(out)
-    val afterDrop = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val dropCols = afterDrop.schema.fieldNames.toSeq
-    // counts captured EAGERLY: the scan pins its version at action
-    // time, so a count deferred into the rollup would read the final
-    // chain, not the post-drop snapshot
-    val rowsAtDrop = afterDrop.count()
-    val natAtDrop = afterDrop.filter(col("nat").isNotNull).count()
-    // POST-drop write of the LIVE columns: the writer's exposure map
-    // renders `\N` at the hidden slot, the physical layout unchanged
-    c.selectExpr(s"c_custkey + ${3 * n} AS key", "c_name AS val",
-        "CAST(c_nationkey AS STRING) AS nat")
-      .write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v7
-    // MERGE binds ONLY the live columns (Delta schema enforcement
-    // against the post-drop schema)
-    val updates = c.filter(col("c_custkey") % 7 === 0)
-      .selectExpr("c_custkey AS key", "concat('m:', c_name) AS val",
-        "'MG' AS nat")
-    val (matched, _, vMerge) = KvSource.mergeUpsert(spark, out, updates)     // v8
-    // change feed BEFORE the re-add: live schema, no segment column
-    val feed = KvSource.changeFeed(spark, out, vMerge - 1, vMerge)
-    val feedHasSegment = feed.schema.fieldNames.contains("segment")
-    val feedIns = feed.filter(col("change_type") === "insert").count()
-    val feedDel = feed.filter(col("change_type") === "delete").count()
-    // RE-ADD the dropped NAME: a fresh position (physical name
-    // uniquified through the name map); the old position stays hidden
-    KvSource.alterAddColumn(out, "segment")                                  // v9
-    import spark.implicits._
-    Seq.tabulate(3)(i => (5 * n + i, "tail", "T", "NEW"))
-      .toDF("key", "val", "nat", "segment")
-      .repartition(1).write.format(classOf[KvSource].getName)
-      .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save() // v10 (checkpoint)
-    val fin = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val finCols = fin.schema.fieldNames.toSeq
-    // time travel BELOW the drop (and below the merge rewrite) still
-    // reads the column and its values
-    val atV5 = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).option("versionAsOf", "5").load()
-    val hist = KvSource.describeHistory(out)
-    materializeAndClean(
-      Seq(
+  def dropColumnOp(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-drop") { case Seq(out) =>
+      val c = Tables.customer(spark, dir)
+      val (_, n) = appendEvolved(spark, dir, out)                              // v1..v3
+      KvSource.alterAddColumn(out, "nat")                                      // v4
+      KvSource.append(c.selectExpr(s"c_custkey + ${2 * n} AS key", "c_name AS val",
+        "c_mktsegment AS segment", "CAST(c_nationkey AS STRING) AS nat"), out) // v5
+      val vDrop = KvSource.dropColumn(out, "segment")                          // v6
+      val proto = KvSource.protocolAt(out)
+      val afterDrop = KvSource.read(spark, out)
+      val dropCols = afterDrop.schema.fieldNames.toSeq
+      // counts captured EAGERLY: the scan pins its version at action
+      // time, so a count deferred into the rollup would read the final
+      // chain, not the post-drop snapshot
+      val rowsAtDrop = afterDrop.count()
+      val natAtDrop = afterDrop.filter(col("nat").isNotNull).count()
+      // POST-drop write of the LIVE columns: the writer's exposure map
+      // renders `\N` at the hidden slot, the physical layout unchanged
+      KvSource.append(c.selectExpr(s"c_custkey + ${3 * n} AS key", "c_name AS val",
+        "CAST(c_nationkey AS STRING) AS nat"), out)                            // v7
+      // MERGE binds ONLY the live columns (Delta schema enforcement
+      // against the post-drop schema)
+      val updates = c.filter(col("c_custkey") % 7 === 0)
+        .selectExpr("c_custkey AS key", "concat('m:', c_name) AS val",
+          "'MG' AS nat")
+      val (matched, _, vMerge) = KvSource.mergeUpsert(spark, out, updates)     // v8
+      // change feed BEFORE the re-add: live schema, no segment column
+      val feed = KvSource.changeFeed(spark, out, vMerge - 1, vMerge)
+      val feedHasSegment = feed.schema.fieldNames.contains("segment")
+      val feedIns = feed.filter(col("change_type") === "insert").count()
+      val feedDel = feed.filter(col("change_type") === "delete").count()
+      // RE-ADD the dropped NAME: a fresh position (physical name
+      // uniquified through the name map); the old position stays hidden
+      KvSource.alterAddColumn(out, "segment")                                  // v9
+      import spark.implicits._
+      KvSource.append(Seq.tabulate(3)(i => (5 * n + i, "tail", "T", "NEW"))
+        .toDF("key", "val", "nat", "segment").repartition(1), out)            // v10 (checkpoint)
+      val fin = KvSource.read(spark, out)
+      val finCols = fin.schema.fieldNames.toSeq
+      // time travel BELOW the drop (and below the merge rewrite) still
+      // reads the column and its values
+      val atV5 = KvSource.read(spark, out, Some(5L))
+      val hist = KvSource.describeHistory(out)
+      ledger(spark, Seq(
         ("01_drop", "version", vDrop),
         ("01_drop", "reader_protocol", proto._1.toLong),
         ("01_drop", "writer_protocol", proto._2.toLong),
@@ -2754,8 +2426,6 @@ object SourceQueries {
         ("07_readd", "nat_nonnull",
           fin.filter(col("nat").isNotNull).count()),
         ("07_readd", "mg_nat", fin.filter(col("nat") === "MG").count()),
-        ("08_history", "drop_ops", hist.count(_._2 == "DROP COLUMN").toLong))
-        .toDF("stage", "metric", "value").orderBy("stage", "metric"),
-      out)
-  }
+        ("08_history", "drop_ops", hist.count(_._2 == "DROP COLUMN").toLong)))
+    }
 }

@@ -143,6 +143,25 @@ object KvSource {
   val schema: StructType = new StructType()
     .add("key", LongType).add("val", StringType)
 
+  /** Append `df` to the table at `path` in one DSv2 write job, which
+    * publishes one version. A `batchId` makes the write replay-safe:
+    * a batch id the chain already applied commits as a no-op. */
+  def append(df: org.apache.spark.sql.DataFrame, path: String,
+             batchId: Option[Long] = None): Unit = {
+    val w = df.write.format(classOf[KvSource].getName).option("path", path)
+    batchId.foreach(b => w.option("batchId", b.toString))
+    w.mode(org.apache.spark.sql.SaveMode.Append).save()
+  }
+
+  /** Batch read of the table at `path`: the latest snapshot, or the
+    * version `asOf` pins (time travel). */
+  def read(spark: org.apache.spark.sql.SparkSession, path: String,
+           asOf: Option[Long] = None): org.apache.spark.sql.DataFrame = {
+    val r = spark.read.format(classOf[KvSource].getName).option("path", path)
+    asOf.foreach(v => r.option("versionAsOf", v.toString))
+    r.load()
+  }
+
   /** Schema of a CHANGE-FEED read (`option("readChangeFeed", true)`,
     * the Delta CDF shape): the row plus its change type and the
     * version that committed it. */

@@ -3,8 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.Tables
+import graft.operators.SourceQueries.{customerKv, customerUpdates, ledger, scratch}
+import graft.sources.KvSource
 
 /** Streaming operators over the events table. Each operator has two
   * forms with identical semantics:
@@ -577,40 +579,6 @@ object Streams {
       """c_user = p_user AND
         |p_ts > c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR""".stripMargin),
       "left_outer")
-  }
-
-  /** Event funnel: per-user stage timestamps (signup → click →
-    * purchase, each stage's min ts must follow the previous stage's),
-    * aggregated to funnel counts — one groupBy, no self-joins. */
-  def funnel(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-    val stages = e.groupBy(col("user_id")).agg(
-      min(when(col("event_type") === "signup", col("us"))).as("t_signup"),
-      min(when(col("event_type") === "click", col("us"))).as("t_click"),
-      min(when(col("event_type") === "purchase", col("us"))).as("t_purchase"))
-    stages.agg(
-      count(when(col("t_signup").isNotNull, 1)).as("n_signup"),
-      count(when(col("t_signup").isNotNull && col("t_click") > col("t_signup"), 1)).as("n_click_after"),
-      count(when(col("t_signup").isNotNull && col("t_click") > col("t_signup") &&
-        col("t_purchase") > col("t_click"), 1)).as("n_purchase_after"))
-  }
-
-  /** Cohort retention: cohort = first-seen day (integer day number —
-    * exact arithmetic), retained = any activity in days [7, 14) after
-    * the cohort day. */
-  def retention(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"))
-    val firstSeen = e.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
-    val active = e.join(firstSeen, "user_id")
-      .filter(col("day") >= col("cohort_day") + 7 && col("day") < col("cohort_day") + 14)
-      .select(col("user_id")).distinct()
-      .withColumn("retained", lit(1L))
-    firstSeen.join(active, Seq("user_id"), "left")
-      .groupBy(col("cohort_day"))
-      .agg(count(lit(1)).as("n_users"), count(col("retained")).as("n_retained"))
-      .orderBy("cohort_day")
   }
 
   /** Windowed top-k: the top-3 event types per 1-hour tumbling window
@@ -1556,26 +1524,42 @@ object Streams {
     * Scale: the idempotence check is one manifest read (KB-sized) per
     * commit, independent of data volume; writes stream through the
     * task-commit protocol with nothing driver-side. */
-  def exactlyOnceSink(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-eos").toString
-    val ev = Tables.events(spark, dir)
+  def exactlyOnceSink(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-eos") { case Seq(out) =>
+      val ev = eventKv(spark, dir)
+      def writeBatch(b: Long): Unit =
+        KvSource.append(ev.filter(col("key") % 3 === b), out, batchId = Some(b))
+      writeBatch(0); writeBatch(1); writeBatch(2)
+      writeBatch(1) // the replayed micro-batch: must add ZERO rows
+      valRollup(KvSource.read(spark, out))
+    }
+
+  /** The events table as commit-log rows: (event_id, event_type) as
+    * (key, val), rows with either null dropped. */
+  private def eventKv(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
       .filter(col("event_id").isNotNull && col("event_type").isNotNull)
       .selectExpr("event_id AS key", "event_type AS val")
-    def writeBatch(b: Long): Unit =
-      ev.filter(col("key") % 3 === b)
-        .write.format(classOf[graft.sources.KvSource].getName)
-        .option("path", out).option("batchId", b.toString)
-        .mode(org.apache.spark.sql.SaveMode.Append).save()
-    writeBatch(0); writeBatch(1); writeBatch(2)
-    writeBatch(1) // the replayed micro-batch: must add ZERO rows
-    graft.operators.SourceQueries.materializeAndClean(
-      spark.read.format(classOf[graft.sources.KvSource].getName)
-        .option("path", out).load()
-        .groupBy(col("val"))
-        .agg(count(lit(1)).as("n"), sum(col("key")).as("key_sum"))
-        .orderBy("val"),
-      out)
-  }
+
+  /** Per-val row count and key sum, ordered by val: the exactly-once
+    * rollup the oracle recomputes from the events table. */
+  private def valRollup(df: DataFrame): DataFrame =
+    df.groupBy(col("val"))
+      .agg(count(lit(1)).as("n"), sum(col("key")).as("key_sum"))
+      .orderBy("val")
+
+  /** Run `stream` to completion (Trigger.AvailableNow) into the
+    * memory table `sinkName`, checkpointing at `ckpt`. */
+  private def drainToMemory(stream: DataFrame, sinkName: String, ckpt: String): Unit =
+    stream.writeStream.format("memory").queryName(sinkName)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** A fresh memory-sink name: `tag` plus a random suffix. */
+  private def sinkName(tag: String): String =
+    s"${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
   /** STREAMING EPOCHS RACING OPTIMIZE (r17 — the r16 verdict's item
     * 7): a LIVE streaming write commits epochs through the commit-log
@@ -1592,79 +1576,60 @@ object Streams {
     * where the rewrite lands: rows = seed + streamed exactly once
     * (distinct-key check), the OPTIMIZE version present in history.
     * The oracle recomputes totals from the events table. */
-  def streamSinkOccRace(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val src = java.nio.file.Files.createTempDirectory("graft-kv-race-src").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-race-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-race-ckpt").toString
-    val shift = 1000000000L
-    val ev = Tables.events(spark, dir)
-      .filter(col("event_id").isNotNull && col("event_type").isNotNull)
-      .selectExpr("event_id AS key", "event_type AS val")
-    (0L until 4L).foreach { m =>                       // target seed v1..v4
-      ev.filter(col("key") % 4 === m)
-        .selectExpr(s"key + $shift AS key", "val").repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    }
-    (0L until 6L).foreach { m =>                       // source v1..v6
-      ev.filter(col("key") % 6 === m).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", src).mode(org.apache.spark.sql.SaveMode.Append).save()
-    }
-    // the racing maintenance job: start mid-stream, retry the one
-    // legitimate surfaced-conflict shape until the rewrite lands
-    @volatile var optVersion = -1L
-    @volatile var lastErr: Throwable = null
-    val racer = new Thread(() => {
-      Thread.sleep(150)
-      var tries = 0
-      while (optVersion < 0 && tries < 20) {
-        // retry surfaced CONFLICTS; any other failure must not die
-        // silently on the daemon thread (the op would then emit
-        // optimize_ran=0 and fail the gate with a value mismatch that
-        // HIDES the real exception — r17 review finding)
-        try { optVersion = KvSource.optimizeBinPack(spark, out, 4)._2; lastErr = null }
-        catch { case scala.util.control.NonFatal(e) =>
-          lastErr = e; tries += 1; Thread.sleep(50)
-        }
+  def streamSinkOccRace(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-race-src", "graft-kv-race-out", "graft-kv-race-ckpt") { case Seq(src, out, ckpt) =>
+      val shift = 1000000000L
+      val ev = eventKv(spark, dir)
+      (0L until 4L).foreach { m =>                       // target seed v1..v4
+        KvSource.append(ev.filter(col("key") % 4 === m)
+          .selectExpr(s"key + $shift AS key", "val").repartition(1), out)
       }
-    })
-    racer.setDaemon(true)
-    racer.start()
-    val q = spark.readStream.format(classOf[KvSource].getName)
-      .option("path", src).option("maxVersionsPerTrigger", "1").load()
-      .writeStream.format(classOf[KvSource].getName)
-      .option("path", out).option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    racer.join(120000)
-    if (optVersion < 0 && lastErr != null)
-      throw new IllegalStateException(
-        "streamSinkOccRace: the OPTIMIZE racer never committed", lastErr)
-    val history = KvSource.describeHistory(out)
-    val rows = spark.read.format(classOf[KvSource].getName)
-      .option("path", out).load()
-    val n = rows.count()
-    val res = graft.operators.SourceQueries.materializeAndClean(
-      {
-        import spark.implicits._
-        Seq(
-          ("01_race", "optimize_ran", if (optVersion > 0) 1L else 0L),
-          ("01_race", "optimize_in_history",
-            if (history.exists(_._2 == "OPTIMIZE (BINPACK)")) 1L else 0L),
-          ("02_sink", "rows", n),
-          ("02_sink", "exactly_once",
-            if (rows.select("key").distinct().count() == n) 1L else 0L),
-          ("02_sink", "key_sum", rows.agg(sum("key")).head().getLong(0)))
-          .toDF("stage", "metric", "value").orderBy("stage", "metric")
-      },
-      out)
-    graft.operators.SourceQueries.deleteRecursively(new java.io.File(src))
-    graft.operators.SourceQueries.deleteRecursively(new java.io.File(ckpt))
-    res
-  }
+      (0L until 6L).foreach { m =>                       // source v1..v6
+        KvSource.append(ev.filter(col("key") % 6 === m).repartition(1), src)
+      }
+      // the racing maintenance job: start mid-stream, retry the one
+      // legitimate surfaced-conflict shape until the rewrite lands
+      @volatile var optVersion = -1L
+      @volatile var lastErr: Throwable = null
+      val racer = new Thread(() => {
+        Thread.sleep(150)
+        var tries = 0
+        while (optVersion < 0 && tries < 20) {
+          // retry surfaced CONFLICTS; any other failure must not die
+          // silently on the daemon thread (the op would then emit
+          // optimize_ran=0 and fail the gate with a value mismatch that
+          // HIDES the real exception — r17 review finding)
+          try { optVersion = KvSource.optimizeBinPack(spark, out, 4)._2; lastErr = null }
+          catch { case scala.util.control.NonFatal(e) =>
+            lastErr = e; tries += 1; Thread.sleep(50)
+          }
+        }
+      })
+      racer.setDaemon(true)
+      racer.start()
+      val q = spark.readStream.format(classOf[KvSource].getName)
+        .option("path", src).option("maxVersionsPerTrigger", "1").load()
+        .writeStream.format(classOf[KvSource].getName)
+        .option("path", out).option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      racer.join(120000)
+      if (optVersion < 0 && lastErr != null)
+        throw new IllegalStateException(
+          "streamSinkOccRace: the OPTIMIZE racer never committed", lastErr)
+      val history = KvSource.describeHistory(out)
+      val rows = KvSource.read(spark, out)
+      val n = rows.count()
+      ledger(spark, Seq(
+        ("01_race", "optimize_ran", if (optVersion > 0) 1L else 0L),
+        ("01_race", "optimize_in_history",
+          if (history.exists(_._2 == "OPTIMIZE (BINPACK)")) 1L else 0L),
+        ("02_sink", "rows", n),
+        ("02_sink", "exactly_once",
+          if (rows.select("key").distinct().count() == n) 1L else 0L),
+        ("02_sink", "key_sum", rows.agg(sum("key")).head().getLong(0))))
+    }
 
   /** Streaming SOURCE over the commit log (the read half that makes
     * [[graft.sources.KvSource]] a full streaming TABLE — the Delta
@@ -1682,34 +1647,18 @@ object Streams {
     * ADDED (delta manifests make that a header read, no state diff),
     * so tail latency is new-data-sized, never table-sized. */
   def streamSourceTail(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-tail").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-tail-ckpt").toString
-    val ev = Tables.events(spark, dir)
-      .filter(col("event_id").isNotNull && col("event_type").isNotNull)
-      .selectExpr("event_id AS key", "event_type AS val")
-    def append(m: Long): Unit =
-      ev.filter(col("key") % 4 === m)
-        .write.format(classOf[graft.sources.KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    append(0); append(1); append(2)
-    graft.sources.KvSource.optimizeCompact(spark, out) // v4: must be skipped
-    append(3)                                          // v5
-    val sinkName = s"kv_tail_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = spark.readStream.format(classOf[graft.sources.KvSource].getName)
-      .option("path", out).load()
-      .writeStream.format("memory").queryName(sinkName)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = graft.operators.SourceQueries.materializeAndClean(
-      spark.table(sinkName)
-        .groupBy(col("val"))
-        .agg(count(lit(1)).as("n"), sum(col("key")).as("key_sum"))
-        .orderBy("val"),
-      out)
-    spark.catalog.dropTempView(sinkName)
-    graft.operators.SourceQueries.deleteRecursively(new java.io.File(ckpt))
+    val sink = sinkName("kv_tail")
+    val res = scratch("graft-kv-tail", "graft-kv-tail-ckpt") { case Seq(out, ckpt) =>
+      val ev = eventKv(spark, dir)
+      def append(m: Long): Unit = KvSource.append(ev.filter(col("key") % 4 === m), out)
+      append(0); append(1); append(2)
+      KvSource.optimizeCompact(spark, out) // v4: must be skipped
+      append(3)                            // v5
+      drainToMemory(spark.readStream.format(classOf[KvSource].getName)
+        .option("path", out).load(), sink, ckpt)
+      valRollup(spark.table(sink))
+    }
+    spark.catalog.dropTempView(sink)
     res
   }
 
@@ -1731,36 +1680,25 @@ object Streams {
     * the snapshot plans from ONE checkpoint manifest read; the deltas
     * stay new-data-sized. */
   def streamSourceSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-snap").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-snap-ckpt").toString
-    val ev = Tables.events(spark, dir)
-      .filter(col("event_id").isNotNull && col("event_type").isNotNull)
-      .selectExpr("event_id AS key", "event_type AS val")
-    (0L until 12L).foreach { m =>
-      ev.filter(col("key") % 12 === m)
-        .write.format(classOf[graft.sources.KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+    val sink = sinkName("kv_snap")
+    val res = scratch("graft-kv-snap", "graft-kv-snap-ckpt") { case Seq(out, ckpt) =>
+      val ev = eventKv(spark, dir)
+      (0L until 12L).foreach(m => KvSource.append(ev.filter(col("key") % 12 === m), out))
+      vacuumToCheckpoint(out)
+      drainToMemory(spark.readStream.format(classOf[KvSource].getName)
+        .option("path", out).load(), sink, ckpt)
+      valRollup(spark.table(sink))
     }
-    val (dropped, _, oldest) = graft.sources.KvSource.vacuum(out, retainLast = 3)
+    spark.catalog.dropTempView(sink)
+    res
+  }
+
+  /** vacuum(retainLast=3) on a 12-version chain: manifests v1–v9 go,
+    * the v10 checkpoint becomes the oldest readable version. */
+  private def vacuumToCheckpoint(out: String): Unit = {
+    val (dropped, _, oldest) = KvSource.vacuum(out, retainLast = 3)
     require(dropped == 9L && oldest == 10L,
       s"retention sweep off-protocol: dropped=$dropped oldest=$oldest")
-    val sinkName = s"kv_snap_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = spark.readStream.format(classOf[graft.sources.KvSource].getName)
-      .option("path", out).load()
-      .writeStream.format("memory").queryName(sinkName)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = graft.operators.SourceQueries.materializeAndClean(
-      spark.table(sinkName)
-        .groupBy(col("val"))
-        .agg(count(lit(1)).as("n"), sum(col("key")).as("key_sum"))
-        .orderBy("val"),
-      out)
-    spark.catalog.dropTempView(sinkName)
-    graft.operators.SourceQueries.deleteRecursively(new java.io.File(ckpt))
-    res
   }
 
   /** Streaming CHANGE-FEED consumer (the Delta `readChangeFeed`
@@ -1780,39 +1718,22 @@ object Streams {
     * one version range's files; delete materialization is per-file
     * distributed. */
   def streamCdfConsume(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-cdfstream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-cdfstream-ckpt").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    def append(df: DataFrame): Unit =
-      df.write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    append(c.filter(col("key") % 2 === 0)) // v1
-    append(c.filter(col("key") % 2 === 1)) // v2
-    KvSource.deleteWhere(spark, out, "key % 5 = 0") // v3: DV delete
-    KvSource.mergeUpsert(spark, out, // v4: MERGE with sidecars
-      Tables.customer(spark, dir).filter(col("c_custkey") % 3 === 0)
-        .selectExpr("c_custkey AS key", "'UPDATED' AS val")
-        .unionByName(Tables.customer(spark, dir)
-          .filter(col("c_custkey") % 11 === 0)
-          .selectExpr("c_custkey + 10000000 AS key", "'NEWROW' AS val")))
-    val sinkName = s"kv_cdf_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = spark.readStream.format(classOf[KvSource].getName)
-      .option("path", out).option("readChangeFeed", "true").load()
-      .writeStream.format("memory").queryName(sinkName)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = graft.operators.SourceQueries.materializeAndClean(
-      spark.table(sinkName)
+    val sink = sinkName("kv_cdf")
+    val res = scratch("graft-kv-cdfstream", "graft-kv-cdfstream-ckpt") { case Seq(out, ckpt) =>
+      val c = customerKv(spark, dir)
+      KvSource.append(c.filter(col("key") % 2 === 0), out) // v1
+      KvSource.append(c.filter(col("key") % 2 === 1), out) // v2
+      KvSource.deleteWhere(spark, out, "key % 5 = 0")     // v3: DV delete
+      KvSource.mergeUpsert(spark, out,                    // v4: MERGE with sidecars
+        customerUpdates(spark, dir))
+      drainToMemory(spark.readStream.format(classOf[KvSource].getName)
+        .option("path", out).option("readChangeFeed", "true").load(), sink, ckpt)
+      spark.table(sink)
         .groupBy(col("commit_version"), col("change_type"))
         .agg(count(lit(1)).as("n"), sum(col("key")).as("key_sum"))
-        .orderBy("commit_version", "change_type"),
-      out)
-    spark.catalog.dropTempView(sinkName)
-    graft.operators.SourceQueries.deleteRecursively(new java.io.File(ckpt))
+        .orderBy("commit_version", "change_type")
+    }
+    spark.catalog.dropTempView(sink)
     res
   }
 
@@ -1829,50 +1750,30 @@ object Streams {
     * all recomputed from the events table by the oracle. Scale: each
     * admitted batch plans one version's files; admission state is two
     * longs. */
-  def streamSourceRateLimit(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-rate").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-rate-ckpt").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-kv-rate-sink").toString
-    val ev = Tables.events(spark, dir)
-      .filter(col("event_id").isNotNull && col("event_type").isNotNull)
-      .selectExpr("event_id AS key", "event_type AS val")
-    (0L until 3L).foreach { m =>
-      ev.filter(col("key") % 3 === m)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
+  def streamSourceRateLimit(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-rate", "graft-kv-rate-ckpt", "graft-kv-rate-sink") { case Seq(out, ckpt, sinkDir) =>
+      val ev = eventKv(spark, dir)
+      (0L until 3L).foreach(m => KvSource.append(ev.filter(col("key") % 3 === m), out))
+      val q = spark.readStream.format(classOf[KvSource].getName)
+        .option("path", out).option("maxVersionsPerTrigger", "1").load()
+        .writeStream.format(classOf[KvSource].getName)
+        .option("path", sinkDir).option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // one sink version per non-empty epoch — the observable batch count
+      val epochs = KvSource.versions(sinkDir)
+        .count(v => KvSource.readManifest(sinkDir, v).adds.nonEmpty).toLong
+      val rolled = KvSource.read(spark, sinkDir)
+        .agg(count(lit(1)).as("rows"), sum(col("key")).as("key_sum"),
+          countDistinct(col("val")).as("n_types")).head()
+      ledger(spark, Seq(
+        ("01_source", "versions", 3L),
+        ("02_run", "non_empty_epochs", epochs),
+        ("03_sink", "key_sum", rolled.getLong(1)),
+        ("03_sink", "n_types", rolled.getLong(2)),
+        ("03_sink", "rows", rolled.getLong(0))))
     }
-    val q = spark.readStream.format(classOf[KvSource].getName)
-      .option("path", out).option("maxVersionsPerTrigger", "1").load()
-      .writeStream.format(classOf[KvSource].getName)
-      .option("path", sinkDir).option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // one sink version per non-empty epoch — the observable batch count
-    val epochs = KvSource.versions(sinkDir)
-      .count(v => KvSource.readManifest(sinkDir, v).adds.nonEmpty).toLong
-    val sunk = spark.read.format(classOf[KvSource].getName)
-      .option("path", sinkDir).load()
-    val rolled = sunk.agg(count(lit(1)).as("rows"), sum(col("key")).as("key_sum"),
-      countDistinct(col("val")).as("n_types")).head()
-    val res = graft.operators.SourceQueries.materializeAndClean(
-      {
-        import spark.implicits._
-        Seq(
-          ("01_source", "versions", 3L),
-          ("02_run", "non_empty_epochs", epochs),
-          ("03_sink", "key_sum", rolled.getLong(1)),
-          ("03_sink", "n_types", rolled.getLong(2)),
-          ("03_sink", "rows", rolled.getLong(0)))
-          .toDF("stage", "metric", "value")
-          .orderBy("stage", "metric")
-      },
-      out)
-    graft.operators.SourceQueries.deleteRecursively(new java.io.File(sinkDir))
-    graft.operators.SourceQueries.deleteRecursively(new java.io.File(ckpt))
-    res
-  }
 
   /** RATE-LIMITED INITIAL SNAPSHOT (r15 verdict item 8, the row-source
     * half): a fresh consumer of a VACUUMED chain starts from the
@@ -1890,64 +1791,47 @@ object Streams {
     * recovering consumer of a 100 TB checkpoint is exactly this
     * geometry scaled up — without the cursor its first batch plans the
     * whole table. */
-  def streamSourceSnapshotPaced(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-pace").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-pace-ckpt").toString
-    val ev = Tables.events(spark, dir)
-      .filter(col("event_id").isNotNull && col("event_type").isNotNull)
-      .selectExpr("event_id AS key", "event_type AS val")
-    (0L until 12L).foreach { m =>
-      // one file per version (repartition(1)): the pinned constants
-      // (10 snapshot files, 6 batches at rate 2) are the staging
-      // geometry — at an SF where events spans multiple input
-      // partitions an unrepartitioned append would commit several
-      // files per version and the ledger would drift (r16 review)
-      ev.filter(col("key") % 12 === m).repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    }
-    val (dropped, _, oldest) = KvSource.vacuum(out, retainLast = 3)
-    require(dropped == 9L && oldest == 10L,
-      s"retention sweep off-protocol: dropped=$dropped oldest=$oldest")
-    var batches = 0L
-    var maxFilesPerBatch = 0L
-    var rows = 0L
-    var keySum = 0L
-    val q = spark.readStream.format(classOf[KvSource].getName)
-      .option("path", out).option("maxVersionsPerTrigger", "2").load()
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val agg = df.agg(count(lit(1)), sum(col("key"))).head()
-        if (agg.getLong(0) > 0) {
-          batches += 1
-          maxFilesPerBatch =
-            math.max(maxFilesPerBatch, df.rdd.getNumPartitions.toLong)
-          rows += agg.getLong(0)
-          keySum += agg.getLong(1)
-        }
-        ()
+  def streamSourceSnapshotPaced(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-pace", "graft-kv-pace-ckpt") { case Seq(out, ckpt) =>
+      val ev = eventKv(spark, dir)
+      (0L until 12L).foreach { m =>
+        // one file per version (repartition(1)): the pinned constants
+        // (10 snapshot files, 6 batches at rate 2) are the staging
+        // geometry — at an SF where events spans multiple input
+        // partitions an unrepartitioned append would commit several
+        // files per version and the ledger would drift (r16 review)
+        KvSource.append(ev.filter(col("key") % 12 === m).repartition(1), out)
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val res = graft.operators.SourceQueries.materializeAndClean(
-      {
-        import spark.implicits._
-        Seq(
-          ("01_source", "snapshot_files", 10L),
-          ("02_run", "batches", batches),
-          ("02_run", "max_files_per_batch", maxFilesPerBatch),
-          ("03_sink", "key_sum", keySum),
-          ("03_sink", "rows", rows))
-          .toDF("stage", "metric", "value")
-          .orderBy("stage", "metric")
-      },
-      out)
-    graft.operators.SourceQueries.deleteRecursively(new java.io.File(ckpt))
-    res
-  }
+      vacuumToCheckpoint(out)
+      var batches = 0L
+      var maxFilesPerBatch = 0L
+      var rows = 0L
+      var keySum = 0L
+      val q = spark.readStream.format(classOf[KvSource].getName)
+        .option("path", out).option("maxVersionsPerTrigger", "2").load()
+        .writeStream
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val agg = df.agg(count(lit(1)), sum(col("key"))).head()
+          if (agg.getLong(0) > 0) {
+            batches += 1
+            maxFilesPerBatch =
+              math.max(maxFilesPerBatch, df.rdd.getNumPartitions.toLong)
+            rows += agg.getLong(0)
+            keySum += agg.getLong(1)
+          }
+          ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      ledger(spark, Seq(
+        ("01_source", "snapshot_files", 10L),
+        ("02_run", "batches", batches),
+        ("02_run", "max_files_per_batch", maxFilesPerBatch),
+        ("03_sink", "key_sum", keySum),
+        ("03_sink", "rows", rows)))
+    }
 
   /** STREAMING CDF TAIL MODE (r15 verdict item 8, the CDF half —
     * Delta's `startingVersion=latest`): a consumer that declares
@@ -1962,74 +1846,59 @@ object Streams {
     * by the oracle from the change rules. On a chain with years of
     * history this is the difference between an incremental consumer
     * starting in seconds and replaying a 100 TB feed. */
-  def streamCdfTail(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.KvSource
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-cdftail").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-cdftail-ckpt").toString
-    val c = Tables.customer(spark, dir)
-      .selectExpr("c_custkey AS key", "c_mktsegment AS val")
-    def append(df: DataFrame): Unit =
-      df.write.format(classOf[KvSource].getName)
-        .option("path", out).mode(org.apache.spark.sql.SaveMode.Append).save()
-    append(c.filter(col("key") % 2 === 0)) // v1 — history the tail skips
-    append(c.filter(col("key") % 2 === 1)) // v2
-    // foreachBatch (not a memory sink): the tail pattern NEEDS a
-    // checkpoint RESTART, which memory-sink queries refuse; each batch
-    // contributes a bounded (change_type, version)-grain rollup
-    val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Long)]
-    def drain(): Long = {
-      var rows = 0L
-      val q = spark.readStream.format(classOf[KvSource].getName)
-        .option("path", out).option("readChangeFeed", "true")
-        .option("startingVersion", "latest").load()
-        .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.groupBy(col("change_type"), col("commit_version"))
-            .agg(count(lit(1)), sum(col("key")))
-            .collect()
-            .foreach { r =>
-              rows += r.getLong(2)
-              acc += ((r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-            }
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      rows
+  def streamCdfTail(spark: SparkSession, dir: String): DataFrame =
+    scratch("graft-kv-cdftail", "graft-kv-cdftail-ckpt") { case Seq(out, ckpt) =>
+      val c = customerKv(spark, dir)
+      KvSource.append(c.filter(col("key") % 2 === 0), out) // v1 — history the tail skips
+      KvSource.append(c.filter(col("key") % 2 === 1), out) // v2
+      // foreachBatch (not a memory sink): the tail pattern NEEDS a
+      // checkpoint RESTART, which memory-sink queries refuse; each batch
+      // contributes a bounded (change_type, version)-grain rollup
+      val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Long)]
+      def drain(): Long = {
+        var rows = 0L
+        val q = spark.readStream.format(classOf[KvSource].getName)
+          .option("path", out).option("readChangeFeed", "true")
+          .option("startingVersion", "latest").load()
+          .writeStream
+          .foreachBatch { (df: DataFrame, _: Long) =>
+            df.groupBy(col("change_type"), col("commit_version"))
+              .agg(count(lit(1)), sum(col("key")))
+              .collect()
+              .foreach { r =>
+                rows += r.getLong(2)
+                acc += ((r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+              }
+            ()
+          }
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        rows
+      }
+      val run1 = drain() // 0 — history skipped by declaration
+      KvSource.deleteWhere(spark, out, "key % 7 = 0") // v3
+      KvSource.append(c.filter(col("key") % 2 === 0)
+        .selectExpr("key + 10000000 AS key", "val"), out) // v4
+      acc.clear()
+      drain()
+      def rollup(tpe: String, keyAdjust: Long): (Long, Long, Long) = {
+        val rs = acc.filter(_._1 == tpe)
+        (rs.map(_._3).sum, rs.map(r => r._4 - keyAdjust * r._3).sum,
+          rs.map(_._2).distinct.size.toLong)
+      }
+      val del = rollup("delete", 0L)
+      val ins = rollup("insert", 10000000L)
+      ledger(spark, Seq(
+        ("01_run1", "history_rows", run1),
+        ("02_run2", "delete_key_sum", del._2),
+        ("02_run2", "delete_rows", del._1),
+        ("02_run2", "delete_versions", del._3),
+        ("02_run2", "insert_base_key_sum", ins._2),
+        ("02_run2", "insert_rows", ins._1),
+        ("02_run2", "insert_versions", ins._3)))
     }
-    val run1 = drain() // 0 — history skipped by declaration
-    KvSource.deleteWhere(spark, out, "key % 7 = 0") // v3
-    append(c.filter(col("key") % 2 === 0)
-      .selectExpr("key + 10000000 AS key", "val"))  // v4
-    acc.clear()
-    drain()
-    def rollup(tpe: String, keyAdjust: Long): (Long, Long, Long) = {
-      val rs = acc.filter(_._1 == tpe)
-      (rs.map(_._3).sum, rs.map(r => r._4 - keyAdjust * r._3).sum,
-        rs.map(_._2).distinct.size.toLong)
-    }
-    val del = rollup("delete", 0L)
-    val ins = rollup("insert", 10000000L)
-    val res = graft.operators.SourceQueries.materializeAndClean(
-      {
-        import spark.implicits._
-        Seq(
-          ("01_run1", "history_rows", run1),
-          ("02_run2", "delete_key_sum", del._2),
-          ("02_run2", "delete_rows", del._1),
-          ("02_run2", "delete_versions", del._3),
-          ("02_run2", "insert_base_key_sum", ins._2),
-          ("02_run2", "insert_rows", ins._1),
-          ("02_run2", "insert_versions", ins._3))
-          .toDF("stage", "metric", "value")
-          .orderBy("stage", "metric")
-      },
-      out)
-    graft.operators.SourceQueries.deleteRecursively(new java.io.File(ckpt))
-    res
-  }
 
   /** TTL-WINDOWED streaming dedup, batch form (the
     * dropDuplicatesWithinWatermark shape made deterministic): a

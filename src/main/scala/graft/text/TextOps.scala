@@ -1027,11 +1027,10 @@ object TextOps {
     * corpus runs BEFORE dedup and quality gating (nav bars, cookie
     * banners, footers repeat across a site's every page; they inflate
     * n-gram counts, poison near-dup similarity, and train the model
-    * on "accept all cookies" — cf. the segment machinery of
-    * [[graft.dedup.Dedup.paragraphDedup]], which finds the REPEATS;
-    * this op turns them into a per-DOC removal signal): a doc's 8-word
-    * segments (capped at 16 — the same bound the paragraph-dedup
-    * oracle pins) hash to md5 keys; a segment is boilerplate when its
+    * on "accept all cookies" — C4-style paragraph dedup finds the
+    * REPEATS; this op turns them into a per-DOC removal signal): a
+    * doc's 8-word segments (capped at 16 per doc) hash to md5 keys;
+    * a segment is boilerplate when its
     * hash appears in ≥ 3 DISTINCT documents corpus-wide; each doc
     * reports its segment count, boilerplate-segment count, and
     * boilerplate share in bp — the downstream gate drops or strips

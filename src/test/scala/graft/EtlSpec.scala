@@ -139,6 +139,17 @@ class EtlSpec extends AnyFunSuite {
     assert(err.getMessage.contains("region"), err.getMessage)
   }
 
+  test("Migration.manifest leaves no imported warehouse copy in the temp dir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def imports(): Set[String] = Option(tmp.list()).getOrElse(Array.empty[String])
+      .filter(_.startsWith("graft-import")).toSet
+    val before = imports()
+    val manifest = graft.etl.Migration.manifest(spark, sf).collect()
+    assert(manifest.length == 10)
+    assert((imports() -- before).isEmpty,
+      s"import copies left behind: ${(imports() -- before).mkString(", ")}")
+  }
+
   test("cosine_sim is callable from SQL after registration") {
     graft.functions.VectorExprs.register(spark)
     val r = spark.sql("SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")

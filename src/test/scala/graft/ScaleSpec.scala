@@ -176,11 +176,11 @@ class ScaleSpec extends AnyFunSuite {
       // any parallelism
       "text_chunking", "text_tfidf", "embed_quantize_int8",
       "dedup_semantic_cluster", "embed_kmeans_train", "stream_late_audit",
-      // round 8: paragraph hashes, z-buckets, PPS sample, deid batch
-      // fingerprints — and the continuation's LM scores, bucket
-      // checksums, CDC merge, JL projection, anomaly flags, fuzzy
-      // pairs: all bit-stable at any parallelism
-      "dedup_paragraph", "layout_zorder",
+      // round 8: z-buckets, PPS sample, deid batch fingerprints — and
+      // the continuation's LM scores, bucket checksums, CDC merge, JL
+      // projection, anomaly flags, fuzzy pairs: all bit-stable at any
+      // parallelism
+      "layout_zorder",
       "sample_weighted", "stream_deid_pipeline", "text_lm_score",
       "ingest_checksum_reconcile", "load_cdc_apply",
       "embed_random_projection", "stream_rate_anomaly", "dedup_fuzzy_link",
@@ -255,8 +255,8 @@ class ScaleSpec extends AnyFunSuite {
   test("substring dedup catches misaligned boilerplate that paragraph dedup misses") {
     import spark.implicits._
     // one 200-char boilerplate block inserted at offsets differing by
-    // 44 (≠ 0 mod any word/segment grid) — aligned segment hashing
-    // (dedup_paragraph) and a fixed stride grid both miss it; content-
+    // 44 (≠ 0 mod any word/segment grid) — hashing aligned 8-word
+    // segments and a fixed stride grid both miss it; content-
     // defined anchors land at the same in-block positions regardless
     // of the enclosing offset, so the windows match exactly
     val boiler = ("the quick brown fox jumps over the lazy dog again and again " * 4).take(200)

@@ -12,13 +12,11 @@ import graft.streaming.Streams
   */
 class Widening13Spec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def readAll(dir: String) =
-    spark.read.format(classOf[KvSource].getName).option("path", dir).load()
+  import KvFixture._
 
   test("two concurrent committers: the CAS loser retries, nobody's files are erased") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-kv-race").toString
+    val dir = tmp("kv-race")
     // two writers, 40 commits each, racing on the same path. Every
     // commit merges one new (pre-staged) file. Under last-writer-wins
     // this loses files; under the CAS chain it must keep all 80.
@@ -60,15 +58,11 @@ class Widening13Spec extends AnyFunSuite {
   }
 
   test("time travel: versionAsOf pins a historical snapshot; bad version fails clearly") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-kv-tt-spec").toString
-    def append(lo: Long, hi: Long): Unit =
-      spark.range(lo, hi).selectExpr("id AS key", "CAST(id % 2 AS STRING) AS val")
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    val dir = tmp("kv-tt-spec")
+    def append(lo: Long, hi: Long): Unit = KvSource.append(
+      spark.range(lo, hi).selectExpr("id AS key", "CAST(id % 2 AS STRING) AS val"), dir)
     append(0, 10); append(10, 25)
-    def at(v: Long) = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).option("versionAsOf", v.toString).load()
+    def at(v: Long) = KvSource.read(spark, dir, Some(v))
     assert(at(1).count() == 10, "v1 = first job only")
     assert(at(2).count() == 25 && readAll(dir).count() == 25)
     assert(at(1).agg(sum(col("key"))).head().getLong(0) == (0L until 10L).sum)
@@ -99,14 +93,12 @@ class Widening13Spec extends AnyFunSuite {
   test("streaming exactly-once: a replayed foreachBatch micro-batch adds zero rows") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-eos-spec").toString
+    val dir = tmp("kv-eos-spec")
     val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
     @volatile var lastBatch = -1L
     def sinkWrite(df: org.apache.spark.sql.DataFrame, batchId: Long): Unit =
-      df.selectExpr("value AS key", "CAST(value % 3 AS STRING) AS val")
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).option("batchId", batchId.toString)
-        .mode(org.apache.spark.sql.SaveMode.Append).save()
+      KvSource.append(df.selectExpr("value AS key", "CAST(value % 3 AS STRING) AS val"),
+        dir, batchId = Some(batchId))
     val q = src.toDS().toDF("value")
       .writeStream
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
@@ -129,8 +121,7 @@ class Widening13Spec extends AnyFunSuite {
   }
 
   test("writer fails fast on null or newline val; the failed task publishes nothing") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-kv-valid").toString
+    val dir = tmp("kv-valid")
     val w1 = new KvDataWriter(dir, 0, 0L)
     val eNull = intercept[IllegalArgumentException] {
       w1.write(org.apache.spark.sql.catalyst.InternalRow(1L, null))
@@ -148,25 +139,17 @@ class Widening13Spec extends AnyFunSuite {
       "no failed writer published a file")
     // end-to-end: the engine surfaces the error and the read stays empty
     val thrown = intercept[Exception] {
-      spark.range(3).selectExpr("id AS key",
-        "CASE WHEN id = 1 THEN CAST(NULL AS STRING) ELSE 'x' END AS val")
-        .repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+      save(spark.range(3).selectExpr("id AS key",
+        "CASE WHEN id = 1 THEN CAST(NULL AS STRING) ELSE 'x' END AS val"), dir)
     }
     assert(thrown != null)
     assert(readAll(dir).count() == 0, "aborted job left nothing visible")
   }
 
   test("task file names carry the query id: two applications never collide") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-kv-qid").toString
-    spark.range(5).selectExpr("id AS key", "'a' AS val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
-    spark.range(5, 9).selectExpr("id AS key", "'b' AS val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    val dir = tmp("kv-qid")
+    save(spark.range(5).selectExpr("id AS key", "'a' AS val"), dir)
+    save(spark.range(5, 9).selectExpr("id AS key", "'b' AS val"), dir)
     val files = KvSource.committedFiles(dir)
     assert(files.size == 2 && files.distinct.size == 2,
       s"distinct task file names across applications: $files")

@@ -12,17 +12,10 @@ import graft.operators.SourceQueries
   */
 class Widening14Spec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def readAll(dir: String) =
-    spark.read.format(classOf[KvSource].getName).option("path", dir).load()
-
-  private def stage(dir: String, name: String, key: Long): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
-      s"$key,x\n".getBytes("UTF-8"))
+  import KvFixture._
 
   test("a 200-commit chain resolves from the checkpoint, not the full walk") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-kv-200").toString
+    val dir = tmp("kv-200")
     (1 to 200).foreach { i =>
       val name = s"part-long-$i.dat"
       stage(dir, name, i.toLong)
@@ -42,12 +35,11 @@ class Widening14Spec extends AnyFunSuite {
     KvSource.manifestFile(dir, 200L).delete()
     val e = intercept[IllegalArgumentException] { KvSource.committedFiles(dir) }
     assert(e.getMessage.contains("v200"), s"error must name the fold base: ${e.getMessage}")
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("vacuum drops below-base manifests and strays, keeps the horizon readable") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-kv-vac").toString
+    val dir = tmp("kv-vac")
     (1 to 23).foreach { i =>
       val name = s"part-vac-$i.dat"
       stage(dir, name, i.toLong)
@@ -79,14 +71,14 @@ class Widening14Spec extends AnyFunSuite {
     assert(e.getMessage.contains("versionAsOf=15"))
     // idempotent: a second vacuum finds nothing to do
     assert(KvSource.vacuum(dir, retainLast = 4) == ((0L, 0L, 20L)))
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("writeStream commits epochs through the CAS chain; a forced epoch replay adds zero rows") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-sw").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-sw-ckpt").toString
+    val dir = tmp("kv-sw")
+    val ckpt = tmp("kv-sw-ckpt")
     val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
     def stopped(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
       q.stop()
@@ -122,8 +114,8 @@ class Widening14Spec extends AnyFunSuite {
     val q3 = start()
     src.addData(21L to 25L: _*); q3.processAllAvailable(); stopped(q3)
     assert(readAll(dir).count() == 25)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
-    SourceQueries.deleteRecursively(new java.io.File(ckpt))
+    rm(dir)
+    rm(ckpt)
   }
 
   test("layout_stats_sweep: per-table row counts pinned; no Expand in the plan") {
@@ -311,8 +303,7 @@ class Widening14Spec extends AnyFunSuite {
   }
 
   test("replay ledger is scoped per writer: same batch number from another app appends") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-kv-txn").toString
+    val dir = tmp("kv-txn")
     def commit(name: String, key: String): Long = {
       stage(dir, name, 1L)
       KvSource.commitVersionKeyed(dir, Seq(KvSource.PartMeta(name)), Some(key))
@@ -335,17 +326,12 @@ class Widening14Spec extends AnyFunSuite {
     stage(dir, "part-legacy-replay.dat", 7L)
     KvSource.commitVersion(dir, Seq("part-legacy-replay.dat"), Some(7L))
     assert(KvSource.committedFiles(dir).size == 3, "legacy batch 7 replay added rows")
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("OPTIMIZE is atomic: no version double-counts; conflicts and vacuum behave") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-kv-opt").toString
-    def append(lo: Long, hi: Long): Unit =
-      spark.range(lo, hi).selectExpr("id AS key", "'x' AS val").repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
-    (0 until 6).foreach(i => append(i * 10L, i * 10L + 10L))
+    val dir = tmp("kv-opt")
+    (0 until 6).foreach(i => append(dir, i * 10L, i * 10L + 10L))
     val oldFiles = KvSource.committedFiles(dir)
     assert(oldFiles.size == 6)
     val (removed, v) = KvSource.optimizeCompact(spark, dir)
@@ -358,11 +344,7 @@ class Widening14Spec extends AnyFunSuite {
     assert(KvSource.committedFiles(dir, Some(7L)) ==
       KvSource.committedFiles(dir))
     assert(KvSource.committedFiles(dir).size == 1)
-    def rows(asOf: Option[Long]): Long = {
-      val r = spark.read.format(classOf[KvSource].getName).option("path", dir)
-      asOf.foreach(x => r.option("versionAsOf", x.toString))
-      r.load().count()
-    }
+    def rows(asOf: Option[Long]): Long = KvSource.read(spark, dir, asOf).count()
     assert(rows(None) == 60L && rows(Some(6L)) == 60L && rows(Some(3L)) == 30L)
     // a second commit that tries to remove the ALREADY-REPLACED files
     // is a conflict, not a silent no-op
@@ -381,27 +363,22 @@ class Widening14Spec extends AnyFunSuite {
     // grow the chain past the next checkpoint (v10) so the horizon can
     // actually advance, then a tight retention reclaims the replaced
     // files; latest stays fully readable
-    (6 until 9).foreach(i => append(i * 10L, i * 10L + 10L)) // v8..v10
+    (6 until 9).foreach(i => append(dir, i * 10L, i * 10L + 10L)) // v8..v10
     assert(KvSource.versions(dir).last == 10L)
     val (droppedM, strays1, oldest) = KvSource.vacuum(dir, retainLast = 1)
     assert(oldest == 10L && droppedM == 9L)
     assert(strays1 == 6L, s"expected the 6 replaced files reclaimed, got $strays1")
     assert(rows(None) == 90L)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("readStream tails the commit log: resume delivers only NEW versions; rewrites skipped") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-kv-tailspec").toString
-    val ckpt = Files.createTempDirectory("graft-kv-tailspec-ckpt").toString
-    def append(lo: Long, hi: Long): Unit =
-      spark.range(lo, hi).selectExpr("id AS key", "'x' AS val").repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    val dir = tmp("kv-tailspec")
+    val ckpt = tmp("kv-tailspec-ckpt")
     // sink = a SECOND kv table: the memory sink can't recover from a
     // checkpoint, and piping kv → kv exercises BOTH streaming halves
     // (micro-batch source + epoch-committing sink) end to end
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-kv-tailsink").toString
+    val sinkDir = tmp("kv-tailsink")
     def runOnce(): Unit = {
       val q = spark.readStream.format(classOf[KvSource].getName)
         .option("path", dir).load()
@@ -412,23 +389,22 @@ class Widening14Spec extends AnyFunSuite {
         .start()
       q.awaitTermination()
     }
-    def sinkRows() = spark.read.format(classOf[KvSource].getName)
-      .option("path", sinkDir).load()
-    append(0, 10); append(10, 20)
+    def sinkRows() = readAll(sinkDir)
+    append(dir, 0, 10); append(dir, 10, 20)
     runOnce()
     assert(sinkRows().count() == 20)
     // between runs: an OPTIMIZE (must deliver NOTHING) + a real append
     KvSource.optimizeCompact(spark, dir)
-    append(20, 25)
+    append(dir, 20, 25)
     runOnce()
     // resume from the checkpoint: exactly the 5 new rows, no
     // re-delivery of the first 20 and none of the rewrite's copies
     assert(sinkRows().count() == 25,
       s"expected 25 rows after resume, got ${sinkRows().count()}")
     assert(sinkRows().agg(sum(col("key"))).head().getLong(0) == (0L until 25L).sum)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
-    SourceQueries.deleteRecursively(new java.io.File(sinkDir))
-    SourceQueries.deleteRecursively(new java.io.File(ckpt))
+    rm(dir)
+    rm(sinkDir)
+    rm(ckpt)
   }
 
   test("load_manifest_compaction ledger matches the protocol constants") {

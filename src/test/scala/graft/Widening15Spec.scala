@@ -14,21 +14,10 @@ import graft.operators.SourceQueries
   */
 class Widening15Spec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def readAll(dir: String) =
-    spark.read.format(classOf[KvSource].getName).option("path", dir).load()
-
-  private def append(dir: String, lo: Long, hi: Long): Unit =
-    spark.range(lo, hi).selectExpr("id AS key", "'x' AS val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
-
-  private def stage(dir: String, name: String, key: Long): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
-      s"$key,x\n".getBytes("UTF-8"))
+  import KvFixture._
 
   test("manifests live in _log/: the root listing is data-only at any chain length") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-logdir").toString
+    val dir = tmp("kv-logdir")
     (0 until 12).foreach(i => append(dir, i * 10L, i * 10L + 10L))
     val rootNames = new java.io.File(dir).list().toSeq
     assert(!rootNames.exists(_.startsWith("_manifest")),
@@ -39,11 +28,11 @@ class Widening15Spec extends AnyFunSuite {
       "non-manifest entries in _log/ — the listing is no longer O(manifests)")
     assert(KvSource.versions(dir) == (1L to 12L))
     assert(readAll(dir).count() == 120)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("a legacy co-located chain reads as-is and migrates atomically on the first write verb") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-legacy").toString
+    val dir = tmp("kv-legacy")
     new java.io.File(dir).mkdirs()
     // hand-build an r13/r14-layout chain: manifests at the ROOT
     (1 to 3).foreach { v =>
@@ -66,11 +55,11 @@ class Widening15Spec extends AnyFunSuite {
     assert(KvSource.versions(dir) == (1L to 4L))
     (1L to 3L).foreach(v => assert(KvSource.committedFiles(dir, Some(v)).size == v))
     assert(readAll(dir).count() == 13)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("AvailableNow pins its end offset: versions appended after prepare wait for the next run") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-an").toString
+    val dir = tmp("kv-an")
     append(dir, 0, 10); append(dir, 10, 20)
     val stream = new graft.sources.KvMicroBatchStream(dir)
     // the protocol: prepare pins, the admission-control latestOffset
@@ -87,13 +76,13 @@ class Widening15Spec extends AnyFunSuite {
     val live = new graft.sources.KvMicroBatchStream(dir)
     assert(live.latestOffset(live.deserializeOffset("0"), live.getDefaultReadLimit)
       .json() == "3")
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("fresh readStream over a vacuumed chain: initial snapshot at the earliest retained version") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-vacstream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-vacstream-ckpt").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-kv-vacstream-sink").toString
+    val dir = tmp("kv-vacstream")
+    val ckpt = tmp("kv-vacstream-ckpt")
+    val sinkDir = tmp("kv-vacstream-sink")
     (0 until 12).foreach(i => append(dir, i * 10L, i * 10L + 10L))
     val (dropped, _, oldest) = KvSource.vacuum(dir, retainLast = 3)
     assert(dropped == 9L && oldest == 10L)
@@ -105,8 +94,7 @@ class Widening15Spec extends AnyFunSuite {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val got = spark.read.format(classOf[KvSource].getName)
-      .option("path", sinkDir).load()
+    val got = readAll(sinkDir)
     assert(got.count() == 120,
       "initial snapshot + deltas must deliver every retained row exactly once")
     assert(got.agg(sum(col("key"))).head().getLong(0) == (0L until 120L).sum)
@@ -118,13 +106,13 @@ class Widening15Spec extends AnyFunSuite {
         stream.deserializeOffset("12"))
     }
     assert(e.getMessage.contains("retention"), e.getMessage)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
-    SourceQueries.deleteRecursively(new java.io.File(sinkDir))
-    SourceQueries.deleteRecursively(new java.io.File(ckpt))
+    rm(dir)
+    rm(sinkDir)
+    rm(ckpt)
   }
 
   test("startingVersion tails from a pinned version; legacy full manifests deliver once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-startv").toString
+    val dir = tmp("kv-startv")
     append(dir, 0, 10); append(dir, 10, 20); append(dir, 20, 25) // v1..v3
     val pinned = new graft.sources.KvMicroBatchStream(dir, Some(3L))
     assert(pinned.initialOffset().json() == "2")
@@ -134,7 +122,7 @@ class Widening15Spec extends AnyFunSuite {
     // legacy r13 chains list the FULL set in every manifest: the
     // running-state diff must deliver each file once, not once per
     // version (the r14 double-delivery advice item)
-    val leg = java.nio.file.Files.createTempDirectory("graft-kv-legstream").toString
+    val leg = tmp("kv-legstream")
     new java.io.File(leg).mkdirs()
     (1 to 3).foreach { v =>
       stage(leg, s"part-leg-$v.dat", v.toLong)
@@ -145,12 +133,12 @@ class Widening15Spec extends AnyFunSuite {
     val all = ls.planInputPartitions(ls.initialOffset(), ls.deserializeOffset("3"))
     assert(all.length == 3,
       s"legacy full manifests must deliver 3 files once each, got ${all.length}")
-    SourceQueries.deleteRecursively(new java.io.File(dir))
-    SourceQueries.deleteRecursively(new java.io.File(leg))
+    rm(dir)
+    rm(leg)
   }
 
   test("DELETE is merge-on-read: dv masks at read, time travel pre-dates it, OPTIMIZE folds it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-dv").toString
+    val dir = tmp("kv-dv")
     append(dir, 0, 100) // v1
     val (n1, v1) = KvSource.deleteWhere(spark, dir, "key % 10 = 0")
     assert(n1 == 10L && v1 == 2L)
@@ -166,8 +154,7 @@ class Widening15Spec extends AnyFunSuite {
     assert(KvSource.deleteWhere(spark, dir, "key < 0") == ((0L, before)))
     assert(KvSource.latestVersion(dir).get == before)
     // time travel pre-dates the deletes
-    def rowsAt(v: Long): Long = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).option("versionAsOf", v.toString).load().count()
+    def rowsAt(v: Long): Long = KvSource.read(spark, dir, Some(v)).count()
     assert(rowsAt(1L) == 100L && rowsAt(2L) == 90L && rowsAt(3L) == 80L)
     // the streaming source skips DV versions (deletes are not
     // re-delivered — the Delta ignoreDeletes contract, structural here)
@@ -190,21 +177,17 @@ class Widening15Spec extends AnyFunSuite {
     val (_, strays, _) = KvSource.vacuum(dir, retainLast = 1)
     assert(strays >= 3L, s"replaced base + dv files must be reclaimed, got $strays")
     assert(new java.io.File(dir).list().count(_.startsWith("dv-")) == 0)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("RESTORE rolls the state back as a NEW version; time travel works both directions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-restorespec").toString
+    val dir = tmp("kv-restorespec")
     append(dir, 0, 10)   // v1
     append(dir, 10, 20)  // v2
     KvSource.optimizeCompact(spark, dir) // v3: one compacted file
     val v = KvSource.restore(dir, 1L)    // v4: state == v1
     assert(v == 4L)
-    def rowsAt(v: Option[Long]): Long = {
-      val r = spark.read.format(classOf[KvSource].getName).option("path", dir)
-      v.foreach(x => r.option("versionAsOf", x.toString))
-      r.load().count()
-    }
+    def rowsAt(v: Option[Long]): Long = KvSource.read(spark, dir, v).count()
     assert(rowsAt(None) == 10L, "latest must equal the v1 snapshot")
     assert(rowsAt(Some(3L)) == 20L, "forward time travel must survive the restore")
     assert(rowsAt(Some(2L)) == 20L && rowsAt(Some(1L)) == 10L)
@@ -219,11 +202,11 @@ class Widening15Spec extends AnyFunSuite {
     assert(rowsAt(None) == 5L)
     KvSource.restore(dir, 5L) // v7: un-delete
     assert(rowsAt(None) == 20L, "restore must roll the dv set back too")
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("checkpoint retains the replay ledger as max-per-app; old epochs still absorb") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-txnmax").toString
+    val dir = tmp("kv-txnmax")
     (0L until 12L).foreach { b =>
       stage(dir, s"part-app-$b.dat", b)
       KvSource.commitVersionKeyed(dir, Seq(KvSource.PartMeta(s"part-app-$b.dat")), Some(s"appA:$b"))
@@ -245,7 +228,7 @@ class Widening15Spec extends AnyFunSuite {
     KvSource.commitVersionKeyed(dir, Seq(KvSource.PartMeta("part-app-12.dat")), Some("appA:12"))
     assert(KvSource.versions(dir).last == 13L)
     assert(KvSource.committedFiles(dir).size == 13)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("ann_bucketed_serve: bucket-pruned scan, broadcast probe, equals the ivf probe") {
@@ -318,7 +301,7 @@ class Widening15Spec extends AnyFunSuite {
   }
 
   test("change feed: inserts once each across a checkpoint, deletes carry values, rewrites silent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-cdfspec").toString
+    val dir = tmp("kv-cdfspec")
     // 12 appends cross the v10 checkpoint — the checkpoint RE-LISTS
     // old files, and the feed must not re-emit them as inserts
     (0 until 12).foreach(i => append(dir, i * 10L, i * 10L + 10L))
@@ -341,11 +324,11 @@ class Widening15Spec extends AnyFunSuite {
       KvSource.changeFeed(spark, dir, 0L, 14L).count()
     }
     assert(e.getMessage.contains("vacuumed"), e.getMessage)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("maxVersionsPerTrigger: admission clamps each batch; AvailableNow drains in bounded steps") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-ratespec").toString
+    val dir = tmp("kv-ratespec")
     (0 until 5).foreach(i => append(dir, i * 10L, i * 10L + 10L))
     // unit contract: the admission-control offset clamps to start + N,
     // and composes with the AvailableNow pin
@@ -358,8 +341,8 @@ class Widening15Spec extends AnyFunSuite {
       "rate limit must clamp to the AvailableNow pin, not the new tip")
     // end-to-end: a rate-limited AvailableNow drain is complete and
     // exactly-once, in one-version micro-batches (one sink epoch each)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-ratespec-ckpt").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-kv-ratespec-sink").toString
+    val ckpt = tmp("kv-ratespec-ckpt")
+    val sinkDir = tmp("kv-ratespec-sink")
     val q = spark.readStream.format(classOf[KvSource].getName)
       .option("path", dir).option("maxVersionsPerTrigger", "1").load()
       .writeStream.format(classOf[KvSource].getName)
@@ -367,16 +350,15 @@ class Widening15Spec extends AnyFunSuite {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val sunk = spark.read.format(classOf[KvSource].getName)
-      .option("path", sinkDir).load()
+    val sunk = readAll(sinkDir)
     assert(sunk.count() == 60L, "drain must deliver all 6 versions' rows")
     val nonEmpty = KvSource.versions(sinkDir)
       .count(v => KvSource.readManifest(sinkDir, v).adds.nonEmpty)
     assert(nonEmpty == 6,
       s"expected 6 one-version micro-batches, saw $nonEmpty non-empty epochs")
-    SourceQueries.deleteRecursively(new java.io.File(dir))
-    SourceQueries.deleteRecursively(new java.io.File(sinkDir))
-    SourceQueries.deleteRecursively(new java.io.File(ckpt))
+    rm(dir)
+    rm(sinkDir)
+    rm(ckpt)
   }
 
   test("a plain append on a CHECKPOINT version with a live DV is not mistaken for a change") {
@@ -385,7 +367,7 @@ class Widening15Spec extends AnyFunSuite {
     // append landing on a checkpoint version (v10 here, DV live since
     // v8) classified as a CHANGE and its rows silently vanished from
     // the stream and the change feed
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-dvckpt").toString
+    val dir = tmp("kv-dvckpt")
     (0 until 7).foreach(i => append(dir, i * 10L, i * 10L + 10L)) // v1..v7
     KvSource.deleteWhere(spark, dir, "key < 3")                   // v8: DV live
     append(dir, 100, 110) // v9
@@ -404,11 +386,11 @@ class Widening15Spec extends AnyFunSuite {
       col("commit_version") === 10L).count() == 10L,
       "the checkpoint-version append's rows must reach the feed")
     assert(cdf.filter(col("change_type") === "delete").count() == 3L)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("expectedPrior pins a publish to its diffed snapshot: concurrent commits conflict") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-pin").toString
+    val dir = tmp("kv-pin")
     append(dir, 0, 10); append(dir, 10, 20) // v1, v2
     // the diff was computed at v1, but v2 landed since: conflict
     val e = intercept[IllegalStateException] {
@@ -418,11 +400,11 @@ class Widening15Spec extends AnyFunSuite {
     // a pin matching the true latest publishes
     assert(KvSource.commitVersionKeyed(dir, Seq.empty, None,
       expectedPrior = Some(2L)) == 3L)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("MERGE is copy-on-write: updates replace, inserts land, DELETED keys resurrect") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-mergespec").toString
+    val dir = tmp("kv-mergespec")
     append(dir, 0, 100)                            // v1
     KvSource.deleteWhere(spark, dir, "key < 10")   // v2: 0..9 tombstoned (90 live)
     val updates = spark.range(5, 15).selectExpr("id AS key", "'u' AS val")
@@ -439,8 +421,7 @@ class Widening15Spec extends AnyFunSuite {
     assert(now.filter(col("key") === 12L && col("val") === "u").count() == 1L)
     // merge folded the DV set away (COW) and time travel pre-dates it
     assert(KvSource.committedState(dir).dvFiles.isEmpty)
-    def rowsAt(x: Long) = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).option("versionAsOf", x.toString).load().count()
+    def rowsAt(x: Long) = KvSource.read(spark, dir, Some(x)).count()
     assert(rowsAt(2L) == 90L && rowsAt(1L) == 100L)
     // CDF sidecars: 5 pre-image deletes (the replaced live rows, val
     // from BEFORE the merge) + 10 inserts
@@ -454,11 +435,11 @@ class Widening15Spec extends AnyFunSuite {
     val st = new graft.sources.KvMicroBatchStream(dir)
     assert(st.planInputPartitions(st.deserializeOffset("2"),
       st.deserializeOffset("3")).isEmpty)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
     // duplicate live rows for one key (an append log has no key
     // uniqueness): ALL copies are replaced and each appears as a CDF
     // pre-image delete, but the KEY counts once — matched is key-level
-    val dup = java.nio.file.Files.createTempDirectory("graft-kv-mergedup").toString
+    val dup = tmp("kv-mergedup")
     append(dup, 0, 10); append(dup, 5, 10) // keys 5..9 live TWICE
     val (m2, i2, _) = KvSource.mergeUpsert(spark, dup,
       spark.range(5, 6).selectExpr("id AS key", "'z' AS val"))
@@ -467,11 +448,11 @@ class Widening15Spec extends AnyFunSuite {
     assert(KvSource.changeFeed(spark, dup, 2L, 3L)
       .filter(col("change_type") === "delete").count() == 2L,
       "both pre-image copies appear in the feed")
-    SourceQueries.deleteRecursively(new java.io.File(dup))
+    rm(dup)
   }
 
   test("pushdown file skipping: key ranges prune on #stats zones, residuals stay exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-skipspec").toString
+    val dir = tmp("kv-skipspec")
     append(dir, 0, 10); append(dir, 10, 20); append(dir, 20, 30); append(dir, 30, 40)
     val probe = readAll(dir).where("key >= 25 AND key < 32")
     assert(probe.rdd.getNumPartitions == 2,
@@ -498,7 +479,7 @@ class Widening15Spec extends AnyFunSuite {
     assert(late.rdd.getNumPartitions == 1,
       s"post-checkpoint probe must plan only the matching file, got ${late.rdd.getNumPartitions}")
     assert(late.count() == 5L)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("load_restore / load_delete_verb ledgers match the protocol constants") {

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.KvSource
-import graft.operators.SourceQueries
 
 /** Round-15 batch-7: touched-file pruning in the COW MERGE (the r15
   * merge entry's noted next step, closed), the UPDATE verb composed
@@ -12,17 +11,10 @@ import graft.operators.SourceQueries
   */
 class Widening15bSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def readAll(dir: String) =
-    spark.read.format(classOf[KvSource].getName).option("path", dir).load()
-
-  private def append(dir: String, lo: Long, hi: Long): Unit =
-    spark.range(lo, hi).selectExpr("id AS key", "'x' AS val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+  import KvFixture._
 
   test("MERGE prunes untouched files via zone maps; the rewrite emits its own stats") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-mprune").toString
+    val dir = tmp("kv-mprune")
     // four contiguous slices, each with a #stats: zone
     (0 until 4).foreach(i => append(dir, i * 100L, i * 100L + 100L))
     val before = KvSource.committedFiles(dir).toSet
@@ -66,11 +58,11 @@ class Widening15bSpec extends AnyFunSuite {
       }),
       "first-merge rewrite files outside the second merge's key range must survive")
     assert(readAll(dir).filter(col("val") === "w").count() == 10L)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("pruned MERGE under a live DV: untouched files stay masked, update keys resurrect") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-mprunedv").toString
+    val dir = tmp("kv-mprunedv")
     (0 until 4).foreach(i => append(dir, i * 100L, i * 100L + 100L))
     // tombstone one key in slice 0 (will be resurrected by the merge)
     // and one in slice 3 (must STAY dead — its file is untouched)
@@ -96,11 +88,11 @@ class Widening15bSpec extends AnyFunSuite {
     assert(dvKeys == Set(10L, 310L), s"DV keys must be untouched: $dvKeys")
     // three untouched slices survive (zones starting at 100/200/300)
     assert(st.files.count(f => st.stats.get(f).exists(_._1 >= 100L)) >= 3)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("UPDATE is per-row: matching copies update in place, non-matching survive") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-update").toString
+    val dir = tmp("kv-update")
     append(dir, 0, 50)
     append(dir, 10, 20) // keys 10..19 live twice
     val (n, v) = KvSource.updateWhere(spark, dir,
@@ -117,10 +109,8 @@ class Widening15bSpec extends AnyFunSuite {
     // the other copy of the same key is preserved exactly (the r15
     // review found the merge-composed form collapsed it)
     import spark.implicits._
-    val d2 = java.nio.file.Files.createTempDirectory("graft-kv-update2").toString
-    Seq((1L, "a"), (1L, "b")).toDF("key", "val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", d2).mode(org.apache.spark.sql.SaveMode.Append).save()
+    val d2 = tmp("kv-update2")
+    save(Seq((1L, "a"), (1L, "b")).toDF("key", "val"), d2)
     val (n2, _) = KvSource.updateWhere(spark, d2, "val = 'a'", "concat(val, '!')")
     assert(n2 == 1L)
     val rows2 = readAll(d2).collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -129,13 +119,13 @@ class Widening15bSpec extends AnyFunSuite {
     val (n0, v0) = KvSource.updateWhere(spark, dir, "key > 1000000", "val")
     assert(n0 == 0L && v0 == 3L)
     assert(KvSource.latestVersion(dir).contains(3L))
-    Seq(dir, d2).foreach(d => SourceQueries.deleteRecursively(new java.io.File(d)))
+    Seq(dir, d2).foreach(rm)
   }
 
   test("SHALLOW CLONE: zero-copy fork, inherited DV + stats, independent divergence") {
-    val src = java.nio.file.Files.createTempDirectory("graft-kv-clsrc").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft-kv-cldst").toString
-    SourceQueries.deleteRecursively(new java.io.File(dst))
+    val src = tmp("kv-clsrc")
+    val dst = tmp("kv-cldst")
+    rm(dst)
     (0 until 3).foreach(i => append(src, i * 100L, i * 100L + 100L))
     KvSource.deleteWhere(spark, src, "key % 10 = 0") // v4: DV
     assert(KvSource.cloneShallow(src, dst) == 1L)
@@ -163,17 +153,15 @@ class Widening15bSpec extends AnyFunSuite {
     assert(readAll(dst).count() == 280L, "clone must survive source vacuum")
     // the replay ledger is NOT inherited: a batchId the source already
     // absorbed must still land on the clone (new table identity)
-    val src2 = java.nio.file.Files.createTempDirectory("graft-kv-clsrc2").toString
-    val dst2 = java.nio.file.Files.createTempDirectory("graft-kv-cldst2").toString
-    SourceQueries.deleteRecursively(new java.io.File(dst2))
+    val src2 = tmp("kv-clsrc2")
+    val dst2 = tmp("kv-cldst2")
+    rm(dst2)
     append(src2, 0, 10)
-    spark.range(100, 110).selectExpr("id AS key", "'b' AS val").repartition(1)
-      .write.format(classOf[KvSource].getName).option("path", src2)
-      .option("batchId", "7").mode(org.apache.spark.sql.SaveMode.Append).save()
+    KvSource.append(spark.range(100, 110).selectExpr("id AS key", "'b' AS val")
+      .repartition(1), src2, batchId = Some(7L))
     KvSource.cloneShallow(src2, dst2)
-    spark.range(200, 210).selectExpr("id AS key", "'c' AS val").repartition(1)
-      .write.format(classOf[KvSource].getName).option("path", dst2)
-      .option("batchId", "7").mode(org.apache.spark.sql.SaveMode.Append).save()
+    KvSource.append(spark.range(200, 210).selectExpr("id AS key", "'c' AS val")
+      .repartition(1), dst2, batchId = Some(7L))
     assert(readAll(dst2).count() == 30L,
       "the clone must not absorb a replay key from source history")
     // a non-empty target refuses
@@ -182,11 +170,11 @@ class Widening15bSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("already has a commit chain"))
     Seq(src, dst, src2, dst2).foreach(d =>
-      SourceQueries.deleteRecursively(new java.io.File(d)))
+      rm(d))
   }
 
   test("CDF sync theorem holds across a checkpoint: feed net effect equals snapshot") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-cdfsync").toString
+    val dir = tmp("kv-cdfsync")
     // 12 versions crossing the v10 checkpoint, mixing every verb
     (0 until 8).foreach(i => append(dir, i * 10L, i * 10L + 10L)) // v1..v8
     KvSource.deleteWhere(spark, dir, "key % 9 = 0")               // v9
@@ -206,6 +194,6 @@ class Widening15bSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), sum(col("key")).as("ks"))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(feed == snap, s"feed=$feed snap=$snap")
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.KvSource
-import graft.operators.SourceQueries
 
 /** Round-15 batch-8: protocol versioning (reader/writer gates, the
   * Delta minReaderVersion/minWriterVersion contract), the CDF read
@@ -11,17 +10,10 @@ import graft.operators.SourceQueries
   */
 class Widening15cSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def readAll(dir: String) =
-    spark.read.format(classOf[KvSource].getName).option("path", dir).load()
-
-  private def append(dir: String, lo: Long, hi: Long): Unit =
-    spark.range(lo, hi).selectExpr("id AS key", "'x' AS val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+  import KvFixture._
 
   test("protocol: default 1:1, upgrade gates, future versions refuse, checkpoint re-lists") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-proto").toString
+    val dir = tmp("kv-proto")
     append(dir, 0, 10)
     assert(KvSource.protocolAt(dir) == ((1, 1)))
     // upgrade within support: reads and writes keep working
@@ -49,21 +41,20 @@ class Widening15cSpec extends AnyFunSuite {
     assert(ew.getMessage.contains("requires protocol"), ew.getMessage)
     // the gate is PER-SNAPSHOT: time travel below the future version
     // still reads under the old protocol
-    assert(spark.read.format(classOf[KvSource].getName).option("path", dir)
-      .option("versionAsOf", v.toString).load().count() == 110L)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    assert(KvSource.read(spark, dir, Some(v)).count() == 110L)
+    rm(dir)
     // reader-compatible but WRITER-future: readable, not writable
-    val d2 = java.nio.file.Files.createTempDirectory("graft-kv-proto2").toString
+    val d2 = tmp("kv-proto2")
     append(d2, 0, 10)
     assert(KvSource.publishCas(d2, 2L, "#protocol:2:9"))
     assert(readAll(d2).count() == 10L, "reader=2 must stay readable")
     val e2 = intercept[IllegalStateException](append(d2, 10, 20))
     assert(e2.getMessage.contains("writer=9"), e2.getMessage)
-    SourceQueries.deleteRecursively(new java.io.File(d2))
+    rm(d2)
   }
 
   test("batch readChangeFeed equals changeFeed; startingVersion is required") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-cdfbatch").toString
+    val dir = tmp("kv-cdfbatch")
     append(dir, 0, 50)                                  // v1
     KvSource.deleteWhere(spark, dir, "key % 10 = 0")    // v2
     KvSource.mergeUpsert(spark, dir,
@@ -89,13 +80,13 @@ class Widening15cSpec extends AnyFunSuite {
     }
     assert(e.getMessage != null && e.getMessage.contains("startingVersion"),
       e.getMessage)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("streaming CDF source: typed deltas per version, resume delivers only new changes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-cdfstr").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-cdfstr-ckpt").toString
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-kv-cdfstr-sink").toString
+    val dir = tmp("kv-cdfstr")
+    val ckpt = tmp("kv-cdfstr-ckpt")
+    val sinkDir = tmp("kv-cdfstr-sink")
     append(dir, 0, 30)                                 // v1
     KvSource.deleteWhere(spark, dir, "key < 5")        // v2
     // sink = a second kv table (recoverable, unlike the memory sink);
@@ -124,6 +115,6 @@ class Widening15cSpec extends AnyFunSuite {
     assert(got2 == got1 ++ Set(("delete:3", 5L), ("insert:3", 5L)),
       got2.toString)
     Seq(ckpt, dir, sinkDir).foreach(d =>
-      SourceQueries.deleteRecursively(new java.io.File(d)))
+      rm(d))
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.KvSource
-import graft.operators.SourceQueries
 
 /** Round-15 batch-9: the admin/audit verbs — DESCRIBE HISTORY over
   * `#op:` commit info (with the structural fallback), DESCRIBE
@@ -10,14 +9,10 @@ import graft.operators.SourceQueries
   */
 class Widening15dSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def append(dir: String, lo: Long, hi: Long): Unit =
-    spark.range(lo, hi).selectExpr("id AS key", "'x' AS val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+  import KvFixture._
 
   test("describeHistory names every verb; legacy versions classify structurally") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-hist").toString
+    val dir = tmp("kv-hist")
     append(dir, 0, 100)                                     // v1 WRITE
     KvSource.deleteWhere(spark, dir, "key < 10")            // v2 DELETE
     KvSource.mergeUpsert(spark, dir,
@@ -29,8 +24,8 @@ class Widening15dSpec extends AnyFunSuite {
     assert(ops == Map(1L -> "WRITE", 2L -> "DELETE", 3L -> "MERGE",
       4L -> "OPTIMIZE", 5L -> "RESTORE", 6L -> "UPGRADE PROTOCOL"), ops.toString)
     // streaming epochs self-describe too
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-kv-hist-sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kv-hist-ckpt").toString
+    val sinkDir = tmp("kv-hist-sink")
+    val ckpt = tmp("kv-hist-ckpt")
     val q = spark.readStream.format(classOf[KvSource].getName)
       .option("path", dir).load()
       .writeStream.format(classOf[KvSource].getName)
@@ -41,8 +36,8 @@ class Widening15dSpec extends AnyFunSuite {
     assert(KvSource.describeHistory(sinkDir).map(_._2).distinct ==
       Seq("STREAMING UPDATE"))
     // a CLONE's v1 carries its op; a legacy header-less version infers
-    val cl = java.nio.file.Files.createTempDirectory("graft-kv-hist-cl").toString
-    SourceQueries.deleteRecursively(new java.io.File(cl))
+    val cl = tmp("kv-hist-cl")
+    rm(cl)
     KvSource.cloneShallow(sinkDir, cl)
     assert(KvSource.describeHistory(cl).head._2 == "CLONE")
     java.nio.file.Files.write(
@@ -54,11 +49,11 @@ class Widening15dSpec extends AnyFunSuite {
     val h10 = KvSource.describeHistory(dir).find(_._1 == 10L).get
     assert(h10._6 == 1L && h10._2 == "WRITE")
     Seq(dir, sinkDir, ckpt, cl).foreach(d =>
-      SourceQueries.deleteRecursively(new java.io.File(d)))
+      rm(d))
   }
 
   test("describeDetail reports the snapshot's structural facts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-detail").toString
+    val dir = tmp("kv-detail")
     append(dir, 0, 50); append(dir, 50, 100)
     KvSource.deleteWhere(spark, dir, "key < 5")
     KvSource.upgradeProtocol(dir, 2, 2)
@@ -68,11 +63,11 @@ class Widening15dSpec extends AnyFunSuite {
       d("min_reader_version") == 2L && d("min_writer_version") == 2L &&
       d("latest_version") == 4L && d("fold_base") == 1L &&
       d("num_manifests") == 4L, d.toString)
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 
   test("vacuum dry run reclaims nothing and predicts the real vacuum exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kv-vacdry").toString
+    val dir = tmp("kv-vacdry")
     (0 until 12).foreach(i => append(dir, i * 10L, i * 10L + 10L))
     val stray = new java.io.File(dir, "part-orphan.dat")
     java.nio.file.Files.write(stray.toPath, "1,x\n".getBytes("UTF-8"))
@@ -87,6 +82,6 @@ class Widening15dSpec extends AnyFunSuite {
     assert(real == dry, s"real $real must equal dry-run $dry")
     assert(!stray.exists())
     assert(KvSource.versions(dir) == (10L to 12L))
-    SourceQueries.deleteRecursively(new java.io.File(dir))
+    rm(dir)
   }
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.KvSource
-import graft.operators.SourceQueries
 
 /** Round-16 batch-1: OCC auto-retry on `expectedPrior` conflicts (the
   * Delta ConflictChecker retry). A pinned verb whose snapshot went
@@ -17,20 +16,10 @@ import graft.operators.SourceQueries
   */
 class Widening16Spec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def append(dir: String, lo: Long, hi: Long): Unit =
-    spark.range(lo, hi).selectExpr("id AS key", "'x' AS val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
-
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-occ-$tag").toString
-
-  private def rm(d: String): Unit =
-    SourceQueries.deleteRecursively(new java.io.File(d))
+  import KvFixture._
 
   test("two disjoint-key MERGEs both succeed, second rebases without caller retry") {
-    val dir = tmp("merge2")
+    val dir = tmp("occ-merge2")
     append(dir, 0, 100)    // v1: keys 0..99
     append(dir, 100, 200)  // v2: keys 100..199
     val v0 = KvSource.latestVersion(dir).get
@@ -48,8 +37,7 @@ class Widening16Spec extends AnyFunSuite {
       spark.range(10, 20).selectExpr("id AS key", "'B' AS val"),
       pinnedVersion = Some(v0))
     assert((mb, ib, vb) == (10L, 0L, 4L))
-    val rows = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).load()
+    val rows = readAll(dir)
     assert(rows.count() == 200L)
     assert(rows.filter(col("val") === "A").count() == 10L)
     assert(rows.filter(col("val") === "B").count() == 10L)
@@ -57,7 +45,7 @@ class Widening16Spec extends AnyFunSuite {
   }
 
   test("overlapping-key MERGE with a stale pin is a TRUE conflict") {
-    val dir = tmp("mergeconf")
+    val dir = tmp("occ-mergeconf")
     append(dir, 0, 100)
     append(dir, 100, 200)
     val v0 = KvSource.latestVersion(dir).get
@@ -75,7 +63,7 @@ class Widening16Spec extends AnyFunSuite {
   }
 
   test("AppendOk rebases over a concurrent pure append; DELETE interleave conflicts") {
-    val dir = tmp("appendok")
+    val dir = tmp("occ-appendok")
     append(dir, 0, 100)           // v1
     append(dir, 100, 200)         // v2 — the "concurrent" append
     // a rewrite diffed at v1 (removes v1's file) pinned stale:
@@ -102,7 +90,7 @@ class Widening16Spec extends AnyFunSuite {
   }
 
   test("KeyDisjoint: zone-disjoint append rebases, stats-less or overlapping conflicts") {
-    val dir = tmp("keydisjoint")
+    val dir = tmp("occ-keydisjoint")
     append(dir, 0, 100)    // v1
     append(dir, 500, 600)  // v2 — zones [500,599], disjoint from [0,99]
     // a DELETE-shaped commit (DV over keys 0..49) pinned at v1:
@@ -140,7 +128,7 @@ class Widening16Spec extends AnyFunSuite {
   }
 
   test("RESTORE never rebases (coordination stays a caller decision)") {
-    val dir = tmp("restore")
+    val dir = tmp("occ-restore")
     append(dir, 0, 100)   // v1
     append(dir, 100, 200) // v2
     // a concurrent append lands between RESTORE's diff and publish —
@@ -159,7 +147,7 @@ class Widening16Spec extends AnyFunSuite {
   }
 
   test("empty MERGE-ON-READ publishes nothing (no empty tombstone on the chain)") {
-    val dir = tmp("mor-empty")
+    val dir = tmp("occ-mor-empty")
     append(dir, 0, 100)
     val v0 = KvSource.latestVersion(dir).get
     val (m, i, v) = KvSource.mergeOnRead(spark, dir,
@@ -176,18 +164,15 @@ class Widening16Spec extends AnyFunSuite {
   }
 
   test("val zone maps prune equality/range/prefix probes; stats-free files always plan") {
-    val dir = tmp("vskip")
+    val dir = tmp("occ-vskip")
     def appendVals(vals: Seq[(Long, String)]): Unit = {
       import spark.implicits._
-      vals.toDF("key", "val").repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+      save(vals.toDF("key", "val"), dir)
     }
     appendVals(Seq((1L, "apple"), (2L, "banana")))
     appendVals(Seq((3L, "melon"), (4L, "pear")))
     appendVals(Seq((5L, "tomato"), (6L, "zucchini")))
-    val base = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).load()
+    val base = readAll(dir)
     assert(base.rdd.getNumPartitions == 3)
     assert(base.where(col("val") === "pear").rdd.getNumPartitions == 1)
     assert(base.where(col("val") === "pear").count() == 1L)
@@ -200,54 +185,44 @@ class Widening16Spec extends AnyFunSuite {
     val v = KvSource.latestVersion(dir).get + 1
     assert(KvSource.publishCas(dir, v, "part-nozone.dat"))
     assert(base.where(col("val") === "pear").count() == 1L) // pinned scan unaffected
-    val fresh = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).load()
+    val fresh = readAll(dir)
     assert(fresh.where(col("val") === "pear").rdd.getNumPartitions == 2)
     rm(dir)
   }
 
   test("val bounds truncate at 64 bytes and stay correct; rewrites re-record vstats") {
-    val dir = tmp("vtrunc")
+    val dir = tmp("occ-vtrunc")
     import spark.implicits._
     // values sharing a 70-byte prefix: the truncated-and-incremented
     // upper bound must still admit every stored value
     val long1 = "x" * 70 + "aaa"
     val long2 = "x" * 70 + "zzz"
-    Seq((1L, long1), (2L, long2)).toDF("key", "val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
-    Seq((3L, "short")).toDF("key", "val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
-    val base = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).load()
+    save(Seq((1L, long1), (2L, long2)).toDF("key", "val"), dir)
+    save(Seq((3L, "short")).toDF("key", "val"), dir)
+    val base = readAll(dir)
     // the truncated zone still admits the long values (no false prune)
     assert(base.where(col("val") === long2).count() == 1L)
     assert(base.where(col("val") === long2).rdd.getNumPartitions == 1)
     // and an UPDATE rewrite records fresh vstats on its outputs
     KvSource.updateWhere(spark, dir, "key = 3", "'rewritten'")
-    val fresh = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).load()
+    val fresh = readAll(dir)
     assert(fresh.where(col("val") === "rewritten").rdd.getNumPartitions == 1)
     assert(fresh.where(col("val") === "rewritten").count() == 1L)
     rm(dir)
   }
 
   test("OPTIMIZE ZORDER tightens both zone maps and folds DVs atomically") {
-    val dir = tmp("zorder")
+    val dir = tmp("occ-zorder")
     import spark.implicits._
     // 4 mod-sliced files: every key zone spans [b, ~396+b], every file
     // holds both val groups — zone maps prune nothing
     val rows = (0L until 400L).map(k =>
       (k, if ((k / 4) % 2 == 0) "alpha" else "omega"))
     (0 until 4).foreach { b =>
-      rows.filter(_._1 % 4 == b).toDF("key", "val").repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+      save(rows.filter(_._1 % 4 == b).toDF("key", "val"), dir)
     }
     KvSource.deleteWhere(spark, dir, "key >= 390") // a DV to fold away
-    def reload() = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).load()
+    def reload() = readAll(dir)
     assert(reload().where(col("key") < 100).rdd.getNumPartitions == 4)
     assert(reload().where(col("val") === "alpha").rdd.getNumPartitions == 4)
     val (before, v) = KvSource.optimizeZorder(spark, dir, 4)
@@ -263,13 +238,12 @@ class Widening16Spec extends AnyFunSuite {
     assert(reload().where(col("val") === "alpha").count() ==
       rows.count(r => r._1 < 390 && r._2 == "alpha").toLong)
     // time travel below the rewrite still reads the old layout
-    assert(spark.read.format(classOf[KvSource].getName).option("path", dir)
-      .option("versionAsOf", "4").load().count() == 400L)
+    assert(KvSource.read(spark, dir, Some(4L)).count() == 400L)
     rm(dir)
   }
 
   test("ALTER TABLE ADD COLUMN: null-fill, per-snapshot schema, round-trip, guards") {
-    val dir = tmp("schema")
+    val dir = tmp("occ-schema")
     import spark.implicits._
     append(dir, 0, 10) // v1: 2-col
     val v2 = KvSource.alterAddColumn(dir, "score")
@@ -277,20 +251,16 @@ class Widening16Spec extends AnyFunSuite {
     assert(KvSource.protocolAt(dir) == ((3, 3)))
     // 3-col append, including a null and a comma-bearing VAL (legal —
     // only EVOLVED columns must stay comma-free)
-    Seq((100L, "with,comma", "9"), (101L, "plain", null))
-      .toDF("key", "val", "score")
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save() // v3
-    val wide = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).load()
+    KvSource.append(Seq((100L, "with,comma", "9"), (101L, "plain", null))
+      .toDF("key", "val", "score"), dir) // v3
+    val wide = readAll(dir)
     assert(wide.schema.fieldNames.toSeq == Seq("key", "val", "score"))
     assert(wide.count() == 12L)
     assert(wide.filter(col("score").isNull).count() == 11L)
     assert(wide.filter(col("score") === "9").select("val").head().getString(0)
       == "with,comma")
     // time travel below the ALTER reads the narrow schema
-    val narrow = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).option("versionAsOf", "1").load()
+    val narrow = KvSource.read(spark, dir, Some(1L))
     assert(narrow.schema.fieldNames.toSeq == Seq("key", "val"))
     assert(narrow.count() == 10L)
     // duplicate / invalid column names refuse
@@ -312,47 +282,40 @@ class Widening16Spec extends AnyFunSuite {
     // DELETE (key-scoped MOR) still works on an evolved table
     val (nDel, _) = KvSource.deleteWhere(spark, dir, "key = 100")
     assert(nDel == 1L)
-    assert(spark.read.format(classOf[KvSource].getName).option("path", dir)
-      .load().count() == 11L)
+    assert(readAll(dir).count() == 11L)
     // evolved-column values enforce the comma-free contract
     val e = intercept[Exception] {
-      Seq((200L, "v", "bad,score")).toDF("key", "val", "score")
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+      KvSource.append(Seq((200L, "v", "bad,score")).toDF("key", "val", "score"), dir)
     }
     assert(e.getMessage != null)
     rm(dir)
   }
 
   test("evolved schema survives checkpoints, vacuum, and clone") {
-    val dir = tmp("schema-ckpt")
+    val dir = tmp("occ-schema-ckpt")
     import spark.implicits._
     append(dir, 0, 10)                      // v1
     KvSource.alterAddColumn(dir, "tag")     // v2
     (0 until 10).foreach(i =>               // v3..v12, crossing v10
-      Seq((100L + i, s"r$i", s"t$i")).toDF("key", "val", "tag")
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save())
+      KvSource.append(Seq((100L + i, s"r$i", s"t$i")).toDF("key", "val", "tag"), dir))
     KvSource.vacuum(dir, retainLast = 2)
     // the checkpoint re-listed #schema: — the fold from v10 sees it
     assert(KvSource.schemaColsAt(dir) == Seq("key", "val", "tag"))
-    val all = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).load()
+    val all = readAll(dir)
     assert(all.count() == 20L)
     assert(all.filter(col("tag").isNotNull).count() == 10L)
     // a clone inherits the evolved schema and protocol
-    val cl = tmp("schema-clone")
-    SourceQueries.deleteRecursively(new java.io.File(cl))
+    val cl = tmp("occ-schema-clone")
+    rm(cl)
     KvSource.cloneShallow(dir, cl)
     assert(KvSource.schemaColsAt(cl) == Seq("key", "val", "tag"))
     assert(KvSource.protocolAt(cl) == ((3, 3)))
-    assert(spark.read.format(classOf[KvSource].getName).option("path", cl)
-      .load().filter(col("tag").isNotNull).count() == 10L)
+    assert(readAll(cl).filter(col("tag").isNotNull).count() == 10L)
     Seq(dir, cl).foreach(rm)
   }
 
   test("binpack: disjoint bins, DV fold, planner settles to zero jobs") {
-    val dir = tmp("binpack")
+    val dir = tmp("occ-binpack")
     (0 until 5).foreach(i => append(dir, i * 100L, i * 100L + 100L))
     KvSource.deleteWhere(spark, dir, "key % 4 = 0") // 125 dead of 500
     val planned = KvSource.maintenancePlan(dir, retainLast = 50)
@@ -369,8 +332,7 @@ class Widening16Spec extends AnyFunSuite {
       case _ => ()
     }
     assert(KvSource.maintenancePlan(dir, retainLast = 50).isEmpty)
-    val rows = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).load()
+    val rows = readAll(dir)
     assert(rows.count() == 375L)
     // a narrow key probe plans one bin
     assert(rows.where(col("key") >= 150 && col("key") < 160)
@@ -379,33 +341,27 @@ class Widening16Spec extends AnyFunSuite {
   }
 
   test("empty-string vals round-trip: the `#vstats:f::` manifest line parses") {
-    val dir = tmp("emptyval")
+    val dir = tmp("occ-emptyval")
     import spark.implicits._
     // an empty val is legal (only null/newline are rejected) — its
     // zone bounds base64-encode to empty strings and the manifest
     // carries `#vstats:<file>::`, which the parser must survive
     // (r16 review: the default split() dropped the trailing empties
     // and one such write bricked the table on its next read)
-    Seq((1L, ""), (2L, "x")).toDF("key", "val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
-    val rows = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).load()
+    save(Seq((1L, ""), (2L, "x")).toDF("key", "val"), dir)
+    val rows = readAll(dir)
     assert(rows.count() == 2L)
     assert(rows.where(col("val") === "").count() == 1L)
     // the zone still prunes: a probe above "x" misses the only file
     assert(rows.where(col("val") === "zzz").rdd.getNumPartitions == 0)
     // and the table keeps accepting writes (the fold parses)
-    Seq((3L, "y")).toDF("key", "val").repartition(1)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
-    assert(spark.read.format(classOf[KvSource].getName).option("path", dir)
-      .load().count() == 3L)
+    save(Seq((3L, "y")).toDF("key", "val"), dir)
+    assert(readAll(dir).count() == 3L)
     rm(dir)
   }
 
   test("ALTER ADD COLUMN refuses case-colliding names (analyzer is case-insensitive)") {
-    val dir = tmp("schema-case")
+    val dir = tmp("occ-schema-case")
     append(dir, 0, 5)
     intercept[IllegalArgumentException](KvSource.alterAddColumn(dir, "Val"))
     intercept[IllegalArgumentException](KvSource.alterAddColumn(dir, "KEY"))
@@ -413,7 +369,7 @@ class Widening16Spec extends AnyFunSuite {
   }
 
   test("small DELETE's change feed plans only zone-admitting files") {
-    val dir = tmp("cdfprune")
+    val dir = tmp("occ-cdfprune")
     // 4 zone-disjoint files
     (0 until 4).foreach(i => append(dir, i * 100L, i * 100L + 100L))
     val (n, v) = KvSource.deleteWhere(spark, dir, "key >= 250 AND key < 260")

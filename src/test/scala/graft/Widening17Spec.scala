@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.KvSource
-import graft.operators.SourceQueries
 
 /** Round-17 batch-1: the six evolved-table guards are GONE — every
   * rewrite verb (MERGE COW, MERGE MOR, UPDATE, OPTIMIZE, ZORDER,
@@ -16,29 +15,17 @@ import graft.operators.SourceQueries
   */
 class Widening17Spec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-evo-$tag").toString
-
-  private def rm(d: String): Unit =
-    SourceQueries.deleteRecursively(new java.io.File(d))
-
-  private def readAll(dir: String) =
-    spark.read.format(classOf[KvSource].getName).option("path", dir).load()
+  import KvFixture._
 
   /** v1: narrow keys [0,100); v2: ALTER ADD segment; v3: wide keys
     * [100,200) with segment = "s<key%4>". Returns the dir. */
   private def evolved(tag: String): String = {
-    val dir = tmp(tag)
-    spark.range(0, 100).selectExpr("id AS key", "concat('n', id) AS val")
-      .repartition(1).write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    val dir = tmp(s"evo-$tag")
+    save(spark.range(0, 100).selectExpr("id AS key", "concat('n', id) AS val"), dir)
     assert(KvSource.alterAddColumn(dir, "segment") == 2L)
-    spark.range(100, 200)
+    save(spark.range(100, 200)
       .selectExpr("id AS key", "concat('w', id) AS val",
-        "concat('s', id % 4) AS segment")
-      .repartition(1).write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+        "concat('s', id % 4) AS segment"), dir)
     dir
   }
 
@@ -128,8 +115,7 @@ class Widening17Spec extends AnyFunSuite {
     assert(c.count() == 180L && c.filter(col("segment").isNull).count() == 90L)
     // time travel BELOW the ALTER still reads the narrow schema even
     // though every live file above it is now wide
-    val narrow = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).option("versionAsOf", "1").load()
+    val narrow = KvSource.read(spark, dir, Some(1L))
     assert(narrow.schema.fieldNames.toSeq == Seq("key", "val"))
     assert(narrow.count() == 100L)
     rm(dir)
@@ -138,10 +124,8 @@ class Widening17Spec extends AnyFunSuite {
   test("maintenance planner fires AND executes on an evolved chain") {
     val dir = evolved("plan")
     (0 until 4).foreach { b =>
-      spark.range(200 + b, 204).selectExpr("id AS key", "'t' AS val",
-        "'tail' AS segment").repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+      save(spark.range(200 + b, 204).selectExpr("id AS key", "'t' AS val",
+        "'tail' AS segment"), dir)
     }
     KvSource.deleteWhere(spark, dir, "key < 100 AND key % 2 = 0")
     val plan = KvSource.maintenancePlan(dir, retainLast = 50)
@@ -181,8 +165,8 @@ class Widening17Spec extends AnyFunSuite {
 
   test("STREAMING change feed delivers wide rows on an evolved table") {
     val dir = evolved("scdf")
-    val outDir = tmp("scdf-sink")
-    val ckpt = tmp("scdf-ckpt")
+    val outDir = tmp("evo-scdf-sink")
+    val ckpt = tmp("evo-scdf-ckpt")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long)]()
     val q = spark.readStream.format(classOf[KvSource].getName)
       .option("path", dir).option("readChangeFeed", "true")
@@ -227,21 +211,16 @@ class Widening17Spec extends AnyFunSuite {
     val p2 = readAll(dir).where(col("segment") === "s2")
     assert(p2.count() == 25L)
     // clone inherits the cstats
-    val dst = tmp("cstats-clone")
+    val dst = tmp("evo-cstats-clone")
     KvSource.cloneShallow(dir, dst)
     assert(KvSource.committedState(dst).colStats.nonEmpty)
-    assert(spark.read.format(classOf[KvSource].getName).option("path", dst)
-      .load().where(col("segment") === "s2").count() == 25L)
+    assert(readAll(dst).where(col("segment") === "s2").count() == 25L)
     rm(dir); rm(dst)
   }
 
   test("overlap sweep: adjacent-but-disjoint zones read depth 1, no spurious ZORDER") {
-    val dir = tmp("sweep")
-    def slab(lo: Long, hi: Long): Unit =
-      spark.range(lo, hi).selectExpr("id AS key", "'x' AS val").repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
-    slab(0, 10); slab(10, 20); slab(20, 30) // zones [0,9],[10,19],[20,29]
+    val dir = tmp("evo-sweep")
+    append(dir, 0, 10); append(dir, 10, 20); append(dir, 20, 30) // zones [0,9],[10,19],[20,29]
     // a perfectly bin-packed layout must NOT fire OPTIMIZE_ZORDER even
     // at the tightest threshold (r16 advice: the opens-first sweep
     // read depth 2 here)
@@ -249,7 +228,7 @@ class Widening17Spec extends AnyFunSuite {
       maxOverlapDepth = 2, retainLast = 50)
     assert(!plan.exists(_._1 == "OPTIMIZE_ZORDER"), plan.toString)
     // truly TOUCHING zones ([20,29] vs [29,40]) still count
-    slab(29, 41)
+    append(dir, 29, 41)
     val plan2 = KvSource.maintenancePlan(dir, maxLiveFiles = 50,
       maxOverlapDepth = 2, retainLast = 50)
     assert(plan2.exists(_._1 == "OPTIMIZE_ZORDER"), plan2.toString)
@@ -264,10 +243,9 @@ class Widening17Spec extends AnyFunSuite {
     assert(acc.value == ((-3L, 42L)))
     // the DELETE that uses it still computes a correct OCC window:
     // an append provably BELOW the deleted domain rebases
-    val dir = tmp("dvwin")
-    spark.range(100, 200).selectExpr("id AS key", "'x' AS val").repartition(4)
-      .write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+    val dir = tmp("evo-dvwin")
+    KvSource.append(spark.range(100, 200).selectExpr("id AS key", "'x' AS val")
+      .repartition(4), dir)
     val (n, v) = KvSource.deleteWhere(spark, dir, "key >= 150")
     assert(n == 50L && v == 2L)
     assert(readAll(dir).count() == 50L)
@@ -288,8 +266,7 @@ class Widening17Spec extends AnyFunSuite {
     // the wide file + the unprunable narrow file plan, nothing else
     assert(readAll(dir).where(col("seg2") === "s1").rdd.getNumPartitions == 2)
     // time travel below the rename reads the OLD name
-    val atV3 = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).option("versionAsOf", "3").load()
+    val atV3 = KvSource.read(spark, dir, Some(3L))
     assert(atV3.schema.fieldNames.toSeq == Seq("key", "val", "segment"))
     // guards: key is structural; collisions and unknown names refuse;
     // the change feed's metadata names are reserved (they would make
@@ -314,25 +291,21 @@ class Widening17Spec extends AnyFunSuite {
     assert(after.where(col("payload").startsWith("w")).count() == 100L)
     // the mapping survives a checkpoint fold and a clone
     (0 until 7).foreach { i =>
-      spark.range(1000 + i, 1001 + i)
-        .selectExpr("id AS key", "'t' AS payload", "'z' AS seg2").repartition(1)
-        .write.format(classOf[KvSource].getName)
-        .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+      save(spark.range(1000 + i, 1001 + i)
+        .selectExpr("id AS key", "'t' AS payload", "'z' AS seg2"), dir)
     }
     assert(KvSource.latestVersion(dir).get >= 10L)
     assert(readAll(dir).schema.fieldNames.toSeq == Seq("key", "payload", "seg2"))
-    val dst = tmp("ren-clone")
+    val dst = tmp("evo-ren-clone")
     KvSource.cloneShallow(dir, dst)
-    assert(spark.read.format(classOf[KvSource].getName).option("path", dst)
-      .load().schema.fieldNames.toSeq == Seq("key", "payload", "seg2"))
+    assert(readAll(dst).schema.fieldNames.toSeq == Seq("key", "payload", "seg2"))
     rm(dir); rm(dst)
   }
 
   test("a bad versionAsOf fails at schema inference, not a silent base schema") {
     val dir = evolved("asof")
     val e = intercept[IllegalArgumentException] {
-      spark.read.format(classOf[KvSource].getName)
-        .option("path", dir).option("versionAsOf", "99").load().schema
+      KvSource.read(spark, dir, Some(99L)).schema
     }
     assert(e.getMessage.contains("versionAsOf=99"))
     rm(dir)

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.KvSource
-import graft.operators.SourceQueries
 
 /** Round-17 batch-5: ALTER TABLE DROP COLUMN — the last verb of the
   * schema-evolution safe set (ADD + RENAME + DROP, the Delta
@@ -18,24 +17,12 @@ import graft.operators.SourceQueries
   * at a post-drop schema. */
 class Widening17bSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-drop-$tag").toString
-
-  private def rm(d: String): Unit =
-    SourceQueries.deleteRecursively(new java.io.File(d))
-
-  private def readAll(dir: String) =
-    spark.read.format(classOf[KvSource].getName).option("path", dir).load()
-
-  private def save(df: org.apache.spark.sql.DataFrame, dir: String): Unit =
-    df.repartition(1).write.format(classOf[KvSource].getName)
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
+  import KvFixture._
 
   /** v1 narrow [0,50); v2 +a; v3 wide [50,100) a="a<k%3>"; v4 +b;
     * v5 wide [100,150) with a and b="b<k%3>". */
   private def twoCol(tag: String): String = {
-    val dir = tmp(tag)
+    val dir = tmp(s"drop-$tag")
     save(spark.range(0, 50).selectExpr("id AS key", "concat('n', id) AS val"), dir)
     assert(KvSource.alterAddColumn(dir, "a") == 2L)
     save(spark.range(50, 100).selectExpr("id AS key", "concat('w', id) AS val",
@@ -70,8 +57,7 @@ class Widening17bSpec extends AnyFunSuite {
       (100L until 150L).count(_ % 3 == 1).toLong)
     assert(rows.filter(col("b").isNull).count() == 100L)
     // time travel below the drop reads a back
-    val atV5 = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).option("versionAsOf", "5").load()
+    val atV5 = KvSource.read(spark, dir, Some(5L))
     assert(atV5.schema.fieldNames.toSeq == Seq("key", "val", "a", "b"))
     assert(atV5.filter(col("a") === "a0").count() ===
       (50L until 150L).count(_ % 3 == 0).toLong)
@@ -152,8 +138,7 @@ class Widening17bSpec extends AnyFunSuite {
     assert(rows.filter(col("b") === "b2").count() ===
       (100L until 150L).count(_ % 3 == 2).toLong)
     // time travel below the rewrite still reads the dropped column
-    val atV5 = spark.read.format(classOf[KvSource].getName)
-      .option("path", dir).option("versionAsOf", "5").load()
+    val atV5 = KvSource.read(spark, dir, Some(5L))
     assert(atV5.filter(col("a").isNotNull).count() == 100L)
     rm(dir)
   }
@@ -183,7 +168,7 @@ class Widening17bSpec extends AnyFunSuite {
     KvSource.dropColumn(dir, "a") // v6
     save(spark.range(500, 510).selectExpr("id AS key", "'s' AS val",
       "concat('b', id % 3) AS b"), dir) // v7
-    val ckpt = tmp("stream-ckpt")
+    val ckpt = tmp("drop-stream-ckpt")
     // stream the dropped table into a memory sink: snapshot and tail
     // partitions both plan through the exposure map
     val q = spark.readStream.format(classOf[KvSource].getName)
@@ -208,12 +193,12 @@ class Widening17bSpec extends AnyFunSuite {
     // the sink went through its own evolution: +a, +b, drop a — its
     // live schema matches the source's but its PHYSICAL width is 4,
     // so every streamed epoch must render `\N` at the hidden slot
-    val sink = tmp("sink")
+    val sink = tmp("drop-sink")
     save(spark.range(0, 5).selectExpr("id AS key", "'seed' AS val"), sink)
     KvSource.alterAddColumn(sink, "a")
     KvSource.alterAddColumn(sink, "b")
     KvSource.dropColumn(sink, "a")
-    val ckpt = tmp("sink-ckpt")
+    val ckpt = tmp("drop-sink-ckpt")
     val q = spark.readStream.format(classOf[KvSource].getName)
       .option("path", src).load()
       .writeStream.format(classOf[KvSource].getName)
@@ -221,8 +206,7 @@ class Widening17bSpec extends AnyFunSuite {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val got = spark.read.format(classOf[KvSource].getName)
-      .option("path", sink).load()
+    val got = readAll(sink)
     assert(got.schema.fieldNames.toSeq == Seq("key", "val", "b"))
     assert(got.count() == 155L)
     assert(got.filter(col("b") === "b1").count() ===
